@@ -43,72 +43,40 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         from sherlog_parser_spark.data.transcripts import generate_transcripts
-        from sherlog_parser_spark.plans.dictionary import build_template_dictionary
+        from sherlog_parser_spark.plans.dictionary import build_template_dictionary, template_frame
         from sherlog_parser_spark.plans.parse import parse_stage
-        from sherlog_parser_spark.plans.route import conv_bucket_expr, salt_expr
+        from sherlog_parser_spark.plans.route import conv_bucket_expr, route_exchange
 
         df = generate_transcripts(spark, n_convs=2000, seed=42)
         parsed = parse_stage(df)
         tdict = build_template_dictionary(parsed)
-        try:
-            # current (r6) shape: light pre-shuffle frame + post-exchange attach
-            from sherlog_parser_spark.plans.pipeline import run_pipeline  # noqa: F401
-            import inspect
+        # light pre-shuffle frame, the production route exchange, then
+        # the post-exchange attach
+        from sherlog_parser_spark.functions.masking import (
+            apply_params_expr,
+            event_type_expr,
+            template_param_meta,
+            tokens_fast_expr,
+        )
+        from sherlog_parser_spark.plans.route import ROUTE_COLS, route_cols
 
-            src = inspect.getsource(run_pipeline)
-            has_r6 = "_attach_derived" in src
-        except Exception:
-            has_r6 = False
-        if has_r6:
-            from sherlog_parser_spark.functions.masking import (
-                apply_params_expr,
-                event_type_expr,
-                template_param_meta,
-                tokens_fast_expr,
-            )
-            from sherlog_parser_spark.plans.route import ROUTE_COLS, route_cols
-
-            base_cols = [c for c in route_cols(parsed) if c in parsed.columns]
-            pre = (
-                parsed.select(*base_cols, "sig")
-                .join(F.broadcast(tdict.df.select("sig", "template_id")), "sig", "left")
-                .drop("sig")
-                .withColumn("conv_bucket", conv_bucket_expr("conv_id", 2))
-            )
-            tpl_df = spark.createDataFrame(
-                [(tid, t) for tid, t in enumerate(tdict.templates)],
-                "template_id long, template string",
-            )
-            tpl_meta = tpl_df.withColumn(
-                "__event_type", event_type_expr("template")
-            ).withColumn("__pmeta", template_param_meta("template"))
-            salt = salt_expr(tdict.hot_template_ids(), 4)
-            shuffled = pre.repartition(
-                F.col("template_id"), F.col("tool"), F.col("conv_bucket"), salt
-            )
-            routed = (
-                shuffled.join(F.broadcast(tpl_meta), "template_id", "left")
-                .withColumn(
-                    "event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN"))
-                )
-                .withColumn("__lt", tokens_fast_expr("text"))
-                .withColumn(
-                    "parameters", apply_params_expr(F.col("__lt"), F.col("__pmeta"))
-                )
-                .select(*[c for c in ROUTE_COLS if c in ["conv_id", "turn_idx", "role", "tool", "ts", "text", "template_id", "template", "parameters", "event_type"]], "conv_bucket")
-            )
-        else:
-            from sherlog_parser_spark.data.dims import role_tool_dim
-            from sherlog_parser_spark.plans.enrich import enrich_stage
-            from sherlog_parser_spark.plans.route import route_cols
-
-            enriched = enrich_stage(parsed, tdict.df, role_tool_dim(spark))
-            salt = salt_expr(tdict.hot_template_ids(), 4)
-            routed = (
-                enriched.select(*route_cols(enriched))
-                .withColumn("conv_bucket", conv_bucket_expr("conv_id", 2))
-                .repartition(F.col("template_id"), F.col("tool"), F.col("conv_bucket"), salt)
-            )
+        pre = (
+            parsed.select(*route_cols(parsed), "sig")
+            .join(F.broadcast(tdict.df.select("sig", "template_id")), "sig", "left")
+            .drop("sig")
+            .withColumn("conv_bucket", conv_bucket_expr("conv_id", 2))
+        )
+        tpl_meta = template_frame(spark, tdict.templates).withColumn(
+            "__event_type", event_type_expr("template")
+        ).withColumn("__pmeta", template_param_meta("template"))
+        routed = (
+            route_exchange(pre, tdict.counts, 2)
+            .join(F.broadcast(tpl_meta), "template_id", "left")
+            .withColumn("event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN")))
+            .withColumn("__lt", tokens_fast_expr("text"))
+            .withColumn("parameters", apply_params_expr(F.col("__lt"), F.col("__pmeta")))
+            .select(*ROUTE_COLS, "conv_bucket")
+        )
         with open(os.path.join(outdir, f"pipeline_route{suffix}.txt"), "w") as f:
             f.write(explain_str(routed))
     finally:

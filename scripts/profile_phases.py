@@ -27,8 +27,6 @@ def main() -> None:
     out = f"/tmp/sherlog_profile_out_{cores}"
     shutil.rmtree(out, ignore_errors=True)
 
-    from pyspark.sql import functions as F
-
     from sherlog_parser_spark.data.dims import role_tool_dim
     from sherlog_parser_spark.plans.aggregate import (
         sink_rollup,
@@ -38,7 +36,7 @@ def main() -> None:
     from sherlog_parser_spark.plans.dictionary import build_template_dictionary
     from sherlog_parser_spark.plans.enrich import enrich_stage
     from sherlog_parser_spark.plans.parse import parse_stage
-    from sherlog_parser_spark.plans.route import conv_bucket_expr, route_cols, salt_expr
+    from sherlog_parser_spark.plans.route import conv_bucket_expr, route_cols, route_exchange
     from sherlog_parser_spark.session import get_spark
 
     spark = get_spark("profile", master=f"local[{cores}]")
@@ -55,9 +53,8 @@ def main() -> None:
     routed = enriched.select(*route_cols(enriched)).withColumn(
         "conv_bucket", conv_bucket_expr("conv_id", 2)
     )
-    salt = salt_expr(tdict.hot_template_ids(), 4)
     (
-        routed.repartition(F.col("template_id"), F.col("tool"), F.col("conv_bucket"), salt)
+        route_exchange(routed, tdict.counts, 2)
         .write.mode("overwrite")
         .option("parquet.enable.dictionary", "false")
         .partitionBy("template_id", "tool", "conv_bucket")

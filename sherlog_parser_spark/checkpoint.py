@@ -11,16 +11,20 @@ committed group appends a manifest entry
 A re-run with the same manifest skips committed units and produces
 byte-identical sink contents (tested).  At cluster scale each unit is an
 independent Spark job over a hash-pruned slice, so a failed run loses at
-most one unit's work.
+most one unit's work.  A crash mid-append leaves a torn final line (no
+trailing newline); ``load`` drops it with a warning, so the unit it
+described is redone (a corrupt complete line still raises).
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass, field
 
+_log = logging.getLogger(__name__)
 
 RUN_HEADER_UNIT = "_run"
 
@@ -34,16 +38,27 @@ class CheckpointManifest:
     @classmethod
     def load(cls, path: str) -> "CheckpointManifest":
         m = cls(path=path)
-        if os.path.exists(path):
-            with open(path) as f:
-                for line in f:
-                    line = line.strip()
-                    if line:
-                        e = json.loads(line)
-                        if e["unit"] == RUN_HEADER_UNIT:
-                            m.run_header = e
-                        else:
-                            m.entries[e["unit"]] = e
+        if not os.path.exists(path):
+            return m
+        with open(path, "rb") as f:
+            data = f.read()
+        # every append ends with its newline, so bytes after the last
+        # newline are an append a crash cut short
+        complete, sep, torn = data.rpartition(b"\n")
+        if torn.strip():
+            _log.warning(
+                "dropping the torn final line of checkpoint manifest %s "
+                "(a crash mid-append): %r", path, torn[:80],
+            )
+            with open(path, "r+b") as f:  # later appends start on a fresh line
+                f.truncate(len(complete) + len(sep))
+        for line in complete.split(b"\n"):
+            if line.strip():
+                e = json.loads(line)
+                if e["unit"] == RUN_HEADER_UNIT:
+                    m.run_header = e
+                else:
+                    m.entries[e["unit"]] = e
         return m
 
     def run_fingerprint(self) -> str | None:

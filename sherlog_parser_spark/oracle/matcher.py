@@ -124,6 +124,18 @@ class TemplatePool:
     templates: list[str] = field(default_factory=list)  # index = template_id
     _sig_to_id: dict[int, int] = field(default_factory=dict)
 
+    @classmethod
+    def from_state(
+        cls, templates: list[str], mapping: dict, threshold: float = 0.8
+    ) -> "TemplatePool":
+        """A pool restored from its templates and ``sig -> template_id``
+        mapping (keys and ids may be strings, as in JSON state)."""
+        return cls(
+            threshold=threshold,
+            templates=list(templates),
+            _sig_to_id={int(s): int(t) for s, t in mapping.items()},
+        )
+
     def add(self, sig: int, template: str) -> int:
         """Register a first-seen signature; returns its template_id."""
         if sig in self._sig_to_id:

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,13 +42,31 @@ class TemplateDictionary:
     def templates(self) -> list[str]:
         return list(self.pool.templates)
 
-    def hot_template_ids(self, frac: float = 0.05) -> list[int]:
-        """Template ids covering more than ``frac`` of all rows — the
-        Zipf head that needs salted writes/aggs (SURVEY §4.2)."""
-        if not self.counts:
-            return []
-        total = sum(self.counts.values())
-        return sorted(tid for tid, c in self.counts.items() if c > frac * total)
+
+def dictionary_frame(spark: SparkSession, pool: TemplatePool) -> DataFrame:
+    """The frozen ``sig -> (template_id, template)`` frame of ``pool``.
+    Built from a ``pyarrow.Table``, as is :func:`template_frame`: that
+    makes a JVM-local relation, so scanning or broadcasting it runs no
+    Python worker (a ``createDataFrame(list)`` frame re-runs a Python job
+    per broadcast)."""
+    mapping = pool.mapping()
+    return spark.createDataFrame(
+        pa.table({
+            "sig": pa.array(list(mapping), pa.int64()),
+            "template_id": pa.array(list(mapping.values()), pa.int64()),
+            "template": pa.array([pool.templates[t] for t in mapping.values()], pa.string()),
+        })
+    )
+
+
+def template_frame(spark: SparkSession, templates: list[str]) -> DataFrame:
+    """``template_id -> template``, one row per template."""
+    return spark.createDataFrame(
+        pa.table({
+            "template_id": pa.array(range(len(templates)), pa.int64()),
+            "template": pa.array(templates, pa.string()),
+        })
+    )
 
 
 def build_template_dictionary(
@@ -78,10 +97,9 @@ def build_template_dictionary(
     for r in rows:
         tid = pool.add(r["sig"], r["masked"])
         counts[tid] = counts.get(tid, 0) + int(r["n"])
-    final = pool.templates
-    dict_rows = [(int(sig), int(tid), final[tid]) for sig, tid in pool.mapping().items()]
-    dict_df = spark.createDataFrame(dict_rows, "sig long, template_id long, template string")
-    return TemplateDictionary(df=dict_df, pool=pool, n_sigs=len(rows), counts=counts)
+    return TemplateDictionary(
+        df=dictionary_frame(spark, pool), pool=pool, n_sigs=len(rows), counts=counts
+    )
 
 
 def dictionary_state(tdict: TemplateDictionary) -> dict:
@@ -98,15 +116,11 @@ def dictionary_state(tdict: TemplateDictionary) -> dict:
 
 
 def dictionary_from_state(spark: SparkSession, state: dict) -> TemplateDictionary:
-    pool = TemplatePool(threshold=state.get("threshold", 0.8))
-    pool.templates = list(state["templates"])
-    pool._sig_to_id = {int(s): int(t) for s, t in state["mapping"].items()}
-    dict_rows = [
-        (sig, tid, pool.templates[tid]) for sig, tid in pool._sig_to_id.items()
-    ]
-    dict_df = spark.createDataFrame(dict_rows, "sig long, template_id long, template string")
+    pool = TemplatePool.from_state(
+        state["templates"], state["mapping"], state.get("threshold", 0.8)
+    )
     return TemplateDictionary(
-        df=dict_df,
+        df=dictionary_frame(spark, pool),
         pool=pool,
         n_sigs=int(state["n_sigs"]),
         counts={int(t): int(n) for t, n in state["counts"].items()},

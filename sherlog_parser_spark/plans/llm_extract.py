@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.plans.dictionary import TemplateDictionary
+from sherlog_parser_spark.plans.dictionary import TemplateDictionary, dictionary_frame
 
 MAX_NEW_SIGS = 100_000  # refuse unbounded driver merges, like MAX_DICT_ROWS
 
@@ -106,7 +106,7 @@ def extend_dictionary(
 
     The returned dictionary's ``counts`` is None: the frozen counts say
     nothing about rows of the new signatures, and silently reusing them
-    would hide Zipf-head templates from hot_template_ids (r4 review) —
+    would mis-size the route salt (``route.salt_counts``, r4 review) —
     recompute from data when salting decisions follow an extension."""
     from sherlog_parser_spark.oracle.matcher import TemplatePool
 
@@ -117,15 +117,14 @@ def extend_dictionary(
             f"LLM extraction returned more than {MAX_NEW_SIGS} new signatures; "
             "refusing unbounded driver merge"
         )
-    pool = TemplatePool(threshold=tdict.pool.threshold)
-    pool.templates = list(tdict.pool.templates)
-    pool._sig_to_id = dict(tdict.pool.mapping())
+    pool = TemplatePool.from_state(
+        tdict.pool.templates, tdict.pool.mapping(), tdict.pool.threshold
+    )
     for r in rows:
         pool.add(int(r["sig"]), r["template"])
-    final = pool.templates
-    spark = new_templates.sparkSession
-    dict_rows = [(int(sig), int(tid), final[tid]) for sig, tid in pool.mapping().items()]
-    dict_df = spark.createDataFrame(dict_rows, "sig long, template_id long, template string")
     return TemplateDictionary(
-        df=dict_df, pool=pool, n_sigs=len(dict_rows), counts=None
+        df=dictionary_frame(new_templates.sparkSession, pool),
+        pool=pool,
+        n_sigs=len(pool.mapping()),
+        counts=None,
     )

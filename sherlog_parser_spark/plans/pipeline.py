@@ -9,10 +9,15 @@ guide §8 "decide with small rows, move big rows once"):
                               + driver merge + broadcast back)
       → slim pre-shuffle     (broadcast join: + template_id only;
                               conv_bucket; raw row otherwise untouched)
-      → route exchange       (salted repartition carrying ONLY the raw
-                              row + template_id + conv_bucket)
+      → route exchange       (repartition to spark.sql.shuffle.partitions
+                              writer tasks, which AQE does not coalesce,
+                              carrying ONLY the raw row + template_id +
+                              conv_bucket; a template is salted only
+                              when its directories outgrow one core's
+                              share of a group — route.salt_counts)
       → post-exchange attach (broadcast template table with per-template
-                              precomputed event_type + param metadata;
+                              precomputed event_type + param metadata,
+                              materialized once before the group writes;
                               parameters derived by positional indexing)
       → partitioned write    (checkpointed in conv-bucket groups)
       → aggregates           (template_id-keyed rollup, template string
@@ -64,13 +69,14 @@ from sherlog_parser_spark.plans.dictionary import (
     build_template_dictionary,
     dictionary_from_state,
     dictionary_state,
+    template_frame,
 )
 from sherlog_parser_spark.plans.parse import parse_stage
 from sherlog_parser_spark.plans.route import (
     ROUTE_COLS,
     conv_bucket_expr,
     route_cols,
-    salt_expr,
+    route_exchange,
 )
 
 
@@ -105,7 +111,6 @@ def run_pipeline(
     out_dir: str,
     n_buckets: int = 8,
     commit_groups: int = 4,
-    salt_buckets: int = 4,
     use_arrow_udf: bool = False,
     with_params: bool = True,
     resume: bool = True,
@@ -125,7 +130,6 @@ def run_pipeline(
         {
             "n_buckets": n_buckets,
             "commit_groups": commit_groups,
-            "salt_buckets": salt_buckets,
             "use_arrow_udf": use_arrow_udf,
             "with_params": with_params,
         },
@@ -214,13 +218,16 @@ def run_pipeline(
         .drop("sig")
         .withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
     )
-    tpl_df = spark.createDataFrame(
-        [(tid, t) for tid, t in enumerate(tdict.templates)],
-        "template_id long, template string",
-    )
+    tpl_df = template_frame(spark, tdict.templates)
     tpl_meta = tpl_df.withColumn("__event_type", event_type_expr("template"))
     if with_params:
         tpl_meta = tpl_meta.withColumn("__pmeta", template_param_meta("template"))
+    # Materialized once, on the driver thread before the group writes
+    # start: left as a local relation, two group writes in flight fail
+    # with "The key array and value array of MapData must have the same
+    # length" (serial groups pass), as if both evaluated the metadata
+    # lambdas with expression objects they share.
+    tpl_meta = tpl_meta.localCheckpoint(eager=True)
 
     def _attach_derived(frame: DataFrame) -> DataFrame:
         out = frame.join(F.broadcast(tpl_meta), "template_id", "left").withColumn(
@@ -271,7 +278,6 @@ def run_pipeline(
         agg_thread = threading.Thread(target=_write_aggregates, name="aggregates")
         agg_thread.start()
 
-    salt = salt_expr(tdict.hot_template_ids(), salt_buckets)
     manifest_lock = threading.Lock()
 
     def _write_group(g: int) -> int:
@@ -284,9 +290,7 @@ def run_pipeline(
             obs, F.count(F.lit(1)).alias("rows"), F.bit_xor(F.xxhash64("conv_id", "turn_idx")).alias("fp")
         )
         (
-            _attach_derived(
-                sub.repartition(F.col("template_id"), F.col("tool"), F.col("conv_bucket"), salt)
-            )
+            _attach_derived(route_exchange(sub, tdict.counts, n_buckets, commit_groups))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             # selective dictionary encoding (r6 A/B at 1 core, one

@@ -10,10 +10,16 @@ generalized per north_rule: enriched turns land under
 sandbox fallback for Iceberg — SURVEY §7.3.6; the write call is kept
 behind one function so an Iceberg ``writeTo(...).append()`` slots in).
 
-Skew: hot templates (Zipfian) are spread across writer tasks by
-repartitioning on the partition columns PLUS a salt derived from
-(conv_id, turn_idx), so one template does not serialize into one task;
-AQE skew handling remains on as backstop.
+Width and skew: every route exchange goes through ``route_exchange``,
+an explicit ``repartition(n_parts, template_id, tool, conv_bucket, salt)``
+with ``n_parts = spark.sql.shuffle.partitions``.  The explicit count
+matters: AQE coalesces a column-only repartition, and for a small commit
+group it merged the whole exchange into ONE writer task that wrote
+every file of the group while the other cores idled.  AQE skew handling
+is no backstop either, because it splits skewed join inputs, not a
+repartition that feeds a write; so a template whose directory would
+outgrow one core's share of a group is salted here, with a salt count
+sized from the dictionary row counts (``salt_counts``).
 """
 
 from __future__ import annotations
@@ -33,18 +39,63 @@ def conv_bucket_expr(conv_id: Column | str, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(n_buckets)).cast("int")
 
 
-def salt_expr(hot_template_ids: list[int] | None, salt_buckets: int):
-    """Salt ONLY the Zipf-head templates: cold (template,tool,bucket)
-    combos land in exactly one writer task -> one file; hot combos are
-    spread over ``salt_buckets`` tasks.  Unconditional salting would
-    multiply the sink's file count by salt_buckets (measured 4x file
-    explosion == 4x write wall time at small scale)."""
-    if not hot_template_ids or salt_buckets <= 1:
+def salt_counts(
+    counts: dict[int, int] | None,
+    n_buckets: int,
+    commit_groups: int,
+    parallelism: int,
+    n_parts: int,
+) -> dict[int, int]:
+    """``template_id -> k`` for the templates to spread over ``k > 1``
+    writer tasks.  One of a template's directories holds about
+    ``count / n_buckets`` rows and one core's share of a commit group is
+    ``total / commit_groups / parallelism`` rows; ``k`` is the ceiling of
+    their ratio, capped at ``n_parts``.  Templates with ``k = 1`` stay
+    unsalted (one writer task, so one file per directory), and None or
+    empty counts salt nothing."""
+    total = sum((counts or {}).values())
+    if not total:
+        return {}
+    salts = {}
+    for tid, n in counts.items():
+        # ceil((n / n_buckets) / (total / commit_groups / parallelism)), in integers
+        k = min(n_parts, -(-n * commit_groups * parallelism // (n_buckets * total)))
+        if k > 1:
+            salts[tid] = k
+    return salts
+
+
+def salt_expr(salts: dict[int, int]) -> Column:
+    """Salt value per row: ``pmod(xxhash64(conv_id, turn_idx), k)`` for a
+    template with ``k`` salt values, 0 for every other template.  Only
+    the salted templates' directories get more than one file; salting
+    every template would multiply the sink's file count (measured 4x
+    files == 4x write wall time at small scale)."""
+    if not salts:
         return F.lit(0)
-    return F.when(
-        F.col("template_id").isin(*hot_template_ids),
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets)),
-    ).otherwise(F.lit(0))
+    row_hash = F.xxhash64("conv_id", "turn_idx")
+    expr = None
+    for tid, k in sorted(salts.items()):
+        cond, value = F.col("template_id") == tid, F.pmod(row_hash, F.lit(k))
+        expr = F.when(cond, value) if expr is None else expr.when(cond, value)
+    return expr.otherwise(F.lit(0))
+
+
+def route_exchange(
+    frame: DataFrame, counts: dict[int, int] | None, n_buckets: int, commit_groups: int = 1
+) -> DataFrame:
+    """The writer exchange of one route write (one commit group of
+    ``commit_groups``): ``spark.sql.shuffle.partitions`` tasks, which AQE
+    does not coalesce, keyed by the sink directory plus the count-sized
+    salt."""
+    spark = frame.sparkSession
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    salts = salt_counts(
+        counts, n_buckets, commit_groups, spark.sparkContext.defaultParallelism, n_parts
+    )
+    return frame.repartition(
+        n_parts, F.col("template_id"), F.col("tool"), F.col("conv_bucket"), salt_expr(salts)
+    )
 
 
 def route_cols(df: DataFrame) -> list[str]:
@@ -57,16 +108,14 @@ def route_stage(
     enriched: DataFrame,
     out_dir: str,
     n_buckets: int = 8,
-    salt_buckets: int = 4,
-    hot_template_ids: list[int] | None = None,
+    counts: dict[int, int] | None = None,
     mode: str = "overwrite",
     extra_cols: list[str] | None = None,
 ) -> None:
     cols = route_cols(enriched) + (extra_cols or [])
     routed = enriched.select(*cols).withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
-    salt = salt_expr(hot_template_ids, salt_buckets)
     (
-        routed.repartition(F.col("template_id"), F.col("tool"), F.col("conv_bucket"), salt)
+        route_exchange(routed, counts, n_buckets)
         .write.mode(mode)
         # selective dictionary encoding (r6): ON for low-cardinality
         # columns, OFF for the high-cardinality text/conv_id/param
