@@ -43,7 +43,11 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         from sherlog_parser_spark.data.transcripts import generate_transcripts
-        from sherlog_parser_spark.plans.dictionary import build_template_dictionary, template_frame
+        from sherlog_parser_spark.plans.dictionary import (
+            build_template_dictionary,
+            plain_frame,
+            template_frame,
+        )
         from sherlog_parser_spark.plans.parse import parse_stage
         from sherlog_parser_spark.plans.route import conv_bucket_expr, route_exchange
 
@@ -66,11 +70,13 @@ def main() -> None:
             .drop("sig")
             .withColumn("conv_bucket", conv_bucket_expr("conv_id", 2))
         )
-        tpl_meta = template_frame(spark, tdict.templates).withColumn(
-            "__event_type", event_type_expr("template")
-        ).withColumn("__pmeta", template_param_meta("template"))
+        tpl_meta = plain_frame(
+            template_frame(spark, tdict.templates)
+            .withColumn("__event_type", event_type_expr("template"))
+            .withColumn("__pmeta", template_param_meta("template"))
+        )
         routed = (
-            route_exchange(pre, tdict.counts, 2)
+            route_exchange(pre)
             .join(F.broadcast(tpl_meta), "template_id", "left")
             .withColumn("event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN")))
             .withColumn("__lt", tokens_fast_expr("text"))

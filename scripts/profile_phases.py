@@ -54,7 +54,7 @@ def main() -> None:
         "conv_bucket", conv_bucket_expr("conv_id", 2)
     )
     (
-        route_exchange(routed, tdict.counts, 2)
+        route_exchange(routed)
         .write.mode("overwrite")
         .option("parquet.enable.dictionary", "false")
         .partitionBy("template_id", "tool", "conv_bucket")

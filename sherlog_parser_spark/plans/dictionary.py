@@ -48,7 +48,8 @@ def dictionary_frame(spark: SparkSession, pool: TemplatePool) -> DataFrame:
     Built from a ``pyarrow.Table``, as is :func:`template_frame`: that
     makes a JVM-local relation, so scanning or broadcasting it runs no
     Python worker (a ``createDataFrame(list)`` frame re-runs a Python job
-    per broadcast)."""
+    per broadcast).  A lambda projection over it goes through
+    :func:`plain_frame`."""
     mapping = pool.mapping()
     return spark.createDataFrame(
         pa.table({
@@ -67,6 +68,20 @@ def template_frame(spark: SparkSession, templates: list[str]) -> DataFrame:
             "template": pa.array(templates, pa.string()),
         })
     )
+
+
+def plain_frame(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a plain-data local relation, evaluated once, on
+    the calling thread.  A side frame that projects higher-order
+    functions (lambdas) over one of the local relations above must pass
+    through here before jobs use it: the optimizer folds such a
+    projection into the relation's rows on the driver
+    (ConvertToLocalRelation) with the plan's own lambda-variable
+    objects, so two jobs planned at once over the same frame overwrite
+    each other's lambda values and silently corrupt rows (seen
+    downstream as "The key array and value array of MapData must have
+    the same length")."""
+    return df.sparkSession.createDataFrame(df.toArrow())
 
 
 def build_template_dictionary(

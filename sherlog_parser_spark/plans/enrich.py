@@ -28,6 +28,7 @@ from sherlog_parser_spark.functions.masking import (
     template_param_meta,
     tokens_fast_expr,
 )
+from sherlog_parser_spark.plans.dictionary import plain_frame
 
 
 def enrich_stage(
@@ -41,6 +42,7 @@ def enrich_stage(
     ).withColumn("__normalized", normalize_template_expr("template"))
     if with_params:
         tdict = tdict.withColumn("__pmeta", template_param_meta("template"))
+    tdict = plain_frame(tdict)  # no lambda folding in concurrent jobs
     out = parsed.join(F.broadcast(tdict), "sig", "left")
     if dim is not None:
         out = out.join(F.broadcast(dim), ["role", "tool"], "left")

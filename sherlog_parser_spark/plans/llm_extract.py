@@ -106,8 +106,9 @@ def extend_dictionary(
 
     The returned dictionary's ``counts`` is None: the frozen counts say
     nothing about rows of the new signatures, and silently reusing them
-    would mis-size the route salt (``route.salt_counts``, r4 review) —
-    recompute from data when salting decisions follow an extension."""
+    would undercount every template the new signatures joined (r4
+    review) — recompute from data when counts are needed after an
+    extension."""
     from sherlog_parser_spark.oracle.matcher import TemplatePool
 
     order = ["_first_seen", "sig"] if "_first_seen" in new_templates.columns else ["sig"]

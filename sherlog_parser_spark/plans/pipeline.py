@@ -12,12 +12,10 @@ guide §8 "decide with small rows, move big rows once"):
       → route exchange       (repartition to spark.sql.shuffle.partitions
                               writer tasks, which AQE does not coalesce,
                               carrying ONLY the raw row + template_id +
-                              conv_bucket; a template is salted only
-                              when its directories outgrow one core's
-                              share of a group — route.salt_counts)
+                              conv_bucket; one task per sink directory)
       → post-exchange attach (broadcast template table with per-template
                               precomputed event_type + param metadata,
-                              materialized once before the group writes;
+                              evaluated once before the group writes;
                               parameters derived by positional indexing)
       → partitioned write    (checkpointed in conv-bucket groups)
       → aggregates           (template_id-keyed rollup, template string
@@ -69,6 +67,7 @@ from sherlog_parser_spark.plans.dictionary import (
     build_template_dictionary,
     dictionary_from_state,
     dictionary_state,
+    plain_frame,
     template_frame,
 )
 from sherlog_parser_spark.plans.parse import parse_stage
@@ -222,12 +221,10 @@ def run_pipeline(
     tpl_meta = tpl_df.withColumn("__event_type", event_type_expr("template"))
     if with_params:
         tpl_meta = tpl_meta.withColumn("__pmeta", template_param_meta("template"))
-    # Materialized once, on the driver thread before the group writes
-    # start: left as a local relation, two group writes in flight fail
-    # with "The key array and value array of MapData must have the same
-    # length" (serial groups pass), as if both evaluated the metadata
-    # lambdas with expression objects they share.
-    tpl_meta = tpl_meta.localCheckpoint(eager=True)
+    # evaluated here, before the group pool starts: the groups' jobs
+    # would otherwise fold the metadata lambdas concurrently (see
+    # plain_frame)
+    tpl_meta = plain_frame(tpl_meta)
 
     def _attach_derived(frame: DataFrame) -> DataFrame:
         out = frame.join(F.broadcast(tpl_meta), "template_id", "left").withColumn(
@@ -290,7 +287,7 @@ def run_pipeline(
             obs, F.count(F.lit(1)).alias("rows"), F.bit_xor(F.xxhash64("conv_id", "turn_idx")).alias("fp")
         )
         (
-            _attach_derived(route_exchange(sub, tdict.counts, n_buckets, commit_groups))
+            _attach_derived(route_exchange(sub))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             # selective dictionary encoding (r6 A/B at 1 core, one

@@ -10,16 +10,17 @@ generalized per north_rule: enriched turns land under
 sandbox fallback for Iceberg — SURVEY §7.3.6; the write call is kept
 behind one function so an Iceberg ``writeTo(...).append()`` slots in).
 
-Width and skew: every route exchange goes through ``route_exchange``,
-an explicit ``repartition(n_parts, template_id, tool, conv_bucket, salt)``
-with ``n_parts = spark.sql.shuffle.partitions``.  The explicit count
-matters: AQE coalesces a column-only repartition, and for a small commit
-group it merged the whole exchange into ONE writer task that wrote
-every file of the group while the other cores idled.  AQE skew handling
-is no backstop either, because it splits skewed join inputs, not a
-repartition that feeds a write; so a template whose directory would
-outgrow one core's share of a group is salted here, with a salt count
-sized from the dictionary row counts (``salt_counts``).
+Width: every route exchange goes through ``route_exchange``, an
+explicit ``repartition(n_parts, template_id, tool, conv_bucket)`` with
+``n_parts = spark.sql.shuffle.partitions``.  The explicit count matters:
+AQE coalesces a column-only repartition, and for a small commit group it
+merged the whole exchange into ONE writer task that wrote every file of
+the group while the other cores idled.  Each sink directory is written
+by one task, so it holds one file.  A template whose directory outgrows
+one core's share of a group would still serialize in one task, and AQE
+skew handling is no backstop there: it splits skewed join inputs, not a
+repartition that feeds a write.  Salting such a template is left until a
+workload measures that case.
 """
 
 from __future__ import annotations
@@ -39,63 +40,12 @@ def conv_bucket_expr(conv_id: Column | str, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(n_buckets)).cast("int")
 
 
-def salt_counts(
-    counts: dict[int, int] | None,
-    n_buckets: int,
-    commit_groups: int,
-    parallelism: int,
-    n_parts: int,
-) -> dict[int, int]:
-    """``template_id -> k`` for the templates to spread over ``k > 1``
-    writer tasks.  One of a template's directories holds about
-    ``count / n_buckets`` rows and one core's share of a commit group is
-    ``total / commit_groups / parallelism`` rows; ``k`` is the ceiling of
-    their ratio, capped at ``n_parts``.  Templates with ``k = 1`` stay
-    unsalted (one writer task, so one file per directory), and None or
-    empty counts salt nothing."""
-    total = sum((counts or {}).values())
-    if not total:
-        return {}
-    salts = {}
-    for tid, n in counts.items():
-        # ceil((n / n_buckets) / (total / commit_groups / parallelism)), in integers
-        k = min(n_parts, -(-n * commit_groups * parallelism // (n_buckets * total)))
-        if k > 1:
-            salts[tid] = k
-    return salts
-
-
-def salt_expr(salts: dict[int, int]) -> Column:
-    """Salt value per row: ``pmod(xxhash64(conv_id, turn_idx), k)`` for a
-    template with ``k`` salt values, 0 for every other template.  Only
-    the salted templates' directories get more than one file; salting
-    every template would multiply the sink's file count (measured 4x
-    files == 4x write wall time at small scale)."""
-    if not salts:
-        return F.lit(0)
-    row_hash = F.xxhash64("conv_id", "turn_idx")
-    expr = None
-    for tid, k in sorted(salts.items()):
-        cond, value = F.col("template_id") == tid, F.pmod(row_hash, F.lit(k))
-        expr = F.when(cond, value) if expr is None else expr.when(cond, value)
-    return expr.otherwise(F.lit(0))
-
-
-def route_exchange(
-    frame: DataFrame, counts: dict[int, int] | None, n_buckets: int, commit_groups: int = 1
-) -> DataFrame:
-    """The writer exchange of one route write (one commit group of
-    ``commit_groups``): ``spark.sql.shuffle.partitions`` tasks, which AQE
-    does not coalesce, keyed by the sink directory plus the count-sized
-    salt."""
-    spark = frame.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    salts = salt_counts(
-        counts, n_buckets, commit_groups, spark.sparkContext.defaultParallelism, n_parts
-    )
-    return frame.repartition(
-        n_parts, F.col("template_id"), F.col("tool"), F.col("conv_bucket"), salt_expr(salts)
-    )
+def route_exchange(frame: DataFrame) -> DataFrame:
+    """The writer exchange of one route write:
+    ``spark.sql.shuffle.partitions`` tasks keyed by the sink directory,
+    a count AQE does not coalesce."""
+    n_parts = int(frame.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return frame.repartition(n_parts, F.col("template_id"), F.col("tool"), F.col("conv_bucket"))
 
 
 def route_cols(df: DataFrame) -> list[str]:
@@ -108,14 +58,13 @@ def route_stage(
     enriched: DataFrame,
     out_dir: str,
     n_buckets: int = 8,
-    counts: dict[int, int] | None = None,
     mode: str = "overwrite",
     extra_cols: list[str] | None = None,
 ) -> None:
     cols = route_cols(enriched) + (extra_cols or [])
     routed = enriched.select(*cols).withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
     (
-        route_exchange(routed, counts, n_buckets)
+        route_exchange(routed)
         .write.mode(mode)
         # selective dictionary encoding (r6): ON for low-cardinality
         # columns, OFF for the high-cardinality text/conv_id/param

@@ -114,3 +114,14 @@ def test_enrich_tokenizes_text_once(spark, parsed_and_dict):
     # the params lambda must index into the BOUND array attribute
     # (element_at(__lt#N, ...)), not a re-tokenizing expression tree
     assert re.search(r"element_at\(__lt#\d+", plan), plan
+
+
+def test_enrich_dictionary_side_carries_no_lambdas(spark, parsed_and_dict):
+    """The template-side metadata lambdas are evaluated once when the
+    plan is built; the broadcast side is plain data, so concurrent jobs
+    over enrich_stage output never fold them on the driver."""
+    parsed, tdict = parsed_and_dict
+    plan = enrich_stage(parsed, tdict.df)._jdf.queryExecution().analyzed().toString()
+    assert "regexp_extract(lambda" not in plan, plan
+    # the row-side parameter lambda is still there
+    assert "element_at(__lt#" in plan, plan

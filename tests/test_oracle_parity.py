@@ -66,11 +66,11 @@ def test_template_counts_match(oracle_parsed, spark_enriched):
 
 def test_routed_row_sets_match(oracle_parsed, spark_enriched, tmp_path):
     parsed, parser = oracle_parsed
-    enriched, tdict = spark_enriched
+    enriched, _ = spark_enriched
     from sherlog_parser_spark.plans.route import route_stage
 
     out = str(tmp_path / "routed")
-    route_stage(enriched, out, n_buckets=4, counts=tdict.counts)
+    route_stage(enriched, out, n_buckets=4)
     sink = enriched.sparkSession.read.parquet(out)
     got: dict[tuple, set] = {}
     for r in sink.select("template_id", "tool", "conv_id", "turn_idx").collect():
