@@ -1,19 +1,38 @@
-"""Per-partition checkpoint manifest with lineage + metrics.
+"""The commit protocol of both batch jobs: a run-validated manifest and
+a sink written in hash-disjoint commit groups.
 
 Modeled on the reference's only resumable construct — the eval-pipeline
 JSON result cache (src/eval/eval_pipeline.py:99-107,139-145) and metrics
-sink (src/core/metrics.py:84-113) — generalized to partition-group
-granularity: the route stage commits work in conv-bucket groups; each
-committed group appends a manifest entry
+sink (src/core/metrics.py:84-113) — generalized to partition groups.
+The paper's "file-per-task commit" replaces the reference's per-batch
+bulk insert, and this module owns it for ``plans.pipeline.run_pipeline``
+(the routed sink) and ``plans.curation.run_curation_pipeline`` (the
+cleaned sink):
 
-    {unit, rows, input_fingerprint, sink, wall_sec, committed_at}
+* ``open_run`` loads ``_manifest.jsonl`` and checks its run header (the
+  caller's fingerprint of input plan + config).  A different run, or
+  ``resume=False``, deletes the sink and side files first, so a resume
+  never mixes groups of two runs.
+* ``commit_groups`` writes every uncommitted group
+  ``pmod(group_col, n_groups) == g`` with the caller's ``write``
+  callable.  Rows and ``bit_xor(xxhash64(*fp_cols))`` are observed on
+  the write job itself (``Observation``: no extra pass), and the group
+  appends one manifest line
 
-A re-run with the same manifest skips committed units and produces
-byte-identical sink contents (tested).  At cluster scale each unit is an
-independent Spark job over a hash-pruned slice, so a failed run loses at
-most one unit's work.  A crash mid-append leaves a torn final line (no
-trailing newline); ``load`` drops it with a warning, so the unit it
-described is redone (a corrupt complete line still raises).
+      {unit, rows, input_fingerprint, sink, wall_sec, committed_at}
+
+  when its write returns.  Two groups are in flight at once: the
+  driver-side file commit of one leaves executors idle, and under FIFO
+  the other group's tasks fill exactly those gaps.  The groups write
+  disjoint partition values, each under its own ``.spark-staging-*``
+  directory (dynamic partition overwrite), so they are safe together.
+
+A killed run loses at most the groups in flight; a rerun skips committed
+units and ends with a bit-identical sink (tested, with faults injected
+into a group write and into the pipeline's aggregates thread).  A crash
+mid-append leaves a torn final line (no trailing newline); ``load``
+drops it with a warning, so the unit it described is redone (a corrupt
+complete line still raises).
 """
 
 from __future__ import annotations
@@ -21,12 +40,20 @@ from __future__ import annotations
 import json
 import logging
 import os
+import shutil
+import threading
 import time
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
 
 RUN_HEADER_UNIT = "_run"
+GROUPS_IN_FLIGHT = 2
 
 
 @dataclass
@@ -65,31 +92,31 @@ class CheckpointManifest:
         return (self.run_header or {}).get("run_fingerprint")
 
     def commit_run(self, run_fingerprint: str) -> None:
-        """Append the run-identity header (input plan + params hash).
-        Resume refuses to mix groups across differing headers."""
-        entry = {
+        """Append the run-identity header (input plan + params hash)."""
+        self._append({
             "unit": RUN_HEADER_UNIT,
             "run_fingerprint": run_fingerprint,
             "committed_at": time.time(),
-        }
-        self.run_header = entry
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        })
 
     def is_committed(self, unit: str) -> bool:
         return unit in self.entries
 
     def commit(self, unit: str, rows: int, input_fingerprint: str, sink: str, wall_sec: float) -> None:
-        entry = {
+        self._append({
             "unit": unit,
             "rows": rows,
             "input_fingerprint": input_fingerprint,
             "sink": sink,
             "wall_sec": round(wall_sec, 4),
             "committed_at": time.time(),
-        }
-        self.entries[unit] = entry
+        })
+
+    def _append(self, entry: dict) -> None:
+        if entry["unit"] == RUN_HEADER_UNIT:
+            self.run_header = entry
+        else:
+            self.entries[entry["unit"]] = entry
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         with open(self.path, "a") as f:
             f.write(json.dumps(entry) + "\n")
@@ -100,3 +127,65 @@ class CheckpointManifest:
             "rows": sum(e["rows"] for e in self.entries.values()),
             "wall_sec": round(sum(e["wall_sec"] for e in self.entries.values()), 4),
         }
+
+
+def open_run(manifest_path: str, run_fp: str, resume: bool, outputs: list[str]) -> CheckpointManifest:
+    """The manifest of run ``run_fp``, header written.  Without
+    ``resume``, or when the stored header names a different run, the
+    manifest and every path in ``outputs`` (sink directory, side files)
+    are deleted first."""
+    manifest = CheckpointManifest.load(manifest_path) if resume else None
+    if manifest is not None and (manifest.entries or manifest.run_header) \
+            and manifest.run_fingerprint() != run_fp:
+        _log.warning(
+            "checkpoint manifest at %s was written by a different input/config "
+            "(stored fingerprint %s != current %s); discarding sink and manifest",
+            manifest_path, manifest.run_fingerprint(), run_fp,
+        )
+        manifest = None
+    if manifest is None:
+        for p in [*outputs, manifest_path]:
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            elif os.path.exists(p):
+                os.remove(p)
+        manifest = CheckpointManifest(manifest_path)
+    if manifest.run_header is None:
+        manifest.commit_run(run_fp)
+    return manifest
+
+
+def commit_groups(
+    manifest: CheckpointManifest,
+    frame: DataFrame,
+    group_col: str,
+    n_groups: int,
+    fp_cols: list[str],
+    sink: str,
+    write: Callable[[DataFrame], None],
+) -> int:
+    """Write ``frame`` in ``n_groups`` groups of ``pmod(group_col,
+    n_groups)``, skipping units the manifest holds; returns the total
+    row count, committed earlier or now.  The first failing group write
+    raises after the groups in flight finish; groups not yet started
+    are cancelled."""
+    lock = threading.Lock()
+
+    def one(g: int) -> int:
+        unit = f"bucket_group={g}"
+        if manifest.is_committed(unit):
+            return int(manifest.entries[unit]["rows"])
+        t0 = time.time()
+        obs = Observation()
+        write(frame.filter(F.pmod(F.col(group_col), F.lit(n_groups)) == g).observe(
+            obs, F.count(F.lit(1)).alias("rows"), F.bit_xor(F.xxhash64(*fp_cols)).alias("fp")
+        ))
+        rows = int(obs.get["rows"])
+        with lock:
+            manifest.commit(unit, rows, str(obs.get["fp"]), sink, time.time() - t0)
+        return rows
+
+    with ThreadPoolExecutor(
+        max_workers=min(GROUPS_IN_FLIGHT, max(1, n_groups)), thread_name_prefix="commit-group"
+    ) as pool:
+        return sum(pool.map(one, range(n_groups)))

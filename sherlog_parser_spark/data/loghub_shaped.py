@@ -141,12 +141,3 @@ def generate_loghub_shaped(spark: SparkSession, n_rows: int = 2000) -> DataFrame
     return spark.createDataFrame(
         golden_rows(n_rows), "LineId INT, Content STRING, EventId STRING, EventTemplate STRING"
     )
-
-
-def write_csv(path: str, n_rows: int = 2000) -> None:
-    import csv
-
-    with open(path, "w", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(["LineId", "Content", "EventId", "EventTemplate"])
-        w.writerows(golden_rows(n_rows))

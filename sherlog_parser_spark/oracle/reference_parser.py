@@ -28,14 +28,6 @@ from sherlog_parser_spark.functions.masking import (
 from sherlog_parser_spark.oracle.matcher import TemplatePool
 
 
-def sig64(template: str) -> int:
-    """Stable 64-bit signature. The oracle only needs *some* injective-ish
-    key per masked template; the Spark side uses xxhash64 while the oracle
-    keys on the template string itself (collision-free by construction),
-    so parity tests compare template strings / ids, never raw hashes."""
-    return hash(template)
-
-
 @dataclass
 class ParsedTurn:
     conv_id: str

@@ -1,6 +1,6 @@
 """Aggregate stage: per-sink template-frequency and windowed tool-usage.
 
-Counts (A1/A2/A3/A12 in SURVEY §2.4) are two-phase by construction in
+Counts (A1/A12 in SURVEY §2.4) are two-phase by construction in
 Spark (map-side partial aggregation), which already neutralizes Zipf
 skew for algebraic aggregates; ``salted_count`` adds an explicit
 two-level salted aggregation for use where per-key state is large
@@ -125,23 +125,4 @@ def tool_usage_windowed(enriched: DataFrame, window: str = "1 hour") -> DataFram
             F.col("w.end").alias("window_end"),
             "uses",
         )
-    )
-
-
-def hourly_level_counts(df: DataFrame, level_col: str = "event_type", window: str = "1 hour") -> DataFrame:
-    """A2 — time-bucketed counts per level/event-type."""
-    return (
-        df.groupBy(F.window("ts", window).alias("w"), level_col)
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), level_col, "n")
-    )
-
-
-def component_activity(df: DataFrame, comp_col: str, k: int = 10) -> DataFrame:
-    """A3 — global top-k most active components."""
-    return (
-        df.groupBy(comp_col)
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), comp_col)
-        .limit(k)
     )

@@ -32,8 +32,11 @@ into ONE DAG with the same checkpointed-commit-group write discipline:
 
 Every stage is an existing tested operator (operators/dedup.py,
 operators/components.py, functions/textstats.py, functions/pii.py);
-this module contributes the composition, the drop-ledger, and the
-resume machinery.  Reference lifecycle analog: the data-prep half of
+this module contributes the composition, the drop-ledger and the
+cleaned-sink group writer; the commit protocol (run fingerprint check,
+per-group Observation + manifest commit, resume) is
+``checkpoint.open_run``/``commit_groups``, shared with the parse
+pipeline.  Reference lifecycle analog: the data-prep half of
 LogProcessingPipeline.process_dataset (src/core/pipeline.py:52-130) —
 its clean → dedup → filter loop over batches becomes a declarative DAG
 over partitions.
@@ -49,15 +52,15 @@ aggregation of the ledger, not per-stage count() jobs.
 from __future__ import annotations
 
 import json
-import logging
 import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.checkpoint import CheckpointManifest
+from sherlog_parser_spark import checkpoint
 from sherlog_parser_spark.functions import pii as PII
 from sherlog_parser_spark.functions import textstats as TS
 from sherlog_parser_spark.operators.components import connected_components
@@ -65,8 +68,7 @@ from sherlog_parser_spark.operators.dedup import (
     minhash_dup_candidates,
     substring_dedup_cut,
 )
-
-_log = logging.getLogger(__name__)
+from sherlog_parser_spark.plans import pipeline
 
 
 def with_quality_reason(
@@ -190,8 +192,6 @@ def curation_dag(
     'lm_filtered').  The model's bigram/context tables are shared
     intermediates (consumed by the join AND the context derivation) and
     go through the same ``_reuse`` persistence as the fate sets."""
-    from pyspark import StorageLevel
-
     def _reuse(frame: DataFrame) -> DataFrame:
         """Cache frames consumed by BOTH the cleaned branch and the fate
         ledger — without this the ledger's fate counts re-run the whole
@@ -454,72 +454,25 @@ def run_curation_pipeline(
     n_buckets: int = 8,
     commit_groups: int = 4,
     resume: bool = True,
-    persist_cleaned: bool = True,
     **dag_kwargs,
 ) -> CurationResult:
-    """Run the curation DAG with the parse pipeline's commit discipline:
-    the cleaned sink is written in ``commit_groups`` disjoint
-    doc-bucket groups under dynamic partition overwrite, each group
-    idempotent, with (rows, bit_xor fingerprint) observed ON the write
-    job (no extra pass); a killed run resumes by skipping committed
-    groups (checkpoint.CheckpointManifest, fingerprint-validated like
-    plans/pipeline.run_pipeline)."""
-    import shutil
-
-    from sherlog_parser_spark.plans.pipeline import _run_fingerprint
-
+    """Run the curation DAG with the parse pipeline's commit protocol
+    (``checkpoint.open_run`` + ``checkpoint.commit_groups``): the
+    cleaned sink is written in ``commit_groups`` disjoint doc-bucket
+    groups under dynamic partition overwrite, each group idempotent;
+    a killed run resumes by skipping committed groups.  ``bench_docs``
+    and every DAG option, DataFrames inside option dicts included,
+    enter the run fingerprint (``pipeline._run_fingerprint``), so a run
+    with a different blocklist or embeddings table starts clean."""
     t_start = time.time()
     cleaned_dir = os.path.join(out_dir, "cleaned")
     manifest_path = os.path.join(out_dir, "_manifest.jsonl")
-    # bench_docs is part of the run identity: resuming with a DIFFERENT
-    # decontamination blocklist would silently mix bucket groups curated
-    # under different rules (r4 review) — normalize its plan the same
-    # way _run_fingerprint normalizes the input's
-    import re as _re
-
-    def _norm_plan(frame):
-        return _re.sub(r"#\d+", "#", frame._jdf.queryExecution().analyzed().toString())
-
-    bench_plan = _norm_plan(bench_docs) if bench_docs is not None else None
-
-    def _fp_value(v):
-        """Auxiliary DataFrames inside option dicts (e.g. semdedup's
-        embeddings) must contribute their normalized PLAN to the run
-        identity — str(DataFrame) is schema-only and would let two
-        different embedding tables resume into each other (the r4
-        bench_docs lesson)."""
-        if isinstance(v, DataFrame):
-            return _norm_plan(v)
-        if isinstance(v, dict):
-            return {k: _fp_value(x) for k, x in sorted(v.items())}
-        return str(v)
-
-    run_fp = _run_fingerprint(
+    run_fp = pipeline._run_fingerprint(
         docs,
         {"kind": "curation", "n_buckets": n_buckets, "commit_groups": commit_groups,
-         "bench_plan": bench_plan,
-         **{k: str(_fp_value(v)) for k, v in dag_kwargs.items()}},
+         "bench_docs": bench_docs, **dag_kwargs},
     )
-    if resume:
-        manifest = CheckpointManifest.load(manifest_path)
-        stored_fp = manifest.run_fingerprint()
-        if (manifest.entries or stored_fp is not None) and stored_fp != run_fp:
-            _log.warning(
-                "curation manifest at %s from a different input/config "
-                "(%s != %s); discarding sink and manifest",
-                manifest_path, stored_fp, run_fp,
-            )
-            shutil.rmtree(cleaned_dir, ignore_errors=True)
-            if os.path.exists(manifest_path):
-                os.remove(manifest_path)
-            manifest = CheckpointManifest(manifest_path)
-    else:
-        shutil.rmtree(cleaned_dir, ignore_errors=True)
-        if os.path.exists(manifest_path):
-            os.remove(manifest_path)
-        manifest = CheckpointManifest(manifest_path)
-    if manifest.run_fingerprint() is None:
-        manifest.commit_run(run_fp)
+    manifest = checkpoint.open_run(manifest_path, run_fp, resume, [cleaned_dir])
 
     # Scale-adaptive scan fan-out (guide §2.2, r6): a small local input
     # arrives as ONE parquet split, so every narrow stage of the DAG
@@ -539,32 +492,15 @@ def run_curation_pipeline(
     cleaned, ledger = curation_dag(
         fan_docs, bench_docs=bench_docs, persist_registry=dag_persists, **dag_kwargs
     )
+    # the DAG above this point includes the iterative CC job and two
+    # shingle explodes; persisting the survivors turns per-group
+    # recomputation of the whole chain into one pass
     bucketed = cleaned.withColumn(
         "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
-    )
-    if persist_cleaned:
-        # the DAG above this point includes the iterative CC job and two
-        # shingle explodes; persisting the survivors turns per-group
-        # recomputation of the whole chain into one pass
-        from pyspark import StorageLevel
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    dag_persists.append(bucketed)
 
-        bucketed = bucketed.persist(StorageLevel.MEMORY_AND_DISK)
-
-    total_rows = 0
-    for g in range(commit_groups):
-        unit = f"bucket_group={g}"
-        if manifest.is_committed(unit):
-            total_rows += manifest.entries[unit]["rows"]
-            continue
-        t0 = time.time()
-        obs = Observation(f"curate_g{g}")
-        sub = bucketed.filter(
-            F.pmod(F.col("doc_bucket"), F.lit(commit_groups)) == g
-        ).observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.bit_xor(F.xxhash64("doc_id", "text")).alias("fp"),
-        )
+    def _write_group(sub: DataFrame) -> None:
         (
             sub.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -572,16 +508,15 @@ def run_curation_pipeline(
             .partitionBy("doc_bucket")
             .parquet(cleaned_dir)
         )
-        rows = int(obs.get["rows"])
-        total_rows += rows
-        manifest.commit(unit, rows, str(obs.get["fp"]), cleaned_dir, time.time() - t0)
 
+    total_rows = checkpoint.commit_groups(
+        manifest, bucketed, "doc_bucket", commit_groups, ["doc_id", "text"], cleaned_dir,
+        _write_group,
+    )
     fate_counts = {
         r["fate"]: r["n"]
         for r in ledger.groupBy("fate").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    if persist_cleaned:
-        bucketed.unpersist()
     for frame in dag_persists:
         frame.unpersist()
     wall = time.time() - t_start

@@ -21,12 +21,15 @@ guide §8 "decide with small rows, move big rows once"):
       → aggregates           (template_id-keyed rollup, template string
                               attached at rollup cardinality)
 
-Checkpointing: the routed write commits in ``commit_groups`` disjoint
-conv-bucket groups with dynamic partition overwrite, so every group is
-idempotent and a killed run resumes by skipping committed groups
-(checkpoint.CheckpointManifest).  Row counts + a content fingerprint
-(bit_xor of per-row hashes) are observed ON the write job itself
-(pyspark Observation) — lineage metrics cost no extra pass.
+Checkpointing: this module keeps only the DAG and the group writer
+(``route.write_routed`` with dynamic partition overwrite, so every group
+is idempotent).  ``checkpoint.open_run`` validates the manifest against
+``_run_fingerprint`` — which ``plans.curation`` shares — and
+``checkpoint.commit_groups`` writes the ``commit_groups`` disjoint
+conv-bucket groups, two in flight, observing rows + a bit_xor content
+fingerprint on each write job; a killed run resumes by skipping
+committed groups.  The aggregates thread overlaps the group writes; its
+error surfaces after them.
 
 Reference lifecycle being reproduced: ParserService.parse_logs
 (src/core/parser_service.py:66-202) and
@@ -39,17 +42,16 @@ from __future__ import annotations
 
 import hashlib
 import json
-import logging
 import os
 import re
 import threading
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.checkpoint import CheckpointManifest
+from sherlog_parser_spark import checkpoint
 from sherlog_parser_spark.functions.masking import (
     apply_params_expr,
     event_type_expr,
@@ -72,25 +74,32 @@ from sherlog_parser_spark.plans.dictionary import (
 )
 from sherlog_parser_spark.plans.parse import parse_stage
 from sherlog_parser_spark.plans.route import (
-    ROUTE_COLS,
     conv_bucket_expr,
     route_cols,
     route_exchange,
+    write_routed,
 )
 
 
-_log = logging.getLogger(__name__)
+def _plan(frame: DataFrame) -> str:
+    """The analyzed plan with expression ids stripped (they vary per
+    session)."""
+    return re.sub(r"#\d+", "#", frame._jdf.queryExecution().analyzed().toString())
 
 
-def _run_fingerprint(transcripts: DataFrame, params: dict) -> str:
+def _run_fingerprint(frame: DataFrame, params: dict) -> str:
     """Identity of (input, config) for resume validation: md5 of the
-    NORMALIZED analyzed plan (expression ids stripped — they vary per
-    session), the schema, and the pipeline params.  No data pass — at
-    100 TB a content fingerprint would cost a full scan per resume."""
-    plan = re.sub(r"#\d+", "#", transcripts._jdf.queryExecution().analyzed().toString())
+    input's normalized plan, its schema, and ``params``, where a
+    DataFrame anywhere in ``params`` (curation's ``bench_docs``, the
+    embeddings inside ``semdedup_opts``) contributes its normalized plan
+    — ``str(DataFrame)`` is schema-only and would let two different
+    tables resume into each other — and any other non-JSON value its
+    ``str``.  No data pass — at 100 TB a content fingerprint would cost
+    a full scan per resume."""
     payload = json.dumps(
-        {"plan": plan, "schema": transcripts.schema.simpleString(), "params": params},
+        {"plan": _plan(frame), "schema": frame.schema.simpleString(), "params": params},
         sort_keys=True,
+        default=lambda v: _plan(v) if isinstance(v, DataFrame) else str(v),
     )
     return hashlib.md5(payload.encode()).hexdigest()
 
@@ -111,59 +120,22 @@ def run_pipeline(
     n_buckets: int = 8,
     commit_groups: int = 4,
     use_arrow_udf: bool = False,
-    with_params: bool = True,
     resume: bool = True,
     write_aggregates: bool = True,
     aggregate_source: str = "enriched",
     persist_parsed: bool = True,
-    cache_compressed: bool = False,
 ) -> PipelineResult:
-    import shutil
-
     t_start = time.time()
     routed_dir = os.path.join(out_dir, "routed")
     manifest_path = os.path.join(out_dir, "_manifest.jsonl")
     dict_path = os.path.join(out_dir, "_dictionary.json")
     run_fp = _run_fingerprint(
         transcripts,
-        {
-            "n_buckets": n_buckets,
-            "commit_groups": commit_groups,
-            "use_arrow_udf": use_arrow_udf,
-            "with_params": with_params,
-        },
+        {"n_buckets": n_buckets, "commit_groups": commit_groups, "use_arrow_udf": use_arrow_udf},
     )
-
-    if resume:
-        manifest = CheckpointManifest.load(manifest_path)
-        stored_fp = manifest.run_fingerprint()
-        if (manifest.entries or stored_fp is not None) and stored_fp != run_fp:
-            # a manifest from a DIFFERENT input/config: resuming would
-            # silently mix incompatible groups and leave the sink
-            # inconsistent (r1 ADVICE).  Discard it and start clean.
-            _log.warning(
-                "checkpoint manifest at %s was written by a different input/config "
-                "(stored fingerprint %s != current %s); discarding sink and manifest",
-                manifest_path,
-                stored_fp,
-                run_fp,
-            )
-            shutil.rmtree(routed_dir, ignore_errors=True)
-            for p in (manifest_path, dict_path):
-                if os.path.exists(p):
-                    os.remove(p)
-            manifest = CheckpointManifest(manifest_path)
-    else:
-        shutil.rmtree(routed_dir, ignore_errors=True)
-        for p in (manifest_path, dict_path):
-            if os.path.exists(p):
-                os.remove(p)
-        manifest = CheckpointManifest(manifest_path)
-    if manifest.run_fingerprint() is None:
-        manifest.commit_run(run_fp)
+    manifest = checkpoint.open_run(manifest_path, run_fp, resume, [routed_dir, dict_path])
 
     parsed = parse_stage(transcripts, use_arrow_udf=use_arrow_udf)
-    prev_cache_codec = None
     if persist_parsed:
         # the dictionary build, the routed write, and the aggregates each
         # need the masked/sig columns; persisting the parse stage turns
@@ -172,20 +144,15 @@ def run_pipeline(
         # deployments)
         from pyspark import StorageLevel
 
-        # cache_compressed=False (default, r6): this cache lives for ONE
-        # run and is re-read ~3x — columnar compression of the text-heavy
-        # batches cost ~25% of the build phase (A/B at 1 core: 79-89s ->
-        # 59-66s) for no read-side gain at this reuse count.  Deployments
-        # where executor cache memory is the binding constraint pass
-        # cache_compressed=True.  The session conf is restored after the
-        # run.
+        # uncompressed (r6): this cache lives for ONE run and is re-read
+        # ~3x — columnar compression of the text-heavy batches cost ~25%
+        # of the build phase (A/B at 1 core: 79-89s -> 59-66s) for no
+        # read-side gain at this reuse count.  The session conf is
+        # restored after the run.
         prev_cache_codec = spark.conf.get(
             "spark.sql.inMemoryColumnarStorage.compressed", "true"
         )
-        spark.conf.set(
-            "spark.sql.inMemoryColumnarStorage.compressed",
-            "true" if cache_compressed else "false",
-        )
+        spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
         parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
     if manifest.entries and os.path.exists(dict_path):
         # resuming a validated run: reuse the persisted dictionary so
@@ -210,32 +177,32 @@ def run_pipeline(
     # dim join of enrich_stage contributes no ROUTE_COLS column and its
     # (role, tool) keys are unique by construction, so it is provably
     # row-preserving and elided from the route path entirely.
-    base_cols = [c for c in route_cols(parsed) if c in parsed.columns]
     pre = (
-        parsed.select(*base_cols, "sig")
+        parsed.select(*route_cols(parsed), "sig")
         .join(F.broadcast(tdict.df.select("sig", "template_id")), "sig", "left")
         .drop("sig")
         .withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
     )
     tpl_df = template_frame(spark, tdict.templates)
-    tpl_meta = tpl_df.withColumn("__event_type", event_type_expr("template"))
-    if with_params:
-        tpl_meta = tpl_meta.withColumn("__pmeta", template_param_meta("template"))
+    tpl_meta = tpl_df.withColumn("__event_type", event_type_expr("template")).withColumn(
+        "__pmeta", template_param_meta("template")
+    )
     # evaluated here, before the group pool starts: the groups' jobs
     # would otherwise fold the metadata lambdas concurrently (see
     # plain_frame)
     tpl_meta = plain_frame(tpl_meta)
 
-    def _attach_derived(frame: DataFrame) -> DataFrame:
-        out = frame.join(F.broadcast(tpl_meta), "template_id", "left").withColumn(
-            "event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN"))
+    def _write_group(sub: DataFrame) -> None:
+        out = (
+            route_exchange(sub)
+            .join(F.broadcast(tpl_meta), "template_id", "left")
+            .withColumn("event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN")))
+            .withColumn("__lt", tokens_fast_expr("text"))
+            .withColumn("parameters", apply_params_expr(F.col("__lt"), F.col("__pmeta")))
         )
-        if with_params:
-            out = out.withColumn("__lt", tokens_fast_expr("text")).withColumn(
-                "parameters", apply_params_expr(F.col("__lt"), F.col("__pmeta"))
-            )
-        final_cols = [c for c in ROUTE_COLS if c in out.columns] + ["conv_bucket"]
-        return out.select(*final_cols)
+        write_routed(
+            out.select(*route_cols(out), "conv_bucket"), routed_dir, partition_overwrite="dynamic"
+        )
 
     # Aggregates overlap the route write (r3 judge item #5): the rollup
     # needs only tdict + the persisted parse cache, so its tasks fill the
@@ -275,60 +242,15 @@ def run_pipeline(
         agg_thread = threading.Thread(target=_write_aggregates, name="aggregates")
         agg_thread.start()
 
-    manifest_lock = threading.Lock()
-
-    def _write_group(g: int) -> int:
-        unit = f"bucket_group={g}"
-        if manifest.is_committed(unit):
-            return int(manifest.entries[unit]["rows"])
-        t0 = time.time()
-        obs = Observation(f"route_g{g}")
-        sub = pre.filter(F.pmod(F.col("conv_bucket"), F.lit(commit_groups)) == g).observe(
-            obs, F.count(F.lit(1)).alias("rows"), F.bit_xor(F.xxhash64("conv_id", "turn_idx")).alias("fp")
-        )
-        (
-            _attach_derived(route_exchange(sub))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            # selective dictionary encoding (r6 A/B at 1 core, one
-            # group: dict-off 40.6s/187MB, dict-on 47.9s/160MB,
-            # SELECTIVE 38.9s/163MB): dictionary ON for the
-            # low-cardinality columns (template, event_type, role,
-            # parameter keys), OFF for the high-cardinality payloads
-            # whose hashing only burned CPU (the r2 finding, now
-            # per-column instead of global)
-            .option("parquet.enable.dictionary", "true")
-            .option("parquet.enable.dictionary#text", "false")
-            .option("parquet.enable.dictionary#conv_id", "false")
-            .option("parquet.enable.dictionary#parameters.key_value.value", "false")
-            .partitionBy("template_id", "tool", "conv_bucket")
-            .parquet(routed_dir)
-        )
-        rows = int(obs.get["rows"])
-        fp = str(obs.get["fp"])
-        with manifest_lock:
-            manifest.commit(unit, rows, fp, routed_dir, time.time() - t0)
-        return rows
-
     try:
-        # r6 (guide §2.6): group writes overlap from a small thread pool
-        # — one group's driver-side file commit / manifest append leaves
-        # executors idle, and under FIFO the next group's tasks back-fill
-        # exactly those gaps.  Safe to run concurrently: the groups
-        # write DISJOINT conv_bucket partition values, dynamic partition
-        # overwrite stages each job under its own .spark-staging-<uuid>
-        # dir (no shared _temporary), each group keeps its own
-        # Observation + manifest entry committed on ITS OWN completion
-        # (a crash mid-run still resumes by skipping finished groups),
-        # and manifest appends are serialized by a lock.  2 jobs in
-        # flight is enough to fill the tail (same sizing rationale as
-        # the aggregates thread).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(2, max(1, commit_groups)), thread_name_prefix="route-group"
-        ) as pool:
-            total_rows = sum(pool.map(_write_group, range(commit_groups)))
+        total_rows = checkpoint.commit_groups(
+            manifest, pre, "conv_bucket", commit_groups, ["conv_id", "turn_idx"], routed_dir,
+            _write_group,
+        )
+        if write_aggregates and agg_thread is None:
+            # the 'sink' source re-reads the routed sink, so it runs
+            # after the group writes
+            _write_aggregates()
     finally:
         # a failing group write must still wait for the aggregates
         # thread — otherwise the caller's spark.stop() kills its
@@ -336,26 +258,11 @@ def run_pipeline(
         # secondary py4j noise (r4 review)
         if agg_thread is not None:
             agg_thread.join()
-
-    if agg_thread is not None:
-        agg_thread.join()  # no-op if the finally above already joined
-        if agg_error:
-            raise agg_error[0]
-    elif write_aggregates:
-        # per-sink counts are grouped by the sink keys (template_id, tool);
-        # computing them from the in-flight frame is row-identical to
-        # re-reading the sink (verified in tests) and avoids a serial
-        # many-small-files listing + rescan.  One fine-grained rollup scan
-        # feeds both aggregates (counts are algebraic).
-        _write_aggregates()
-        if agg_error:
-            raise agg_error[0]
-    if persist_parsed:
-        parsed.unpersist()
-        if prev_cache_codec is not None:
-            spark.conf.set(
-                "spark.sql.inMemoryColumnarStorage.compressed", prev_cache_codec
-            )
+        if persist_parsed:
+            parsed.unpersist()
+            spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", prev_cache_codec)
+    if agg_error:
+        raise agg_error[0]
 
     wall = time.time() - t_start
     with open(os.path.join(out_dir, "run_metrics.json"), "w") as f:

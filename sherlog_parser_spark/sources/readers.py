@@ -1,4 +1,4 @@
-"""Source readers (SURVEY §2.1 S1-S4) and sinks (K3/K4).
+"""Source readers (SURVEY §2.1 S1-S3) and sinks (K3/K4).
 
 S1  CSV-else-text log-file scan with 'content' normalization
     (src/core/parser_service.py:204-235): try CSV with header; if a
@@ -7,7 +7,6 @@ S1  CSV-else-text log-file scan with 'content' normalization
 S2  loghub-style structured dataset scan (src/eval/datasets.py:205-230).
 S3  grok-format scan `<Timestamp> <Level> <Component> <PID> <Content>`
     (src/core/logai_tools.py:43-51) via regexp_extract.
-S4  SQL scan over registered views — plain ``spark.sql``.
 K3  CSV results sink + markdown report (parser_service.py:257-303).
 K4  template-file sink `EventId,EventTemplate` (eval_pipeline.py:287-291).
 """
@@ -72,11 +71,6 @@ def grok_parse(
         F.regexp_extract(c, pattern, 4).alias("PID"),
         F.regexp_extract(c, pattern, 5).alias("Content"),
     )
-
-
-def sql_scan(spark: SparkSession, query: str) -> DataFrame:
-    """S4."""
-    return spark.sql(query)
 
 
 def write_results_csv(parsed: DataFrame, out_dir: str) -> None:

@@ -1,0 +1,187 @@
+"""The shared commit protocol (checkpoint.open_run / commit_groups) under
+faults, for both batch jobs, and the run fingerprint that guards resume."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from sherlog_parser_spark import checkpoint
+from sherlog_parser_spark.checkpoint import CheckpointManifest
+from sherlog_parser_spark.plans import pipeline
+from sherlog_parser_spark.plans.curation import run_curation_pipeline
+from sherlog_parser_spark.plans.pipeline import run_pipeline
+
+GROUPS = 3
+QUALITY = {"max_top_2gram_char_x1e4": 6000}
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    """60 documents of per-doc-unique tokens, so every one is kept and
+    every commit group has rows; doc 7 repeats doc 3 (an exact dup)."""
+    def text(i):
+        return " ".join(f"d{i}w{j}" for j in range(20))
+
+    rows = [(i, text(i)) for i in range(60)]
+    rows[7] = (7, text(3))
+    return spark.createDataFrame(rows, "doc_id INT, text STRING")
+
+
+class Job:
+    """One batch job as the fault tests drive it: how to run it, which
+    column its groups hash, and the sink it commits."""
+
+    def __init__(self, name, bucket_col, sink, fp_cols):
+        self.name, self.bucket_col, self.sink, self.fp_cols = name, bucket_col, sink, fp_cols
+
+    def run(self, spark, frames, out, resume=True):
+        if self.name == "pipeline":
+            return run_pipeline(spark, frames["transcripts"], out, commit_groups=GROUPS,
+                                resume=resume, write_aggregates=False)
+        return run_curation_pipeline(spark, frames["docs"], out, commit_groups=GROUPS,
+                                     resume=resume, quality_kwargs=QUALITY)
+
+    def fingerprint(self, spark, out):
+        row = spark.read.parquet(os.path.join(out, self.sink)).select(
+            F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64(*self.fp_cols)).alias("h")
+        ).collect()[0]
+        return row["n"], row["h"]
+
+
+JOBS = [
+    Job("pipeline", "conv_bucket", "routed", ["conv_id", "turn_idx", "template_id", "tool", "text"]),
+    Job("curation", "doc_bucket", "cleaned", ["doc_id", "text"]),
+]
+
+
+def _manifest_rows_fp(out):
+    m = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl"))
+    fp = 0
+    for e in m.entries.values():
+        fp ^= int(e["input_fingerprint"])
+    return sum(e["rows"] for e in m.entries.values()), fp
+
+
+def _staging_dirs(out):
+    return [os.path.join(root, d) for root, dirs, _ in os.walk(out)
+            for d in dirs if d.startswith(".spark-staging")]
+
+
+def _fail_group_writes(monkeypatch, spark, bucket_col, group):
+    """Every write of a frame carrying ``bucket_col`` first passes a
+    Python UDF that raises inside the Spark task on a row of ``group``."""
+    frame_cls = type(spark.range(1))
+    write = frame_cls.write
+
+    @F.udf("boolean")
+    def alive(bucket):
+        if bucket % GROUPS == group:
+            raise RuntimeError("injected group write failure")
+        return True
+
+    def failing_write(self):
+        if bucket_col in self.columns:
+            self = self.filter(alive(F.col(bucket_col)))
+        return write.fget(self)
+
+    monkeypatch.setattr(frame_cls, "write", property(failing_write))
+
+
+@pytest.mark.parametrize("job", JOBS, ids=lambda j: j.name)
+def test_failed_group_write_resumes_bit_identical(spark, transcripts, docs, job, tmp_path,
+                                                  monkeypatch):
+    frames = {"transcripts": transcripts, "docs": docs}
+    clean = str(tmp_path / "clean")
+    job.run(spark, frames, clean, resume=False)
+
+    out = str(tmp_path / "faulted")
+    with monkeypatch.context() as m:
+        _fail_group_writes(m, spark, job.bucket_col, group=1)
+        with pytest.raises(Exception, match="injected group write failure"):
+            job.run(spark, frames, out, resume=False)
+    manifest = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl"))
+    assert manifest.run_header is not None
+    assert "bucket_group=1" not in manifest.entries
+    assert _staging_dirs(out) == []
+
+    job.run(spark, frames, out, resume=True)
+    assert job.fingerprint(spark, out) == job.fingerprint(spark, clean)
+    assert _manifest_rows_fp(out) == _manifest_rows_fp(clean)
+    assert set(CheckpointManifest.load(os.path.join(out, "_manifest.jsonl")).entries) == {
+        f"bucket_group={g}" for g in range(GROUPS)
+    }
+
+
+def test_failed_aggregates_surface_after_group_writes(spark, transcripts, tmp_path,
+                                                      monkeypatch):
+    """The aggregates thread fails while the groups write: every group
+    still commits, the error is raised after them, and a resume keeps
+    the sink and writes the aggregates."""
+    clean = str(tmp_path / "clean")
+    run_pipeline(spark, transcripts, clean, commit_groups=GROUPS, resume=False,
+                 write_aggregates=False)
+    job = JOBS[0]
+
+    def broken_rollup(*args, **kwargs):
+        raise RuntimeError("injected aggregates failure")
+
+    out = str(tmp_path / "faulted")
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "sink_rollup_slim", broken_rollup)
+        with pytest.raises(RuntimeError, match="injected aggregates failure"):
+            run_pipeline(spark, transcripts, out, commit_groups=GROUPS, resume=False)
+    assert len(CheckpointManifest.load(os.path.join(out, "_manifest.jsonl")).entries) == GROUPS
+    assert _staging_dirs(out) == []
+
+    res = run_pipeline(spark, transcripts, out, commit_groups=GROUPS, resume=True)
+    assert job.fingerprint(spark, out) == job.fingerprint(spark, clean)
+    assert _manifest_rows_fp(out) == _manifest_rows_fp(clean)
+    freq = spark.read.parquet(os.path.join(out, "agg_template_freq"))
+    assert freq.agg(F.sum("frequency")).collect()[0][0] == res.n_rows
+
+
+class _Fingerprinted(Exception):
+    pass
+
+
+def _run_fp(monkeypatch, run, *args, **kwargs):
+    """The run fingerprint a job passes to ``open_run``; the job stops
+    there, before any Spark job."""
+    def stop(manifest_path, run_fp, resume, outputs):
+        raise _Fingerprinted(run_fp)
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "open_run", stop)
+        with pytest.raises(_Fingerprinted) as e:
+            run(*args, **kwargs)
+    return e.value.args[0]
+
+
+def test_run_fingerprint_tracks_input_and_config(spark, monkeypatch):
+    def frames(bench_mod=5, emb_rows=20):
+        docs = spark.range(40).selectExpr("cast(id AS INT) AS doc_id", "concat('doc ', id) AS text")
+        bench = docs.filter(F.col("doc_id") % bench_mod == 0)
+        emb = spark.range(emb_rows).selectExpr("id AS doc_id", "array(CAST(id AS FLOAT)) AS embedding")
+        return docs, bench, emb
+
+    def curation_fp(commit_groups=4, **kw):
+        docs, bench, emb = frames(**kw)
+        return _run_fp(monkeypatch, run_curation_pipeline, spark, docs, "unused",
+                       bench_docs=bench, commit_groups=commit_groups,
+                       semdedup_opts={"embeddings": emb, "centroids": 2, "threshold": 0.9})
+
+    base = curation_fp()
+    assert curation_fp() == base  # rebuilt frames: new expression ids, same identity
+    assert curation_fp(bench_mod=7) != base
+    assert curation_fp(emb_rows=30) != base
+    assert curation_fp(commit_groups=3) != base
+
+    def pipeline_fp(commit_groups=4):
+        return _run_fp(monkeypatch, run_pipeline, spark, frames()[0], "unused",
+                       commit_groups=commit_groups)
+
+    assert pipeline_fp() == pipeline_fp() != pipeline_fp(commit_groups=3)
+    assert pipeline_fp() != base

@@ -321,7 +321,19 @@ def test_curation_dag_dsir_filter_stage(spark, corpus):
             assert f == fates0[d], d
 
 
+def _bucket_fps(spark, cleaned_dir):
+    return {
+        r["doc_bucket"]: r["fp"]
+        for r in spark.read.parquet(cleaned_dir)
+        .groupBy("doc_bucket")
+        .agg(F.bit_xor(F.xxhash64("doc_id", "text")).alias("fp"))
+        .collect()
+    }
+
+
 def test_curation_pipeline_e2e_and_resume(spark, corpus, tmp_path):
+    from sherlog_parser_spark.checkpoint import CheckpointManifest
+
     docs, bench = corpus
     out = str(tmp_path / "curation")
     res = run_curation_pipeline(
@@ -334,28 +346,25 @@ def test_curation_pipeline_e2e_and_resume(spark, corpus, tmp_path):
     metrics = json.load(open(os.path.join(out, "curation_metrics.json")))
     assert metrics["rows_kept"] == res.n_rows
     assert metrics["manifest"]["units"] == 3
+    clean_fps = _bucket_fps(spark, res.cleaned_dir)
+    assert len(clean_fps) >= 2
+    golden_manifest = CheckpointManifest.load(res.manifest_path)
 
     # resume: drop all but the first committed group; the rerun must
-    # recompute ONLY the dropped groups and land on identical totals
+    # recompute ONLY the dropped groups and land on the clean run's sink
     with open(res.manifest_path) as f:
         lines = f.readlines()
     with open(res.manifest_path, "w") as f:
         f.writelines(lines[:2])  # run-fingerprint line + first unit
-    crc = os.path.join(out, "._manifest.jsonl.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
     res2 = run_curation_pipeline(
         spark, docs, out, bench_docs=bench, commit_groups=3, quality_kwargs=QUALITY
     )
     assert res2.n_rows == res.n_rows
-    fp1 = {
-        r["doc_bucket"]: r["fp"]
-        for r in spark.read.parquet(res.cleaned_dir)
-        .groupBy("doc_bucket")
-        .agg(F.bit_xor(F.xxhash64("doc_id", "text")).alias("fp"))
-        .collect()
-    }
-    assert len(fp1) >= 1
+    assert _bucket_fps(spark, res2.cleaned_dir) == clean_fps
+    m2 = CheckpointManifest.load(res.manifest_path)
+    assert set(m2.entries) == set(golden_manifest.entries)
+    kept = json.loads(lines[1])["unit"]
+    assert m2.entries[kept] == golden_manifest.entries[kept]  # not recomputed
 
     # a different config must refuse to resume (fingerprint mismatch
     # wipes the sink) and still produce the right totals
@@ -363,6 +372,7 @@ def test_curation_pipeline_e2e_and_resume(spark, corpus, tmp_path):
         spark, docs, out, bench_docs=bench, commit_groups=2, quality_kwargs=QUALITY
     )
     assert res3.n_rows == res.n_rows
+    assert _bucket_fps(spark, res3.cleaned_dir) == clean_fps
 
 
 def test_quality_reason_rules(spark):

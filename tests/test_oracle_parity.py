@@ -64,14 +64,17 @@ def test_template_counts_match(oracle_parsed, spark_enriched):
     assert got == expected
 
 
-def test_routed_row_sets_match(oracle_parsed, spark_enriched, tmp_path):
-    parsed, parser = oracle_parsed
-    enriched, _ = spark_enriched
-    from sherlog_parser_spark.plans.route import route_stage
+def test_routed_row_sets_match(oracle_parsed, spark, transcripts, tmp_path):
+    """The production write path: run_pipeline's routed sink, every
+    commit group, against the sequential oracle's route sets."""
+    from sherlog_parser_spark.plans.pipeline import run_pipeline
 
-    out = str(tmp_path / "routed")
-    route_stage(enriched, out, n_buckets=4)
-    sink = enriched.sparkSession.read.parquet(out)
+    parsed, _ = oracle_parsed
+    res = run_pipeline(
+        spark, transcripts, str(tmp_path / "run"), n_buckets=4, commit_groups=3,
+        resume=False, write_aggregates=False,
+    )
+    sink = spark.read.parquet(res.routed_dir)
     got: dict[tuple, set] = {}
     for r in sink.select("template_id", "tool", "conv_id", "turn_idx").collect():
         got.setdefault((r["template_id"], r["tool"]), set()).add((r["conv_id"], r["turn_idx"]))
