@@ -455,11 +455,6 @@ def q_pattern_parse(spark, sf_dir):
 # dedup / similarity / text analysis (training-data ops)
 # ---------------------------------------------------------------------------
 
-def q_exact_dedup(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents")
-    return DD.exact_dedup(docs, "text", "doc_id").select("doc_id")
-
-
 def q_ngram_jaccard_pairs(spark, sf_dir):
     docs = _fan(_read(spark, sf_dir, "documents"))
     return DD.ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2, max_df=100)
@@ -475,44 +470,18 @@ def q_simhash(spark, sf_dir):
     return DD.simhash64(docs, "text", "doc_id")
 
 
-def q_embedding_topk(spark, sf_dir):
-    emb = _read(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return SIM.brute_force_topk(emb, qv, k=10, exclude_id=0)
-
-
-def q_lsh_ann_topk(spark, sf_dir):
-    emb = _read(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return SIM.lsh_ann_topk(emb, qv, k=10, planes=6, dims=64, exclude_id=0)
-
-
-def q_ivf_ann_topk(spark, sf_dir):
-    """IVF ANN with a DuckDB-replayable coarse quantizer (r3 judge item
-    #6): centers are the embeddings of vec_id 1..16 (deterministic —
-    training is orthogonal to the probe path; ``ivf_index``'s KMeans
-    centers plug into the same ``ivf_assign``/``ivf_ann_topk``).
-    Assignment = nearest center by left-assoc squared-euclid with
-    first-min tie-break; probe the 2 nearest lists to the query; exact
-    cosine top-10 inside."""
-    emb = _read(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    crows = {
-        r["vec_id"]: r["embedding"]
-        for r in emb.filter(F.col("vec_id").between(1, 16)).collect()
-    }
-    centroids = [list(map(float, crows[i])) for i in range(1, 17)]
-    assigned = SIM.ivf_assign(emb, centroids)
-    return SIM.ivf_ann_topk(assigned, centroids, list(map(float, qv)), k=10, n_probe=2, exclude_id=0)
-
-
 def q_ann_topk(spark, sf_dir):
     """All three ANN strategies (exact brute-force scan, multi-probe
     hyperplane LSH, injected-quantizer IVF) against the SAME query
     vector, method-tagged in one frame — merged from the r1-r4
     ``embedding_topk`` / ``lsh_ann_topk`` / ``ivf_ann_topk`` entries
     (driver 50-row cap, see q_numeric_outliers).  Each branch keeps its
-    own total-order top-10; the oracle replays all three."""
+    own total-order top-10; the oracle replays all three.  The IVF
+    quantizer is injected so DuckDB can replay it: its centers are the
+    embeddings of vec_id 1..16 (``ivf_index``'s KMeans centers plug into
+    the same ``ivf_assign``/``ivf_ann_topk``); assignment is the nearest
+    center by left-assoc squared-euclid with first-min tie-break, and
+    the probe takes the 2 nearest lists."""
     # r6: one embeddings read + ONE driver collect serves all three
     # branches (was three separate scans collecting the query vector,
     # plus a fourth for the IVF centers — four extra jobs whose results
@@ -545,7 +514,7 @@ def q_semdedup_keep(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): embedding-cluster-bucketed semantic
     dedup — assign every vector to its nearest injected center (the
     embeddings of vec_id 1..8: deterministic and SQL-replayable, the
-    same two-quantizer convention as q_ivf_ann_topk), connect
+    same injected-quantizer convention as q_ann_topk's IVF branch), connect
     within-cluster pairs with cosine >= 0.25 into duplicate groups,
     keep the group member LEAST similar to its cluster centroid
     (quantized centroid cosine, ties by id).  Candidate generation is

@@ -6,15 +6,17 @@ behavior only; no code ported).
 Architecture (SURVEY.md §7): the reference's sequential trie/pool
 algorithm is re-expressed as
 
-    scan → vectorized token masking (JVM expression or Arrow UDF)
+    scan → token masking (one JVM expression: a regexp_replace chain)
          → signature hash → template-dictionary build
            (distributed groupBy + tiny driver-side similarity merge)
          → broadcast hash join enrich → fan-out routed writes
-         → salted windowed aggregation
+         → template-frequency / windowed tool-usage aggregates
 
 All heavy lifting is DataFrame-declarative so Catalyst/Tungsten pick
-the physical plan; the only Python on the data path is an optional
-Arrow-batched pandas UDF.
+the physical plan; the pipeline runs no Python on the data path.  The
+pluggable extractor boundary is ``plans/llm_extract.py``, which hands
+Arrow batches of distinct signatures to an injectable callable through
+``mapInPandas``.
 """
 
 __version__ = "0.1.0"

@@ -15,27 +15,26 @@ raw tokens with the template tokens; wherever the template token contains
 a ``<TYPE>`` placeholder emit ``param_{i}_{TYPE} -> raw_token``; return an
 EMPTY map when the token counts differ.
 
-Two interchangeable implementations are provided and tested for equality:
+One masking rule set, two implementations, tested equal on every
+fixture (tests/test_masking.py):
 
-* :func:`mask_template_expr` — a pure Spark SQL expression
-  (``split`` + ``transform`` + ``CASE WHEN rlike``): stays inside JVM
-  whole-stage codegen, zero Python on the data path.  This is the
-  default hot path.
-* :func:`masked_template_udf` — an Arrow-batched pandas UDF with
-  precompiled regexes, for the "pandas/Arrow UDF tokenization" surface
-  required by the rebuild spec (no per-row Python crossing — one Arrow
-  batch per task).
+* :func:`mask_template_expr` — a pure Spark SQL expression (a chain of
+  whole-string ``regexp_replace`` passes): stays inside JVM whole-stage
+  codegen, zero Python on the data path.  The parse stage uses it.
+* :func:`mask_template_py` — the single-string Python mirror, used by
+  the sequential oracle, the local stand-in extractor of
+  ``plans/llm_extract.py`` and the benchmark's expected outputs.
+
+:func:`duckdb_mask_sql` renders the default rules in DuckDB SQL for the
+oracle queries in ``__spark_entry__.py``.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Callable
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # Ordered (pattern, placeholder) rules; patterns are full-match anchored for
 # Spark `rlike` / DuckDB `regexp_full_match` parity (C++ uses regex_match,
@@ -52,8 +51,8 @@ VAR_TYPES = ("OID", "LOI", "OBN", "TID", "SID", "TDA", "CRS", "OBA", "STC", "OTH
 # Optional EXTENDED rule set (r2 judge "What's missing #3" decision):
 # the default rules above are pinned to the reference's heuristic
 # extractor for strict parity; these extra SUBSTRING substitutions are a
-# config-gated quality mode (``extended=True`` / parse_stage
-# ``extended_masking=True``) that lifts PA on loghub-shaped corpora by
+# config-gated quality mode (``mask_template_expr(extended=True)``,
+# used by scripts/evaluate.py) that lifts PA on loghub-shaped corpora by
 # masking the classes the reference's extractor provably misses:
 # ip:port endpoints, punctuation-adjacent IPs, 0x-prefixed session ids
 # (keeping the literal 0x like the loghub golden templates do), HDFS
@@ -128,19 +127,6 @@ def tokens_fast_expr(text: Column | str) -> Column:
     return F.when(clean & (tr != F.lit("")), F.split(tr, " ")).otherwise(
         F.array_remove(F.split(tr, r"\s+"), "")
     )
-
-
-def _mask_token_case(t: Column) -> Column:
-    expr = None
-    for pattern, mask in MASK_RULES:
-        cond = t.rlike(f"^(?:{pattern})$")
-        expr = F.when(cond, mask) if expr is None else expr.when(cond, mask)
-    return expr.otherwise(t)
-
-
-def masked_tokens_expr(text: Column | str) -> Column:
-    """array<string> of masked tokens — pure JVM expression."""
-    return F.transform(tokens_expr(text), _mask_token_case)
 
 
 def mask_template_expr(
@@ -244,11 +230,6 @@ def mask_template_expr(
     return F.trim(F.when(has_digit, chain).otherwise(out))
 
 
-def mask_template_hof_expr(text: Column | str) -> Column:
-    """The direct per-token formulation (kept for the equivalence test)."""
-    return F.concat_ws(" ", masked_tokens_expr(text))
-
-
 def signature_expr(template: Column | str) -> Column:
     """64-bit stable signature of the masked template.  Equality of
     signatures is the distributed stand-in for the reference's strict
@@ -258,8 +239,8 @@ def signature_expr(template: Column | str) -> Column:
 
 
 def mask_template_py(text: str, extended: bool = False) -> str:
-    """Single-string Python reference implementation (shared by the
-    sequential oracle and the pandas UDF; must stay in lock-step with
+    """Single-string Python reference implementation (see the module
+    docstring for its users; must stay in lock-step with
     :func:`mask_template_expr`)."""
     if extended:
         for rx, repl in _COMPILED_EXT_RULES:
@@ -273,16 +254,6 @@ def mask_template_py(text: str, extended: bool = False) -> str:
         else:
             out.append(tok)
     return " ".join(out)
-
-
-def make_masked_template_udf(extended: bool = False) -> Callable[[Column], Column]:
-    """Arrow-batched pandas UDF equivalent of :func:`mask_template_expr`."""
-
-    @F.pandas_udf(StringType())
-    def masked_template_udf(text: pd.Series) -> pd.Series:
-        return text.map(lambda t: mask_template_py(t, extended=extended))
-
-    return masked_template_udf
 
 
 # ---------------------------------------------------------------------------

@@ -1,11 +1,16 @@
 """Aggregate stage: per-sink template-frequency and windowed tool-usage.
 
-Counts (A1/A12 in SURVEY §2.4) are two-phase by construction in
-Spark (map-side partial aggregation), which already neutralizes Zipf
-skew for algebraic aggregates; ``salted_count`` adds an explicit
-two-level salted aggregation for use where per-key state is large
-(collect_set-style) or AQE is off — and is what the e2e pipeline uses on
-the hottest key, making the skew strategy visible and testable.
+Counts (A1/A12 in SURVEY §2.4) are algebraic, so Spark's two-phase
+aggregation (map-side partial, then merge) already neutralizes Zipf skew
+on the hot template keys.  The pipeline pays one pass over the fact
+table: :func:`sink_rollup_slim` (or :func:`sink_rollup` over the routed
+sink) builds the (template, tool, window) count cube, and both sink
+aggregates are second-level rollups of it
+(:func:`template_frequency_from_rollup`, :func:`tool_usage_from_rollup`).
+:func:`template_frequency` and :func:`tool_usage_windowed` are the direct
+single-pass forms the parity and streaming tests compare against;
+:func:`template_examples` is the reference's per-template example
+bookkeeping.
 """
 
 from __future__ import annotations
@@ -102,14 +107,6 @@ def template_examples(enriched: DataFrame, k: int = 5) -> DataFrame:
     return stats.join(firsts, "template_id").select(
         "template_id", "template", "examples", "syntax_variants", "frequency"
     )
-
-
-def salted_count(df: DataFrame, keys: list[str], salt_col: str = "conv_id", n_salts: int = 16) -> DataFrame:
-    """Two-level aggregation: groupBy(keys + salt).count, then sum —
-    explicit skew mitigation (SURVEY §4.2)."""
-    salt = F.pmod(F.xxhash64(salt_col), F.lit(n_salts)).alias("_salt")
-    partial = df.groupBy(*keys, salt).agg(F.count("*").alias("_partial"))
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias("frequency"))
 
 
 def tool_usage_windowed(enriched: DataFrame, window: str = "1 hour") -> DataFrame:

@@ -1,11 +1,11 @@
-"""Parse stage: vectorized masking + signature columns.
+"""Parse stage: masking + signature columns.
 
 The reference's per-row ``parse_log`` loop (cpp/src/log_parser.cpp:515-581)
 becomes two narrow column additions — no shuffle, fully pipelined inside
-the scan stage:
+the scan stage, no Python on the data path:
 
-    masked = mask(text)          # JVM expression (default) or Arrow UDF
-    sig    = xxhash64(masked)    # strict-match key (SURVEY §2.3 P4)
+    masked = mask_template_expr(text)   # regexp_replace chain, codegen
+    sig    = xxhash64(masked)           # strict-match key (SURVEY §2.3 P4)
 """
 
 from __future__ import annotations
@@ -13,37 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.functions.masking import (
-    make_masked_template_udf,
-    mask_template_expr,
-    signature_expr,
-)
+from sherlog_parser_spark.functions.masking import mask_template_expr, signature_expr
 
 
-def parse_stage(
-    df: DataFrame,
-    text_col: str = "text",
-    use_arrow_udf: bool = False,
-    extended_masking: bool = False,
-) -> DataFrame:
-    """Append ``masked`` (heuristic template of the raw text) and ``sig``.
-
-    ``use_arrow_udf=True`` routes masking through the Arrow-batched pandas
-    UDF instead of the codegen expression; both are semantically identical
-    (tested) — the expression is the fast path, the UDF is the pluggable
-    boundary where an LLM/grok extractor would slot in.
-
-    ``extended_masking=True`` enables the EXTENDED_MASK_RULES quality
-    mode (ip:port / 0x-hex / blk_ / key=value / clock substitutions).
-    Default False = strict parity with the reference's heuristic
-    extractor; parity-oracle-compared paths must keep the default.
-    """
+def parse_stage(df: DataFrame) -> DataFrame:
+    """Append ``masked`` (the heuristic template of ``text``, default
+    rules: strict parity with the reference's extractor) and ``sig``."""
     # F8 null/empty guard: null text parses like the empty string (the
     # reference's readers strip/skip blanks; a null must not create a
     # null-sig cluster or a __HIVE_DEFAULT_PARTITION__ sink directory)
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    if use_arrow_udf:
-        masked = make_masked_template_udf(extended=extended_masking)(text)
-    else:
-        masked = mask_template_expr(text, extended=extended_masking)
+    masked = mask_template_expr(F.coalesce(F.col("text"), F.lit("")))
     return df.withColumn("masked", masked).withColumn("sig", signature_expr(F.col("masked")))

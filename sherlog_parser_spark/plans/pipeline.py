@@ -119,7 +119,6 @@ def run_pipeline(
     out_dir: str,
     n_buckets: int = 8,
     commit_groups: int = 4,
-    use_arrow_udf: bool = False,
     resume: bool = True,
     write_aggregates: bool = True,
     aggregate_source: str = "enriched",
@@ -129,13 +128,10 @@ def run_pipeline(
     routed_dir = os.path.join(out_dir, "routed")
     manifest_path = os.path.join(out_dir, "_manifest.jsonl")
     dict_path = os.path.join(out_dir, "_dictionary.json")
-    run_fp = _run_fingerprint(
-        transcripts,
-        {"n_buckets": n_buckets, "commit_groups": commit_groups, "use_arrow_udf": use_arrow_udf},
-    )
+    run_fp = _run_fingerprint(transcripts, {"n_buckets": n_buckets, "commit_groups": commit_groups})
     manifest = checkpoint.open_run(manifest_path, run_fp, resume, [routed_dir, dict_path])
 
-    parsed = parse_stage(transcripts, use_arrow_udf=use_arrow_udf)
+    parsed = parse_stage(transcripts)
     if persist_parsed:
         # the dictionary build, the routed write, and the aggregates each
         # need the masked/sig columns; persisting the parse stage turns

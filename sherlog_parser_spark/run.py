@@ -25,7 +25,6 @@ def main(argv=None) -> int:
     ap.add_argument("--master", default=None)
     ap.add_argument("--n-buckets", type=int, default=8)
     ap.add_argument("--commit-groups", type=int, default=4)
-    ap.add_argument("--arrow-udf", action="store_true", help="mask via Arrow pandas UDF")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--explain", action="store_true", help="print the enrich plan and exit")
     args = ap.parse_args(argv)
@@ -47,7 +46,7 @@ def main(argv=None) -> int:
             from sherlog_parser_spark.plans.enrich import enrich_stage
             from sherlog_parser_spark.plans.parse import parse_stage
 
-            parsed = parse_stage(transcripts, use_arrow_udf=args.arrow_udf)
+            parsed = parse_stage(transcripts)
             tdict = build_template_dictionary(parsed)
             enrich_stage(parsed, tdict.df, role_tool_dim(spark)).explain("formatted")
             return 0
@@ -60,7 +59,6 @@ def main(argv=None) -> int:
             args.out,
             n_buckets=args.n_buckets,
             commit_groups=args.commit_groups,
-            use_arrow_udf=args.arrow_udf,
             resume=not args.no_resume,
         )
         print(

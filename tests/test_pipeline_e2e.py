@@ -108,19 +108,6 @@ def test_pipeline_resume_reuses_persisted_dictionary(spark, transcripts, tmp_pat
     assert res2.dictionary.pool.mapping() == res1.dictionary.pool.mapping()
 
 
-def test_pipeline_arrow_udf_path_identical(spark, transcripts, tmp_path):
-    out_a = str(tmp_path / "expr")
-    out_b = str(tmp_path / "udf")
-    run_pipeline(spark, transcripts, out_a, commit_groups=1, resume=False, write_aggregates=False)
-    run_pipeline(
-        spark, transcripts, out_b, commit_groups=1, resume=False,
-        write_aggregates=False, use_arrow_udf=True,
-    )
-    assert _routed_fingerprint(spark, os.path.join(out_a, "routed")) == _routed_fingerprint(
-        spark, os.path.join(out_b, "routed")
-    )
-
-
 def test_dictionary_guard_refuses_unbounded_collect(spark, transcripts, monkeypatch):
     """MAX_DICT_ROWS guard: a corpus whose masking does not collapse must
     fail loudly instead of collecting unbounded state to the driver."""
