@@ -39,50 +39,21 @@ def main() -> None:
             with open(os.path.join(outdir, f"{name}{suffix}.txt"), "w") as f:
                 f.write(txt)
 
-        # the e2e pipeline's route-write frame (the headline shuffle)
-        from pyspark.sql import functions as F
-
+        # the e2e pipeline's route-write frame (the headline shuffle):
+        # the production pre-shuffle frame, route exchange and attach
         from sherlog_parser_spark.data.transcripts import generate_transcripts
-        from sherlog_parser_spark.plans.dictionary import (
-            build_template_dictionary,
-            plain_frame,
-            template_frame,
-        )
+        from sherlog_parser_spark.plans.dictionary import build_template_dictionary, template_frame
+        from sherlog_parser_spark.plans.enrich import attach_templates, template_side_frame
         from sherlog_parser_spark.plans.parse import parse_stage
-        from sherlog_parser_spark.plans.route import conv_bucket_expr, route_exchange
+        from sherlog_parser_spark.plans.route import ROUTE_COLS, pre_shuffle_frame, route_exchange
 
         df = generate_transcripts(spark, n_convs=2000, seed=42)
         parsed = parse_stage(df)
         tdict = build_template_dictionary(parsed)
-        # light pre-shuffle frame, the production route exchange, then
-        # the post-exchange attach
-        from sherlog_parser_spark.functions.masking import (
-            apply_params_expr,
-            event_type_expr,
-            template_param_meta,
-            tokens_fast_expr,
-        )
-        from sherlog_parser_spark.plans.route import ROUTE_COLS, route_cols
-
-        pre = (
-            parsed.select(*route_cols(parsed), "sig")
-            .join(F.broadcast(tdict.df.select("sig", "template_id")), "sig", "left")
-            .drop("sig")
-            .withColumn("conv_bucket", conv_bucket_expr("conv_id", 2))
-        )
-        tpl_meta = plain_frame(
-            template_frame(spark, tdict.templates)
-            .withColumn("__event_type", event_type_expr("template"))
-            .withColumn("__pmeta", template_param_meta("template"))
-        )
-        routed = (
-            route_exchange(pre)
-            .join(F.broadcast(tpl_meta), "template_id", "left")
-            .withColumn("event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN")))
-            .withColumn("__lt", tokens_fast_expr("text"))
-            .withColumn("parameters", apply_params_expr(F.col("__lt"), F.col("__pmeta")))
-            .select(*ROUTE_COLS, "conv_bucket")
-        )
+        side = template_side_frame(template_frame(spark, tdict.templates))
+        routed = attach_templates(
+            route_exchange(pre_shuffle_frame(parsed, tdict.df, 2)), side, "template_id"
+        ).select(*ROUTE_COLS, "conv_bucket")
         with open(os.path.join(outdir, f"pipeline_route{suffix}.txt"), "w") as f:
             f.write(explain_str(routed))
     finally:

@@ -129,6 +129,15 @@ def tokens_fast_expr(text: Column | str) -> Column:
     )
 
 
+def _mirror_tokens(text: str) -> list[str]:
+    """Python mirror of ``tokens_expr(F.lower(text))`` for the
+    sequential mirrors of the LM, DSIR and BPE operators, with JAVA
+    \\s semantics: the distributed path splits on Java \\s+ =
+    [ \\t\\n\\x0b\\f\\r]+, while Python str.split() also splits on
+    Unicode whitespace (\\xa0, \\u2028, \\x85)."""
+    return [t for t in re.split("[ \\t\\n\\x0b\\f\\r]+", text.lower()) if t]
+
+
 def mask_template_expr(
     text: Column | str, extended: bool = False, guards: bool = True
 ) -> Column:

@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from sherlog_parser_spark.functions.masking import tokens_expr
+
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"],
     "es": ["el", "la", "de", "y", "en", "es", "un", "una", "por", "con"],
@@ -25,14 +27,6 @@ LANG_ORDER = ["en", "es", "de", "fr"]  # deterministic tie-break order
 CJK_PATTERN = "[\\x{4e00}-\\x{9fff}]"  # Java regex syntax; DuckDB uses RE2 form below
 PUNCT_CHARS = ".,;:!?'\"()[]{}-"
 BPE_ISH_PATTERN = r"[a-zA-Z0-9_]+|[^a-zA-Z0-9_\s]"
-
-
-def _tokens(text: Column | str) -> Column:
-    # array_remove, not F.filter: the lambda HOF runs interpreted per
-    # element, ArrayRemove is one codegen'd pass; value-identical
-    # (split yields no nulls, so removing '' == keeping != '') — r6
-    c = F.col(text) if isinstance(text, str) else text
-    return F.array_remove(F.split(F.trim(c), r"\s+"), "")
 
 
 def _let(val: Column, body) -> Column:
@@ -55,7 +49,7 @@ def _let(val: Column, body) -> Column:
 
 def ws_token_count_expr(text: Column | str) -> Column:
     """Whitespace token count."""
-    return F.size(_tokens(text))
+    return F.size(tokens_expr(text))
 
 
 def bpe_ish_token_count_expr(text: Column | str) -> Column:
@@ -74,7 +68,7 @@ def punct_ratio_expr(text: Column | str) -> Column:
 
 
 def stopword_ratio_expr(text: Column | str, lang: str = "en") -> Column:
-    toks = _tokens(F.lower(F.col(text) if isinstance(text, str) else text))
+    toks = tokens_expr(F.lower(text))
     words = tuple(STOPWORDS[lang])
 
     def ratio(tk):
@@ -103,7 +97,7 @@ def lang_id_expr(text: Column | str) -> Column:
     stopword set hits the most tokens (ties broken by LANG_ORDER);
     'unknown' when nothing hits."""
     c = F.col(text) if isinstance(text, str) else text
-    toks = _tokens(F.lower(c))
+    toks = tokens_expr(F.lower(c))
 
     # r6: the token array and the per-language hit counts are each
     # _let-bound so they evaluate once — the flat formulation
@@ -135,7 +129,7 @@ def lang_id_expr(text: Column | str) -> Column:
 
 def word_shingles_expr(text: Column | str, n: int = 3) -> Column:
     """Array of word n-gram shingle strings (space-joined)."""
-    toks = _tokens(text)
+    toks = tokens_expr(text)
 
     # Zip n shifted slices and concat inside the lambda.  Do NOT write
     # this as transform(indices, i -> element_at(toks, i+j)): a lambda

@@ -43,14 +43,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sherlog_parser_spark.functions.masking import _mirror_tokens, tokens_expr
+
 EOW = "</w>"  # end-of-word marker symbol
-
-
-def _lower_words(text_col) -> F.Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    # array_remove == filter(!= '') here (split yields no nulls) and
-    # skips the interpreted per-element lambda (r6)
-    return F.array_remove(F.split(F.trim(F.lower(c)), r"\s+"), "")
 
 
 class BPEModel(NamedTuple):
@@ -93,7 +88,7 @@ def train_bpe(
     iteration costs one shuffle over the distinct-word table plus one
     driver-scalar top-1; per-round work shrinks as symbols fuse."""
     words = (
-        docs.select(F.explode(_lower_words(text_col)).alias("word"))
+        docs.select(F.explode(tokens_expr(F.lower(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
@@ -232,14 +227,3 @@ def python_mirror_bpe(
                     out.append(s)
             tables[w] = out
     return merges, counts
-
-
-def _mirror_tokens(text: str) -> list[str]:
-    """Sequential-mirror tokenizer with JAVA \\s semantics: the
-    distributed path splits on Java \\s+ = [ \\t\\n\\x0b\\f\\r]+, while
-    Python str.split() also splits on Unicode whitespace (\\xa0,
-    \\u2028, \\x85) — which forked the shared-tokenizer house rule on
-    non-ASCII-whitespace input (r5 ADVICE item, fixed r6)."""
-    import re as _re
-
-    return [t for t in _re.split("[ \\t\\n\\x0b\\f\\r]+", text.lower()) if t]

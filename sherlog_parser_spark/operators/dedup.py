@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.functions.textstats import _tokens, word_shingles_expr
+from sherlog_parser_spark.functions.masking import tokens_expr
+from sherlog_parser_spark.functions.textstats import word_shingles_expr
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -246,7 +247,7 @@ def substring_dedup_cut(
             )
         )
     )
-    bound = joined.withColumn("_toks", _tokens("_text")).withColumn("_cov", covered)
+    bound = joined.withColumn("_toks", tokens_expr("_text")).withColumn("_cov", covered)
     cov = F.col("_cov")
     # run starts in the sorted covered set = number of merged spans
     prev = F.concat(
@@ -379,9 +380,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     60..63 are always 0 — fine for bucketing, documented).  md5-based so
     DuckDB can replay it exactly.
     """
-    toks = F.array_distinct(
-        F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "")
-    )
+    toks = F.array_distinct(tokens_expr(text_col))
     # r6 restructure: explode -> 60 codegen'd SUM aggregates instead of
     # 60 interpreted array folds.  The fold form evaluated the
     # md5-per-token transform once PER FOLD (an expression tree consumed

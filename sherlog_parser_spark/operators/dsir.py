@@ -42,14 +42,14 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.operators.lm import _lower_tokens
+from sherlog_parser_spark.functions.masking import _mirror_tokens, tokens_expr
 
 
 def hashed_grams_expr(text_col) -> Column:
     """Array of feature strings: lowercase unigrams + space-joined
     bigrams (tokens never contain spaces, so the two families cannot
     collide as strings; the subsequent hash sees distinct inputs)."""
-    toks = _lower_tokens(text_col)
+    toks = tokens_expr(F.lower(text_col))
     bi = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -392,14 +392,3 @@ def python_mirror_dsir(
             s += qt.get(b, qt0) - qr.get(b, qr0)
         out[i] = (len(gs), s)
     return out
-
-
-def _mirror_tokens(text: str) -> list[str]:
-    """Sequential-mirror tokenizer with JAVA \\s semantics: the
-    distributed path splits on Java \\s+ = [ \\t\\n\\x0b\\f\\r]+, while
-    Python str.split() also splits on Unicode whitespace (\\xa0,
-    \\u2028, \\x85) — which forked the shared-tokenizer house rule on
-    non-ASCII-whitespace input (r5 ADVICE item, fixed r6)."""
-    import re as _re
-
-    return [t for t in _re.split("[ \\t\\n\\x0b\\f\\r]+", text.lower()) if t]

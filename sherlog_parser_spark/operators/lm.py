@@ -47,17 +47,10 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sherlog_parser_spark.functions.masking import _mirror_tokens, tokens_expr
+
 UNK = "<unk>"
 BOS = "<s>"
-
-
-def _lower_tokens(text_col) -> F.Column:
-    """Lowercase whitespace tokens — same token definition as
-    functions.textstats (dd_tokens(..., lower=True) in the oracle)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    # array_remove == filter(!= '') here (split yields no nulls) and
-    # skips the interpreted per-element lambda (r6)
-    return F.array_remove(F.split(F.trim(F.lower(c)), r"\s+"), "")
 
 
 class BigramLM(NamedTuple):
@@ -82,7 +75,7 @@ def _raw_pairs(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     built from two shifted array slices (the shingle idiom — no
     positional self-join).  Empty docs vanish here and are restored by
     the scorer's left join."""
-    toks = docs.select(F.col(id_col).alias("__id"), _lower_tokens(text_col).alias("tk"))
+    toks = docs.select(F.col(id_col).alias("__id"), tokens_expr(F.lower(text_col)).alias("tk"))
     full = F.concat(F.array(F.lit(BOS)), F.col("tk"))
     z = F.arrays_zip(
         F.slice(full, 1, F.size("tk")).alias("p"),
@@ -138,7 +131,7 @@ def train_bigram_lm(
     the score pass then never re-run the corpus-wide unigram job
     (a lazily-referenced vocab frame would recompute the full scan per
     consumer — measured ~3× on the one-shot self-scoring shape)."""
-    toks = docs.select(_lower_tokens(text_col).alias("tk"))
+    toks = docs.select(tokens_expr(F.lower(text_col)).alias("tk"))
     unig = (
         toks.select(F.explode("tk").alias("token")).groupBy("token").agg(F.count("*").alias("c"))
     )
@@ -352,7 +345,7 @@ def _mapped_triples(docs: DataFrame, text_col: str, id_col: str, vocab: DataFram
     """(id, p2, p1, cur, oov) per token instance with a double-<s>
     start pad, built from three shifted slices of the mapped stream
     (shares the vocab-mapping joins with _mapped_pairs' approach)."""
-    toks = docs.select(F.col(id_col).alias("__id"), _lower_tokens(text_col).alias("tk"))
+    toks = docs.select(F.col(id_col).alias("__id"), tokens_expr(F.lower(text_col)).alias("tk"))
     inst = toks.select("__id", F.posexplode("tk").alias("pos", "w_raw"))
     vb = F.broadcast(vocab.select(F.col("token").alias("w_raw"), F.lit(1).alias("w_in")))
     mapped = inst.join(vb, "w_raw", "left").select(
@@ -395,7 +388,7 @@ def train_trigram_lm(
 ) -> TrigramLM:
     """Vocabulary (top-V, count-desc token-asc total order) + all three
     n-gram count tables in two linear passes over the corpus."""
-    toks = docs.select(_lower_tokens(text_col).alias("tk"))
+    toks = docs.select(tokens_expr(F.lower(text_col)).alias("tk"))
     unig = toks.select(F.explode("tk").alias("token")).groupBy("token").agg(
         F.count("*").alias("c")
     )
@@ -535,14 +528,3 @@ def python_mirror_trigram(
         oov = sum(1 for t in ts if t not in vocab)
         out[i] = (sq, oov)
     return out
-
-
-def _mirror_tokens(text: str) -> list[str]:
-    """Sequential-mirror tokenizer with JAVA \\s semantics: the
-    distributed path splits on Java \\s+ = [ \\t\\n\\x0b\\f\\r]+, while
-    Python str.split() also splits on Unicode whitespace (\\xa0,
-    \\u2028, \\x85) — which forked the shared-tokenizer house rule on
-    non-ASCII-whitespace input (r5 ADVICE item, fixed r6)."""
-    import re as _re
-
-    return [t for t in _re.split("[ \\t\\n\\x0b\\f\\r]+", text.lower()) if t]

@@ -2,15 +2,16 @@
 
 Counts (A1/A12 in SURVEY §2.4) are algebraic, so Spark's two-phase
 aggregation (map-side partial, then merge) already neutralizes Zipf skew
-on the hot template keys.  The pipeline pays one pass over the fact
-table: :func:`sink_rollup_slim` (or :func:`sink_rollup` over the routed
-sink) builds the (template, tool, window) count cube, and both sink
-aggregates are second-level rollups of it
-(:func:`template_frequency_from_rollup`, :func:`tool_usage_from_rollup`).
-:func:`template_frequency` and :func:`tool_usage_windowed` are the direct
-single-pass forms the parity and streaming tests compare against;
-:func:`template_examples` is the reference's per-template example
-bookkeeping.
+on the hot template keys.  ``run_pipeline`` pays one pass over the fact
+table: :func:`sink_rollup_slim` builds the (template_id, tool, window)
+count cube from the route's pre-shuffle frame, and both written
+aggregates (``agg_template_freq``, ``agg_tool_usage``) are second-level
+rollups of it (:func:`template_frequency_from_rollup`,
+:func:`tool_usage_from_rollup`), compared with the sequential oracle by
+``tests/test_oracle_parity.py``.  :func:`template_frequency` and
+:func:`tool_usage_windowed` are the direct single-pass forms over an
+enriched frame; :func:`template_examples` is the reference's
+per-template example bookkeeping.
 """
 
 from __future__ import annotations
@@ -24,25 +25,15 @@ def template_frequency(enriched: DataFrame) -> DataFrame:
     return enriched.groupBy("template_id", "template").agg(F.count("*").alias("frequency"))
 
 
-def sink_rollup(enriched: DataFrame, window: str = "1 hour") -> DataFrame:
-    """One scan -> the finest-grained count cube the sink aggregates
-    need: (template_id, template, tool, window).  Both A1 and A12 are
-    exact second-level rollups of this (counts are algebraic), so the
-    pipeline pays ONE pass over the fact table instead of one per
-    aggregate.  Output cardinality ~ |templates| x |tools| x |windows| —
-    tiny at any input scale."""
-    return enriched.groupBy(
-        "template_id", "template", "tool", F.window("ts", window).alias("w")
-    ).agg(F.count("*").alias("n"))
-
-
 def sink_rollup_slim(pre: DataFrame, tpl_df: DataFrame, window: str = "1 hour") -> DataFrame:
-    """:func:`sink_rollup` with the template STRING kept out of the
-    per-row hash-aggregate keys (r6): group by ``template_id`` only and
-    attach ``template`` from the broadcast ``(template_id, template)``
-    table at rollup cardinality.  ``template_id -> template`` is 1:1, so
-    the rollup (and both second-level aggregates) are row-identical to
-    :func:`sink_rollup` over the enriched frame."""
+    """One scan -> the finest-grained count cube the sink aggregates
+    need: (template_id, template, tool, window) -> n.  The template
+    STRING stays out of the per-row hash-aggregate keys (r6): group by
+    ``template_id`` only and attach ``template`` from the broadcast
+    ``(template_id, template)`` table at rollup cardinality
+    (|templates| x |tools| x |windows|, tiny at any input scale);
+    ``template_id -> template`` is 1:1, so the cube equals a group-by
+    over the enriched frame."""
     slim = pre.groupBy("template_id", "tool", F.window("ts", window).alias("w")).agg(
         F.count("*").alias("n")
     )

@@ -69,6 +69,7 @@ from sherlog_parser_spark.operators.dedup import (
     substring_dedup_cut,
 )
 from sherlog_parser_spark.plans import pipeline
+from sherlog_parser_spark.sources.readers import fan_out
 
 
 def with_quality_reason(
@@ -474,23 +475,16 @@ def run_curation_pipeline(
     )
     manifest = checkpoint.open_run(manifest_path, run_fp, resume, [cleaned_dir])
 
-    # Scale-adaptive scan fan-out (guide §2.2, r6): a small local input
-    # arrives as ONE parquet split, so every narrow stage of the DAG
-    # (line rules, shingle explodes, quality exprs) would run on a
-    # single core.  Round-robin to defaultParallelism, a no-op branch
-    # whenever the scan already has that many splits (any real-scale
-    # input).  The DAG is partition-invariant by construction — pinned
-    # by the multi-executor parity check (local-cluster[4,4] ==
-    # local[16] fates + cleaned-sink fingerprint).  Applied AFTER the
-    # run fingerprint so resume identity is unchanged.
-    n_par = spark.sparkContext.defaultParallelism
-    fan_docs = docs
-    if fan_docs.rdd.getNumPartitions() < n_par:
-        fan_docs = fan_docs.repartition(n_par)
-
+    # Scan fan-out (readers.fan_out): a small local input arrives as ONE
+    # parquet split, so every narrow stage of the DAG (line rules,
+    # shingle explodes, quality exprs) would run on a single core.  The
+    # DAG is partition-invariant by construction — pinned by the
+    # multi-executor parity check (local-cluster[4,4] == local[16]
+    # fates + cleaned-sink fingerprint).  Applied AFTER the run
+    # fingerprint so resume identity is unchanged.
     dag_persists: list = []
     cleaned, ledger = curation_dag(
-        fan_docs, bench_docs=bench_docs, persist_registry=dag_persists, **dag_kwargs
+        fan_out(docs), bench_docs=bench_docs, persist_registry=dag_persists, **dag_kwargs
     )
     # the DAG above this point includes the iterative CC job and two
     # shingle explodes; persisting the survivors turns per-group

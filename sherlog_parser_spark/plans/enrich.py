@@ -14,6 +14,11 @@ of being recomputed per corpus row (10^7+).  Per-row work reduces to one
 whitespace tokenization of ``text`` plus positional indexing.  Output is
 row- and column-identical to the pre-r6 per-row formulation (pinned by
 tests/test_enrich_equivalence.py, including dictionary-miss rows).
+
+:func:`template_side_frame` and :func:`attach_templates` are the one
+template attach: :func:`enrich_stage` keys it on ``sig``, and
+``run_pipeline``'s group writer keys it on ``template_id`` after the
+route exchange.
 """
 
 from __future__ import annotations
@@ -31,21 +36,25 @@ from sherlog_parser_spark.functions.masking import (
 from sherlog_parser_spark.plans.dictionary import plain_frame
 
 
-def enrich_stage(
-    parsed: DataFrame,
-    template_dict: DataFrame,
-    dim: DataFrame | None = None,
-    with_params: bool = True,
+def template_side_frame(templates: DataFrame) -> DataFrame:
+    """``templates`` (a dictionary or template frame: a key plus
+    ``template``) with the per-template ``__event_type``,
+    ``__normalized`` and ``__pmeta`` metadata, evaluated once as plain
+    data (no lambda folding in concurrent jobs, see ``plain_frame``)."""
+    return plain_frame(
+        templates.withColumn("__event_type", event_type_expr("template"))
+        .withColumn("__normalized", normalize_template_expr("template"))
+        .withColumn("__pmeta", template_param_meta("template"))
+    )
+
+
+def attach_templates(
+    frame: DataFrame, side: DataFrame, key: str, with_params: bool = True
 ) -> DataFrame:
-    tdict = template_dict.withColumn(
-        "__event_type", event_type_expr("template")
-    ).withColumn("__normalized", normalize_template_expr("template"))
-    if with_params:
-        tdict = tdict.withColumn("__pmeta", template_param_meta("template"))
-    tdict = plain_frame(tdict)  # no lambda folding in concurrent jobs
-    out = parsed.join(F.broadcast(tdict), "sig", "left")
-    if dim is not None:
-        out = out.join(F.broadcast(dim), ["role", "tool"], "left")
+    """Broadcast-join :func:`template_side_frame` ``side`` onto ``frame``
+    on ``key`` and derive ``event_type``, ``normalized_template`` and
+    (``with_params``) ``parameters`` from ``frame``'s ``text``."""
+    out = frame.join(F.broadcast(side), key, "left")
     # dictionary miss -> null template: event_type_expr(null) resolved to
     # its otherwise-branch 'UNKNOWN'; the precomputed column is null there,
     # so coalesce restores the exact legacy value
@@ -59,3 +68,15 @@ def enrich_stage(
             .drop("__lt")
         )
     return out.drop("__event_type", "__normalized", "__pmeta")
+
+
+def enrich_stage(
+    parsed: DataFrame,
+    template_dict: DataFrame,
+    dim: DataFrame | None = None,
+    with_params: bool = True,
+) -> DataFrame:
+    out = attach_templates(parsed, template_side_frame(template_dict), "sig", with_params)
+    if dim is not None:
+        out = out.join(F.broadcast(dim), ["role", "tool"], "left")
+    return out

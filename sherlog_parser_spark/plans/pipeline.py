@@ -7,19 +7,24 @@ guide §8 "decide with small rows, move big rows once"):
       → parse_stage          (narrow: masked + sig columns, codegen)
       → dictionary build     (1 hash-agg shuffle collapsing to ≤10^4 rows
                               + driver merge + broadcast back)
-      → slim pre-shuffle     (broadcast join: + template_id only;
-                              conv_bucket; raw row otherwise untouched)
+      → pre-shuffle frame    (route.pre_shuffle_frame: broadcast join
+                              for template_id; conv_bucket; raw row
+                              otherwise untouched)
       → route exchange       (repartition to spark.sql.shuffle.partitions
                               writer tasks, which AQE does not coalesce,
                               carrying ONLY the raw row + template_id +
                               conv_bucket; one task per sink directory)
-      → post-exchange attach (broadcast template table with per-template
-                              precomputed event_type + param metadata,
-                              evaluated once before the group writes;
-                              parameters derived by positional indexing)
+      → post-exchange attach (enrich.attach_templates over
+                              enrich.template_side_frame, the attach
+                              enrich_stage shares, keyed on template_id:
+                              event_type + param metadata precomputed per
+                              template, evaluated once before the group
+                              writes; parameters by positional indexing)
       → partitioned write    (checkpointed in conv-bucket groups)
-      → aggregates           (template_id-keyed rollup, template string
-                              attached at rollup cardinality)
+      → aggregates           (aggregate.sink_rollup_slim over the
+                              pre-shuffle frame, template string attached
+                              at rollup cardinality, then
+                              agg_template_freq + agg_tool_usage)
 
 Checkpointing: this module keeps only the DAG and the group writer
 (``route.write_routed`` with dynamic partition overwrite, so every group
@@ -49,17 +54,9 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sherlog_parser_spark import checkpoint
-from sherlog_parser_spark.functions.masking import (
-    apply_params_expr,
-    event_type_expr,
-    template_param_meta,
-    tokens_fast_expr,
-)
 from sherlog_parser_spark.plans.aggregate import (
-    sink_rollup,
     sink_rollup_slim,
     template_frequency_from_rollup,
     tool_usage_from_rollup,
@@ -69,12 +66,12 @@ from sherlog_parser_spark.plans.dictionary import (
     build_template_dictionary,
     dictionary_from_state,
     dictionary_state,
-    plain_frame,
     template_frame,
 )
+from sherlog_parser_spark.plans.enrich import attach_templates, template_side_frame
 from sherlog_parser_spark.plans.parse import parse_stage
 from sherlog_parser_spark.plans.route import (
-    conv_bucket_expr,
+    pre_shuffle_frame,
     route_cols,
     route_exchange,
     write_routed,
@@ -124,6 +121,11 @@ def run_pipeline(
     aggregate_source: str = "enriched",
     persist_parsed: bool = True,
 ) -> PipelineResult:
+    if aggregate_source != "enriched":
+        raise ValueError(
+            f"aggregate_source={aggregate_source!r}: the aggregates are rolled up "
+            "from the pre-shuffle frame ('enriched') only"
+        )
     t_start = time.time()
     routed_dir = os.path.join(out_dir, "routed")
     manifest_path = os.path.join(out_dir, "_manifest.jsonl")
@@ -160,42 +162,20 @@ def run_pipeline(
         with open(dict_path, "w") as f:
             json.dump(dictionary_state(tdict), f)
     # r6 route-path restructure (guide §2.3/§8: shuffle keys + payload
-    # once, attach derived columns post-exchange).  The exchange feeding
-    # the partitioned write used to carry template (string), event_type
-    # and the parameters map — all functionally dependent on
-    # (template_id, text), both of which already ride the shuffle.  Now
-    # the pre-shuffle frame is just the raw row + template_id +
-    # conv_bucket; template / event_type / parameters are attached AFTER
-    # the exchange from a broadcast of the ≤10^4-row template table
-    # (event_type and param positions precomputed per template, not per
-    # row — see enrich.py).  Row/column-identical sink: pinned by the
-    # resume/fingerprint e2e tests and the parity suite.  The role/tool
-    # dim join of enrich_stage contributes no ROUTE_COLS column and its
-    # (role, tool) keys are unique by construction, so it is provably
-    # row-preserving and elided from the route path entirely.
-    pre = (
-        parsed.select(*route_cols(parsed), "sig")
-        .join(F.broadcast(tdict.df.select("sig", "template_id")), "sig", "left")
-        .drop("sig")
-        .withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
-    )
+    # once, attach derived columns post-exchange): the exchange carries
+    # only the raw row + template_id + conv_bucket; template, event_type
+    # and parameters are attached after it from the broadcast ≤10^4-row
+    # template side frame — the one attach enrich_stage uses, keyed on
+    # template_id instead of sig.  The role/tool dim join of enrich_stage
+    # contributes no ROUTE_COLS column and its (role, tool) keys are
+    # unique by construction, so it is row-preserving and elided here.
+    pre = pre_shuffle_frame(parsed, tdict.df, n_buckets)
     tpl_df = template_frame(spark, tdict.templates)
-    tpl_meta = tpl_df.withColumn("__event_type", event_type_expr("template")).withColumn(
-        "__pmeta", template_param_meta("template")
-    )
-    # evaluated here, before the group pool starts: the groups' jobs
-    # would otherwise fold the metadata lambdas concurrently (see
-    # plain_frame)
-    tpl_meta = plain_frame(tpl_meta)
+    # evaluated here, before the group pool starts (see plain_frame)
+    side = template_side_frame(tpl_df)
 
     def _write_group(sub: DataFrame) -> None:
-        out = (
-            route_exchange(sub)
-            .join(F.broadcast(tpl_meta), "template_id", "left")
-            .withColumn("event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN")))
-            .withColumn("__lt", tokens_fast_expr("text"))
-            .withColumn("parameters", apply_params_expr(F.col("__lt"), F.col("__pmeta")))
-        )
+        out = attach_templates(route_exchange(sub), side, "template_id")
         write_routed(
             out.select(*route_cols(out), "conv_bucket"), routed_dir, partition_overwrite="dynamic"
         )
@@ -207,23 +187,13 @@ def run_pipeline(
     # tasks run in exactly those gaps).  The alternative the verdict
     # floated — deriving the rollup from the route write's Observation —
     # doesn't type-check: Observation carries scalar aggregates only,
-    # while the rollup is per-(template_id, tool, window) ROWS.  The
-    # 'sink' source must still wait for the write to finish.
+    # while the rollup is per-(template_id, tool, window) ROWS.
     agg_error: list[BaseException] = []
     agg_thread = None
 
     def _write_aggregates():
         try:
-            if aggregate_source == "sink":
-                rollup = sink_rollup(spark.read.parquet(routed_dir)).persist()
-            else:
-                # r6: the rollup's grouping keys no longer carry the
-                # template STRING through the per-row hash aggregate —
-                # group by template_id only and attach template from the
-                # broadcast table at rollup cardinality (≤10^4 rows);
-                # template_id -> template is 1:1, so the final frames
-                # are row-identical (guide §2.3 narrower keys)
-                rollup = sink_rollup_slim(pre, tpl_df).persist()
+            rollup = sink_rollup_slim(pre, tpl_df).persist()
             template_frequency_from_rollup(rollup).write.mode("overwrite").parquet(
                 os.path.join(out_dir, "agg_template_freq")
             )
@@ -234,7 +204,7 @@ def run_pipeline(
         except BaseException as e:  # surfaced after join
             agg_error.append(e)
 
-    if write_aggregates and aggregate_source == "enriched":
+    if write_aggregates:
         agg_thread = threading.Thread(target=_write_aggregates, name="aggregates")
         agg_thread.start()
 
@@ -243,10 +213,6 @@ def run_pipeline(
             manifest, pre, "conv_bucket", commit_groups, ["conv_id", "turn_idx"], routed_dir,
             _write_group,
         )
-        if write_aggregates and agg_thread is None:
-            # the 'sink' source re-reads the routed sink, so it runs
-            # after the group writes
-            _write_aggregates()
     finally:
         # a failing group write must still wait for the aggregates
         # thread — otherwise the caller's spark.stop() kills its

@@ -9,8 +9,9 @@ generalized per north_rule: enriched turns land under
 ``bucket(N, conv_id)`` transform (parquet directory layout is the
 sandbox fallback for Iceberg — SURVEY §7.3.6).  ``write_routed`` is the
 one writer of that layout and its encoding: ``run_pipeline`` calls it
-per commit group (``checkpoint.commit_groups``) and
-``route_stage_iceberg`` calls it as its parquet fallback.
+per commit group (``checkpoint.commit_groups``), ``route_stage_iceberg``
+calls it as its parquet fallback, and the streaming route calls it per
+micro-batch and per compacted batch.
 
 Width: every route exchange goes through ``route_exchange``, an
 explicit ``repartition(n_parts, template_id, tool, conv_bucket)`` with
@@ -42,6 +43,20 @@ def conv_bucket_expr(conv_id: Column | str, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(n_buckets)).cast("int")
 
 
+def pre_shuffle_frame(parsed: DataFrame, template_dict: DataFrame, n_buckets: int) -> DataFrame:
+    """What the route exchange carries: the raw row (the ROUTE_COLS on
+    ``parsed``) + ``template_id`` (broadcast ``sig`` lookup in
+    ``template_dict``) + ``conv_bucket``.  ``template``, ``event_type``
+    and ``parameters`` depend only on (template_id, text), so they are
+    attached after the exchange (``enrich.attach_templates``)."""
+    return (
+        parsed.select(*route_cols(parsed), "sig")
+        .join(F.broadcast(template_dict.select("sig", "template_id")), "sig", "left")
+        .drop("sig")
+        .withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
+    )
+
+
 def route_exchange(frame: DataFrame) -> DataFrame:
     """The writer exchange of one route write:
     ``spark.sql.shuffle.partitions`` tasks keyed by the sink directory,
@@ -57,8 +72,9 @@ def route_cols(df: DataFrame) -> list[str]:
 
 
 def write_routed(frame: DataFrame, out_dir: str, *, partition_overwrite: str) -> None:
-    """The route sink writer: ``frame`` (ROUTE_COLS + conv_bucket, after
-    ``route_exchange``) into ``template_id=*/tool=*/conv_bucket=*``.
+    """The route sink writer: ``frame`` (ROUTE_COLS + conv_bucket; after
+    ``route_exchange`` each sink directory gets one file) into
+    ``template_id=*/tool=*/conv_bucket=*``.
     ``partition_overwrite`` is Spark's ``partitionOverwriteMode``:
     ``"dynamic"`` replaces only the partitions written (a commit group),
     ``"static"`` replaces the whole directory."""

@@ -9,6 +9,9 @@ S3  grok-format scan `<Timestamp> <Level> <Component> <PID> <Content>`
     (src/core/logai_tools.py:43-51) via regexp_extract.
 K3  CSV results sink + markdown report (parser_service.py:257-303).
 K4  template-file sink `EventId,EventTemplate` (eval_pipeline.py:287-291).
+
+:func:`fan_out` is the one scan-parallelism policy, shared by the
+``queries()`` entries and the curation job.
 """
 
 from __future__ import annotations
@@ -19,6 +22,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 GROK_DEFAULT = r"^(\S+)\s+(\S+)\s+(\S+)\s+(\S+)\s+(.*)$"
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """Scan fan-out (guide §2.2): a frame with fewer partitions than
+    ``defaultParallelism`` is round-robined to that many, so its narrow
+    stages (mask chains, shingle explodes, interpreted HOF stats) use
+    every core; a frame with at least that many is returned unchanged.
+    A single-file parquet table under one row group scans as ONE split —
+    so does a compacted input of a few large files, which this
+    round-robins in full (there is no size gate).  Only for consumers
+    whose results are partition- and order-invariant."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= n:
+        return df
+    return df.repartition(n)
 
 
 def read_log_file(spark: SparkSession, path: str) -> DataFrame:

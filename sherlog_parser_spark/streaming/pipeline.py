@@ -10,9 +10,10 @@ over ``readStream``, with
   includes late data by batch recompute; a watermark drops it),
 * ``foreachBatch`` fan-out for routing — idempotent under micro-batch
   REPLAY: the batch_id is a leading partition column and each batch is
-  written with dynamic partition overwrite, so a batch replayed after a
-  crash (sink written, offsets not committed) rewrites exactly its own
-  ``batch_id=N/...`` partitions instead of appending duplicates,
+  written by ``route.write_routed`` (the batch sink's layout and
+  encoding) over its own ``batch_id=N`` directory, so a batch replayed
+  after a crash (sink written, offsets not committed) rewrites exactly
+  that directory instead of appending duplicates,
 * the frozen template dictionary broadcast per query (built once from a
   bounded history batch — matching the "freeze then stream" deployment
   shape).
@@ -25,6 +26,7 @@ from pyspark.sql import functions as F
 
 from sherlog_parser_spark.plans.enrich import enrich_stage
 from sherlog_parser_spark.plans.parse import parse_stage
+from sherlog_parser_spark.plans.route import conv_bucket_expr, route_cols, write_routed
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -75,8 +77,6 @@ def start_stream_route(
     trigger_available_now: bool = True,
 ):
     """foreachBatch fan-out routing; returns the StreamingQuery."""
-    from sherlog_parser_spark.plans.route import conv_bucket_expr, route_cols
-
     enriched = streaming_enrich(stream, template_dict)
     routed = enriched.select(*route_cols(enriched)).withColumn(
         "conv_bucket", conv_bucket_expr("conv_id", n_buckets)
@@ -85,16 +85,9 @@ def start_stream_route(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # exactly-once under replay: batch content is deterministic from
         # the checkpointed offsets, so overwriting this batch_id's own
-        # partitions is idempotent — a crash between sink write and offset
+        # directory is idempotent — a crash between sink write and offset
         # commit no longer duplicates rows (r1 ADVICE)
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("parquet.enable.dictionary", "false")
-            .partitionBy("batch_id", "template_id", "tool", "conv_bucket")
-            .parquet(out_dir)
-        )
+        write_routed(batch_df, f"{out_dir}/batch_id={batch_id}", partition_overwrite="static")
 
     writer = routed.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint_dir)
     if trigger_available_now:
@@ -200,12 +193,9 @@ def compact_stream_output(
         marker = jvm.org.apache.hadoop.fs.Path(marker_dir, name)
         staging = jvm.org.apache.hadoop.fs.Path(compacted_dir, f"_staging_{name}")
         if not fs.exists(marker):
-            (
-                spark.read.parquet(str(status.getPath()))
-                .write.mode("overwrite")
-                .option("parquet.enable.dictionary", "false")
-                .partitionBy("template_id", "tool", "conv_bucket")
-                .parquet(str(staging))
+            write_routed(
+                spark.read.parquet(str(status.getPath())), str(staging),
+                partition_overwrite="static",
             )
             fs.create(marker, True).close()
         if fs.exists(staging):

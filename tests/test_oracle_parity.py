@@ -66,20 +66,44 @@ def test_template_counts_match(oracle_parsed, spark_enriched):
 
 def test_routed_row_sets_match(oracle_parsed, spark, transcripts, tmp_path):
     """The production write path: run_pipeline's routed sink, every
-    commit group, against the sequential oracle's route sets."""
+    commit group, and the aggregates it writes, against the sequential
+    oracle — route sets, per-turn template/event_type/parameters as
+    attached after the route exchange, agg_template_freq and
+    agg_tool_usage."""
     from sherlog_parser_spark.plans.pipeline import run_pipeline
 
-    parsed, _ = oracle_parsed
+    parsed, parser = oracle_parsed
     res = run_pipeline(
         spark, transcripts, str(tmp_path / "run"), n_buckets=4, commit_groups=3,
-        resume=False, write_aggregates=False,
+        resume=False,
     )
     sink = spark.read.parquet(res.routed_dir)
+    assert sink.count() == len(parsed)
     got: dict[tuple, set] = {}
     for r in sink.select("template_id", "tool", "conv_id", "turn_idx").collect():
         got.setdefault((r["template_id"], r["tool"]), set()).add((r["conv_id"], r["turn_idx"]))
     expected = oracle_route_sets(parsed)
     assert got == expected
+
+    got_turns = {
+        (r["conv_id"], r["turn_idx"]): (r["template"], r["event_type"], dict(r["parameters"]))
+        for r in sink.select(
+            "conv_id", "turn_idx", "template", "event_type", "parameters"
+        ).collect()
+    }
+    assert got_turns == {
+        (p.conv_id, p.turn_idx): (p.template, p.event_type, p.parameters) for p in parsed
+    }
+
+    freq = spark.read.parquet(str(tmp_path / "run" / "agg_template_freq")).collect()
+    assert {(r["template_id"], r["template"]): r["frequency"] for r in freq} == {
+        (tid, parser.pool.templates[tid]): n for tid, n in oracle_template_counts(parsed).items()
+    }
+    usage = spark.read.parquet(str(tmp_path / "run" / "agg_tool_usage")).collect()
+    assert {
+        (r["template_id"], r["tool"], int(r["window_start"].timestamp())): r["uses"]
+        for r in usage
+    } == oracle_tool_counts(parsed)
 
 
 def test_tool_usage_windowed_matches(oracle_parsed, spark_enriched):
@@ -127,28 +151,6 @@ def test_merge_path_exercised(oracle_parsed):
     dictionary actually merged (distinct sigs > pool size)."""
     _, parser = oracle_parsed
     assert len(parser.pool.mapping()) > len(parser.pool.templates)
-
-
-def test_rollup_aggregates_equal_direct(spark_enriched):
-    """sink_rollup second-level rollups must equal the direct aggregates."""
-    from sherlog_parser_spark.plans.aggregate import (
-        sink_rollup,
-        template_frequency_from_rollup,
-        tool_usage_from_rollup,
-    )
-
-    enriched, _ = spark_enriched
-    r = sink_rollup(enriched)
-    direct_tf = {(x["template_id"], x["template"]): x["frequency"] for x in template_frequency(enriched).collect()}
-    roll_tf = {(x["template_id"], x["template"]): x["frequency"] for x in template_frequency_from_rollup(r).collect()}
-    assert direct_tf == roll_tf
-    direct_tu = {
-        (x["template_id"], x["tool"], x["window_start"]): x["uses"] for x in tool_usage_windowed(enriched).collect()
-    }
-    roll_tu = {
-        (x["template_id"], x["tool"], x["window_start"]): x["uses"] for x in tool_usage_from_rollup(r).collect()
-    }
-    assert direct_tu == roll_tu
 
 
 def test_template_examples_bookkeeping(oracle_parsed, spark_enriched):

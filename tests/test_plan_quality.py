@@ -259,7 +259,6 @@ def test_packing_and_interleave_plan_shape(spark):
     a one-task exchange (the naive global window's SinglePartition), the
     driver-offset frames must broadcast, and no join may degrade to
     cartesian/sort-merge."""
-    from sherlog_parser_spark.operators.interleave import interleave_by_mixture
     from sherlog_parser_spark.operators.mixture import mixture_sample
     from sherlog_parser_spark.operators.sharding import assign_shards, pack_sequences
 
@@ -275,8 +274,6 @@ def test_packing_and_interleave_plan_shape(spark):
     frames.append(("pack_sequences", pk, pk.release))
     mx = mixture_sample(docs, "source", total_target=100)
     frames.append(("mixture_sample", mx, None))
-    il = interleave_by_mixture(docs, "source", order_col="doc_id")
-    frames.append(("interleave", il, il.release))
     for name, df, release in frames:
         plan = _plan(df)
         assert "SinglePartition" not in plan, name

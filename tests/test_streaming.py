@@ -3,6 +3,9 @@ batch results exactly (counts + routed rows)."""
 
 from __future__ import annotations
 
+import glob
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,6 +76,18 @@ def test_streaming_route_matches_batch(spark, stream_setup):
         for r in batch.select("conv_id", "turn_idx", "template_id", "tool").collect()
     }
     assert got == expected
+    # the batch sink's per-column encoding: dictionary pages for the
+    # low-cardinality columns, none for the text payload.  parquet falls
+    # back to plain encoding where a dictionary does not pay (a few-row
+    # file), so role is asked of some file, text of every file.
+    chunks = []
+    for part in glob.glob(f"{out}/batch_id=*/template_id=*/tool=*/conv_bucket=*/part-*.parquet"):
+        meta = pq.ParquetFile(part).metadata
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            chunks.append({rg.column(i).path_in_schema: rg.column(i) for i in range(rg.num_columns)})
+    assert any(c["role"].has_dictionary_page for c in chunks)
+    assert not any(c["text"].has_dictionary_page for c in chunks)
 
 
 def test_compact_stream_output_folds_batches_into_batch_layout(spark, stream_setup):
