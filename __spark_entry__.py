@@ -545,21 +545,24 @@ def q_dedup_keep_docs(spark, sf_dir):
     entries (driver 50-row cap, see q_numeric_outliers)."""
     from sherlog_parser_spark.operators.components import (
         connected_components_star,
-        dedup_keep_representatives,
+        hash_to_min_components,
     )
 
     docs = _read(spark, sf_dir, "documents")
     pairs = DD.minhash_dup_candidates(docs, "text", "doc_id", n=3, k=8, bands=4)
-    hash_keep = dedup_keep_representatives(docs, pairs, "doc_id").select(
-        F.lit("hash2min").alias("algo"), "doc_id"
-    )
-    comps = connected_components_star(pairs)
-    losers = comps.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias("doc_id")
-    )
-    star_keep = docs.join(losers, "doc_id", "left_anti").select(
-        F.lit("star").alias("algo"), "doc_id"
-    )
+
+    def keep(algo, comps):
+        # both distributed loops by name: connected_components would
+        # label this small graph on the driver
+        losers = comps.filter(F.col("id") != F.col("component")).select(
+            F.col("id").alias("doc_id")
+        )
+        return docs.join(losers, "doc_id", "left_anti").select(
+            F.lit(algo).alias("algo"), "doc_id"
+        )
+
+    hash_keep = keep("hash2min", hash_to_min_components(pairs))
+    star_keep = keep("star", connected_components_star(pairs))
     exact_keep = DD.exact_dedup(docs, "text", "doc_id").select(
         F.lit("exact").alias("algo"), "doc_id"
     )

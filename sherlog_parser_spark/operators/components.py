@@ -2,7 +2,15 @@
 "dedup decision" layer that turns pairwise similarity hits (n-gram
 Jaccard / MinHash-LSH / embedding cosine) into keep/drop sets.
 
-Algorithm: iterated min-label propagation ("hash-to-min" style): every
+Small graphs are decided on the driver: near-dup candidate graphs are a
+few hundred edges at bench scale, where the distributed loop below costs
+two localCheckpoints and a probe job a round (~23 Spark jobs).
+``connected_components`` runs ONE bounded action over the pairs; at or
+under ``CC_DRIVER_MAX_PAIRS`` rows it labels them with a numpy
+union-find and returns a local relation, above the guard it runs the
+distributed loop, ``hash_to_min_components``.
+
+The loop: iterated min-label propagation ("hash-to-min" style): every
 node starts labeled with itself; each round every node takes the min
 label in its closed neighborhood; converges in O(diameter) rounds —
 near-dup graphs are unions of small cliques-ish clusters, so diameter
@@ -13,8 +21,16 @@ the same.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Largest candidate-pair count labelled on the driver: at the guard the
+# collect is 8 MB of Arrow (two int64 columns), and collect + labelling +
+# local relation take ~1-2 s of driver time (BASELINE.md, "Connected
+# components on the driver")
+CC_DRIVER_MAX_PAIRS = 500_000
 
 
 def connected_components(
@@ -24,7 +40,70 @@ def connected_components(
     max_iterations: int = 50,
 ) -> DataFrame:
     """(id, component) for every node appearing in ``pairs``; component =
-    min node id in the connected component.
+    min node id in the connected component, in the ids' own type.  A null
+    endpoint joins nothing and yields one (null, null) row.
+
+    One bounded collect decides the path: up to ``CC_DRIVER_MAX_PAIRS``
+    pairs are labelled on the driver, more go to
+    :func:`hash_to_min_components` (which re-evaluates ``pairs``)."""
+    head = pairs.select(src, dst).limit(CC_DRIVER_MAX_PAIRS + 1).toArrow()
+    if head.num_rows > CC_DRIVER_MAX_PAIRS:
+        return hash_to_min_components(pairs, src, dst, max_iterations)
+    return pairs.sparkSession.createDataFrame(_label_on_driver(head))
+
+
+def _label_on_driver(head: pa.Table) -> pa.Table:
+    """``(id, component)`` for the two-column endpoint table ``head``."""
+    # both ends share one type, widened as the loop's edge structs are
+    typ = pa.unify_schemas(
+        [pa.schema([("e", c.type)]) for c in head.columns], promote_options="permissive"
+    ).field("e").type
+    ends = pa.concat_arrays([c.combine_chunks().cast(typ) for c in head.columns])
+    valid = ends.is_valid().to_numpy(zero_copy_only=False)
+    # sorted distinct ids: a node's index order is its id order, so the
+    # min-index root is the min id
+    nodes, inv = np.unique(ends.drop_null().to_numpy(zero_copy_only=False), return_inverse=True)
+    at = np.full(len(ends), -1)
+    at[valid] = inv
+    a, b = at[: head.num_rows], at[head.num_rows :]
+    both = (a >= 0) & (b >= 0)
+    a, b = a[both], b[both]
+    ids = pa.array(nodes, typ)
+    comps = pa.array(nodes[_min_roots(len(nodes), a, b)], typ)
+    if ends.null_count:  # the loop keeps one (null, null) row for null ends
+        ids, comps = (pa.concat_arrays([x, pa.nulls(1, typ)]) for x in (ids, comps))
+    return pa.table({"id": ids, "component": comps})
+
+
+def _min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Smallest node index in each node's component, for nodes
+    ``0..n-1`` and edges ``(a[i], b[i])``: union-find by hooking each
+    edge's larger root under its smaller one, then pointer jumping to
+    the roots, until every edge joins equal roots.  Labels only fall
+    and stay inside the component, so the fixed point is the min."""
+    label = np.arange(n)
+    while True:
+        la, lb = label[a], label[b]
+        if np.array_equal(la, lb):
+            return label
+        lo = np.minimum(la, lb)
+        np.minimum.at(label, la, lo)
+        np.minimum.at(label, lb, lo)
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+
+
+def hash_to_min_components(
+    pairs: DataFrame,
+    src: str = "id_a",
+    dst: str = "id_b",
+    max_iterations: int = 50,
+) -> DataFrame:
+    """The distributed loop behind :func:`connected_components`, same
+    contract, for candidate graphs too large to collect.
 
     Convergence is CONFIRMED (a final round must observe zero label
     changes) and non-convergence raises rather than returning partial

@@ -24,8 +24,9 @@ Why this shape scales to 100 TB:
   SQL-replayable oracle path they are injected fixture vectors (the
   same two-quantizer split the IVF ANN operator uses).
 * duplicate groups reuse :func:`operators.components.connected_components`
-  (confirmed-convergence hash-to-min; near-dup cliques converge in ~3
-  rounds).
+  (pair sets within ``CC_DRIVER_MAX_PAIRS`` are labelled on the driver
+  after one bounded collect; larger ones run the confirmed-convergence
+  hash-to-min loop).
 * the representative choice is order-free: the centroid similarity is
   QUANTIZED (``floor(1e6·cos + 0.5)`` — IEEE ops on identical inputs
   are correctly rounded, so Spark and DuckDB produce the same BIGINT)

@@ -196,7 +196,7 @@ def curation_dag(
     def _reuse(frame: DataFrame) -> DataFrame:
         """Cache frames consumed by BOTH the cleaned branch and the fate
         ledger — without this the ledger's fate counts re-run the whole
-        upstream DAG (including the iterative CC job).  MEMORY_AND_DISK,
+        upstream DAG.  MEMORY_AND_DISK,
         same spill discipline as run_pipeline's persist_parsed; the
         persisted frames are id-sets / survivor rows, never wider than
         the input.  Callers that finish all actions pass
@@ -249,17 +249,20 @@ def curation_dag(
     )
     s1 = base.join(winners, "doc_id", "left_semi")
 
-    # MinHash near-dedup: banded candidates → components → min-id rep
+    # MinHash near-dedup: banded candidates → components → min-id rep.
+    # A candidate graph within components.CC_DRIVER_MAX_PAIRS is labelled
+    # on the driver and comes back as a local relation (a checkpoint
+    # above it), so near_losers needs no _reuse persistence
     pairs = minhash_dup_candidates(s1, "text", "doc_id", n=3, k=minhash_k, bands=minhash_bands)
     comps = connected_components(pairs)
-    near_losers = _reuse(
-        comps.filter(F.col("id") != F.col("component")).select(F.col("id").alias("doc_id"))
+    near_losers = comps.filter(F.col("id") != F.col("component")).select(
+        F.col("id").alias("doc_id")
     )
     # s2 is consumed by both the span-detection and the cut pass;
     # an A/B in r6 measured persisting it slightly SLOWER (10.5 vs
     # 10.1s warm) than recomputing the cheap semi/anti joins from the
-    # already-persisted winners/near_losers — left unpersisted on
-    # purpose
+    # persisted winners and the local near_losers — left unpersisted
+    # on purpose
     s2 = s1.join(near_losers, "doc_id", "left_anti")
 
     # optional SemDeDup semantic near-dedup over the lexical survivors
@@ -465,7 +468,7 @@ def run_curation_pipeline(
     and every DAG option, DataFrames inside option dicts included,
     enter the run fingerprint (``pipeline._run_fingerprint``), so a run
     with a different blocklist or embeddings table starts clean."""
-    t_start = time.time()
+    t_start = time.perf_counter()
     cleaned_dir = os.path.join(out_dir, "cleaned")
     manifest_path = os.path.join(out_dir, "_manifest.jsonl")
     run_fp = pipeline._run_fingerprint(
@@ -483,12 +486,14 @@ def run_curation_pipeline(
     # fates + cleaned-sink fingerprint).  Applied AFTER the run
     # fingerprint so resume identity is unchanged.
     dag_persists: list = []
+    t_dag = time.perf_counter()
     cleaned, ledger = curation_dag(
         fan_out(docs), bench_docs=bench_docs, persist_registry=dag_persists, **dag_kwargs
     )
-    # the DAG above this point includes the iterative CC job and two
-    # shingle explodes; persisting the survivors turns per-group
-    # recomputation of the whole chain into one pass
+    t_write = time.perf_counter()
+    # the DAG above this point includes two shingle explodes;
+    # persisting the survivors turns per-group recomputation of the
+    # whole chain into one pass
     bucketed = cleaned.withColumn(
         "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -507,13 +512,15 @@ def run_curation_pipeline(
         manifest, bucketed, "doc_bucket", commit_groups, ["doc_id", "text"], cleaned_dir,
         _write_group,
     )
+    t_ledger = time.perf_counter()
     fate_counts = {
         r["fate"]: r["n"]
         for r in ledger.groupBy("fate").agg(F.count(F.lit(1)).alias("n")).collect()
     }
+    t_end = time.perf_counter()
     for frame in dag_persists:
         frame.unpersist()
-    wall = time.time() - t_start
+    wall = time.perf_counter() - t_start
     with open(os.path.join(out_dir, "curation_metrics.json"), "w") as f:
         json.dump(
             {
@@ -524,6 +531,13 @@ def run_curation_pipeline(
                 if wall > 0
                 else None,
                 "manifest": manifest.metrics(),
+                # wall seconds of the DAG build (connected components'
+                # action included), the group writes and the fate count
+                "phases": {
+                    "dag_s": round(t_write - t_dag, 3),
+                    "write_s": round(t_ledger - t_write, 3),
+                    "ledger_s": round(t_end - t_ledger, 3),
+                },
             },
             f,
             indent=2,

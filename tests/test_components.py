@@ -4,11 +4,13 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
+import pytest
 
+from sherlog_parser_spark.operators import components
 from sherlog_parser_spark.operators.components import (
     connected_components,
     dedup_keep_representatives,
+    hash_to_min_components,
 )
 
 
@@ -43,7 +45,7 @@ def test_components_match_union_find(spark):
 def test_components_chain(spark):
     pairs = [(i, i + 1) for i in range(30)]  # one long chain, diameter 30
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = {r["id"]: r["component"] for r in connected_components(df, max_iterations=50).collect()}
+    got = {r["id"]: r["component"] for r in hash_to_min_components(df, max_iterations=50).collect()}
     assert set(got.values()) == {0}
 
 
@@ -58,18 +60,101 @@ def test_dedup_keep_representatives(spark):
 def test_connected_components_nonconvergence_raises(spark):
     """A chain graph needs O(length) rounds; an insufficient iteration cap
     must raise, never return silently-wrong labels (r1 ADVICE)."""
-    import pytest as _pytest
-    from sherlog_parser_spark.operators.components import connected_components
-
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a INT, id_b INT"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iterations=2)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        hash_to_min_components(chain, max_iterations=2)
     # and with enough rounds (30-hop propagation + confirming pass) the
     # same graph resolves to one component
-    ok = connected_components(chain, max_iterations=35)
+    ok = hash_to_min_components(chain, max_iterations=35)
     assert {r["component"] for r in ok.collect()} == {0}
+
+
+def _labels(frame):
+    return {r["id"]: r["component"] for r in frame.collect()}
+
+
+@pytest.fixture
+def loop_calls(monkeypatch):
+    """Records each call connected_components makes to the distributed loop."""
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return hash_to_min_components(*args, **kwargs)
+
+    monkeypatch.setattr(components, "hash_to_min_components", spy)
+    return calls
+
+
+def _mixed_graph():
+    """Disjoint id ranges, so one frame holds every shape: a random graph,
+    a 30-node chain, two cliques, duplicate and reversed pairs, and
+    self-pairs (one on a node with an edge, one isolated)."""
+    rng = random.Random(3)
+    pairs = [tuple(rng.sample(range(200), 2)) for _ in range(150)]
+    pairs += [(1000 + i, 1001 + i) for i in range(29)]
+    pairs += [(a, b) for base in (2000, 2100) for a in range(base, base + 6)
+              for b in range(a + 1, base + 6)]
+    pairs += [(3000, 3001), (3001, 3000), (3000, 3001), (3002, 3001), (3002, 3001)]
+    pairs += [(4000, 4000), (4000, 4001), (4100, 4100)]
+    return pairs
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_driver_path_matches_loop_and_union_find(spark, id_type, loop_calls):
+    """The driver labelling, the distributed loop and the union-find
+    oracle agree node for node, and both keep the ids' type."""
+    pairs = _mixed_graph()
+    df = spark.createDataFrame(pairs, f"id_a {id_type}, id_b {id_type}")
+    driver = connected_components(df)
+    assert not loop_calls
+    loop = hash_to_min_components(df)
+    assert _labels(driver) == _labels(loop) == _union_find(pairs)
+    for frame in (driver, loop):
+        assert [f.dataType.simpleString() for f in frame.schema] == [id_type, id_type]
+
+
+def test_driver_path_nulls_and_empty_match_loop(spark):
+    """A null endpoint joins nothing and leaves one (null, null) row, on
+    both paths; an empty pairs frame gives an empty typed frame."""
+    nulls = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 5), (None, None), (7, 7)], "id_a LONG, id_b LONG"
+    )
+    got = _labels(connected_components(nulls))
+    assert got == _labels(hash_to_min_components(nulls))
+    assert got == {1: 1, 2: 1, 5: 5, 7: 7, None: None}
+    empty = spark.createDataFrame([], "id_a INT, id_b INT")
+    for frame in (connected_components(empty), hash_to_min_components(empty)):
+        assert frame.collect() == []
+        assert [f.dataType.simpleString() for f in frame.schema] == ["int", "int"]
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+def test_driver_guard_boundary(spark, monkeypatch, loop_calls, extra):
+    """G pairs are labelled on the driver; G + 1 pairs run the loop."""
+    guard = 12
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_PAIRS", guard)
+    pairs = [(i, i + 1) for i in range(0, 2 * (guard + extra), 2)]
+    got = _labels(connected_components(spark.createDataFrame(pairs, "id_a long, id_b long")))
+    assert got == _union_find(pairs)
+    assert len(loop_calls) == extra
+
+
+def test_small_graph_runs_at_most_two_jobs(spark):
+    """One bounded collect decides a small graph, and the labels are a
+    local relation: no per-round checkpoint and probe jobs."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8), (9, 8)], "id_a long, id_b long")
+    group = "cc-small-graph-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = _labels(connected_components(pairs))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 9: 7}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
 def test_star_components_match_union_find(spark):

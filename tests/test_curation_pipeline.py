@@ -346,6 +346,12 @@ def test_curation_pipeline_e2e_and_resume(spark, corpus, tmp_path):
     metrics = json.load(open(os.path.join(out, "curation_metrics.json")))
     assert metrics["rows_kept"] == res.n_rows
     assert metrics["manifest"]["units"] == 3
+    assert metrics["fates"] == res.fate_counts
+    # per-phase walls: DAG build, group writes, fate count, inside the run
+    phases = metrics["phases"]
+    assert set(phases) == {"dag_s", "write_s", "ledger_s"}
+    assert all(v >= 0 for v in phases.values())
+    assert sum(phases.values()) <= metrics["wall_sec"]
     clean_fps = _bucket_fps(spark, res.cleaned_dir)
     assert len(clean_fps) >= 2
     golden_manifest = CheckpointManifest.load(res.manifest_path)
