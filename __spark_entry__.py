@@ -584,6 +584,33 @@ def q_embedding_near_dups_lsh(spark, sf_dir):
     return DD.embedding_near_dups_lsh(emb, threshold=0.25, planes=6).orderBy("id_a", "id_b")
 
 
+def _repetition_bound(docs):
+    """doc_id + text with the Gopher repetition inputs bound as
+    attributes: lines (' merge ' -> newline, identically in the oracle)
+    and 2-/5-word shingles.  Bound BEFORE the HOF-heavy stats: an
+    interpreted HOF lambda referencing an outer expression tree
+    re-evaluates it per element (measured O(n^2) on long docs)."""
+    return docs.select(
+        "doc_id",
+        "text",
+        TS.lines_expr(F.replace(F.col("text"), F.lit(" merge "), F.lit("\n"))).alias("lines"),
+        TS.word_shingles_expr("text", 2).alias("sh2"),
+        TS.word_shingles_expr("text", 5).alias("sh5"),
+    )
+
+
+def _repetition_cols():
+    """The Gopher repetition signals over a ``_repetition_bound`` frame,
+    fractions as fixed-point ints (house float rule)."""
+    return [
+        F.size("lines").alias("n_lines"),
+        TS.x1e4(TS.dup_frac_expr("lines")).alias("dup_line_frac_x1e4"),
+        TS.x1e4(TS.dup_char_frac_expr("lines")).alias("dup_line_char_frac_x1e4"),
+        TS.x1e4(TS.top_ngram_char_frac_expr("sh2", "text")).alias("top_2gram_char_frac_x1e4"),
+        TS.x1e4(TS.dup_frac_expr("sh5")).alias("dup_5gram_frac_x1e4"),
+    ]
+
+
 def q_text_stats(spark, sf_dir):
     """Wide per-doc text-analysis row: lang-id / quality / token counts /
     fingerprint JOINED with the Gopher-style repetition signals on
@@ -591,38 +618,17 @@ def q_text_stats(spark, sf_dir):
     entries (driver 50-row cap, see q_numeric_outliers); both halves
     keep their full value oracles."""
     docs = fan_out(_read(spark, sf_dir, "documents"))
-    # quality is emitted as floor(q*1e4 + 0.5) — an integer — because
-    # round() semantics diverge between engines exactly when q is a finite
-    # decimal (Spark rounds the binary double, DuckDB the decimal repr)
-    #
     # r6: the base stats and the Gopher repetition signals come out of
     # ONE bound projection over one documents scan (was two scans joined
     # on doc_id) — column-identical output, one join and one scan fewer
-    bound = docs.select(
-        "doc_id",
-        "text",
-        TS.lines_expr(
-            F.replace(F.col("text"), F.lit(" merge "), F.lit("\n"))
-        ).alias("lines"),
-        TS.word_shingles_expr("text", 2).alias("sh2"),
-        TS.word_shingles_expr("text", 5).alias("sh5"),
-    )
-
-    def x1e4(c):
-        return F.floor(c * 10000 + F.lit(0.5)).cast("long")
-
-    base = bound.select(
+    base = _repetition_bound(docs).select(
         "doc_id",
         TS.lang_id_expr("text").alias("lang_pred"),
-        F.floor(TS.quality_score_expr("text") * 10000 + F.lit(0.5)).cast("long").alias("quality_x1e4"),
+        TS.x1e4(TS.quality_score_expr("text")).alias("quality_x1e4"),
         TS.ws_token_count_expr("text").alias("ws_tokens"),
         TS.bpe_ish_token_count_expr("text").alias("bpe_tokens"),
         TS.fingerprint_expr("text", 3).alias("fingerprint"),
-        F.size("lines").alias("n_lines"),
-        x1e4(TS.dup_frac_expr("lines")).alias("dup_line_frac_x1e4"),
-        x1e4(TS.dup_char_frac_expr("lines")).alias("dup_line_char_frac_x1e4"),
-        x1e4(TS.top_ngram_char_frac_expr("sh2", "text")).alias("top_2gram_char_frac_x1e4"),
-        x1e4(TS.dup_frac_expr("sh5")).alias("dup_5gram_frac_x1e4"),
+        *_repetition_cols(),
     )
     # r5: bigram-LM quality scores joined in (operators/lm.py) — the
     # scorer is doc-complete (empty docs score (0, 0)), so a plain
@@ -633,33 +639,10 @@ def q_text_stats(spark, sf_dir):
 
 def q_repetition_stats(spark, sf_dir):
     """Gopher-style repetition quality signals over documents.  The raw
-    docs are single-line, so line structure is derived deterministically
-    (replace ' merge ' -> newline, identically in the oracle); shingle
-    stats run on the raw token stream.  Fractions are emitted as
-    floor(x*1e4 + 0.5) fixed-point ints per the house float rule."""
+    docs are single-line, so line structure is derived deterministically;
+    shingle stats run on the raw token stream."""
     docs = _read(spark, sf_dir, "documents")
-    # bind lines/shingles as attributes BEFORE the HOF-heavy stats: an
-    # interpreted HOF lambda referencing an outer expression tree
-    # re-evaluates it per element (measured O(n^2) on long docs)
-    bound = docs.select(
-        "doc_id",
-        "text",
-        TS.lines_expr(F.replace(F.col("text"), F.lit(" merge "), F.lit("\n"))).alias("lines"),
-        TS.word_shingles_expr("text", 2).alias("sh2"),
-        TS.word_shingles_expr("text", 5).alias("sh5"),
-    )
-
-    def x1e4(c):
-        return F.floor(c * 10000 + F.lit(0.5)).cast("long")
-
-    return bound.select(
-        "doc_id",
-        F.size("lines").alias("n_lines"),
-        x1e4(TS.dup_frac_expr("lines")).alias("dup_line_frac_x1e4"),
-        x1e4(TS.dup_char_frac_expr("lines")).alias("dup_line_char_frac_x1e4"),
-        x1e4(TS.top_ngram_char_frac_expr("sh2", "text")).alias("top_2gram_char_frac_x1e4"),
-        x1e4(TS.dup_frac_expr("sh5")).alias("dup_5gram_frac_x1e4"),
-    )
+    return _repetition_bound(docs).select("doc_id", *_repetition_cols())
 
 
 def q_quality_filter(spark, sf_dir):

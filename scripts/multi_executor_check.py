@@ -7,8 +7,8 @@ Usage:  python scripts/multi_executor_check.py [n_convs]
         python scripts/multi_executor_check.py --curation [n_docs]
 
 ``--curation`` runs the curation DAG instead (r4): separate executor
-JVMs exercise the retry-relevant shuffle paths of the dedup-expand
-tournament / CC / substring cuts, and the cleaned sink must be
+JVMs exercise the retry-relevant shuffle paths of the exact dedup /
+CC / substring cuts, and the cleaned sink must be
 bit-identical to the single-JVM run.
 """
 

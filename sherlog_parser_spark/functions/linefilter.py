@@ -79,7 +79,8 @@ def line_filter(
     min_kept_lines: int = 1,
     drop_brace_docs: bool = True,
 ) -> DataFrame:
-    """(id_col, kept_text, n_lines, n_kept, doc_kept) per document.
+    """(id_col, kept_text, n_lines, n_kept, doc_kept) per document; the
+    input's other columns (a stream's ``ts``) ride along after id_col.
 
     ``kept_text`` is the newline-join of surviving lines; ``doc_kept``
     is false when fewer than ``min_kept_lines`` lines survive or (C4's
@@ -96,8 +97,10 @@ def line_filter(
     doc_ok = F.size("_kept") >= F.lit(int(min_kept_lines))
     if drop_brace_docs:
         doc_ok = doc_ok & ~txt.contains("{") & ~txt.contains("}")
+    carried = [c for c in docs.columns if c not in (id_col, text_col)]
     return bound.select(
         F.col(id_col),
+        *carried,
         F.array_join("_kept", "\n").alias("kept_text"),
         F.size("_ls").alias("n_lines"),
         F.size("_kept").alias("n_kept"),

@@ -238,6 +238,14 @@ def top_ngram_char_frac_expr(shingles: Column | str, text: Column | str) -> Colu
     ).otherwise(F.lit(0.0))
 
 
+def x1e4(c: Column) -> Column:
+    """A fraction as the fixed-point BIGINT floor(c*1e4 + 0.5) — the
+    house float rule: round() diverges between engines exactly when the
+    value is a finite decimal (Spark rounds the binary double, DuckDB
+    the decimal repr), and thresholds compare these ints."""
+    return F.floor(c * 10000 + F.lit(0.5)).cast("long")
+
+
 # ---------------------------------------------------------------------------
 # DuckDB renderings (identical semantics, used by oracle_sql)
 # ---------------------------------------------------------------------------

@@ -12,6 +12,10 @@ pure numpy (no sklearn in this environment), O(n^2) distances per
 window with a hard guard, which matches the reference's own
 ``limit=100000`` lookback guard.  Cross-window parallelism is free;
 within-window semantics are exactly sequential DBSCAN.
+
+The module also holds the time-series count detector (batch and the
+frozen baseline the streaming detector joins) and the composed incident
+detector.
 """
 
 from __future__ import annotations
@@ -114,133 +118,6 @@ def windowed_embedding_anomalies(
     if group_cols:
         return df.groupBy(*group_cols).applyInPandas(run, schema)
     return df.groupBy(F.lit(1).alias("_g")).applyInPandas(run, schema)
-
-
-# ---------------------------------------------------------------------------
-# Isolation forest (X3 second family; reference
-# src/core/logai_tools.py:217-288 detect_semantic_anomalies with
-# algorithm="isolation_forest" via LogAI's AnomalyDetector)
-# ---------------------------------------------------------------------------
-
-MAX_TRAIN_ROWS = 100_000  # mirrors the reference's lookback limit=100000
-
-
-def isolation_forest_fit(
-    X: np.ndarray, n_trees: int = 100, max_samples: int = 256, seed: int = 42
-) -> dict:
-    """Fit a deterministic numpy isolation forest on the (bounded) train
-    matrix.  Fitting is a DRIVER-side step on the reference's own terms —
-    it trains on the first 70% of a <=100k-row lookback window — while
-    SCORING is distributed (Arrow-batched pandas UDF over the cluster).
-
-    Trees are nested tuples: (feature, split, left, right) | ("leaf", n).
-    """
-    if len(X) == 0:
-        raise ValueError(
-            "isolation_forest_fit: empty train set — the train split produced "
-            "0 rows (check train_frac and the input size)"
-        )
-    if len(X) > MAX_TRAIN_ROWS:
-        raise ValueError(f"train set of {len(X)} rows exceeds guard {MAX_TRAIN_ROWS}")
-    rng = np.random.default_rng(seed)
-    X = np.asarray(X, dtype=np.float64)
-    if X.ndim != 2:
-        raise ValueError(
-            f"isolation_forest_fit: expected an (n, d) matrix, got shape {X.shape} "
-            "— the vec column is ragged or 1-D"
-        )
-    n, d = X.shape
-    sub = min(max_samples, n)
-    max_depth = int(np.ceil(np.log2(max(sub, 2))))
-
-    def build(rows: np.ndarray, depth: int):
-        if depth >= max_depth or len(rows) <= 1:
-            return ("leaf", len(rows))
-        feats = np.flatnonzero(X[rows].min(0) < X[rows].max(0))
-        if len(feats) == 0:
-            return ("leaf", len(rows))
-        f = int(rng.choice(feats))
-        lo, hi = X[rows, f].min(), X[rows, f].max()
-        s = float(rng.uniform(lo, hi))
-        left = rows[X[rows, f] < s]
-        right = rows[X[rows, f] >= s]
-        if len(left) == 0 or len(right) == 0:
-            return ("leaf", len(rows))
-        return (f, s, build(left, depth + 1), build(right, depth + 1))
-
-    trees = [build(rng.choice(n, size=sub, replace=False), 0) for _ in range(n_trees)]
-    return {"trees": trees, "sub": sub}
-
-
-def _avg_path_factor(n: int) -> float:
-    """c(n): average unsuccessful-search path length in a BST."""
-    if n <= 1:
-        return 0.0
-    h = np.log(n - 1) + 0.5772156649015329
-    return 2.0 * h - 2.0 * (n - 1) / n
-
-
-def _tree_depths(tree, X: np.ndarray, depth: int = 0) -> np.ndarray:
-    """Vectorized per-batch descent: boolean masks instead of per-row
-    recursion, so scoring stays numpy-speed inside the Arrow batch."""
-    if tree[0] == "leaf":
-        n = tree[1]
-        return np.full(len(X), depth + _avg_path_factor(n))
-    f, s, left, right = tree
-    out = np.empty(len(X))
-    mask = X[:, f] < s
-    if mask.any():
-        out[mask] = _tree_depths(left, X[mask], depth + 1)
-    if (~mask).any():
-        out[~mask] = _tree_depths(right, X[~mask], depth + 1)
-    return out
-
-
-def isolation_forest_scores_np(model: dict, X: np.ndarray) -> np.ndarray:
-    """Anomaly score in (0,1]: 2^(-E[h(x)]/c(sub)); > ~0.6 is anomalous."""
-    X = np.asarray(X, dtype=np.float64)
-    depths = np.mean([_tree_depths(t, X) for t in model["trees"]], axis=0)
-    return np.power(2.0, -depths / max(_avg_path_factor(model["sub"]), 1e-12))
-
-
-def semantic_anomalies_iforest(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    order_cols: tuple[str, ...] = ("vec_id",),
-    train_frac: float = 0.7,
-    threshold: float = 0.6,
-    n_trees: int = 100,
-    seed: int = 42,
-) -> DataFrame:
-    """Reference detect_semantic_anomalies shape: fit on the first
-    ``train_frac`` of rows (by order_cols), score the REST distributedly;
-    returns the test rows + (iforest_score, is_anomaly).
-
-    The train collect is bounded by MAX_TRAIN_ROWS (the reference's own
-    lookback limit); scoring runs as an Arrow-batched pandas UDF with the
-    fitted trees shipped in the closure — no per-row Python dispatch.
-    """
-    from sherlog_parser_spark.operators.split import ordered_split
-
-    labeled = ordered_split(df, list(order_cols), train_frac=train_frac)
-    train_rows = labeled.filter(F.col("split") == "train").select(vec_col).limit(MAX_TRAIN_ROWS + 1).collect()
-    if len(train_rows) > MAX_TRAIN_ROWS:
-        raise ValueError(f"train split exceeds guard {MAX_TRAIN_ROWS}; tighten the lookback")
-    model = isolation_forest_fit(
-        np.array([r[0] for r in train_rows]), n_trees=n_trees, seed=seed
-    )
-
-    @F.pandas_udf("double")
-    def score_udf(vecs: pd.Series) -> pd.Series:
-        X = np.array(vecs.tolist())
-        return pd.Series(isolation_forest_scores_np(model, X))
-
-    return (
-        labeled.filter(F.col("split") == "test")
-        .drop("split")
-        .withColumn("iforest_score", score_udf(F.col(vec_col)))
-        .withColumn("is_anomaly", F.col("iforest_score") > threshold)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -160,7 +160,7 @@ def hash_to_min_components(
             break
     if changed != 0:
         # returning partial labels would silently drop the WRONG documents
-        # downstream (dedup_keep_representatives) — fail loudly instead
+        # from the keep sets downstream — fail loudly instead
         # (possible on chain-shaped candidate graphs; r1 ADVICE)
         raise RuntimeError(
             f"connected_components did not converge within {max_iterations} "
@@ -267,16 +267,3 @@ def connected_components_star(
         "id", F.coalesce("component", F.col("id")).alias("component")
     )
 
-
-def dedup_keep_representatives(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """Drop every row whose id belongs to a near-dup component but is not
-    its min-id representative; rows not in any pair survive untouched."""
-    comps = connected_components(pairs, src, dst)
-    losers = comps.filter(F.col("id") != F.col("component")).select(F.col("id").alias(id_col))
-    return df.join(losers, id_col, "left_anti")

@@ -23,10 +23,7 @@ probabilities — ``q[b] = floor(quantum·(c_b+1)/(N+B))`` — because
 IEEE multiply/divide of exactly-representable integers are correctly
 rounded (bit-identical Spark/DuckDB), whereas ``ln`` is libm-dependent.
 ``dsir_score_q = Σ_b f_b·(q_t[b] − q_r[b])`` is a BIGINT sum —
-associative, order-free, deterministic under any partitioning.  The
-paper's log-ratio weight (:func:`dsir_log_weights`) and its
-Gumbel-top-k resampling (:func:`gumbel_topk_ids`) are provided for
-production ranking and pinned by pytest with tolerance, not oracled.
+associative, order-free, deterministic under any partitioning.
 
 Reference parity: the reference selects/filters logs by rule hits
 (``/root/reference/src/core/log_filter.py`` analog, SURVEY §2 F6);
@@ -71,9 +68,7 @@ def bucket_expr(gram: Column, n_buckets: int) -> Column:
 class DSIRModel(NamedTuple):
     """``target_q``/``raw_q``: (bucket, q) quantized-probability tables
     (≤ n_buckets rows — broadcast); ``target_q0``/``raw_q0``: the
-    quantized default for buckets unseen in that corpus;
-    ``target_logd``/``raw_logd``: log-domain denominators for the
-    non-oracled real-weight path."""
+    quantized default for buckets unseen in that corpus."""
 
     target_q: DataFrame
     raw_q: DataFrame
@@ -274,82 +269,6 @@ def dsir_scores_from_per_doc(
         F.col("__id").alias(id_col),
         F.coalesce(F.col("n_grams"), F.lit(0)).alias("n_grams"),
         F.coalesce(F.col("dsir_score_q"), F.lit(0)).alias("dsir_score_q"),
-    )
-
-
-def dsir_log_weights(
-    docs: DataFrame,
-    model: DSIRModel,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Production log-domain importance weight: (id_col, log_weight) =
-    Σ_b f_b·(ln p_t[b] − ln p_r[b]) with add-one smoothing — the
-    paper's actual estimator (doubles; pytest-pinned, not oracled)."""
-    per_doc = (
-        docs.select(F.col(id_col).alias("__id"), F.explode(hashed_grams_expr(text_col)).alias("_g"))
-        .select("__id", bucket_expr(F.col("_g"), model.n_buckets).alias("bucket"))
-        .groupBy("__id", "bucket")
-        .agg(F.count("*").alias("f"))
-    )
-    # rebuild raw counts from the quantized tables is lossy — carry the
-    # exact counts instead: q tables were derived from counts, so join
-    # both and invert is wrong; recompute from totals is impossible.
-    # Instead: log p = ln(q_or_default/quantum) is a quantized-log
-    # APPROXIMATION whose error is bounded by the quantization step;
-    # good enough for ranking and keeps the model a pair of small
-    # tables.  Exact log weights would carry (bucket, c) count tables —
-    # same size — so expose that via train if ever needed.
-    tq = F.broadcast(model.target_q.withColumnRenamed("q", "_qt"))
-    rq = F.broadcast(model.raw_q.withColumnRenamed("q", "_qr"))
-    lw = F.sum(
-        F.col("f")
-        * (
-            F.log(
-                F.coalesce(F.col("_qt"), F.lit(model.target_q0)).cast("double")
-                / F.lit(model.quantum)
-            )
-            - F.log(
-                F.coalesce(F.col("_qr"), F.lit(model.raw_q0)).cast("double")
-                / F.lit(model.quantum)
-            )
-        )
-    )
-    scored = (
-        per_doc.join(tq, "bucket", "left")
-        .join(rq, "bucket", "left")
-        .groupBy("__id")
-        .agg(lw.alias("log_weight"))
-    )
-    ids = docs.select(F.col(id_col).alias("__id")).distinct()
-    return ids.join(scored, "__id", "left").select(
-        F.col("__id").alias(id_col),
-        F.coalesce(F.col("log_weight"), F.lit(0.0)).alias("log_weight"),
-    )
-
-
-def gumbel_topk_ids(
-    weights: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    weight_col: str = "log_weight",
-    seed: int = 0,
-) -> DataFrame:
-    """The paper's Gumbel-top-k importance resample, derandomized: key =
-    log_weight + Gumbel(seeded hash of the id) and take the global
-    top-k (TakeOrderedAndProject — a driver-bounded result).  The
-    uniform comes from the md5 idiom so the sample is reproducible
-    across runs and engines."""
-    u = (
-        (F.conv(F.substring(F.md5(F.concat(F.lit(f"g{seed}_"), F.col(id_col).cast("string"))), 1, 13), 16, 10).cast("double") + F.lit(0.5))
-        / F.lit(float(16 ** 13))
-    )
-    g = -F.log(-F.log(u))
-    return (
-        weights.select(F.col(id_col), (F.col(weight_col) + g).alias("_key"))
-        .orderBy(F.desc("_key"), id_col)
-        .limit(int(k))
-        .select(id_col)
     )
 
 

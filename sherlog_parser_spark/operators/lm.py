@@ -23,10 +23,7 @@ multiplication and division of exactly-representable integers are
 correctly rounded (bit-identical in Spark/JVM and DuckDB), whereas
 ``ln`` is only faithfully rounded and may differ by ulps across libms.
 Quantized per-pair scores are BIGINTs, so per-doc sums are associative
-and order-free — deterministic under any partitioning.  A real
-log-domain variant (:func:`lm_log_likelihood`) exists for production
-ranking and is pinned by pytest against a Python mirror with
-tolerance, not oracled.
+and order-free — deterministic under any partitioning.
 
 Vocabulary ties at the cutoff are broken by token string ascending
 (total order → deterministic ``limit``).  Smoothing denominator uses
@@ -246,41 +243,6 @@ def lm_quality_scores(
     return _likelihood_from_pairs(mapped, ids, lm, id_col, quantum)
 
 
-def lm_log_likelihood(
-    docs: DataFrame,
-    lm: BigramLM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Production log-domain variant: per-doc mean log-prob and
-    perplexity (doubles; NOT oracle-exact — ln is not correctly rounded
-    across libms, and double sums are order-sensitive; pinned by pytest
-    against a Python mirror with tolerance)."""
-    pairs = _mapped_pairs(docs, text_col, id_col, lm.vocab)
-    per_doc = pairs.groupBy("__id", "prev", "cur").agg(F.count("*").alias("m"))
-    lp = F.log(
-        (F.coalesce(F.col("c"), F.lit(0)) + F.lit(1.0))
-        / (F.coalesce(F.col("n"), F.lit(0)) + F.lit(float(lm.v_smooth)))
-    )
-    scored = (
-        per_doc.join(lm.bigrams, ["prev", "cur"], "left")
-        .join(F.broadcast(lm.contexts), "prev", "left")
-        .groupBy("__id")
-        .agg(F.sum(F.col("m") * lp).alias("log_prob"), F.sum("m").alias("n_tokens"))
-    )
-    ids = docs.select(F.col(id_col).alias("__id")).distinct()
-    return ids.join(scored, "__id", "left").select(
-        F.col("__id").alias(id_col),
-        F.coalesce(F.col("log_prob"), F.lit(0.0)).alias("log_prob"),
-        F.coalesce(F.col("n_tokens"), F.lit(0)).alias("n_tokens"),
-        F.when(
-            F.col("n_tokens") > 0, F.exp(-F.col("log_prob") / F.col("n_tokens"))
-        )
-        .otherwise(F.lit(float("inf")))
-        .alias("perplexity"),
-    )
-
-
 def python_mirror_scores(
     rows: list[tuple[int, str]], vocab_size: int = 256, quantum: float = 1e6
 ) -> dict[int, tuple[int, int, float]]:
@@ -315,216 +277,4 @@ def python_mirror_scores(
             lp += math.log(pr_num / pr_den)
         oov = sum(1 for t in ts if t not in vocab)
         out[i] = (sq, oov, lp)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Trigram extension (late r5): interpolated higher-order scoring — the
-# step from the CCNet-style bigram filter toward KenLM-grade n-gram
-# quality models, still pure relational.
-# ---------------------------------------------------------------------------
-
-
-class TrigramLM(NamedTuple):
-    """Add-one-smoothed trigram + bigram + unigram tables for
-    interpolated scoring.  ``trigrams`` is the only table joined by
-    shuffle (corpus-distinct trigrams); every context/lower-order table
-    is bounded by (V+2)^2 or V+2 rows and rides broadcast."""
-
-    vocab: DataFrame
-    trigrams: DataFrame  # (p2, p1, cur, c)
-    tri_ctx: DataFrame   # (p2, p1, n)
-    bigrams: DataFrame   # (prev, cur, c)
-    contexts: DataFrame  # (prev, n)
-    unigrams: DataFrame  # (cur, c)
-    uni_total: int
-    v_smooth: int
-
-
-def _mapped_triples(docs: DataFrame, text_col: str, id_col: str, vocab: DataFrame) -> DataFrame:
-    """(id, p2, p1, cur, oov) per token instance with a double-<s>
-    start pad, built from three shifted slices of the mapped stream
-    (shares the vocab-mapping joins with _mapped_pairs' approach)."""
-    toks = docs.select(F.col(id_col).alias("__id"), tokens_expr(F.lower(text_col)).alias("tk"))
-    inst = toks.select("__id", F.posexplode("tk").alias("pos", "w_raw"))
-    vb = F.broadcast(vocab.select(F.col("token").alias("w_raw"), F.lit(1).alias("w_in")))
-    mapped = inst.join(vb, "w_raw", "left").select(
-        "__id",
-        "pos",
-        F.when(F.col("w_in") == 1, F.col("w_raw")).otherwise(F.lit(UNK)).alias("w"),
-        F.when(F.col("w_in").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("oov"),
-    )
-    # predecessors via a self-free shifted-array rebuild would re-shuffle;
-    # instead rebuild the mapped stream per doc once (collect_list over a
-    # per-doc window is a funnel for a SINGLE doc only — bounded by doc
-    # length, the same per-doc bound every text op here carries)
-    arr = mapped.groupBy("__id").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("pos"), F.col("w"), F.col("oov")))
-        ).alias("s")
-    )
-    ws = F.transform(F.col("s"), lambda e: e["w"])
-    full = F.concat(F.array(F.lit(BOS), F.lit(BOS)), ws)
-    z = F.arrays_zip(
-        F.slice(full, 1, F.size(ws)).alias("p2"),
-        F.slice(full, 2, F.size(ws)).alias("p1"),
-        ws.alias("w"),
-        F.transform(F.col("s"), lambda e: e["oov"]).alias("oov"),
-    )
-    return arr.select("__id", F.explode(z).alias("t")).select(
-        "__id",
-        F.col("t.p2").alias("p2"),
-        F.col("t.p1").alias("p1"),
-        F.col("t.w").alias("cur"),
-        F.col("t.oov").alias("oov"),
-    )
-
-
-def train_trigram_lm(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_size: int = 256,
-) -> TrigramLM:
-    """Vocabulary (top-V, count-desc token-asc total order) + all three
-    n-gram count tables in two linear passes over the corpus."""
-    toks = docs.select(tokens_expr(F.lower(text_col)).alias("tk"))
-    unig = toks.select(F.explode("tk").alias("token")).groupBy("token").agg(
-        F.count("*").alias("c")
-    )
-    vocab_list = [
-        r["token"]
-        for r in unig.orderBy(F.desc("c"), F.asc("token")).limit(int(vocab_size)).collect()
-    ]
-    vocab = docs.sparkSession.createDataFrame([(t,) for t in vocab_list], "token string")
-    tri = _mapped_triples(docs, text_col, id_col, vocab)
-    trigrams = tri.groupBy("p2", "p1", "cur").agg(F.count("*").alias("c"))
-    tri_ctx = trigrams.groupBy("p2", "p1").agg(F.sum("c").alias("n"))
-    bigrams = tri.groupBy("p1", "cur").agg(F.count("*").alias("c")).withColumnRenamed("p1", "prev")
-    contexts = bigrams.groupBy("prev").agg(F.sum("c").alias("n"))
-    unigrams = tri.groupBy("cur").agg(F.count("*").alias("c"))
-    uni_total = unigrams.agg(F.sum("c").alias("n")).collect()[0]["n"] or 0
-    return TrigramLM(
-        vocab=vocab,
-        trigrams=trigrams,
-        tri_ctx=tri_ctx,
-        bigrams=bigrams,
-        contexts=contexts,
-        unigrams=unigrams,
-        uni_total=int(uni_total),
-        v_smooth=len(vocab_list) + 1,
-    )
-
-
-def trigram_likelihood(
-    docs: DataFrame,
-    lm: TrigramLM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    weights: tuple = (0.6, 0.3, 0.1),
-    quantum: float = 1e6,
-) -> DataFrame:
-    """(id_col, lm3_score_q, lm3_oov): per-doc sum of quantized
-    INTERPOLATED token probabilities ``floor(quantum · (w3·p3 + w2·p2 +
-    w1·p1))`` — each p is add-one smoothed at its own order, every
-    arithmetic step is a correctly-rounded IEEE op in a fixed
-    left-assoc order, so the Python mirror matches bit-exactly (the
-    operators/lm.py exactness discipline; SQL slot not taken — 50-cap,
-    pytest differential instead)."""
-    w3, w2, w1 = (float(w) for w in weights)
-    tri = _mapped_triples(docs, text_col, id_col, lm.vocab)
-    per = tri.groupBy("__id", "p2", "p1", "cur").agg(
-        F.count("*").alias("m"), F.sum("oov").alias("oov_m")
-    )
-    V = F.lit(lm.v_smooth)
-    p3 = (F.coalesce(F.col("c3"), F.lit(0)) + F.lit(1)) / (
-        F.coalesce(F.col("n3"), F.lit(0)) + V
-    )
-    p2 = (F.coalesce(F.col("c2"), F.lit(0)) + F.lit(1)) / (
-        F.coalesce(F.col("n2"), F.lit(0)) + V
-    )
-    p1 = (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(1)) / (
-        F.lit(lm.uni_total) + V
-    )
-    q = F.floor(
-        F.lit(float(quantum)) * (F.lit(w3) * p3 + F.lit(w2) * p2 + F.lit(w1) * p1)
-    ).cast("long")
-    scored = (
-        per.join(
-            lm.trigrams.select("p2", "p1", "cur", F.col("c").alias("c3")),
-            ["p2", "p1", "cur"],
-            "left",
-        )
-        # NO forced broadcast on tri_ctx/bigrams (r5 VERDICT "What's
-        # wrong" #1, fixed r6): both are corpus-DISTINCT tables bounded
-        # only by (V+2)^2 — ≤66k rows at the default V=256 but ~2.5G at
-        # a realistic V=50k, where a forced broadcast OOMs the driver.
-        # Plain equi-joins let AQE broadcast exactly when the build side
-        # actually fits (the bigram scorer's shape, lm.py:~245).  The
-        # ≤V+2-row contexts/unigrams stay broadcast-hinted.
-        .join(lm.tri_ctx.select("p2", "p1", F.col("n").alias("n3")), ["p2", "p1"], "left")
-        .join(
-            lm.bigrams.select(F.col("prev").alias("p1"), "cur", F.col("c").alias("c2")),
-            ["p1", "cur"],
-            "left",
-        )
-        .join(F.broadcast(lm.contexts.select(F.col("prev").alias("p1"), F.col("n").alias("n2"))), ["p1"], "left")
-        .join(F.broadcast(lm.unigrams.select("cur", F.col("c").alias("c1"))), ["cur"], "left")
-        .groupBy("__id")
-        .agg(F.sum(F.col("m") * q).alias("lm3_score_q"), F.sum("oov_m").alias("lm3_oov"))
-    )
-    ids = docs.select(F.col(id_col).alias("__id")).distinct()
-    return ids.join(scored, "__id", "left").select(
-        F.col("__id").alias(id_col),
-        F.coalesce(F.col("lm3_score_q"), F.lit(0)).alias("lm3_score_q"),
-        F.coalesce(F.col("lm3_oov"), F.lit(0)).alias("lm3_oov"),
-    )
-
-
-def python_mirror_trigram(
-    rows: list[tuple[int, str]],
-    vocab_size: int = 256,
-    weights: tuple = (0.6, 0.3, 0.1),
-    quantum: float = 1e6,
-) -> dict[int, tuple[int, int]]:
-    """Sequential mirror of train_trigram_lm + trigram_likelihood:
-    {id: (lm3_score_q, lm3_oov)} — same arithmetic order, bit-exact."""
-    w3, w2, w1 = (float(w) for w in weights)
-    toks = {i: _mirror_tokens(txt) for i, txt in rows}
-    counts: dict[str, int] = {}
-    for ts in toks.values():
-        for t in ts:
-            counts[t] = counts.get(t, 0) + 1
-    vocab = set(sorted(counts, key=lambda t: (-counts[t], t))[: int(vocab_size)])
-    mapped = {i: [t if t in vocab else UNK for t in ts] for i, ts in toks.items()}
-    tri: dict[tuple, int] = {}
-    tctx: dict[tuple, int] = {}
-    big: dict[tuple, int] = {}
-    bctx: dict[str, int] = {}
-    uni: dict[str, int] = {}
-    for ms in mapped.values():
-        full = [BOS, BOS] + ms
-        for k in range(len(ms)):
-            t3 = (full[k], full[k + 1], ms[k])
-            tri[t3] = tri.get(t3, 0) + 1
-            tctx[t3[:2]] = tctx.get(t3[:2], 0) + 1
-            b = (full[k + 1], ms[k])
-            big[b] = big.get(b, 0) + 1
-            bctx[b[0]] = bctx.get(b[0], 0) + 1
-            uni[ms[k]] = uni.get(ms[k], 0) + 1
-    v = len(vocab) + 1
-    n_uni = sum(uni.values())
-    out = {}
-    for i, ts in toks.items():
-        ms = mapped[i]
-        full = [BOS, BOS] + ms
-        sq = 0
-        for k in range(len(ms)):
-            key3 = (full[k], full[k + 1], ms[k])
-            p3 = (tri.get(key3, 0) + 1) / (tctx.get(key3[:2], 0) + v)
-            p2 = (big.get((full[k + 1], ms[k]), 0) + 1) / (bctx.get(full[k + 1], 0) + v)
-            p1 = (uni.get(ms[k], 0) + 1) / (n_uni + v)
-            sq += int(math.floor(quantum * (w3 * p3 + w2 * p2 + w1 * p1)))
-        oov = sum(1 for t in ts if t not in vocab)
-        out[i] = (sq, oov)
     return out

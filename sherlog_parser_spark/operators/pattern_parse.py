@@ -2,17 +2,18 @@
 
 The reference ranks stored cluster patterns by embedding cosine
 similarity, then applies the first pattern whose ``re.match`` succeeds
-and keeps its named groups.  Spark-first re-expression:
+and keeps its named groups.  Spark-first re-expression of the
+first-match half:
 
 * the pattern list is tiny driver-side state (broadcast as literals),
 * per row, the winning pattern = first in ranked order that matches
   (``rlike`` guards chained with ``coalesce``), evaluated JVM-side,
 * named-group extraction via ``regexp_extract`` per group (group names
   resolved driver-side with Python's ``re`` — patterns are trusted
-  config, not data),
-* optional ranking hook: when an embedding column + cluster centers are
-  given, rank patterns per-row by cosine first (J1-style broadcast),
-  else use the given priority order.
+  config, not data).
+
+Patterns apply in the given priority order; the reference's per-row
+cosine ranking is not reproduced.
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ from pyspark.sql import functions as F
 class ClusterPattern:
     cluster_id: int
     pattern: str  # Java/Python-compatible regex with named groups
-    center: list[float] | None = None  # cluster-center embedding (P16 ranking)
 
 
 def _match_anchor(pattern: str) -> str:
@@ -69,88 +69,3 @@ def pattern_parse(
         fields = F.when(hit, m).otherwise(fields)
     return df.withColumn("cluster_id", cluster_id).withColumn("parsed_fields", fields)
 
-
-def _fields_map(c: Column, cp: ClusterPattern) -> Column:
-    """map<string,string> of the pattern's named groups extracted from c."""
-    anchored = _match_anchor(cp.pattern)
-    names = sorted(re.compile(cp.pattern).groupindex.items(), key=lambda kv: kv[1])
-    if not names:
-        return F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<string>")
-        )
-    return F.map_from_arrays(
-        F.array(*[F.lit(name) for name, _ in names]),
-        F.array(*[F.regexp_extract(c, anchored, idx) for _, idx in names]),
-    )
-
-
-def pattern_parse_ranked(
-    df: DataFrame,
-    patterns: list[ClusterPattern],
-    text_col: str = "text",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """P16 with the reference's per-row pattern RANKING
-    (/root/reference/src/services/api/parser.py:100-111): candidate
-    patterns are ordered by cosine similarity between the row's embedding
-    and each pattern's cluster-center before first-match, so a row near
-    cluster B's center tries B's pattern before A's even when A precedes
-    it in the stored list.
-
-    Spark-first shape: the centers are tiny driver-side literals (the
-    reference loads them from its pattern store); per row we build an
-    array of (cos, -priority_idx, cluster_id) structs for the MATCHING
-    patterns and take ``array_max`` — highest cosine wins, ties resolve
-    to the earlier pattern exactly like Python's stable sort.  Everything
-    stays in JVM expressions; no shuffle, no UDF.
-
-    Rows with a null/missing embedding fall back to plain priority order
-    (``pattern_parse`` semantics).  Patterns lacking a ``center`` rank as
-    cosine 0 (orthogonal), matching the reference's unknown-cluster
-    default.
-    """
-    from sherlog_parser_spark.operators.similarity import cosine_expr
-
-    c = F.col(text_col)
-    vec = F.col(vec_col)
-
-    structs = []
-    for i, cp in enumerate(patterns):
-        if cp.center is not None and any(float(x) != 0.0 for x in cp.center):
-            center = F.array(*[F.lit(float(x)) for x in cp.center])
-            # zero-norm row embedding → 0/0 = NaN, and NaN sorts ABOVE
-            # every real double in struct ordering; nanvl pins it to the
-            # same 0.0 the no-center default uses (r3 advice)
-            cos = F.nanvl(cosine_expr(vec, center), F.lit(0.0))
-        else:
-            cos = F.lit(0.0)
-        structs.append(
-            F.struct(
-                cos.alias("cos"),
-                F.lit(-i).alias("neg_idx"),
-                F.lit(cp.cluster_id).alias("id"),
-                c.rlike(_match_anchor(cp.pattern)).alias("hit"),
-            )
-        )
-    best = F.array_max(F.filter(F.array(*structs), lambda s: s["hit"]))
-    ranked_id = best["id"]
-    ranked_fields: Column = F.lit(None).cast("map<string,string>")
-    for i, cp in enumerate(patterns):
-        ranked_fields = F.when(best["neg_idx"] == -i, _fields_map(c, cp)).otherwise(
-            ranked_fields
-        )
-
-    # null-embedding fallback: plain priority order (same expressions
-    # pattern_parse builds, inlined on this frame)
-    prio_id: Column = F.lit(None).cast("int")
-    prio_fields: Column = F.lit(None).cast("map<string,string>")
-    for cp in reversed(patterns):
-        hit = c.rlike(_match_anchor(cp.pattern))
-        prio_id = F.when(hit, F.lit(cp.cluster_id)).otherwise(prio_id)
-        prio_fields = F.when(hit, _fields_map(c, cp)).otherwise(prio_fields)
-    return (
-        df.withColumn("cluster_id", F.when(vec.isNull(), prio_id).otherwise(ranked_id))
-        .withColumn(
-            "parsed_fields", F.when(vec.isNull(), prio_fields).otherwise(ranked_fields)
-        )
-    )

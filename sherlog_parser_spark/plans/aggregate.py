@@ -10,8 +10,8 @@ rollups of it (:func:`template_frequency_from_rollup`,
 :func:`tool_usage_from_rollup`), compared with the sequential oracle by
 ``tests/test_oracle_parity.py``.  :func:`template_frequency` and
 :func:`tool_usage_windowed` are the direct single-pass forms over an
-enriched frame; :func:`template_examples` is the reference's
-per-template example bookkeeping.
+enriched frame, the references the streaming aggregates and the parity
+tests compare against.
 """
 
 from __future__ import annotations
@@ -57,46 +57,6 @@ def tool_usage_from_rollup(rollup: DataFrame) -> DataFrame:
             F.col("w.end").alias("window_end"),
             "uses",
         )
-    )
-
-
-def template_examples(enriched: DataFrame, k: int = 5) -> DataFrame:
-    """Per-template bookkeeping the reference keeps on every cluster:
-    up to ``k`` example messages (cap 5, cpp/src/log_parser.cpp:84-88)
-    and the count of distinct raw syntax variants
-    (LogTemplate.syntax_templates_, cpp/include/log_parser.hpp:22-66).
-    Examples are the k FIRST-SEEN texts — deterministic via min over
-    (ts, conv_id, turn_idx)-keyed structs, two-phase aggregated.
-
-    Two-phase min-k (r1 judge "What's wrong #3"): the old
-    ``row_number() OVER (PARTITION BY template_id ...)`` funneled the
-    Zipf-head template's entire row set through one task.  Instead:
-    phase 1 takes the k smallest structs per (template, input-partition)
-    — state bounded by rows-per-partition, head templates spread across
-    ALL partitions; phase 2 merges <= k rows per partition per template.
-    Only k-row arrays ever cross the wire; no full-row shuffle at all."""
-    key_struct = F.struct(
-        F.col("ts").alias("ts"),
-        F.col("conv_id").alias("conv_id"),
-        F.col("turn_idx").alias("turn_idx"),
-        F.col("text").alias("text"),
-    )
-    partial = (
-        enriched.withColumn("_pid", F.spark_partition_id())
-        .groupBy("template_id", "_pid")
-        .agg(F.slice(F.array_sort(F.collect_list(key_struct)), 1, k).alias("_topk"))
-    )
-    firsts = (
-        partial.groupBy("template_id")
-        .agg(F.slice(F.array_sort(F.flatten(F.collect_list("_topk"))), 1, k).alias("_topk"))
-        .select("template_id", F.transform(F.col("_topk"), lambda s: s["text"]).alias("examples"))
-    )
-    stats = enriched.groupBy("template_id", "template").agg(
-        F.countDistinct("sig").alias("syntax_variants"),
-        F.count("*").alias("frequency"),
-    )
-    return stats.join(firsts, "template_id").select(
-        "template_id", "template", "examples", "syntax_variants", "frequency"
     )
 
 

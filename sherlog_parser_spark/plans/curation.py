@@ -90,15 +90,11 @@ def with_quality_reason(
     bound = df.withColumn("_q_sh2", TS.word_shingles_expr(text_col, 2)).withColumn(
         "_q_sh5", TS.word_shingles_expr(text_col, 5)
     )
-
-    def x1e4(c):
-        return F.floor(c * 10000 + F.lit(0.5)).cast("long")
-
     reason = (
         F.when(TS.ws_token_count_expr(text_col) < min_tokens, "too_short")
-        .when(x1e4(TS.dup_frac_expr("_q_sh5")) >= max_dup_5gram_x1e4, "rep_5gram")
+        .when(TS.x1e4(TS.dup_frac_expr("_q_sh5")) >= max_dup_5gram_x1e4, "rep_5gram")
         .when(
-            x1e4(TS.top_ngram_char_frac_expr("_q_sh2", text_col))
+            TS.x1e4(TS.top_ngram_char_frac_expr("_q_sh2", text_col))
             >= max_top_2gram_char_x1e4,
             "top_2gram",
         )

@@ -276,34 +276,13 @@ def streaming_curation(
         F.col(text_col).alias("text"),
     )
     if line_filter_opts is not None:
-        # the rules are pure per-row expressions (functions/linefilter
-        # shares them via line_keep_expr), so the stage composes into
-        # the stream without any join/state
-        from sherlog_parser_spark.functions.linefilter import (
-            C4_BLOCKLIST,
-            line_keep_expr,
-        )
+        # the C4 rules are pure per-row expressions, so the batch
+        # operator composes into the stream without any join or state
+        from sherlog_parser_spark.functions.linefilter import line_filter
 
-        opts = dict(line_filter_opts)
-        min_words = int(opts.pop("min_words", 3))
-        blocklist = tuple(opts.pop("blocklist", C4_BLOCKLIST))
-        require_terminal = bool(opts.pop("require_terminal", True))
-        min_kept_lines = int(opts.pop("min_kept_lines", 1))
-        drop_brace = bool(opts.pop("drop_brace_docs", True))
-        if opts:
-            raise ValueError(f"unknown line_filter_opts: {sorted(opts)}")
-        txt = F.coalesce(F.col("text"), F.lit(""))
-        kept_arr = F.filter(
-            F.split(txt, "\n"),
-            lambda l: line_keep_expr(l, min_words, blocklist, require_terminal),
-        )
-        base = base.withColumn("_kl", kept_arr)
-        doc_ok = F.size("_kl") >= F.lit(min_kept_lines)
-        if drop_brace:
-            doc_ok = doc_ok & ~txt.contains("{") & ~txt.contains("}")
-        base = (
-            base.filter(doc_ok)
-            .select("doc_id", "ts", F.array_join("_kl", "\n").alias("text"))
+        lf = line_filter(base, "text", "doc_id", **line_filter_opts)
+        base = lf.filter(F.col("doc_kept")).select(
+            "doc_id", "ts", F.col("kept_text").alias("text")
         )
     deduped = (
         base.withColumn("_h", F.md5("text"))

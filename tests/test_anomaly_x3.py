@@ -1,6 +1,6 @@
-"""X3 completion (r2): isolation forest, time-series counter anomalies,
-and the composed incident detector — planted-outlier semantics pinned to
-the reference (src/core/logai_tools.py:79-143,217-288;
+"""X3 completion (r2): time-series counter anomalies and the composed
+incident detector — planted-outlier semantics pinned to the reference
+(src/core/logai_tools.py:79-143;
 src/core/anomaly_incidents.py:61-206; cpp/tests/test_main.cpp:101-116
 analog: the far-away planted point must be flagged, the dense cluster
 must not)."""
@@ -13,49 +13,8 @@ from pyspark.sql import functions as F
 
 from sherlog_parser_spark.operators.anomaly import (
     detect_anomaly_incidents,
-    isolation_forest_fit,
-    isolation_forest_scores_np,
-    semantic_anomalies_iforest,
     timeseries_count_anomalies,
 )
-
-
-def _clustered_matrix(n_normal=200, n_outliers=5, dims=8, seed=7):
-    rng = np.random.default_rng(seed)
-    normal = rng.normal(0.0, 0.05, size=(n_normal, dims))
-    outliers = rng.normal(0.0, 0.05, size=(n_outliers, dims)) + 3.0
-    return np.vstack([normal, outliers])
-
-
-def test_iforest_scores_rank_planted_outliers_first():
-    X = _clustered_matrix()
-    model = isolation_forest_fit(X, n_trees=100, seed=42)
-    scores = isolation_forest_scores_np(model, X)
-    # the 5 planted far points must be the 5 highest-scoring rows
-    assert set(np.argsort(-scores)[:5]) == {200, 201, 202, 203, 204}
-    assert scores[200:].min() > 0.6 > np.median(scores[:200])
-
-
-def test_iforest_deterministic():
-    X = _clustered_matrix()
-    s1 = isolation_forest_scores_np(isolation_forest_fit(X, seed=42), X)
-    s2 = isolation_forest_scores_np(isolation_forest_fit(X, seed=42), X)
-    assert np.array_equal(s1, s2)
-
-
-def test_semantic_anomalies_iforest_spark(spark):
-    X = _clustered_matrix(n_normal=300, n_outliers=0)
-    rng = np.random.default_rng(11)
-    test_norm = rng.normal(0.0, 0.05, size=(90, 8))
-    test_out = rng.normal(0.0, 0.05, size=(10, 8)) + 3.0
-    rows = [(i, [float(v) for v in x]) for i, x in enumerate(np.vstack([X, test_norm, test_out]))]
-    df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<DOUBLE>")
-    out = semantic_anomalies_iforest(df, order_cols=("vec_id",), train_frac=0.75, seed=42)
-    got = {r["vec_id"]: r["is_anomaly"] for r in out.collect()}
-    # only the test split is scored (ids 300..399)
-    assert set(got) == set(range(300, 400))
-    flagged = {v for v, a in got.items() if a}
-    assert flagged == set(range(390, 400))
 
 
 def test_timeseries_count_anomalies(spark):

@@ -9,7 +9,6 @@ import pytest
 from sherlog_parser_spark.operators import components
 from sherlog_parser_spark.operators.components import (
     connected_components,
-    dedup_keep_representatives,
     hash_to_min_components,
 )
 
@@ -47,14 +46,6 @@ def test_components_chain(spark):
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     got = {r["id"]: r["component"] for r in hash_to_min_components(df, max_iterations=50).collect()}
     assert set(got.values()) == {0}
-
-
-def test_dedup_keep_representatives(spark):
-    docs = spark.createDataFrame([(i, f"doc {i}") for i in range(10)], "doc_id long, text string")
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
-    kept = sorted(r["doc_id"] for r in dedup_keep_representatives(docs, pairs).collect())
-    # components {1,2,3} -> keep 1; {7,8} -> keep 7; others untouched
-    assert kept == [0, 1, 4, 5, 6, 7, 9]
 
 
 def test_connected_components_nonconvergence_raises(spark):

@@ -152,22 +152,3 @@ def test_merge_path_exercised(oracle_parsed):
     _, parser = oracle_parsed
     assert len(parser.pool.mapping()) > len(parser.pool.templates)
 
-
-def test_template_examples_bookkeeping(oracle_parsed, spark_enriched):
-    """Per-template examples (first-seen, cap 5 — cpp/src/log_parser.cpp:84-88)
-    and distinct syntax-variant counts must match the oracle."""
-    from sherlog_parser_spark.functions.masking import mask_template_py
-    from sherlog_parser_spark.plans.aggregate import template_examples
-
-    parsed, parser = oracle_parsed
-    enriched, _ = spark_enriched
-    got = {r["template_id"]: r for r in template_examples(enriched, k=5).collect()}
-    by_tid: dict[int, list] = {}
-    variants: dict[int, set] = {}
-    for p in sorted(parsed, key=lambda p: (p.ts, p.conv_id, p.turn_idx)):
-        by_tid.setdefault(p.template_id, []).append(p.text)
-        variants.setdefault(p.template_id, set()).add(mask_template_py(p.text))
-    for tid, texts in by_tid.items():
-        assert list(got[tid]["examples"]) == texts[:5], tid
-        assert got[tid]["syntax_variants"] == len(variants[tid]), tid
-        assert got[tid]["frequency"] == len(texts)

@@ -81,22 +81,6 @@ def test_aggregates_are_partial_final(spark, transcripts):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_template_examples_has_no_window(spark, transcripts):
-    """r2: template_examples is two-phase min-k — the Zipf-head template
-    must never funnel its row set through one Window task."""
-    from sherlog_parser_spark.plans.aggregate import template_examples
-    from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-    from sherlog_parser_spark.plans.enrich import enrich_stage
-    from sherlog_parser_spark.data.dims import role_tool_dim
-    from sherlog_parser_spark.plans.parse import parse_stage
-
-    parsed = parse_stage(transcripts)
-    tdict = build_template_dictionary(parsed)
-    enriched = enrich_stage(parsed, tdict.df, role_tool_dim(spark))
-    plan = _plan(template_examples(enriched, k=5))
-    assert "Window" not in plan, plan
-
-
 @pytest.fixture(scope="module")
 def prefilter_frame(spark):
     import datetime
@@ -124,16 +108,6 @@ def test_stratified_sample_windows_only_the_boundary_bucket(prefilter_frame):
         below = plan[plan.index("Window"):]
         assert "_bstar" in below, plan
     assert "Exchange rangepartitioning" not in plan, plan
-
-
-def test_cap_duplicates_has_no_window(prefilter_frame):
-    """r3: X2 is two-phase min-k aggregate-and-explode — the hot
-    duplicated text key must never funnel through a PARTITION BY text
-    window task (r2 judge 'What's wrong #5')."""
-    from sherlog_parser_spark.operators.prefilter import cap_duplicates
-
-    plan = _plan(cap_duplicates(prefilter_frame, max_duplicates=5), "simple")
-    assert "Window" not in plan, plan
 
 
 def test_ngram_jaccard_sizes_join_not_broadcast_hinted(spark):

@@ -1,4 +1,4 @@
-"""Prefilter operators X1/X2 (FIXTURES.md §7, src/core/log_prefilter.py)."""
+"""Prefilter operator X1 (FIXTURES.md §7, src/core/log_prefilter.py)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.operators.prefilter import cap_duplicates, stratified_level_sample
+from sherlog_parser_spark.operators.prefilter import stratified_level_sample
 
 
 @pytest.fixture(scope="module")
@@ -117,179 +117,3 @@ def test_stratified_sample_stable_under_tied_ts(spark):
     assert picks[0] == picks[1] == picks[2]
     assert len(picks[0]) == 30  # ceil(300 * 0.1)
 
-
-def test_cap_duplicates(log_frame):
-    out = cap_duplicates(log_frame, text_col="text", max_duplicates=5, order_cols=("ts",))
-    dup = out.filter(F.col("text") == "dup message").orderBy("ts").collect()
-    # first + last + 3 middle (log_prefilter.py:112-134)
-    assert len(dup) == 5
-    all_dup = log_frame.filter(F.col("text") == "dup message").orderBy("ts").collect()
-    assert dup[0]["id"] == all_dup[0]["id"]
-    assert dup[-1]["id"] == all_dup[-1]["id"]
-    # non-duplicated rows untouched
-    assert out.filter(F.col("text") != "dup message").count() == log_frame.filter(
-        F.col("text") != "dup message"
-    ).count()
-
-
-def test_cap_duplicates_partitioning_invariant(log_frame):
-    a = sorted(
-        r["id"]
-        for r in cap_duplicates(log_frame.repartition(1), max_duplicates=5).select("id").collect()
-    )
-    b = sorted(
-        r["id"]
-        for r in cap_duplicates(log_frame.repartition(13), max_duplicates=5).select("id").collect()
-    )
-    assert a == b
-
-
-def test_cap_duplicates_content_equal_rows_stay_count_exact(spark):
-    """Fully identical rows (same text AND same order key) must still cap
-    to exactly max_duplicates — the positional first/last removal can't
-    over-delete content-equal middles."""
-    import datetime
-
-    t = datetime.datetime(2026, 1, 1)
-    rows = [(1, "same", t)] * 9 + [(2, "other", t)]
-    df = spark.createDataFrame(rows, "id long, text string, ts timestamp")
-    out = cap_duplicates(df, text_col="text", max_duplicates=4, order_cols=("ts",))
-    counts = {r["text"]: r["n"] for r in out.groupBy("text").agg(F.count("*").alias("n")).collect()}
-    assert counts == {"same": 4, "other": 1}
-
-
-def test_cap_duplicates_hot_text_fills_partition_bounded_leaves(spark):
-    """r4 judge item #2: a text that dominates an entire input partition
-    (all rows sharing ONE coarse ts, so data-key hashing could never
-    spread them) must (a) still produce the exact capped output and
-    (b) never form an aggregation group anywhere near the group size.
-    The level -1 dedup crushes fully-identical rows to <= k weighted
-    copies with O(1) groupBy state; distinct-row hot texts spread over
-    the content-hash sub-buckets (second assert)."""
-    import datetime as _dt
-
-    t = _dt.datetime(2026, 1, 1)
-    n = 50_000
-    hot = [(i % 7, "hot spam line", t) for i in range(n)]  # 7 distinct rows
-    cold = [(1000 + j, f"cold {j}", t + _dt.timedelta(seconds=j)) for j in range(20)]
-    df = (
-        spark.createDataFrame(hot + cold, "id long, text string, ts timestamp")
-        .repartition(2)  # hot text fills its partitions
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        out = cap_duplicates(df, text_col="text", max_duplicates=5, order_cols=("ts",))
-        counts = {
-            r["text"]: r["n"] for r in out.groupBy("text").agg(F.count("*").alias("n")).collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-    assert counts["hot spam line"] == 5
-    assert sum(v for k, v in counts.items() if k != "hot spam line") == 20
-
-    # bound evidence, case 1 (identical rows): after dedup+capped
-    # expansion the hot text contributes <= 7 distinct rows x k copies
-    ded = df.groupBy("id", "text", "ts").count()
-    assert ded.filter(F.col("text") == "hot spam line").count() == 7
-
-    # bound evidence, case 2 (distinct rows): content-hash sub-buckets
-    # spread a 25k-distinct-row partition to ~n/4096 per leaf (4x slack)
-    distinct_hot = spark.createDataFrame(
-        [(i, "hot spam line", t) for i in range(n)], "id long, text string, ts timestamp"
-    )
-    leaf_sizes = (
-        distinct_hot.withColumn(
-            "_sub",
-            F.pmod(
-                F.xxhash64(F.lit(42), F.col("id"), F.col("text"), F.col("ts"), F.lit(0)),
-                F.lit(4096),
-            ),
-        )
-        .groupBy("text", "_sub")
-        .count()
-        .agg(F.max("count").alias("mx"))
-        .collect()[0]["mx"]
-    )
-    assert leaf_sizes <= 4 * n // 4096 + 8, leaf_sizes
-
-
-def test_cap_duplicates_deterministic_under_recomputation(spark):
-    """r4 review: every grouping/bucketing key must be a pure function
-    of row content so shuffle-map retries reproduce identical results.
-    Proxy check: running the operator twice over differently-partitioned
-    shuffled inputs yields the identical kept multiset."""
-    import datetime as _dt
-
-    t = _dt.datetime(2026, 1, 1)
-    rows = [(i, f"msg {i % 13}", t + _dt.timedelta(seconds=i % 3)) for i in range(500)]
-    df1 = spark.createDataFrame(rows, "id long, text string, ts timestamp").repartition(3)
-    df2 = spark.createDataFrame(list(reversed(rows)), "id long, text string, ts timestamp").repartition(11)
-    a = sorted(map(tuple, cap_duplicates(df1, max_duplicates=4).collect()))
-    b = sorted(map(tuple, cap_duplicates(df2, max_duplicates=4).collect()))
-    assert a == b
-
-
-def test_cap_duplicates_max2_keeps_first_and_last(log_frame):
-    out = cap_duplicates(log_frame, text_col="text", max_duplicates=2, order_cols=("ts",))
-    dup = out.filter(F.col("text") == "dup message").orderBy("ts").collect()
-    all_dup = log_frame.filter(F.col("text") == "dup message").orderBy("ts").collect()
-    assert len(dup) == 2
-    assert dup[0]["id"] == all_dup[0]["id"]
-    assert dup[-1]["id"] == all_dup[-1]["id"]
-
-
-def test_cap_duplicates_matches_python_selection_mirror(spark):
-    """r4 differential test: the dedup-expand tournament must equal a
-    direct Python replay of the documented selection semantics (first +
-    last + k-2 hash-smallest middles with positional first/last removal
-    over the k-slice), on a random corpus with coarse-ts ties, fully
-    identical rows and hot texts.  Hashes come from Spark (xxhash64 is
-    JVM-defined); the selection logic is mirrored independently."""
-    import datetime as _dt
-    import random
-
-    rng = random.Random(11)
-    t0 = _dt.datetime(2026, 1, 1)
-    rows = []
-    for i in range(800):
-        text = f"m{rng.randint(0, 6)}"  # 7 hot texts
-        ts = t0 + _dt.timedelta(seconds=rng.randint(0, 5))  # heavy ties
-        rows.append((rng.randint(0, 99), text, ts))  # ids collide -> identical rows
-    df = spark.createDataFrame(rows, "id long, text string, ts timestamp").repartition(5)
-    k, seed = 4, 42
-
-    hashed = df.withColumn("_h", F.xxhash64(F.lit(seed), F.col("ts"))).collect()
-    from collections import Counter, defaultdict
-
-    groups = defaultdict(list)
-    for r in hashed:
-        row = (r["id"], r["text"], r["ts"])
-        groups[r["text"]].append(((r["ts"], r["_h"], row), (r["_h"], r["ts"], row), row))
-
-    expected = Counter()
-    for text, members in groups.items():
-        if len(members) <= k:
-            expected.update(m[2] for m in members)
-            continue
-        okeys = sorted(m[0] for m in members)
-        first_row, last_row = okeys[0][2], okeys[-1][2]
-        first_hk = (okeys[0][1], okeys[0][0], first_row)
-        last_hk = (okeys[-1][1], okeys[-1][0], last_row)
-        hs = sorted(m[1] for m in members)[:k]
-        p1 = hs.index(first_hk) if first_hk in hs else None
-        if last_hk in hs:
-            p2 = hs.index(last_hk)
-            if p1 is not None and p2 == p1:
-                rest = hs[p1 + 1 :]
-                p2 = p1 + 1 + rest.index(last_hk) if last_hk in rest else None
-        else:
-            p2 = None
-        middles = [x for j, x in enumerate(hs) if j not in {p1, p2}]
-        kept = [first_hk, last_hk] + middles[: k - 2]
-        expected.update(x[2] for x in kept)
-
-    got = Counter(
-        (r["id"], r["text"], r["ts"])
-        for r in cap_duplicates(df, text_col="text", max_duplicates=k, order_cols=("ts",)).collect()
-    )
-    assert got == expected

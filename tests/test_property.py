@@ -131,27 +131,6 @@ def test_message_similarity_properties(a, b):
         assert message_similarity(a, a) == 1.0
 
 
-@given(st.lists(st.integers(min_value=0, max_value=10**6), min_size=0, max_size=200, unique=True))
-@settings(max_examples=50, deadline=None)
-def test_iforest_fit_handles_any_unique_ints(vals):
-    """Isolation forest fit/score never crashes on degenerate shapes
-    (constant columns, tiny n) and scores stay in (0, 1]."""
-    import numpy as np
-
-    from sherlog_parser_spark.operators.anomaly import (
-        isolation_forest_fit,
-        isolation_forest_scores_np,
-    )
-
-    if not vals:
-        return
-    X = np.array([[float(v), 1.0] for v in vals])  # second column constant
-    model = isolation_forest_fit(X, n_trees=10, max_samples=32, seed=1)
-    scores = isolation_forest_scores_np(model, X)
-    assert scores.shape == (len(vals),)
-    assert (scores > 0).all() and (scores <= 1.0).all()
-
-
 def test_spark_substring_cut_equals_python_on_fuzz_corpus(spark):
     """r4: the substring-dedup cut vs an INDEPENDENT Python reference on
     a random corpus with planted cross-doc 4-gram overlap (random docs
