@@ -245,16 +245,12 @@ def q_window_count_stats(spark, sf_dir):
 def q_numeric_field_discovery(spark, sf_dir):
     ev = _read(spark, sf_dir, "events").filter(F.col("event_id") < 100)
     fields = ev.select(
-        F.explode(
-            F.create_map(
-                F.lit("k"), F.get_json_object("props", "$.k"), F.lit("etype"), F.col("event_type")
-            )
-        ).alias("field", "v")
+        F.create_map(
+            F.lit("k"), F.get_json_object("props", "$.k"), F.lit("etype"), F.col("event_type")
+        ).alias("fields")
     )
-    return (
-        fields.groupBy("field")
-        .agg(F.round(F.avg(F.col("v").try_cast("double").isNotNull().cast("int")), 6).alias("numeric_frac"))
-        .withColumn("is_numeric", F.col("numeric_frac") >= 0.8)
+    return NUM.numeric_field_discovery(fields, "fields", sample_n=100).select(
+        F.col("k").alias("field"), F.round("numeric_frac", 6).alias("numeric_frac"), "is_numeric"
     )
 
 

@@ -13,10 +13,7 @@ algorithm is re-expressed as
          → template-frequency / windowed tool-usage aggregates
 
 All heavy lifting is DataFrame-declarative so Catalyst/Tungsten pick
-the physical plan; the pipeline runs no Python on the data path.  The
-pluggable extractor boundary is ``plans/llm_extract.py``, which hands
-Arrow batches of distinct signatures to an injectable callable through
-``mapInPandas``.
+the physical plan; the pipeline runs no Python on the data path.
 """
 
 __version__ = "0.1.0"

@@ -22,8 +22,7 @@ fixture (tests/test_masking.py):
   whole-string ``regexp_replace`` passes): stays inside JVM whole-stage
   codegen, zero Python on the data path.  The parse stage uses it.
 * :func:`mask_template_py` — the single-string Python mirror, used by
-  the sequential oracle, the local stand-in extractor of
-  ``plans/llm_extract.py`` and the benchmark's expected outputs.
+  the sequential oracle and the benchmark's expected outputs.
 
 :func:`duckdb_mask_sql` renders the default rules in DuckDB SQL for the
 oracle queries in ``__spark_entry__.py``.

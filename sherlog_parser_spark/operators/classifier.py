@@ -153,8 +153,8 @@ def classifier_scores(
 
 
 def save_classifier(clf: QualityClassifier, path: str) -> None:
-    """One JSON artifact through the Hadoop FS API (any scheme), the
-    ``_centroids.json`` convention from similarity.write_ivf_index."""
+    """One JSON artifact, ``<path>/_classifier.json``, through the
+    Hadoop FS API (any scheme)."""
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()

@@ -75,9 +75,6 @@ class DSIRModel(NamedTuple):
     target_q0: int
     raw_q0: int
     n_buckets: int
-    quantum: float
-    target_total: int
-    raw_total: int
 
 
 def _bucket_counts(docs: DataFrame, text_col: str, n_buckets: int) -> DataFrame:
@@ -109,16 +106,13 @@ def _model_from_counts(
             .alias("q"),
         )
         q0 = int(math.floor(quantum * 1 / (total + int(n_buckets))))
-        out[name] = (q, q0, total)
+        out[name] = (q, q0)
     return DSIRModel(
         target_q=out["target"][0],
         raw_q=out["raw"][0],
         target_q0=out["target"][1],
         raw_q0=out["raw"][1],
         n_buckets=int(n_buckets),
-        quantum=float(quantum),
-        target_total=out["target"][2],
-        raw_total=out["raw"][2],
     )
 
 
@@ -213,9 +207,6 @@ def train_dsir_shared(
         target_q0=int(math.floor(quantum * 1 / (target_total + int(n_buckets)))),
         raw_q0=int(math.floor(quantum * 1 / (raw_total + int(n_buckets)))),
         n_buckets=int(n_buckets),
-        quantum=float(quantum),
-        target_total=target_total,
-        raw_total=raw_total,
     )
 
 

@@ -245,9 +245,9 @@ def lm_quality_scores(
 
 def python_mirror_scores(
     rows: list[tuple[int, str]], vocab_size: int = 256, quantum: float = 1e6
-) -> dict[int, tuple[int, int, float]]:
+) -> dict[int, tuple[int, int]]:
     """Sequential mirror of train+score for differential tests:
-    {id: (lm_score_q, lm_oov, log_prob)}."""
+    {id: (lm_score_q, lm_oov)}."""
     toks = {i: _mirror_tokens(txt) for i, txt in rows}
     counts: dict[str, int] = {}
     for ts in toks.values():
@@ -266,15 +266,14 @@ def python_mirror_scores(
             big[(p, w)] = big.get((p, w), 0) + 1
             ctx[p] = ctx.get(p, 0) + 1
     v = len(vocab) + 1
-    out: dict[int, tuple[int, int, float]] = {}
+    out: dict[int, tuple[int, int]] = {}
     for i, ts in toks.items():
         ms = mapped[i]
-        sq, oov, lp = 0, 0, 0.0
+        sq = 0
         for p, w in zip(ms, ms[1:]):
             pr_num = big.get((p, w), 0) + 1
             pr_den = ctx.get(p, 0) + v
             sq += int(math.floor(quantum * pr_num / pr_den))
-            lp += math.log(pr_num / pr_den)
         oov = sum(1 for t in ts if t not in vocab)
-        out[i] = (sq, oov, lp)
+        out[i] = (sq, oov)
     return out

@@ -35,6 +35,9 @@ from pyspark.storagelevel import StorageLevel
 def _ranked_with_total(
     df: DataFrame, order_cols: list[str], rank_col: str
 ) -> tuple[DataFrame, int]:
+    """(``df`` + a dense global 1..n rank by ``order_cols``, n).
+    ``order_cols`` must be a unique composite key; no single-partition
+    exchange."""
     part = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
     part = part.withColumn("_pid", F.spark_partition_id())
     part.persist(StorageLevel.MEMORY_AND_DISK)
@@ -56,8 +59,8 @@ def _ranked_with_total(
         .drop("_pid", "_off")
     )
     # Materialize the ranked result, then release the intermediate cache:
-    # without this, repeated ordered_split/global_rank calls in one
-    # session accumulate persisted partitions until the session dies.
+    # without this, repeated ordered_split calls in one session
+    # accumulate persisted partitions until the session dies.
     # localCheckpoint blocks ARE the materialized result (cleaned by the
     # ContextCleaner once the frame is unreferenced), and cutting lineage
     # here also freezes the partition boundaries the offsets were
@@ -65,13 +68,6 @@ def _ranked_with_total(
     ranked = ranked.localCheckpoint(eager=True)
     part.unpersist()
     return ranked, acc
-
-
-def global_rank(df: DataFrame, order_cols: list[str], rank_col: str = "_rn") -> DataFrame:
-    """Add a dense global 1..n rank by ``order_cols`` (must be a unique
-    composite key) with no single-partition exchange."""
-    ranked, _ = _ranked_with_total(df, order_cols, rank_col)
-    return ranked
 
 
 def ordered_split(

@@ -59,24 +59,6 @@ def similarity(template1: str, template2: str) -> float:
     return difflib.SequenceMatcher(None, s1, s2).ratio()
 
 
-def message_similarity(msg1: str, msg2: str) -> float:
-    """P9 — raw-message token similarity, 0.7·suffix-ratio + 0.3·Jaccard
-    (cpp/src/log_parser.cpp:247-288 calculate_token_similarity).  Unused
-    by the parse path in the reference too; kept for API parity."""
-    t1, t2 = msg1.split(), msg2.split()
-    if not t1 or not t2:
-        return 0.0
-    suffix = 0
-    for a, b in zip(reversed(t1), reversed(t2)):
-        if a != b:
-            break
-        suffix += 1
-    suffix_sim = suffix / max(len(t1), len(t2))
-    s1, s2 = set(t1), set(t2)
-    jaccard = len(s1 & s2) / len(s1 | s2)
-    return 0.7 * suffix_sim + 0.3 * jaccard
-
-
 def match_type(template1: str, template2: str, threshold: float = 0.8) -> str:
     if template1 == template2:
         return EXACT

@@ -6,12 +6,11 @@ generalized per north_rule: enriched turns land under
     <root>/template_id=<T>/tool=<t>/conv_bucket=<b>/part-*.parquet
 
 ``conv_bucket = pmod(xxhash64(conv_id), n_buckets)`` mirrors Iceberg's
-``bucket(N, conv_id)`` transform (parquet directory layout is the
-sandbox fallback for Iceberg — SURVEY §7.3.6).  ``write_routed`` is the
-one writer of that layout and its encoding: ``run_pipeline`` calls it
-per commit group (``checkpoint.commit_groups``), ``route_stage_iceberg``
-calls it as its parquet fallback, and the streaming route calls it per
-micro-batch and per compacted batch.
+``bucket(N, conv_id)`` transform (the directory layout stands in for
+an Iceberg table — SURVEY §7.3.6).  ``write_routed`` is the one writer
+of that layout and its encoding: ``run_pipeline`` calls it per commit
+group (``checkpoint.commit_groups``), and the streaming route calls it
+per micro-batch and per compacted batch.
 
 Width: every route exchange goes through ``route_exchange``, an
 explicit ``repartition(n_parts, template_id, tool, conv_bucket)`` with
@@ -95,67 +94,3 @@ def write_routed(frame: DataFrame, out_dir: str, *, partition_overwrite: str) ->
         .parquet(out_dir)
     )
 
-
-# ---------------------------------------------------------------------------
-# Iceberg writeTo path (north_rule "Iceberg sinks").
-#
-# Install attempt recorded (r2): this sandbox has NO iceberg-spark-runtime
-# jar on disk (`find / -name '*iceberg*'` empty) and NO network (DNS
-# resolution fails for repo1.maven.org), so the runtime jar cannot be
-# fetched and `spark.jars.packages` cannot resolve.  The code path below
-# is therefore exercised in tests only up to its detection/fallback
-# branch; on a cluster WITH the jar + a configured catalog it performs the
-# real `writeTo(...).partitionedBy(bucket(N, conv_id), ...)` append.
-# ---------------------------------------------------------------------------
-
-
-def iceberg_available(spark) -> bool:
-    """True iff the Iceberg SparkCatalog class is loadable in this JVM."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def route_stage_iceberg(
-    enriched: DataFrame,
-    table: str,
-    n_buckets: int = 8,
-    create: bool = True,
-    fallback_dir: str | None = None,
-) -> str:
-    """Route into an Iceberg table partitioned by
-    ``(bucket(n_buckets, conv_id), days(ts), template_id)`` — the
-    north_rule layout — via the DataFrameWriterV2 API.  Returns which
-    path ran: 'iceberg' or 'parquet-fallback'.
-
-    When the runtime jar is absent, falls back to ``write_routed`` into
-    ``fallback_dir`` (same data, directory-encoded partitioning), which
-    replaces the directory as ``createOrReplace`` replaces the table,
-    and returns 'parquet-fallback'; raises if neither path is possible.
-    """
-    spark = enriched.sparkSession
-    if iceberg_available(spark):
-        from pyspark.sql.functions import partitioning as P
-
-        cols = route_cols(enriched)
-        routed = enriched.select(*cols)
-        writer = routed.writeTo(table).partitionedBy(
-            P.bucket(n_buckets, F.col("conv_id")), P.days(F.col("ts")), F.col("template_id")
-        )
-        if create:
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return "iceberg"
-    if fallback_dir is None:
-        raise RuntimeError(
-            "Iceberg runtime jar is not on the classpath and no fallback_dir "
-            "was given; install iceberg-spark-runtime and configure a catalog"
-        )
-    routed = enriched.select(*route_cols(enriched)).withColumn(
-        "conv_bucket", conv_bucket_expr("conv_id", n_buckets)
-    )
-    write_routed(route_exchange(routed), fallback_dir, partition_overwrite="static")
-    return "parquet-fallback"

@@ -39,7 +39,7 @@ def test_lm_scores_match_python_mirror(spark):
         for r in lm_quality_scores(_docs(spark), vocab_size=5).collect()
     }
     mirror = python_mirror_scores(CORPUS, vocab_size=5)
-    assert got == {i: (sq, oov) for i, (sq, oov, _) in mirror.items()}
+    assert got == mirror
     # sanity: the pure-repetition doc outscores the all-OOV doc
     assert got[6][0] / 6 > got[5][0] / 3
     assert got[4] == (0, 0)
@@ -119,4 +119,4 @@ def test_lm_literal_bos_token_and_nbsp_match_mirror(spark):
         for r in lm_quality_scores(docs, vocab_size=2).collect()
     }
     mirror = python_mirror_scores(corpus, vocab_size=2)
-    assert got == {i: (sq, oov) for i, (sq, oov, _) in mirror.items()}
+    assert got == mirror

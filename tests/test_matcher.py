@@ -82,23 +82,3 @@ def test_pool_first_seen_ids_and_merge():
     assert pool.add(0, a) == 0  # repeat sig keeps mapping
     assert pool.templates[0] in (a, b)  # merged in place, same length -> base kept
     assert pool.mapping() == {0: 0, 1: 1, 2: 0}
-
-
-def test_message_similarity_p9():
-    """P9 pinned to cpp/src/log_parser.cpp:247-288: weighted suffix + Jaccard."""
-    from sherlog_parser_spark.oracle.matcher import message_similarity
-
-    # identical -> 1.0
-    assert message_similarity("a b c", "a b c") == 1.0
-    # empty either side -> 0.0
-    assert message_similarity("", "a b") == 0.0
-    assert message_similarity("a b", "") == 0.0
-    # suffix match 2 ('b c'), max_len 3 -> suffix 2/3; sets {x,b,c}/{a,b,c}:
-    # inter {b,c}=2, union 4 -> jaccard 0.5
-    got = message_similarity("x b c", "a b c")
-    assert abs(got - (0.7 * 2 / 3 + 0.3 * 0.5)) < 1e-12
-    # no common suffix, disjoint tokens -> 0
-    assert message_similarity("a b", "c d") == 0.0
-    # different lengths: suffix counted from the tail, ratio over MAX len
-    got = message_similarity("p q r s", "r s")
-    assert abs(got - (0.7 * 2 / 4 + 0.3 * (2 / 4))) < 1e-12

@@ -150,35 +150,6 @@ def test_params_analytics_over_sink(spark, transcripts, tmp_path):
     assert flagged.filter(~F.col("is_anomaly")).count() > 0
 
 
-def test_route_stage_iceberg_fallback(spark, transcripts, tmp_path):
-    """K1/K2 Iceberg slot: with no runtime jar in the sandbox (documented
-    install attempt in route.py), route_stage_iceberg must take the
-    parquet fallback and produce the standard layout; with the jar it
-    would run writeTo(...).partitionedBy(bucket, days, template_id)."""
-    from sherlog_parser_spark.data.dims import role_tool_dim
-    from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-    from sherlog_parser_spark.plans.enrich import enrich_stage
-    from sherlog_parser_spark.plans.parse import parse_stage
-    from sherlog_parser_spark.plans.route import iceberg_available, route_stage_iceberg
-
-    parsed = parse_stage(transcripts.limit(500))
-    tdict = build_template_dictionary(parsed)
-    enriched = enrich_stage(parsed, tdict.df, role_tool_dim(spark))
-    out = str(tmp_path / "ice_fallback")
-
-    assert not iceberg_available(spark)  # sandbox fact, recorded
-    path_taken = route_stage_iceberg(enriched, "ice.db.turns", fallback_dir=out)
-    assert path_taken == "parquet-fallback"
-    got = spark.read.parquet(out)
-    assert got.count() == 500
-    assert "conv_bucket" in got.columns
-    # and with no fallback it must fail loudly, not write anywhere
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="Iceberg runtime jar"):
-        route_stage_iceberg(enriched, "ice.db.turns")
-
-
 def _manifest_rows_fp(out_dir):
     m = CheckpointManifest.load(os.path.join(out_dir, "_manifest.jsonl"))
     fp = 0

@@ -118,19 +118,6 @@ def test_spark_mask_equals_python_on_fuzz_corpus(spark):
         assert r["m"] == mask_template_py(r["text"]), repr(r["text"])
 
 
-@given(texts, texts)
-@settings(max_examples=300, deadline=None)
-def test_message_similarity_properties(a, b):
-    """P9: symmetric, bounded [0,1], exact 1.0 on self for non-empty."""
-    from sherlog_parser_spark.oracle.matcher import message_similarity
-
-    s = message_similarity(a, b)
-    assert 0.0 <= s <= 1.0
-    assert s == message_similarity(b, a)
-    if a.split():
-        assert message_similarity(a, a) == 1.0
-
-
 def test_spark_substring_cut_equals_python_on_fuzz_corpus(spark):
     """r4: the substring-dedup cut vs an INDEPENDENT Python reference on
     a random corpus with planted cross-doc 4-gram overlap (random docs

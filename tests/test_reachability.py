@@ -8,7 +8,10 @@ and ``ImportFrom`` references, starting from every statement of the
 surface files and from the module-level statements (outside any
 definition) of each package module.  A docstring or comment mention is
 not a use.  A definition that nothing reaches must be deleted, or named
-in ``KEEP`` with the reason it stays.  No Spark session is needed.
+in ``KEEP`` with the reason it stays.  A second pass parses the test
+modules the same way: every ``KEEP`` entry must be imported by a test,
+so a reason cannot outlive the test it names.  No Spark session is
+needed.
 """
 
 from __future__ import annotations
@@ -21,10 +24,18 @@ PKG = "sherlog_parser_spark"
 
 KEEP = {
     # A key names a definition (``operators.lm.python_mirror_scores``)
-    # or a whole module or package (``oracle``); what a kept definition
-    # references is kept with it.
-    "oracle":
-        "the sequential parity oracle the pipeline tests compare against",
+    # or a whole module or package; what a kept definition references is
+    # kept with it.  Every key must be imported by some test module.
+    "oracle.reference_parser.SequentialReferenceParser":
+        "the sequential reference parser the parity tests compare against",
+    "oracle.reference_parser.oracle_route_sets":
+        "the oracle's per-sink row sets, for the routed sink parity test",
+    "oracle.reference_parser.oracle_template_counts":
+        "the oracle's template counts, for the template-count and sink "
+        "parity tests",
+    "oracle.reference_parser.oracle_tool_counts":
+        "the oracle's windowed tool counts, for the tool-usage and sink "
+        "parity tests",
     "functions.masking.normalize_template_py":
         "Python mirror of the normalization expression, for differential tests",
     "functions.pii.redact_pii_py":
@@ -43,34 +54,12 @@ KEEP = {
         "trains the model that curate.py --classifier loads",
     "operators.classifier.save_classifier":
         "writes the model file that curate.py --classifier loads",
-    "plans.route.route_stage_iceberg":
-        "the jar-gated Iceberg sink; the paper's input is an Iceberg table",
-    "plans.route.iceberg_available":
-        "the gate of the Iceberg sink",
-    "plans.llm_extract":
-        "the paper's LLM-extraction boundary (COVERAGE P3); run.py would "
-        "need a new flag to reach it",
     "plans.aggregate.template_frequency":
         "single-pass reference the streaming and parity tests compare against",
     "plans.aggregate.tool_usage_windowed":
         "single-pass reference the streaming and parity tests compare against",
     "operators.anomaly.count_baseline":
         "builds the frozen baseline that the streaming count detector joins",
-    "operators.split.global_rank":
-        "reached only by tests (ordered_split shares its ranking helper); "
-        "left for the next deletion pass",
-    "operators.numeric.numeric_field_discovery":
-        "reached only by tests (the queries() row re-implements it over "
-        "events); left for the next deletion pass",
-    "operators.similarity.write_ivf_index":
-        "IVF index at rest, reached only by tests; left for the next "
-        "deletion pass",
-    "operators.similarity.read_ivf_index":
-        "IVF index at rest, reached only by tests; left for the next "
-        "deletion pass",
-    "operators.similarity.ivf_ann_topk_at_rest":
-        "IVF index at rest, reached only by tests; left for the next "
-        "deletion pass",
 }
 
 
@@ -247,3 +236,25 @@ def test_keep_entries_name_unreached_definitions():
     unreached, _ = _scan()
     stale = sorted(k for k in KEEP if not any(_covers(k, n) for n in unreached))
     assert not stale, "KEEP entries that are reached or gone: " + ", ".join(stale)
+
+
+def _test_references() -> set[str]:
+    """Package modules the test modules import, and the definitions
+    they import or name through an imported module."""
+    graph = _Graph()
+    out: set[str] = set()
+    for path in sorted((ROOT / "tests").glob("*.py")):
+        mod = _Module(_module_name(path), path)
+        out.update(_short(k) for k in graph.references(mod, [mod.tree])
+                   if k[0].startswith(PKG + "."))
+        for alias in mod.aliases.values():
+            m, attr = graph._resolve(*alias)
+            if attr is None and m.startswith(PKG + "."):
+                out.add(m[len(PKG) + 1:])
+    return out
+
+
+def test_keep_entries_are_imported_by_tests():
+    used = _test_references()
+    orphan = sorted(k for k in KEEP if not any(_covers(k, n) for n in used))
+    assert not orphan, "KEEP entries no test imports: " + ", ".join(orphan)

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sherlog_parser_spark.operators.dedup import ngram_jaccard_pairs, shingle_table
-from sherlog_parser_spark.operators.split import global_rank, ordered_split
+from sherlog_parser_spark.operators.split import _ranked_with_total, ordered_split
 
 
 def _plan(df):
@@ -21,13 +21,14 @@ def _events(spark, n=1000):
     )
 
 
-def test_global_rank_matches_sorted_order(spark):
+def test_ranked_with_total_matches_sorted_order(spark):
     ev = _events(spark)
-    ranked = global_rank(ev, ["ts", "event_id"])
+    ranked, total = _ranked_with_total(ev, ["ts", "event_id"], "_rn")
     rows = ranked.orderBy("_rn").collect()
     expected = ev.orderBy("ts", "event_id").collect()
+    assert total == len(expected) == 1000
     assert [r["event_id"] for r in rows] == [r["event_id"] for r in expected]
-    assert [r["_rn"] for r in rows] == list(range(1, len(rows) + 1))
+    assert [r["_rn"] for r in rows] == list(range(1, total + 1))
 
 
 def test_ordered_split_fraction_and_boundary(spark):
