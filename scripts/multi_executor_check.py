@@ -15,7 +15,6 @@ bit-identical to the single-JVM run.
 from __future__ import annotations
 
 import json
-import shutil
 import sys
 import time
 
@@ -40,8 +39,7 @@ def run(master, tag, data):
     spark = get_spark(f"mec-{tag}", master=master, shuffle_partitions=16)
     try:
         df = spark.read.parquet(data)
-        out = f"/tmp/mec_{tag}"
-        shutil.rmtree(out, ignore_errors=True)
+        out = f"/tmp/mec_{tag}"  # resume=False replaces every output of a previous run
         t0 = time.time()
         run_pipeline(spark, df, out, n_buckets=2, commit_groups=1, resume=False)
         wall = time.time() - t0
@@ -60,7 +58,6 @@ def run_curation(master, tag, data):
         bench = docs.filter(F.col("doc_id") % 50 == 0)
         train = docs.filter(F.col("doc_id") % 50 != 0)
         out = f"/tmp/mec_cur_{tag}"
-        shutil.rmtree(out, ignore_errors=True)
         t0 = time.time()
         res = run_curation_pipeline(
             spark, train, out, bench_docs=bench, commit_groups=2, resume=False

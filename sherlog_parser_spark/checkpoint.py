@@ -17,7 +17,7 @@ cleaned sink):
   ``pmod(group_col, n_groups) == g`` with the caller's ``write``
   callable.  Rows and ``bit_xor(xxhash64(*fp_cols))`` are observed on
   the write job itself (``Observation``: no extra pass), and the group
-  appends one manifest line
+  adds one manifest line
 
       {unit, rows, input_fingerprint, sink, wall_sec, committed_at}
 
@@ -29,18 +29,18 @@ cleaned sink):
 
 A killed run loses at most the groups in flight; a rerun skips committed
 units and ends with a bit-identical sink (tested, with faults injected
-into a group write and into the pipeline's aggregates thread).  A crash
-mid-append leaves a torn final line (no trailing newline); ``load``
-drops it with a warning, so the unit it described is redone (a corrupt
-complete line still raises).
+into a group write and into the pipeline's aggregates thread).  Each
+commit replaces the whole manifest atomically (``fs.write_atomic``), so
+a crash never leaves a torn line.  All file I/O here goes through the
+out_dir's Hadoop FileSystem (``fs``): plain, ``file://`` and ``hdfs://``
+out_dirs resume alike; object stores without atomic rename are not
+supported.
 """
 
 from __future__ import annotations
 
 import json
 import logging
-import os
-import shutil
 import threading
 import time
 from collections.abc import Callable
@@ -49,6 +49,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from sherlog_parser_spark import fs
 
 _log = logging.getLogger(__name__)
 
@@ -65,21 +67,9 @@ class CheckpointManifest:
     @classmethod
     def load(cls, path: str) -> "CheckpointManifest":
         m = cls(path=path)
-        if not os.path.exists(path):
+        if not fs.exists(path):
             return m
-        with open(path, "rb") as f:
-            data = f.read()
-        # every append ends with its newline, so bytes after the last
-        # newline are an append a crash cut short
-        complete, sep, torn = data.rpartition(b"\n")
-        if torn.strip():
-            _log.warning(
-                "dropping the torn final line of checkpoint manifest %s "
-                "(a crash mid-append): %r", path, torn[:80],
-            )
-            with open(path, "r+b") as f:  # later appends start on a fresh line
-                f.truncate(len(complete) + len(sep))
-        for line in complete.split(b"\n"):
+        for line in fs.read_text(path).splitlines():
             if line.strip():
                 e = json.loads(line)
                 if e["unit"] == RUN_HEADER_UNIT:
@@ -92,8 +82,8 @@ class CheckpointManifest:
         return (self.run_header or {}).get("run_fingerprint")
 
     def commit_run(self, run_fingerprint: str) -> None:
-        """Append the run-identity header (input plan + params hash)."""
-        self._append({
+        """Write the run-identity header (input plan + params hash)."""
+        self._write({
             "unit": RUN_HEADER_UNIT,
             "run_fingerprint": run_fingerprint,
             "committed_at": time.time(),
@@ -103,7 +93,7 @@ class CheckpointManifest:
         return unit in self.entries
 
     def commit(self, unit: str, rows: int, input_fingerprint: str, sink: str, wall_sec: float) -> None:
-        self._append({
+        self._write({
             "unit": unit,
             "rows": rows,
             "input_fingerprint": input_fingerprint,
@@ -112,14 +102,14 @@ class CheckpointManifest:
             "committed_at": time.time(),
         })
 
-    def _append(self, entry: dict) -> None:
+    def _write(self, entry: dict) -> None:
+        """Record ``entry``; rewrite the header + every entry, in order."""
         if entry["unit"] == RUN_HEADER_UNIT:
             self.run_header = entry
         else:
             self.entries[entry["unit"]] = entry
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        lines = [e for e in (self.run_header, *self.entries.values()) if e]
+        fs.write_atomic(self.path, "".join(json.dumps(e) + "\n" for e in lines))
 
     def metrics(self) -> dict:
         return {
@@ -145,10 +135,7 @@ def open_run(manifest_path: str, run_fp: str, resume: bool, outputs: list[str]) 
         manifest = None
     if manifest is None:
         for p in [*outputs, manifest_path]:
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-            elif os.path.exists(p):
-                os.remove(p)
+            fs.delete(p)
         manifest = CheckpointManifest(manifest_path)
     if manifest.run_header is None:
         manifest.commit_run(run_fp)
@@ -175,14 +162,14 @@ def commit_groups(
         unit = f"bucket_group={g}"
         if manifest.is_committed(unit):
             return int(manifest.entries[unit]["rows"])
-        t0 = time.time()
+        t0 = time.perf_counter()
         obs = Observation()
         write(frame.filter(F.pmod(F.col(group_col), F.lit(n_groups)) == g).observe(
             obs, F.count(F.lit(1)).alias("rows"), F.bit_xor(F.xxhash64(*fp_cols)).alias("fp")
         ))
         rows = int(obs.get["rows"])
         with lock:
-            manifest.commit(unit, rows, str(obs.get["fp"]), sink, time.time() - t0)
+            manifest.commit(unit, rows, str(obs.get["fp"]), sink, time.perf_counter() - t0)
         return rows
 
     with ThreadPoolExecutor(

@@ -1,0 +1,70 @@
+"""Small files on the Hadoop FileSystem of their path (plain, ``file://``,
+``hdfs://``): the checkpoint manifest, the side files and the stream
+compactor's markers and renames.  ``write_atomic`` writes a hidden temp
+file and renames it into place, so readers see the old file or the new
+one, never a torn one.  That needs an atomic rename (local filesystems,
+HDFS); object stores without one (S3A) need an output committer and are
+not supported.
+"""
+
+from __future__ import annotations
+
+import os
+
+from pyspark import SparkContext
+
+
+def handle(path: str):
+    """``(FileSystem, Path)`` of ``path``, from the active SparkContext,
+    which pool threads see too (``SparkSession.getActiveSession()`` is
+    ``None`` in the commit-group threads)."""
+    sc = SparkContext._active_spark_context
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
+def exists(path: str) -> bool:
+    fs, p = handle(path)
+    return fs.exists(p)
+
+
+def delete(path: str) -> None:
+    """Delete a file or a directory tree; a missing path is a no-op."""
+    fs, p = handle(path)
+    fs.delete(p, True)
+
+
+def read_text(path: str) -> str:
+    fs, p = handle(path)
+    stream = fs.open(p)
+    try:
+        return bytes(stream.readAllBytes()).decode()
+    finally:
+        stream.close()
+
+
+def temp_path(path: str) -> str:
+    """Where ``write_atomic`` stages ``path``; nothing ever reads it."""
+    return os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+
+
+def write_atomic(path: str, text: str) -> None:
+    fs, dst = handle(path)
+    _, tmp = handle(temp_path(path))
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()
+    rename_replacing(fs, tmp, dst)
+
+
+def rename_replacing(fs, src, dst) -> None:
+    """Rename ``src`` over ``dst``.  Hadoop reports a failed rename by
+    returning false, not by raising; where rename does not replace a
+    file (HDFS), the target is deleted and the rename retried, and a
+    second false raises with ``src`` left in place."""
+    if not fs.rename(src, dst):
+        fs.delete(dst, False)
+        if not fs.rename(src, dst):
+            raise IOError(f"rename {src} -> {dst} failed; {src} left in place")

@@ -49,6 +49,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sherlog_parser_spark import fs
 from sherlog_parser_spark.operators.dsir import bucket_expr, hashed_grams_expr
 
 
@@ -153,43 +154,15 @@ def classifier_scores(
 
 
 def save_classifier(clf: QualityClassifier, path: str) -> None:
-    """One JSON artifact, ``<path>/_classifier.json``, through the
-    Hadoop FS API (any scheme)."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    jvm = spark._jvm
-    fs_path = jvm.org.apache.hadoop.fs.Path(path, "_classifier.json")
-    fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(fs_path, True)
-    out.write(
-        bytearray(
-            json.dumps(
-                {
-                    "coefficients": list(clf.coefficients),
-                    "intercept": clf.intercept,
-                    "n_features": clf.n_features,
-                }
-            ).encode()
-        )
-    )
-    out.close()
+    """One JSON artifact, ``<path>/_classifier.json``, written atomically
+    on the path's Hadoop FileSystem (``fs.write_atomic``)."""
+    meta = {"coefficients": list(clf.coefficients), "intercept": clf.intercept,
+            "n_features": clf.n_features}
+    fs.write_atomic(f"{path}/_classifier.json", json.dumps(meta))
 
 
 def load_classifier(spark, path: str) -> QualityClassifier:
-    jvm = spark._jvm
-    fs_path = jvm.org.apache.hadoop.fs.Path(path, "_classifier.json")
-    fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(fs_path)
-    reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
-    lines = []
-    while True:
-        line = reader.readLine()
-        if line is None:
-            break
-        lines.append(line)
-    reader.close()
-    meta = json.loads("\n".join(lines))
+    meta = json.loads(fs.read_text(f"{path}/_classifier.json"))
     return QualityClassifier(
         coefficients=tuple(float(x) for x in meta["coefficients"]),
         intercept=float(meta["intercept"]),

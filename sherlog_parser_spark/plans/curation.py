@@ -60,7 +60,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark import checkpoint
+from sherlog_parser_spark import checkpoint, fs
 from sherlog_parser_spark.functions import pii as PII
 from sherlog_parser_spark.functions import textstats as TS
 from sherlog_parser_spark.operators.components import connected_components
@@ -467,12 +467,13 @@ def run_curation_pipeline(
     t_start = time.perf_counter()
     cleaned_dir = os.path.join(out_dir, "cleaned")
     manifest_path = os.path.join(out_dir, "_manifest.jsonl")
+    metrics_path = os.path.join(out_dir, "curation_metrics.json")
     run_fp = pipeline._run_fingerprint(
         docs,
         {"kind": "curation", "n_buckets": n_buckets, "commit_groups": commit_groups,
          "bench_docs": bench_docs, **dag_kwargs},
     )
-    manifest = checkpoint.open_run(manifest_path, run_fp, resume, [cleaned_dir])
+    manifest = checkpoint.open_run(manifest_path, run_fp, resume, [cleaned_dir, metrics_path])
 
     # Scan fan-out (readers.fan_out): a small local input arrives as ONE
     # parquet split, so every narrow stage of the DAG (line rules,
@@ -517,27 +518,23 @@ def run_curation_pipeline(
     for frame in dag_persists:
         frame.unpersist()
     wall = time.perf_counter() - t_start
-    with open(os.path.join(out_dir, "curation_metrics.json"), "w") as f:
-        json.dump(
-            {
-                "rows_kept": total_rows,
-                "fates": fate_counts,
-                "wall_sec": round(wall, 3),
-                "docs_per_sec": round(sum(fate_counts.values()) / wall, 1)
-                if wall > 0
-                else None,
-                "manifest": manifest.metrics(),
-                # wall seconds of the DAG build (connected components'
-                # action included), the group writes and the fate count
-                "phases": {
-                    "dag_s": round(t_write - t_dag, 3),
-                    "write_s": round(t_ledger - t_write, 3),
-                    "ledger_s": round(t_end - t_ledger, 3),
-                },
+    fs.write_atomic(metrics_path, json.dumps(
+        {
+            "rows_kept": total_rows,
+            "fates": fate_counts,
+            "wall_sec": round(wall, 3),
+            "docs_per_sec": round(sum(fate_counts.values()) / wall, 1) if wall > 0 else None,
+            "manifest": manifest.metrics(),
+            # wall seconds of the DAG build (connected components'
+            # action included), the group writes and the fate count
+            "phases": {
+                "dag_s": round(t_write - t_dag, 3),
+                "write_s": round(t_ledger - t_write, 3),
+                "ledger_s": round(t_end - t_ledger, 3),
             },
-            f,
-            indent=2,
-        )
+        },
+        indent=2,
+    ))
     return CurationResult(
         cleaned_dir=cleaned_dir,
         manifest_path=manifest_path,

@@ -55,7 +55,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sherlog_parser_spark import checkpoint
+from sherlog_parser_spark import checkpoint, fs
 from sherlog_parser_spark.plans.aggregate import (
     sink_rollup_slim,
     template_frequency_from_rollup,
@@ -126,12 +126,16 @@ def run_pipeline(
             f"aggregate_source={aggregate_source!r}: the aggregates are rolled up "
             "from the pre-shuffle frame ('enriched') only"
         )
-    t_start = time.time()
+    t_start = time.perf_counter()
     routed_dir = os.path.join(out_dir, "routed")
     manifest_path = os.path.join(out_dir, "_manifest.jsonl")
     dict_path = os.path.join(out_dir, "_dictionary.json")
+    freq_dir = os.path.join(out_dir, "agg_template_freq")
+    tools_dir = os.path.join(out_dir, "agg_tool_usage")
+    metrics_path = os.path.join(out_dir, "run_metrics.json")
     run_fp = _run_fingerprint(transcripts, {"n_buckets": n_buckets, "commit_groups": commit_groups})
-    manifest = checkpoint.open_run(manifest_path, run_fp, resume, [routed_dir, dict_path])
+    outputs = [routed_dir, dict_path, freq_dir, tools_dir, metrics_path]
+    manifest = checkpoint.open_run(manifest_path, run_fp, resume, outputs)
 
     parsed = parse_stage(transcripts)
     if persist_parsed:
@@ -152,15 +156,13 @@ def run_pipeline(
         )
         spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
         parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    if manifest.entries and os.path.exists(dict_path):
+    if manifest.entries and fs.exists(dict_path):
         # resuming a validated run: reuse the persisted dictionary so
         # already-committed groups and in-flight groups share template ids
-        with open(dict_path) as f:
-            tdict = dictionary_from_state(spark, json.load(f))
+        tdict = dictionary_from_state(spark, json.loads(fs.read_text(dict_path)))
     else:
         tdict = build_template_dictionary(parsed)
-        with open(dict_path, "w") as f:
-            json.dump(dictionary_state(tdict), f)
+        fs.write_atomic(dict_path, json.dumps(dictionary_state(tdict)))
     # r6 route-path restructure (guide §2.3/§8: shuffle keys + payload
     # once, attach derived columns post-exchange): the exchange carries
     # only the raw row + template_id + conv_bucket; template, event_type
@@ -183,7 +185,7 @@ def run_pipeline(
     # Aggregates overlap the route write (r3 judge item #5): the rollup
     # needs only tdict + the persisted parse cache, so its tasks fill the
     # scheduler gaps the route loop leaves (driver-side file commit +
-    # manifest appends have no pending tasks; under FIFO a second job's
+    # manifest writes have no pending tasks; under FIFO a second job's
     # tasks run in exactly those gaps).  The alternative the verdict
     # floated — deriving the rollup from the route write's Observation —
     # doesn't type-check: Observation carries scalar aggregates only,
@@ -194,12 +196,8 @@ def run_pipeline(
     def _write_aggregates():
         try:
             rollup = sink_rollup_slim(pre, tpl_df).persist()
-            template_frequency_from_rollup(rollup).write.mode("overwrite").parquet(
-                os.path.join(out_dir, "agg_template_freq")
-            )
-            tool_usage_from_rollup(rollup).write.mode("overwrite").parquet(
-                os.path.join(out_dir, "agg_tool_usage")
-            )
+            template_frequency_from_rollup(rollup).write.mode("overwrite").parquet(freq_dir)
+            tool_usage_from_rollup(rollup).write.mode("overwrite").parquet(tools_dir)
             rollup.unpersist()
         except BaseException as e:  # surfaced after join
             agg_error.append(e)
@@ -226,20 +224,18 @@ def run_pipeline(
     if agg_error:
         raise agg_error[0]
 
-    wall = time.time() - t_start
-    with open(os.path.join(out_dir, "run_metrics.json"), "w") as f:
-        json.dump(
-            {
-                "rows": total_rows,
-                "distinct_signatures": tdict.n_sigs,
-                "templates": len(tdict.templates),
-                "wall_sec": round(wall, 3),
-                "turns_per_sec": round(total_rows / wall, 1) if wall > 0 else None,
-                "manifest": manifest.metrics(),
-            },
-            f,
-            indent=2,
-        )
+    wall = time.perf_counter() - t_start
+    fs.write_atomic(metrics_path, json.dumps(
+        {
+            "rows": total_rows,
+            "distinct_signatures": tdict.n_sigs,
+            "templates": len(tdict.templates),
+            "wall_sec": round(wall, 3),
+            "turns_per_sec": round(total_rows / wall, 1) if wall > 0 else None,
+            "manifest": manifest.metrics(),
+        },
+        indent=2,
+    ))
     return PipelineResult(
         routed_dir=routed_dir,
         manifest_path=manifest_path,

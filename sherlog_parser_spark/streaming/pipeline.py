@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sherlog_parser_spark import fs
 from sherlog_parser_spark.plans.enrich import enrich_stage
 from sherlog_parser_spark.plans.parse import parse_stage
 from sherlog_parser_spark.plans.route import conv_bucket_expr, route_cols, write_routed
@@ -134,74 +135,52 @@ def compact_stream_output(
     Every crash point replays cleanly: before the marker -> restage
     (overwrite); after the marker -> skip the write, move whatever is
     still in staging (already-moved files are gone from it), finish the
-    deletes.  Returns the batch ids compacted this call.
+    deletes.  Markers, renames and deletes go through ``fs``, as the
+    batch commit's do; a staged file that still exists is the
+    authoritative copy, so it replaces any file at its target (a partial
+    copy, a name collision).  Returns the batch ids compacted this call.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    out_path = jvm.org.apache.hadoop.fs.Path(stream_out_dir)
-    fs = out_path.getFileSystem(conf)
-    if not fs.exists(out_path):
+    hfs, out_path = fs.handle(stream_out_dir)
+    if not hfs.exists(out_path):
         return []
-    marker_dir = jvm.org.apache.hadoop.fs.Path(compacted_dir, "_compacted")
-    fs.mkdirs(marker_dir)
-    dest_root = jvm.org.apache.hadoop.fs.Path(compacted_dir)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    dest_root = Path(compacted_dir)
 
     def _publish(src_dir, rel=""):
         """Move staged data files into compacted_dir, preserving the
         partition-directory structure; resumable (moved files vanish
         from staging, so a rerun only moves the remainder)."""
-        for st in fs.listStatus(src_dir):
+        for st in hfs.listStatus(src_dir):
             nm = st.getPath().getName()
             if nm.startswith("_") or nm.startswith("."):
                 continue  # _SUCCESS / hidden — never published
             if st.isDirectory():
                 _publish(st.getPath(), f"{rel}{nm}/")
             else:
-                tgt_dir = (
-                    jvm.org.apache.hadoop.fs.Path(dest_root, rel.rstrip("/"))
-                    if rel
-                    else dest_root
-                )
-                fs.mkdirs(tgt_dir)
-                tgt = jvm.org.apache.hadoop.fs.Path(tgt_dir, nm)
-                # Hadoop rename reports failure by returning FALSE, not
-                # raising; ignoring it and then deleting staging would
-                # silently lose the batch's rows (r4 review).  While the
-                # staged file still EXISTS, it is the authoritative copy
-                # by construction — a successful earlier move would have
-                # removed it — so any file already at the target
-                # (partial copy+delete remnant, foreign name collision)
-                # is replaced, never trusted (r5 ADVICE: an
-                # equal-length heuristic could bless a partial or
-                # foreign file; fixed r6 to delete-and-replace).
-                if not fs.rename(st.getPath(), tgt):
-                    fs.delete(tgt, False)
-                    if not fs.rename(st.getPath(), tgt):
-                        raise IOError(
-                            f"compact_stream_output: rename {st.getPath()} -> {tgt} "
-                            "failed; staging left in place for retry"
-                        )
+                tgt_dir = Path(dest_root, rel.rstrip("/")) if rel else dest_root
+                hfs.mkdirs(tgt_dir)
+                fs.rename_replacing(hfs, st.getPath(), Path(tgt_dir, nm))
 
     done: list[int] = []
-    for status in fs.listStatus(out_path):
+    for status in hfs.listStatus(out_path):
         name = status.getPath().getName()
         if not name.startswith("batch_id="):
             continue
         bid = int(name.split("=", 1)[1])
         if bid > up_to_batch_id:
             continue
-        marker = jvm.org.apache.hadoop.fs.Path(marker_dir, name)
-        staging = jvm.org.apache.hadoop.fs.Path(compacted_dir, f"_staging_{name}")
+        marker = f"{compacted_dir}/_compacted/{name}"
+        staging = f"{compacted_dir}/_staging_{name}"
         if not fs.exists(marker):
             write_routed(
-                spark.read.parquet(str(status.getPath())), str(staging),
+                spark.read.parquet(str(status.getPath())), staging,
                 partition_overwrite="static",
             )
-            fs.create(marker, True).close()
+            fs.write_atomic(marker, "")
         if fs.exists(staging):
-            _publish(staging)
-            fs.delete(staging, True)
-        fs.delete(status.getPath(), True)
+            _publish(Path(staging))
+            fs.delete(staging)
+        hfs.delete(status.getPath(), True)
         done.append(bid)
     return sorted(done)
 

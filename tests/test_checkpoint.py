@@ -90,14 +90,22 @@ def _fail_group_writes(monkeypatch, spark, bucket_col, group):
     monkeypatch.setattr(frame_cls, "write", property(failing_write))
 
 
-@pytest.mark.parametrize("job", JOBS, ids=lambda j: j.name)
-def test_failed_group_write_resumes_bit_identical(spark, transcripts, docs, job, tmp_path,
+FAULT_CASES = [(job, uri) for uri in (False, True) for job in JOBS]
+
+
+@pytest.mark.parametrize(
+    "job, uri", FAULT_CASES, ids=[job.name + ("-uri" if uri else "") for job, uri in FAULT_CASES]
+)
+def test_failed_group_write_resumes_bit_identical(spark, transcripts, docs, job, uri, tmp_path,
                                                   monkeypatch):
+    """The faulted run writes to a plain path, or to a ``file://`` URI,
+    which goes through the same Hadoop FileSystem as the sink."""
     frames = {"transcripts": transcripts, "docs": docs}
     clean = str(tmp_path / "clean")
     job.run(spark, frames, clean, resume=False)
 
-    out = str(tmp_path / "faulted")
+    local = tmp_path / "faulted"
+    out = local.as_uri() if uri else str(local)
     with monkeypatch.context() as m:
         _fail_group_writes(m, spark, job.bucket_col, group=1)
         with pytest.raises(Exception, match="injected group write failure"):
@@ -105,7 +113,7 @@ def test_failed_group_write_resumes_bit_identical(spark, transcripts, docs, job,
     manifest = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl"))
     assert manifest.run_header is not None
     assert "bucket_group=1" not in manifest.entries
-    assert _staging_dirs(out) == []
+    assert _staging_dirs(str(local)) == []
 
     job.run(spark, frames, out, resume=True)
     assert job.fingerprint(spark, out) == job.fingerprint(spark, clean)

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sherlog_parser_spark import checkpoint
 from sherlog_parser_spark.checkpoint import CheckpointManifest
 from sherlog_parser_spark.plans.pipeline import run_pipeline
 
@@ -34,8 +35,10 @@ def test_pipeline_end_to_end(spark, transcripts, tmp_path):
     assert metrics["manifest"]["units"] == 3
 
 
-def test_pipeline_resume_skips_committed(spark, transcripts, tmp_path):
-    out = str(tmp_path / "run2")
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "uri"])
+def test_pipeline_resume_skips_committed(spark, transcripts, tmp_path, uri):
+    local = tmp_path / "run2"
+    out = local.as_uri() if uri else str(local)
     # full run to get the golden sink fingerprint
     run_pipeline(spark, transcripts, out, commit_groups=3, resume=False, write_aggregates=False)
     golden = _routed_fingerprint(spark, os.path.join(out, "routed"))
@@ -43,7 +46,7 @@ def test_pipeline_resume_skips_committed(spark, transcripts, tmp_path):
 
     # simulate a crash after 1 of 3 commits: keep the run header + the
     # first group entry, leave the (possibly orphaned) files in place
-    mpath = os.path.join(out, "_manifest.jsonl")
+    mpath = str(local / "_manifest.jsonl")
     lines = open(mpath).read().strip().splitlines()
     with open(mpath, "w") as f:
         f.write(lines[0] + "\n" + lines[1] + "\n")
@@ -52,7 +55,7 @@ def test_pipeline_resume_skips_committed(spark, transcripts, tmp_path):
         spark, transcripts, out, commit_groups=3, resume=True, write_aggregates=False
     )
     assert _routed_fingerprint(spark, os.path.join(out, "routed")) == golden
-    m2 = CheckpointManifest.load(mpath)
+    m2 = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl"))
     assert set(m2.entries) == set(golden_manifest.entries)
     # the kept unit must NOT have been recomputed: entry identical incl.
     # timestamp (groups commit in completion order, not group order)
@@ -158,44 +161,90 @@ def _manifest_rows_fp(out_dir):
     return sum(e["rows"] for e in m.entries.values()), fp
 
 
-def test_manifest_torn_final_line_is_redone(spark, transcripts, tmp_path, caplog):
-    """A crash mid-append leaves half an entry as the manifest's last
-    line: resume warns, rewrites only that group, and ends with the same
-    sink as a clean run."""
-    out = str(tmp_path / "torn")
+def test_manifest_crash_before_rename_is_ignored(spark, transcripts, tmp_path):
+    """A crash between writing the next manifest and renaming it into
+    place leaves a stray temp manifest beside the valid one: resume reads
+    only the valid one, redoes the groups it lacks, and ends with the
+    same sink as a clean run."""
+    from sherlog_parser_spark.fs import temp_path
+
+    out = str(tmp_path / "stray")
     run_pipeline(spark, transcripts, out, commit_groups=3, resume=False, write_aggregates=False)
     golden = _routed_fingerprint(spark, os.path.join(out, "routed"))
-    golden_manifest = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl"))
-
     mpath = os.path.join(out, "_manifest.jsonl")
-    lines = open(mpath).read().strip().splitlines()
-    torn_unit = json.loads(lines[-1])["unit"]
-    with open(mpath, "w") as f:
-        f.write("\n".join(lines[:-1]) + "\n" + lines[-1][: len(lines[-1]) // 2])
+    golden_manifest = CheckpointManifest.load(mpath)
 
-    with caplog.at_level("WARNING", logger="sherlog_parser_spark.checkpoint"):
-        run_pipeline(spark, transcripts, out, commit_groups=3, resume=True, write_aggregates=False)
-    assert any("torn final line" in r.getMessage() for r in caplog.records)
+    # the valid manifest holds the header + one group; the temp holds a
+    # later manifest whose rename never happened, its last line cut short
+    lines = open(mpath).read().strip().splitlines()
+    with open(mpath, "w") as f:
+        f.write(lines[0] + "\n" + lines[1] + "\n")
+    with open(temp_path(mpath), "w") as f:
+        f.write("\n".join(lines) + "\n" + lines[-1][: len(lines[-1]) // 2])
+
+    run_pipeline(spark, transcripts, out, commit_groups=3, resume=True, write_aggregates=False)
     assert _routed_fingerprint(spark, os.path.join(out, "routed")) == golden
     m2 = CheckpointManifest.load(mpath)
     assert set(m2.entries) == set(golden_manifest.entries)
+    kept = json.loads(lines[1])["unit"]
     for unit, entry in golden_manifest.entries.items():
-        if unit == torn_unit:
+        if unit == kept:
+            assert m2.entries[unit] == entry
+        else:  # redone, not taken from the temp file
             assert m2.entries[unit]["committed_at"] != entry["committed_at"]
             assert m2.entries[unit]["input_fingerprint"] == entry["input_fingerprint"]
-        else:
-            assert m2.entries[unit] == entry
 
 
-def test_manifest_corrupt_earlier_line_raises(tmp_path):
+def test_manifest_corrupt_earlier_line_raises(spark, tmp_path):
     mpath = str(tmp_path / "_manifest.jsonl")
     m = CheckpointManifest(mpath)
     m.commit_run("fp")
-    with open(mpath, "a") as f:
-        f.write('{"unit": "bucket_group=0", "ro\n')
     m.commit("bucket_group=1", 5, "7", "sink", 0.1)
+    # every commit rewrites the file, so the corrupt line goes in after
+    # the last one
+    header, entry = open(mpath).read().splitlines()
+    with open(mpath, "w") as f:
+        f.write(header + '\n{"unit": "bucket_group=0", "ro\n' + entry + "\n")
     with pytest.raises(ValueError):
         CheckpointManifest.load(mpath)
+
+
+def test_resume_false_replaces_previous_outputs(spark, transcripts, tmp_path, monkeypatch):
+    """``resume=False`` deletes every output of the previous run, the
+    aggregates and the run metrics too, even when the new run fails
+    before it writes them."""
+    out = str(tmp_path / "stale")
+    run_pipeline(spark, transcripts, out, commit_groups=2, resume=False)
+    leftovers = ["agg_template_freq", "agg_tool_usage", "run_metrics.json"]
+    assert all(os.path.exists(os.path.join(out, p)) for p in leftovers)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash before the group writes")
+
+    monkeypatch.setattr(checkpoint, "commit_groups", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, transcripts.limit(100), out, commit_groups=2, resume=False,
+                     write_aggregates=False)
+    assert [p for p in leftovers if os.path.exists(os.path.join(out, p))] == []
+
+
+def test_resume_false_replaces_uri_run(spark, transcripts, tmp_path, monkeypatch):
+    """Two ``resume=False`` runs into one ``file://`` out_dir: the sink
+    reads back exactly the second run's rows, and no side file lands in
+    a ``file:`` directory under the working directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    local = tmp_path / "out_uri"
+    out = local.as_uri()
+    run_pipeline(spark, transcripts, out, commit_groups=2, resume=False, write_aggregates=False)
+    second = transcripts.filter(F.hash("conv_id") % 4 == 0)
+    res = run_pipeline(spark, second, out, commit_groups=2, resume=False, write_aggregates=False)
+    assert 0 < res.n_rows < transcripts.count()
+    assert spark.read.parquet(res.routed_dir).count() == res.n_rows == second.count()
+    assert os.listdir(cwd) == []
+    assert CheckpointManifest.load(res.manifest_path).metrics()["rows"] == res.n_rows
+    assert json.load(open(local / "run_metrics.json"))["rows"] == res.n_rows
 
 
 def _sink_files(routed_dir):
