@@ -8,12 +8,14 @@ Usage:
     python bench_extra.py pipeline <cores> [reps]   # one e2e pipeline run/level
     python bench_extra.py query <name> [reps]       # one headline query, noop sink
     python bench_extra.py queries [reps]            # all headline queries
+    python bench_extra.py curation [reps]           # run_curation_pipeline layers
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -70,6 +72,63 @@ def run_queries(names: list[str] | None, reps: int = 1) -> None:
         spark.stop()
 
 
+def run_curation(reps: int = 3) -> None:
+    """``run_curation_pipeline`` on perfbench's seeded documents (seed 1,
+    1,000 docs, the ``doc_id % 50`` bench split): one cold pilot, then per
+    rep the ``phases`` of ``curation_metrics.json``, the Py4J calls and
+    jobs of the ``curation_dag`` build alone and of the whole job, and a
+    noop-sink scan of the quality rules over the documents."""
+    import tempfile
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+    from inputs import write_documents
+    from pyspark.sql import functions as F
+
+    from sherlog_parser_spark import telemetry
+    from sherlog_parser_spark.plans import curation
+    from sherlog_parser_spark.session import get_spark
+
+    spark = get_spark("bench-extra", master=f"local[{CPUS}]",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    work = tempfile.mkdtemp(prefix="bench_extra_curation_")
+    try:
+        write_documents(os.path.join(work, "docs", "part-0.parquet"), 1, 1000)
+        docs = spark.read.parquet(os.path.join(work, "docs"))
+        split = F.col("doc_id") % 50 == 0
+        kept, bench = docs.filter(~split), docs.filter(split)
+
+        def job() -> dict:
+            out = os.path.join(work, "out")
+            curation.run_curation_pipeline(spark, kept, out, bench_docs=bench, resume=False)
+            with open(os.path.join(out, "curation_metrics.json")) as f:
+                return json.load(f)["phases"]
+
+        job()  # pilot: cold codegen and JIT
+        for _ in range(reps):
+            persisted: list = []
+            with telemetry.driver_counts(sc) as dag:
+                curation.curation_dag(kept, bench_docs=bench, persist_registry=persisted)
+            for frame in persisted:
+                frame.unpersist()
+            t0 = time.perf_counter()
+            with telemetry.driver_counts(sc) as whole:
+                phases = job()
+            job_s = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            _noop(curation.with_quality_reason(kept))
+            print(json.dumps({
+                "job_s": round(job_s, 3), "phases": phases,
+                "quality_scan_s": round(time.perf_counter() - t0, 3),
+                "dag_py4j_calls": dag.py4j_calls, "dag_jobs": dag.jobs,
+                "job_py4j_calls": whole.py4j_calls, "jobs": whole.jobs,
+            }), flush=True)
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 if __name__ == "__main__":
     mode = sys.argv[1]
     if mode == "pipeline":
@@ -78,5 +137,7 @@ if __name__ == "__main__":
         run_queries([sys.argv[2]], int(sys.argv[3]) if len(sys.argv) > 3 else 1)
     elif mode == "queries":
         run_queries(None, int(sys.argv[2]) if len(sys.argv) > 2 else 1)
+    elif mode == "curation":
+        run_curation(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
     else:
         raise SystemExit(f"unknown mode {mode}")

@@ -142,6 +142,18 @@ def open_run(manifest_path: str, run_fp: str, resume: bool, outputs: list[str]) 
     return manifest
 
 
+def _observed(obs: Observation) -> tuple[int, int]:
+    """``(rows, fp)`` observed on a group's write.  The write job of an
+    empty group may run no task and then posts no metrics (an empty row,
+    which ``Observation.get`` fails on).  Both that and a write of zero
+    rows give 0 rows and fingerprint 0, the identity of XOR."""
+    jrow = obs._jo.getRow()
+    if jrow.schema() is None:
+        return 0, 0
+    m = obs.get
+    return int(m["rows"]), m["fp"] or 0
+
+
 def commit_groups(
     manifest: CheckpointManifest,
     frame: DataFrame,
@@ -167,9 +179,9 @@ def commit_groups(
         write(frame.filter(F.pmod(F.col(group_col), F.lit(n_groups)) == g).observe(
             obs, F.count(F.lit(1)).alias("rows"), F.bit_xor(F.xxhash64(*fp_cols)).alias("fp")
         ))
-        rows = int(obs.get["rows"])
+        rows, fp = _observed(obs)
         with lock:
-            manifest.commit(unit, rows, str(obs.get["fp"]), sink, time.perf_counter() - t0)
+            manifest.commit(unit, rows, str(fp), sink, time.perf_counter() - t0)
         return rows
 
     with ThreadPoolExecutor(

@@ -11,7 +11,15 @@ from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass
 from pyspark import SparkContext
+
+
+def _path(sc: SparkContext, path: str):
+    """A Hadoop ``Path``.  The class is named directly: looking it up
+    through ``sc._jvm.org.apache...`` costs one Py4J round trip per
+    package level."""
+    return JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
 
 
 def handle(path: str):
@@ -19,7 +27,7 @@ def handle(path: str):
     which pool threads see too (``SparkSession.getActiveSession()`` is
     ``None`` in the commit-group threads)."""
     sc = SparkContext._active_spark_context
-    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    p = _path(sc, path)
     return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
 
 
@@ -50,7 +58,7 @@ def temp_path(path: str) -> str:
 
 def write_atomic(path: str, text: str) -> None:
     fs, dst = handle(path)
-    _, tmp = handle(temp_path(path))
+    tmp = _path(SparkContext._active_spark_context, temp_path(path))
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(text.encode()))

@@ -127,37 +127,37 @@ def lang_id_expr(text: Column | str) -> Column:
     return F.when(c.rlike(CJK_PATTERN), "zh").otherwise(_let(toks, pick))
 
 
-def word_shingles_expr(text: Column | str, n: int = 3) -> Column:
-    """Array of word n-gram shingle strings (space-joined)."""
-    toks = tokens_expr(text)
-
-    # Zip n shifted slices and concat inside the lambda.  Do NOT write
-    # this as transform(indices, i -> element_at(toks, i+j)): a lambda
-    # that references the outer `toks` tree re-evaluates the full
-    # tokenization PER ELEMENT (interpreted HOFs do no CSE) — measured
-    # O(len^2) blow-up on long documents.  The token array itself is
-    # _let-bound (r6): the flat form evaluated it once per slice + once
-    # for each size() reference (~5 tokenizations per row).
-    def mk(tk):
-        m = F.size(tk) - (n - 1)  # number of shingles
-        slices = [F.slice(tk, j + 1, m).alias(f"s{j}") for j in range(n)]
-        z = F.arrays_zip(*slices)
-        shingles = F.transform(
-            z, lambda s: F.concat_ws(" ", *[s[f"s{j}"] for j in range(n)])
-        )
-        return F.when(F.size(tk) >= n, shingles).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return _let(toks, mk)
+def _sql_name(col: str) -> str:
+    return "`" + col.replace("`", "``") + "`"
 
 
-def fingerprint_expr(text: Column | str, n: int = 3) -> Column:
+def word_shingles_expr(text: str, n: int = 3) -> Column:
+    """Array of word n-gram shingle strings (space-joined) of the column
+    named ``text``.
+
+    Built as ONE SQL expression: the same tree from ``F.*`` calls costs
+    ~150 Py4J round trips (most of them pyspark's HOF lambda set-up),
+    and a curation DAG builds four of these.  The token array is
+    let-bound (``_let``'s ``element_at(transform(array(v), ...), 1)``),
+    so the lambda reads token ``i + j`` from a bound variable: never
+    refer to an outer expression tree inside a lambda, which interpreted
+    HOFs re-evaluate per element (measured O(len^2) on long documents).
+    The tokens are :func:`masking.tokens_expr`'s."""
+    toks = f"array_remove(split(trim({_sql_name(text)}), '\\\\s+'), '')"
+    parts = ", ".join(f"_tk[_i + {j}]" for j in range(n))
+    return F.expr(
+        f"element_at(transform(array({toks}), _tk -> CASE WHEN size(_tk) >= {n} "
+        f"THEN transform(sequence(0, size(_tk) - {n}), _i -> concat_ws(' ', {parts})) "
+        f"ELSE CAST(array() AS array<string>) END), 1)"
+    )
+
+
+def fingerprint_expr(text: str, n: int = 3) -> Column:
     """Document fingerprint: lexicographic min of md5 over word n-gram
     shingles (rolling-hash-style winnowing with window = whole doc);
     empty/short docs fall back to md5 of the trimmed text."""
-    c = F.col(text) if isinstance(text, str) else text
-    sh = word_shingles_expr(c, n)
+    c = F.col(text)
+    sh = word_shingles_expr(text, n)
     # _let-bound (r6): the shingle array is consumed by both size() and
     # the md5 fold — the flat form built it twice per row
     return _let(
@@ -203,39 +203,53 @@ def dup_frac_expr(arr: Column | str) -> Column:
     ).otherwise(F.lit(0.0))
 
 
+def _char_total(a: Column) -> Column:
+    return F.aggregate(a, F.lit(0), lambda acc, x: acc + F.length(x))
+
+
 def dup_char_frac_expr(arr: Column | str) -> Column:
     """Fraction of characters contained in repeat occurrences (all
     occurrences after the first) of array elements; 0 when the array is
-    empty or all-empty.  `arr` must be a bound attribute (see module note)."""
+    empty or all-empty.  The repeats hold every character that the
+    distinct elements do not, so this is two linear folds.  `arr` must
+    be a bound attribute (see module note)."""
     a = F.col(arr) if isinstance(arr, str) else arr
-    # element at 0-based index i is a repeat iff its first occurrence
-    # (1-based array_position) is not i+1
-    dups = F.filter(a, lambda x, i: F.array_position(a, x) != i + F.lit(1))
-    dup_chars = F.aggregate(dups, F.lit(0), lambda acc, x: acc + F.length(x))
-    tot_chars = F.aggregate(a, F.lit(0), lambda acc, x: acc + F.length(x))
+    tot_chars = _char_total(a)
+    dup_chars = tot_chars - _char_total(F.array_distinct(a))
     return F.when(
         tot_chars > 0, dup_chars.cast("double") / tot_chars
     ).otherwise(F.lit(0.0))
 
 
-def top_ngram_char_frac_expr(shingles: Column | str, text: Column | str) -> Column:
+def top_ngram_char_frac_expr(shingles: str, text: str) -> Column:
     """max over distinct n-grams g of count(g)*chars(g), divided by the
     document's trimmed char count.  This equals Gopher's "fraction of
     characters in the most frequent n-gram" whenever the argmax is unique,
     and is deterministic under count ties (it maximizes the char mass
-    itself).  `shingles` must be a bound attribute (see module note)."""
-    sh = F.col(shingles) if isinstance(shingles, str) else shingles
-    c = F.col(text) if isinstance(text, str) else text
-    best = F.array_max(
-        F.transform(
-            F.array_distinct(sh),
-            lambda g: F.size(F.filter(sh, lambda x: x == g)) * F.length(g),
-        )
+    itself).  ``shingles`` names a bound attribute (see module note).
+
+    Linear after one sort: equal n-grams are adjacent in the sorted
+    array, so each run start and the next one bound a run of
+    ``count(g)`` copies of ``g``.  (Filtering the whole array once per
+    distinct n-gram is O(tokens^2) per document.)  The run starts are
+    null-safe, so nulls (sorted last) form their own run, whose char
+    mass is null and never the max.  One SQL expression, like
+    :func:`word_shingles_expr`."""
+    sh, t = _sql_name(shingles), _sql_name(text)
+    starts = (
+        "filter(transform(_srt, (x, i) -> CASE WHEN i = 0 THEN i "
+        "WHEN NOT (x <=> _srt[i - 1]) THEN i END), i -> i IS NOT NULL)"
     )
-    denom = F.length(F.trim(c))
-    return F.when(
-        (F.size(sh) > 0) & (denom > 0), best.cast("double") / denom
-    ).otherwise(F.lit(0.0))
+    ends = "concat(slice(_st, 2, greatest(size(_st) - 1, 0)), array(size(_srt)))"
+    best = (
+        f"element_at(transform(array(array_sort({sh})), _srt -> element_at(transform("
+        f"array({starts}), _st -> array_max(zip_with(_st, {ends}, "
+        "(a, b) -> (b - a) * length(_srt[a])))), 1)), 1)"
+    )
+    return F.expr(
+        f"CASE WHEN size({sh}) > 0 AND length(trim({t})) > 0 "
+        f"THEN CAST({best} AS DOUBLE) / length(trim({t})) ELSE 0.0D END"
+    )
 
 
 def x1e4(c: Column) -> Column:

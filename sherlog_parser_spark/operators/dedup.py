@@ -20,7 +20,7 @@ unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sherlog_parser_spark.functions.masking import tokens_expr
@@ -165,6 +165,7 @@ def repeated_ngram_span_positions(
     id_col: str = "doc_id",
     n: int = 4,
     min_docs: int = 2,
+    shingles: Column | None = None,
 ) -> DataFrame:
     """(id, pos) token positions of word n-grams that occur in
     >= ``min_docs`` distinct documents — the detection half of
@@ -175,14 +176,14 @@ def repeated_ngram_span_positions(
     Shape: posexplode -> hash groupBy -> equi-join back on the repeated
     set.  No broadcast hint: at corpus scale the repeated-shingle set is
     data-sized; AQE broadcasts when it genuinely fits.  md5 for oracle
-    replay (xxhash64 at scale — module docstring)."""
+    replay (xxhash64 at scale — module docstring).  ``shingles`` is
+    ``word_shingles_expr(text_col, n)`` when the caller has built it
+    already."""
+    if shingles is None:
+        shingles = word_shingles_expr(text_col, n)
     sh = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(word_shingles_expr(text_col, n)).alias("pos", "_s"),
-        )
-        .withColumn("_h", F.md5("_s"))
-        .drop("_s")
+        df.select(F.col(id_col).alias("id"), F.posexplode(shingles).alias("pos", "_s"))
+        .select("id", "pos", F.md5("_s").alias("_h"))
         # r6: consumed by the repeated-set aggregate AND the join back —
         # persisting saves a second docs-scan + shingle explode + md5
         # pass; query-local, reclaimed by ContextCleaner
@@ -236,67 +237,52 @@ def substring_dedup_cut(
     )
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text"))
     joined = base.join(per_doc, "id", "left")
-    covered = F.when(
-        F.col("_ps").isNull(), F.array().cast("array<int>")
-    ).otherwise(
-        F.array_sort(
-            F.array_distinct(
-                F.flatten(
-                    F.transform("_ps", lambda p: F.sequence(p, p + F.lit(n - 1)))
-                )
-            )
-        )
+    # The per-row mask is SQL text, one parse on the JVM: built from F.*
+    # calls it cost ~500 Py4J round trips per DAG.  Positions are sorted
+    # and distinct, so a run of covered tokens starts where a position
+    # is not its predecessor + 1 and ends where it is not its
+    # successor - 1 (-2 and -5 pad the ends).  Their count is the number
+    # of merged spans.
+    covered = (
+        f"CASE WHEN _ps IS NULL THEN CAST(array() AS array<int>) ELSE array_sort("
+        f"array_distinct(flatten(transform(_ps, p -> sequence(p, p + {n - 1}))))) END"
     )
-    bound = joined.withColumn("_toks", tokens_expr("_text")).withColumn("_cov", covered)
-    cov = F.col("_cov")
-    # run starts in the sorted covered set = number of merged spans
-    prev = F.concat(
-        F.array(F.lit(-2)), F.slice(cov, 1, F.greatest(F.size(cov) - 1, F.lit(0)))
+    prev = "concat(array(-2), slice(_cov, 1, greatest(size(_cov) - 1, 0)))"
+    nxt = "concat(slice(_cov, 2, greatest(size(_cov) - 1, 0)), array(-5))"
+    run_starts = (
+        f"filter(zip_with(_cov, {prev}, (a, b) -> CASE WHEN a != b + 1 THEN a END), "
+        "x -> x IS NOT NULL)"
     )
-    nxt = F.concat(
-        F.slice(cov, 2, F.greatest(F.size(cov) - 1, F.lit(0))), F.array(F.lit(-5))
+    run_ends = (
+        f"filter(zip_with(_cov, {nxt}, (a, b) -> CASE WHEN a + 1 != b THEN a END), "
+        "x -> x IS NOT NULL)"
     )
-    n_spans = F.size(F.filter(F.zip_with(cov, prev, lambda a, b: a != b + 1), lambda x: x))
     # Linear-merge keep mask (r4 verdict fix): testing every token
     # against the covered set with array_contains is O(tokens × covered)
     # per row — an adversarial long heavily-duplicated doc (10k tokens,
-    # 80% covered) costs ~10^8 comparisons in ONE row.  The covered set
-    # is sorted, so instead compute its merged runs' (start, end) pairs
-    # and slice the COMPLEMENT segments out of the token array:
-    # O(tokens + runs) per row, all JVM HOFs, no shuffle.
-    run_starts = F.filter(F.zip_with(cov, prev, lambda a, b: F.when(a != b + 1, a)), lambda x: x.isNotNull())
-    run_ends = F.filter(F.zip_with(cov, nxt, lambda a, b: F.when(a + 1 != b, a)), lambda x: x.isNotNull())
-    bound = (
-        bound.withColumn("_rs", run_starts)
-        .withColumn("_re", run_ends)
-        .withColumn(
-            # kept segments lie between runs: pair (prev_run_end,
-            # next_run_start) over [-1] ++ run_ends vs run_starts ++ [L]
-            "_segs",
-            F.arrays_zip(
-                F.concat(F.array(F.lit(-1)), F.col("_re")).alias("e"),
-                F.concat(F.col("_rs"), F.array(F.size("_toks"))).alias("s"),
-            ),
-        )
+    # 80% covered) costs ~10^8 comparisons in ONE row.  Instead the kept
+    # segments lie between runs: pair (prev_run_end, next_run_start) over
+    # [-1] ++ run_ends vs run_starts ++ [L] and slice each non-empty
+    # segment [e+1, s-1] (1-indexed: start e+2, length s-e-1) out of the
+    # token array: O(tokens + runs) per row, all JVM HOFs, no shuffle.
+    kept = (
+        f"flatten(filter(zip_with(concat(array(-1), {run_ends}), "
+        f"concat({run_starts}, array(size(_toks))), "
+        "(e, s) -> CASE WHEN s - e > 1 THEN slice(_toks, e + 2, s - e - 1) END), "
+        "x -> x IS NOT NULL))"
     )
-    kept = F.flatten(
-        F.transform(
-            F.filter(F.col("_segs"), lambda p: p["s"] - p["e"] > 1),
-            # slice is 1-indexed: segment [e+1, s-1] -> start e+2, len s-e-1
-            lambda p: F.slice(F.col("_toks"), p["e"] + 2, p["s"] - p["e"] - 1),
-        )
-    )
-    out = bound.withColumn("_kept", kept).select(
-        "id",
+    bound = joined.select("id", tokens_expr("_text").alias("_toks"), F.expr(covered).alias("_cov"))
+    return bound.select(
+        "id", "_toks", "_cov", F.expr(kept).alias("_kept"), F.expr(f"size({run_starts})").alias("n_spans")
+    ).select(
+        F.col("id").alias(id_col),
         F.array_join("_kept", " ").alias("cleaned_text"),
-        F.size(cov).alias("n_cut_tokens"),
+        F.size("_cov").alias("n_cut_tokens"),
         (
             F.length(F.array_join("_toks", " ")) - F.length(F.array_join("_kept", " "))
         ).alias("n_cut_chars"),
-        n_spans.alias("n_spans"),
+        "n_spans",
     )
-    return out.withColumnRenamed("id", id_col)
-
 
 def minhash_signature(
     df: DataFrame,

@@ -45,8 +45,17 @@ Scale shape: the only data-sized shuffles are the dedup groupBys / the
 shingle explodes inside the span detection — each individually
 100-TB-shaped (see the operator docstrings).  The benchmark shingle set
 is the one genuinely small side and is broadcast.  The ledger is one
-row per input document with its fate; fate counts come from one
-aggregation of the ledger, not per-stage count() jobs.
+row per input document with its fate.  The loser fates are counted by
+one aggregation of the ledger (not per-stage count() jobs) that runs
+during the group writes and reads no survivor row; 'kept' is the
+committed row count.
+
+Driver cost: every Column call is a Py4J round trip, so the
+lambda-heavy expressions (shingles, the top-n-gram signal, the
+substring-cut mask) are single SQL expressions, the n-gram shingles
+are built once per DAG, and each stage adds one ``select`` rather than
+a ``withColumn`` chain (``tests/test_curation_pipeline.py`` pins the
+build's Py4J calls and jobs).
 """
 
 from __future__ import annotations
@@ -55,8 +64,9 @@ import json
 import os
 import time
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark import StorageLevel
+from pyspark import InheritableThread, StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,6 +76,7 @@ from sherlog_parser_spark.functions import textstats as TS
 from sherlog_parser_spark.operators.components import connected_components
 from sherlog_parser_spark.operators.dedup import (
     minhash_dup_candidates,
+    repeated_ngram_span_positions,
     substring_dedup_cut,
 )
 from sherlog_parser_spark.plans import pipeline
@@ -87,8 +98,10 @@ def with_quality_reason(
     attributes before the HOF-heavy stats — an interpreted HOF lambda
     referencing an outer expression tree re-evaluates it per element
     (functions/textstats.py module note)."""
-    bound = df.withColumn("_q_sh2", TS.word_shingles_expr(text_col, 2)).withColumn(
-        "_q_sh5", TS.word_shingles_expr(text_col, 5)
+    bound = df.select(
+        "*",
+        TS.word_shingles_expr(text_col, 2).alias("_q_sh2"),
+        TS.word_shingles_expr(text_col, 5).alias("_q_sh5"),
     )
     reason = (
         F.when(TS.ws_token_count_expr(text_col) < min_tokens, "too_short")
@@ -100,7 +113,7 @@ def with_quality_reason(
         )
         .otherwise("keep")
     )
-    return bound.withColumn(out_col, reason).drop("_q_sh2", "_q_sh5")
+    return bound.select(*df.columns, reason.alias(out_col))
 
 
 def curation_dag(
@@ -288,8 +301,12 @@ def curation_dag(
     else:
         sem_losers = None
 
-    # substring cuts (cross-doc repeated n-grams among survivors)
-    cut = substring_dedup_cut(s2, n=ngram, min_docs=span_min_docs)
+    # substring cuts (cross-doc repeated n-grams among survivors).  The
+    # n-gram shingles of "text" are built once: span detection and both
+    # sides of the decontamination join explode the same expression
+    shingles = TS.word_shingles_expr("text", ngram)
+    spans = repeated_ngram_span_positions(s2, n=ngram, min_docs=span_min_docs, shingles=shingles)
+    cut = substring_dedup_cut(s2, spans, n=ngram)
     s3 = cut.select("doc_id", F.col("cleaned_text").alias("text"))
 
     # quality filter on the CUT text (a fully-cut doc fails too_short)
@@ -373,15 +390,14 @@ def curation_dag(
     # decontamination vs the benchmark shingle blocklist
     if bench_docs is not None:
         bench_sh = (
-            bench_docs.select(
-                F.explode(TS.word_shingles_expr(text_col, ngram)).alias("_s")
-            )
+            bench_docs.select(F.col(text_col).alias("text"))
+            .select(F.explode(shingles).alias("_s"))
             .select(F.md5("_s").alias("_h"))
             .distinct()
         )
-        doc_sh = s5.select(
-            "doc_id", F.explode(TS.word_shingles_expr("text", ngram)).alias("_s")
-        ).select("doc_id", F.md5("_s").alias("_h"))
+        doc_sh = s5.select("doc_id", F.explode(shingles).alias("_s")).select(
+            "doc_id", F.md5("_s").alias("_h")
+        )
         contaminated = _reuse(
             doc_sh.join(F.broadcast(bench_sh), "_h").select("doc_id").distinct()
         )
@@ -390,51 +406,36 @@ def curation_dag(
         contaminated = None
         s6 = s5
 
-    # fate ledger: one row per input doc, first-applicable fate
-    # (exact losers are counted among the LINE-FILTER SURVIVORS — a doc
-    # dropped by the line stage is 'line_filtered', never 'exact_dup')
-    exact_losers = base.select("doc_id").join(winners, "doc_id", "left_anti").select(
-        "doc_id", F.lit("exact_dup").alias("fate")
-    )
-    if line_losers is not None:
-        exact_losers = exact_losers.unionByName(
-            line_losers.select("doc_id", F.lit("line_filtered").alias("fate"))
-        )
-    if para_losers is not None:
-        exact_losers = exact_losers.unionByName(
-            para_losers.select("doc_id", F.lit("paragraph_filtered").alias("fate"))
-        )
-    ledger = exact_losers.unionByName(
-        near_losers.select("doc_id", F.lit("near_dup").alias("fate"))
-    )
-    if sem_losers is not None:
-        ledger = ledger.unionByName(
-            sem_losers.select("doc_id", F.lit("semantic_dup").alias("fate"))
-        )
-    ledger = ledger.unionByName(
-        quality_losers.select(
-            "doc_id", F.concat(F.lit("quality:"), F.col("_reason")).alias("fate")
-        )
-    )
-    if lm_losers is not None:
-        ledger = ledger.unionByName(
-            lm_losers.select("doc_id", F.lit("lm_filtered").alias("fate"))
-        )
-    if clf_losers is not None:
-        ledger = ledger.unionByName(
-            clf_losers.select("doc_id", F.lit("classifier_filtered").alias("fate"))
-        )
-    if dsir_losers is not None:
-        ledger = ledger.unionByName(
-            dsir_losers.select("doc_id", F.lit("dsir_filtered").alias("fate"))
-        )
-    if contaminated is not None:
-        ledger = ledger.unionByName(
-            contaminated.select("doc_id", F.lit("contaminated").alias("fate"))
-        )
-    kept = s6.select("doc_id", F.lit("kept").alias("fate"))
-    ledger = ledger.unionByName(kept)
+    # fate ledger: one row per input doc, first-applicable fate, one
+    # select per part (exact losers are counted among the LINE-FILTER
+    # SURVIVORS — a doc dropped by the line stage is 'line_filtered',
+    # never 'exact_dup')
+    parts = [
+        (base.join(winners, "doc_id", "left_anti"), F.lit("exact_dup")),
+        (line_losers, F.lit("line_filtered")),
+        (para_losers, F.lit("paragraph_filtered")),
+        (near_losers, F.lit("near_dup")),
+        (sem_losers, F.lit("semantic_dup")),
+        (quality_losers, F.concat(F.lit("quality:"), F.col("_reason"))),
+        (lm_losers, F.lit("lm_filtered")),
+        (clf_losers, F.lit("classifier_filtered")),
+        (dsir_losers, F.lit("dsir_filtered")),
+        (contaminated, F.lit("contaminated")),
+        (s6, F.lit("kept")),
+    ]
+    ledger = reduce(DataFrame.unionByName, [
+        frame.select("doc_id", fate.alias("fate")) for frame, fate in parts if frame is not None
+    ])
     return s6, ledger
+
+
+def loser_fate_counts(ledger: DataFrame) -> DataFrame:
+    """(fate, n) over the ledger's fates other than 'kept'.  The optimizer
+    prunes the ledger's 'kept' branch (a literal that fails the filter),
+    so the count reads no survivor row."""
+    return ledger.filter(F.col("fate") != "kept").groupBy("fate").agg(
+        F.count(F.lit(1)).alias("n")
+    )
 
 
 @dataclass
@@ -505,18 +506,36 @@ def run_curation_pipeline(
             .parquet(cleaned_dir)
         )
 
-    total_rows = checkpoint.commit_groups(
-        manifest, bucketed, "doc_bucket", commit_groups, ["doc_id", "text"], cleaned_dir,
-        _write_group,
-    )
-    t_ledger = time.perf_counter()
-    fate_counts = {
-        r["fate"]: r["n"]
-        for r in ledger.groupBy("fate").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    t_end = time.perf_counter()
-    for frame in dag_persists:
-        frame.unpersist()
+    # The fate count overlaps the group writes; 'kept' is the committed
+    # row count.  An InheritableThread keeps the caller's job description
+    fate_counts: dict = {}
+    count_error: list[BaseException] = []
+
+    def _count_losers():
+        try:
+            fate_counts.update((r["fate"], r["n"]) for r in loser_fate_counts(ledger).collect())
+        except BaseException as e:  # surfaced after join
+            count_error.append(e)
+
+    counter = InheritableThread(target=_count_losers, name="fate-count")
+    counter.start()
+    try:
+        total_rows = checkpoint.commit_groups(
+            manifest, bucketed, "doc_bucket", commit_groups, ["doc_id", "text"], cleaned_dir,
+            _write_group,
+        )
+    finally:
+        # a failing group write still waits for the count, so that its
+        # jobs end before the caller can stop the session
+        t_ledger = time.perf_counter()
+        counter.join()
+        t_end = time.perf_counter()
+        for frame in dag_persists:
+            frame.unpersist()
+    if count_error:
+        raise count_error[0]
+    if total_rows:
+        fate_counts["kept"] = total_rows
     wall = time.perf_counter() - t_start
     fs.write_atomic(metrics_path, json.dumps(
         {
@@ -526,7 +545,8 @@ def run_curation_pipeline(
             "docs_per_sec": round(sum(fate_counts.values()) / wall, 1) if wall > 0 else None,
             "manifest": manifest.metrics(),
             # wall seconds of the DAG build (connected components'
-            # action included), the group writes and the fate count
+            # action included), the group writes, and the wait for the
+            # fate count after them (it runs during the writes)
             "phases": {
                 "dag_s": round(t_write - t_dag, 3),
                 "write_s": round(t_ledger - t_write, 3),

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark import checkpoint
+from sherlog_parser_spark import checkpoint, telemetry
 from sherlog_parser_spark.checkpoint import CheckpointManifest
 from sherlog_parser_spark.plans import pipeline
 from sherlog_parser_spark.plans.curation import run_curation_pipeline
@@ -149,6 +149,57 @@ def test_failed_aggregates_surface_after_group_writes(spark, transcripts, tmp_pa
     assert _manifest_rows_fp(out) == _manifest_rows_fp(clean)
     freq = spark.read.parquet(os.path.join(out, "agg_template_freq"))
     assert freq.agg(F.sum("frequency")).collect()[0][0] == res.n_rows
+
+
+EMPTY_GROUP_CASES = [(job, resume) for job in JOBS for resume in (False, True)]
+
+
+@pytest.mark.parametrize(
+    "job, resume", EMPTY_GROUP_CASES,
+    ids=[job.name + ("-resume" if resume else "") for job, resume in EMPTY_GROUP_CASES],
+)
+def test_empty_commit_group_commits_zero_rows(spark, transcripts, docs, job, resume, tmp_path):
+    """With more commit groups than buckets, groups 2 and 3 have no rows.
+    They commit 0 rows with fingerprint "0", the XOR identity, and a
+    resume that lost one empty and one non-empty group lands on the same
+    sink and manifest."""
+    out = str(tmp_path / "out")
+
+    def run():
+        if job.name == "pipeline":
+            return run_pipeline(spark, transcripts, out, n_buckets=2, commit_groups=4,
+                                write_aggregates=False)
+        return run_curation_pipeline(spark, docs, out, n_buckets=2, commit_groups=4,
+                                     quality_kwargs=QUALITY)
+
+    res = run()
+    path = os.path.join(out, "_manifest.jsonl")
+    entries = CheckpointManifest.load(path).entries
+    for g in (2, 3):
+        assert (entries[f"bucket_group={g}"]["rows"],
+                entries[f"bucket_group={g}"]["input_fingerprint"]) == (0, "0")
+    committed, sink = _manifest_rows_fp(out), job.fingerprint(spark, out)
+    assert committed[0] == sink[0] == res.n_rows > 0
+    if resume:
+        m = CheckpointManifest.load(path)
+        for g in (1, 3):
+            del m.entries[f"bucket_group={g}"]
+        m.commit_run(m.run_fingerprint())  # rewrites the manifest without them
+        assert run().n_rows == res.n_rows
+        assert job.fingerprint(spark, out) == sink
+        assert _manifest_rows_fp(out) == committed
+        assert CheckpointManifest.load(path).entries.keys() == entries.keys()
+
+
+def test_manifest_commit_py4j_calls(spark, tmp_path):
+    """One manifest commit resolves the FileSystem once: 8 Py4J calls
+    (the Path, the Hadoop conf, the FileSystem, the temp Path, create,
+    write, close, rename); resolving it twice took 20."""
+    m = checkpoint.open_run(str(tmp_path / "_manifest.jsonl"), "fp", False, [])
+    with telemetry.driver_counts(spark.sparkContext) as counts:
+        m.commit("bucket_group=0", 1, "0", "sink", 0.1)
+    assert counts.py4j_calls <= 8, counts
+    assert CheckpointManifest.load(m.path).entries["bucket_group=0"]["rows"] == 1
 
 
 class _Fingerprinted(Exception):

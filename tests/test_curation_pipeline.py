@@ -11,8 +11,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sherlog_parser_spark import telemetry
 from sherlog_parser_spark.plans.curation import (
     curation_dag,
+    loser_fate_counts,
     run_curation_pipeline,
     with_quality_reason,
 )
@@ -395,3 +397,85 @@ def test_quality_reason_rules(spark):
         for r in with_quality_reason(df, max_top_2gram_char_x1e4=6000).collect()
     }
     assert got == {1: "too_short", 2: "rep_5gram", 3: "keep"}
+
+
+def _ledger_counts(docs, bench):
+    _, ledger = curation_dag(docs, bench_docs=bench, quality_kwargs=QUALITY,
+                             persist_intermediates=False)
+    return {r["fate"]: r["count"] for r in ledger.groupBy("fate").count().collect()}
+
+
+def test_overlapped_fate_count_matches_ledger(spark, corpus, tmp_path):
+    """The fate count that runs during the group writes, plus the
+    committed 'kept' rows, equals one aggregation of the whole ledger, on
+    a fresh run and on a resume that recomputes one group."""
+    docs, bench = corpus
+    expected = _ledger_counts(docs, bench)
+    out = str(tmp_path / "curation")
+    res = run_curation_pipeline(spark, docs, out, bench_docs=bench, quality_kwargs=QUALITY)
+    assert res.fate_counts == expected
+    with open(res.manifest_path) as f:
+        lines = f.readlines()
+    with open(res.manifest_path, "w") as f:
+        f.writelines(lines[:-1])  # the last committed group is lost
+    res2 = run_curation_pipeline(spark, docs, out, bench_docs=bench, quality_kwargs=QUALITY)
+    assert res2.fate_counts == expected
+
+
+def test_fate_count_reads_no_survivor_rows(spark, corpus):
+    """The optimizer prunes the ledger's 'kept' branch from the fate
+    count: its optimized plan projects no 'kept' fate, while the whole
+    ledger's does."""
+    docs, bench = corpus
+    _, ledger = curation_dag(docs, bench_docs=bench, quality_kwargs=QUALITY,
+                             persist_intermediates=False)
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "kept AS fate" in optimized(ledger)
+    assert "kept AS fate" not in optimized(loser_fate_counts(ledger))
+
+
+def _warm_counts(spark, fn):
+    """Driver counts of ``fn()`` after one warm-up call, which resolves
+    the JVM classes and Python caches a first call fills."""
+    fn()
+    with telemetry.driver_counts(spark.sparkContext) as counts:
+        fn()
+    return counts
+
+
+# Budgets for the test corpus, measured at local[4] with 8 shuffle
+# partitions.  The DAG build made 1,337 Py4J calls (reference releases
+# aside) and 2 Spark jobs (the connected-components collect), repeatably
+# once warm; one extra withColumn per quality rule adds 15 calls, so
+# the slack is 5 calls.  A run made 28 jobs; the fate count overlapping
+# the writes can materialize a cached frame the writes would otherwise
+# have materialized first, so the slack is 3 jobs, under the 4 jobs of
+# one extra action per commit group.
+DAG_PY4J_BUDGET = 1337 + 5
+DAG_JOBS_BUDGET = 2
+RUN_JOBS_BUDGET = 28 + 3
+
+
+def test_curation_dag_build_budget(spark, corpus):
+    docs, bench = corpus
+
+    def build():
+        persisted: list = []
+        curation_dag(docs, bench_docs=bench, quality_kwargs=QUALITY, persist_registry=persisted)
+        for frame in persisted:
+            frame.unpersist()
+
+    counts = _warm_counts(spark, build)
+    assert counts.py4j_calls <= DAG_PY4J_BUDGET, counts
+    assert counts.jobs <= DAG_JOBS_BUDGET, counts
+
+
+def test_curation_run_job_budget(spark, corpus, tmp_path):
+    docs, bench = corpus
+    out = str(tmp_path / "curation")
+    counts = _warm_counts(spark, lambda: run_curation_pipeline(
+        spark, docs, out, bench_docs=bench, resume=False, quality_kwargs=QUALITY))
+    assert counts.jobs <= RUN_JOBS_BUDGET, counts
