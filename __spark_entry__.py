@@ -1035,10 +1035,9 @@ def q_curation_ledger(spark, sf_dir):
     train = docs.filter(F.col("doc_id") % 50 != 0)
     from sherlog_parser_spark.plans.curation import curation_dag
 
-    # persist_intermediates=False: this query runs once per oracle
-    # session; persisting would pin 4 frames per invocation with nobody
-    # left to unpersist them (r4 review)
-    cleaned, ledger = curation_dag(train, bench_docs=bench, persist_intermediates=False)
+    # no persist_registry: this query runs once per oracle session, and
+    # without a registry curation_dag persists nothing
+    cleaned, ledger = curation_dag(train, bench_docs=bench)
     out = ledger.join(
         cleaned.select("doc_id", F.md5("text").alias("cleaned_md5")), "doc_id", "left"
     )

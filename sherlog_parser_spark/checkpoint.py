@@ -1,5 +1,6 @@
-"""The commit protocol of both batch jobs: a run-validated manifest and
-a sink written in hash-disjoint commit groups.
+"""The commit protocol of both batch jobs — a run-validated manifest
+and a sink written in hash-disjoint commit groups — and every thread a
+batch run starts.
 
 Modeled on the reference's only resumable construct — the eval-pipeline
 JSON result cache (src/eval/eval_pipeline.py:99-107,139-145) and metrics
@@ -9,10 +10,10 @@ bulk insert, and this module owns it for ``plans.pipeline.run_pipeline``
 (the routed sink) and ``plans.curation.run_curation_pipeline`` (the
 cleaned sink):
 
-* ``open_run`` loads ``_manifest.jsonl`` and checks its run header (the
-  caller's fingerprint of input plan + config).  A different run, or
-  ``resume=False``, deletes the sink and side files first, so a resume
-  never mixes groups of two runs.
+* ``open_run`` loads ``<out_dir>/_manifest.jsonl`` and checks its run
+  header (the caller's fingerprint of input plan + config).  A
+  different run, or ``resume=False``, deletes the sink and side files
+  first, so a resume never mixes groups of two runs.
 * ``commit_groups`` writes every uncommitted group
   ``pmod(group_col, n_groups) == g`` with the caller's ``write``
   callable.  Rows and ``bit_xor(xxhash64(*fp_cols))`` are observed on
@@ -27,26 +28,44 @@ cleaned sink):
   disjoint partition values, each under its own ``.spark-staging-*``
   directory (dynamic partition overwrite), so they are safe together.
 
+Threads.  A run's side job (the pipeline's aggregates, curation's fate
+count) overlaps the group writes, and the caller passes it to
+``commit_groups`` as ``alongside``.  Every thread here runs under the
+calling thread's Spark local properties (job group, description,
+scheduler pool) and session tags, so ``cancelJobGroup`` and
+``interruptTag`` reach all of a run's jobs:
+
+1. the side job starts on a ``pyspark.InheritableThread`` before the
+   first group;
+2. each group runs on the pool under ``inheritable_thread_target``,
+   its properties copied on the calling thread;
+3. after the last group — or the first failing one — the side job is
+   joined, so none of its jobs outlives the call;
+4. a group error is raised first; otherwise the side job's error is
+   raised after the join.
+
 A killed run loses at most the groups in flight; a rerun skips committed
 units and ends with a bit-identical sink (tested, with faults injected
-into a group write and into the pipeline's aggregates thread).  Each
-commit replaces the whole manifest atomically (``fs.write_atomic``), so
-a crash never leaves a torn line.  All file I/O here goes through the
-out_dir's Hadoop FileSystem (``fs``): plain, ``file://`` and ``hdfs://``
-out_dirs resume alike; object stores without atomic rename are not
-supported.
+into a group write and into the pipeline's aggregates).  Each commit
+replaces the whole manifest atomically (``fs.write_atomic``), so a crash
+never leaves a torn line.  All file I/O here goes through the out_dir's
+Hadoop FileSystem (``fs``): plain, ``file://`` and ``hdfs://`` out_dirs
+resume alike; object stores without atomic rename are not supported.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
+import os
 import threading
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread, inheritable_thread_target
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -54,6 +73,7 @@ from sherlog_parser_spark import fs
 
 _log = logging.getLogger(__name__)
 
+MANIFEST = "_manifest.jsonl"
 RUN_HEADER_UNIT = "_run"
 GROUPS_IN_FLIGHT = 2
 
@@ -119,11 +139,12 @@ class CheckpointManifest:
         }
 
 
-def open_run(manifest_path: str, run_fp: str, resume: bool, outputs: list[str]) -> CheckpointManifest:
-    """The manifest of run ``run_fp``, header written.  Without
-    ``resume``, or when the stored header names a different run, the
-    manifest and every path in ``outputs`` (sink directory, side files)
-    are deleted first."""
+def open_run(out_dir: str, run_fp: str, resume: bool, outputs: list[str]) -> CheckpointManifest:
+    """The manifest of run ``run_fp`` at ``<out_dir>/_manifest.jsonl``,
+    header written.  Without ``resume``, or when the stored header names
+    a different run, the manifest and every path in ``outputs`` (sink
+    directory, side files) are deleted first."""
+    manifest_path = os.path.join(out_dir, MANIFEST)
     manifest = CheckpointManifest.load(manifest_path) if resume else None
     if manifest is not None and (manifest.entries or manifest.run_header) \
             and manifest.run_fingerprint() != run_fp:
@@ -162,12 +183,15 @@ def commit_groups(
     fp_cols: list[str],
     sink: str,
     write: Callable[[DataFrame], None],
-) -> int:
+    alongside: Callable[[], None],
+) -> tuple[int, float]:
     """Write ``frame`` in ``n_groups`` groups of ``pmod(group_col,
-    n_groups)``, skipping units the manifest holds; returns the total
-    row count, committed earlier or now.  The first failing group write
-    raises after the groups in flight finish; groups not yet started
-    are cancelled."""
+    n_groups)``, skipping units the manifest holds, while ``alongside``
+    runs on its own thread (module note "Threads").  Returns the total
+    row count, committed earlier or now, and the seconds spent waiting
+    for ``alongside`` after the last group.  The first failing group
+    write raises after the groups in flight finish and ``alongside``
+    is joined; groups not yet started are cancelled."""
     lock = threading.Lock()
 
     def one(g: int) -> int:
@@ -184,7 +208,31 @@ def commit_groups(
             manifest.commit(unit, rows, str(fp), sink, time.perf_counter() - t0)
         return rows
 
-    with ThreadPoolExecutor(
-        max_workers=min(GROUPS_IN_FLIGHT, max(1, n_groups)), thread_name_prefix="commit-group"
-    ) as pool:
-        return sum(pool.map(one, range(n_groups)))
+    side_error: list[BaseException] = []
+
+    def side() -> None:
+        try:
+            alongside()
+        except BaseException as e:  # raised after the join
+            side_error.append(e)
+
+    side_thread = InheritableThread(target=side, name="alongside", session=frame.sparkSession)
+    side_thread.start()
+    try:
+        # one wrapper per group, each with its own copy of the caller's
+        # properties: the JVM installs the copy itself as the pool
+        # thread's properties, and two groups in flight must not share
+        # one (Spark sets each SQL execution's id there)
+        groups = [inheritable_thread_target(frame.sparkSession)(functools.partial(one, g))
+                  for g in range(n_groups)]
+        with ThreadPoolExecutor(
+            max_workers=min(GROUPS_IN_FLIGHT, max(1, n_groups)), thread_name_prefix="commit-group"
+        ) as pool:
+            rows = sum(pool.map(lambda group: group(), groups))
+    finally:
+        t_wait = time.perf_counter()
+        side_thread.join()
+        wait_s = time.perf_counter() - t_wait
+    if side_error:
+        raise side_error[0]
+    return rows, wait_s

@@ -7,9 +7,10 @@ corpus with it.
 Spark-first shape:
 
 * **features** — the SAME md5-hashed lowercase unigram+bigram buckets
-  the DSIR operator uses (``operators/dsir.hashed_grams_expr`` +
-  ``bucket_expr``), so training features and corpus-scoring features
-  agree BY CONSTRUCTION (no second hash function to keep in sync).
+  the DSIR operator uses, from its one per-doc pass
+  (``operators/dsir.per_doc_bucket_counts``), so training features and
+  corpus-scoring features agree BY CONSTRUCTION (no second hash
+  function to keep in sync).
 * **train** — the labeled frame is the SAMPLE the expensive labeler
   produced (its size is a cost knob, not a scale concern), so its
   bucket counts are densified per row (map → fixed-length array →
@@ -50,7 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sherlog_parser_spark import fs
-from sherlog_parser_spark.operators.dsir import bucket_expr, hashed_grams_expr
+from sherlog_parser_spark.operators.dsir import per_doc_bucket_counts
 
 
 class QualityClassifier(NamedTuple):
@@ -60,19 +61,6 @@ class QualityClassifier(NamedTuple):
     coefficients: tuple
     intercept: float
     n_features: int
-
-
-def _bucket_counts(docs: DataFrame, text_col: str, id_col: str, n_buckets: int) -> DataFrame:
-    """(id, bucket, f) per-document hashed-gram bucket multiplicities."""
-    return (
-        docs.select(
-            F.col(id_col).alias("__id"),
-            F.explode(hashed_grams_expr(text_col)).alias("_g"),
-        )
-        .select("__id", bucket_expr(F.col("_g"), n_buckets).cast("int").alias("bucket"))
-        .groupBy("__id", "bucket")
-        .agg(F.count("*").alias("f"))
-    )
 
 
 def train_quality_classifier(
@@ -91,7 +79,7 @@ def train_quality_classifier(
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.functions import array_to_vector
 
-    counts = _bucket_counts(labeled, text_col, id_col, n_features)
+    counts = per_doc_bucket_counts(labeled, text_col, id_col, n_features)
     labels = labeled.select(F.col(id_col).alias("__id"), F.col(label_col).alias("__y"))
     per_doc = (
         counts.groupBy("__id")
@@ -104,7 +92,7 @@ def train_quality_classifier(
     )
     dense = F.transform(
         F.sequence(F.lit(0), F.lit(int(n_features) - 1)),
-        lambda i: F.coalesce(F.element_at(F.col("_mp"), i.cast("int")), F.lit(0.0)),
+        lambda i: F.coalesce(F.element_at(F.col("_mp"), i.cast("long")), F.lit(0.0)),
     )
     feat = per_doc.select(
         array_to_vector(dense).alias("_features"), F.col("__y").cast("double").alias("__y")
@@ -136,8 +124,8 @@ def classifier_scores(
     rows, usually far fewer nonzeros)."""
     spark = docs.sparkSession
     nz = [(b, w) for b, w in enumerate(clf.coefficients) if w != 0.0]
-    coef = spark.createDataFrame(nz or [(0, 0.0)], "bucket int, w double")
-    per_doc = _bucket_counts(docs, text_col, id_col, clf.n_features)
+    coef = spark.createDataFrame(nz or [(0, 0.0)], "bucket long, w double")
+    per_doc = per_doc_bucket_counts(docs, text_col, id_col, clf.n_features)
     margins = (
         per_doc.join(F.broadcast(coef), "bucket", "left")
         .groupBy("__id")

@@ -86,34 +86,21 @@ def _bucket_counts(docs: DataFrame, text_col: str, n_buckets: int) -> DataFrame:
     )
 
 
-def _model_from_counts(
-    counts: dict[str, DataFrame], n_buckets: int, quantum: float
-) -> DSIRModel:
-    """Quantized q-tables + defaults from two (bucket, c) count frames —
-    the shared tail of :func:`train_dsir` and
-    :func:`train_dsir_shared`."""
-    out = {}
-    for name, cnt in counts.items():
-        agg = cnt.agg(F.sum("c").alias("n")).collect()[0]
-        total = int(agg["n"] or 0)
-        q = cnt.select(
-            "bucket",
-            F.floor(
-                F.lit(float(quantum)) * (F.col("c") + F.lit(1))
-                / F.lit(total + int(n_buckets))
-            )
-            .cast("long")
-            .alias("q"),
+def _q_table(cnt: DataFrame, total: int, n_buckets: int, quantum: float) -> tuple[DataFrame, int]:
+    """The (bucket, q) quantized-probability table of one corpus's
+    (bucket, c) counts with ``total`` grams, and the quantized default
+    for buckets it never saw — the shared tail of :func:`train_dsir`
+    and :func:`train_dsir_shared`."""
+    q = cnt.select(
+        "bucket",
+        F.floor(
+            F.lit(float(quantum)) * (F.col("c") + F.lit(1))
+            / F.lit(total + int(n_buckets))
         )
-        q0 = int(math.floor(quantum * 1 / (total + int(n_buckets))))
-        out[name] = (q, q0)
-    return DSIRModel(
-        target_q=out["target"][0],
-        raw_q=out["raw"][0],
-        target_q0=out["target"][1],
-        raw_q0=out["raw"][1],
-        n_buckets=int(n_buckets),
+        .cast("long")
+        .alias("q"),
     )
+    return q, int(math.floor(quantum * 1 / (total + int(n_buckets))))
 
 
 def train_dsir(
@@ -126,14 +113,13 @@ def train_dsir(
     """Fit the two hashed-ngram models.  Each corpus costs one explode
     + groupBy; totals are driver scalars read from the same aggregates
     (no extra pass over the documents)."""
-    return _model_from_counts(
-        {
-            "target": _bucket_counts(target_docs, text_col, n_buckets),
-            "raw": _bucket_counts(raw_docs, text_col, n_buckets),
-        },
-        n_buckets,
-        quantum,
-    )
+    def fit(docs: DataFrame) -> tuple[DataFrame, int]:
+        cnt = _bucket_counts(docs, text_col, n_buckets)
+        total = int(cnt.agg(F.sum("c").alias("n")).collect()[0]["n"] or 0)
+        return _q_table(cnt, total, n_buckets, quantum)
+
+    (target_q, target_q0), (raw_q, raw_q0) = fit(target_docs), fit(raw_docs)
+    return DSIRModel(target_q, raw_q, target_q0, raw_q0, int(n_buckets))
 
 
 def per_doc_bucket_counts(
@@ -183,31 +169,13 @@ def train_dsir_shared(
             "target_n"
         ),
     ).collect()[0]
-    raw_total = int(tot["raw_n"] or 0)
-    target_total = int(tot["target_n"] or 0)
-
-    def q_table(cnt, total):
-        return cnt.select(
-            "bucket",
-            F.floor(
-                F.lit(float(quantum)) * (F.col("c") + F.lit(1))
-                / F.lit(total + int(n_buckets))
-            )
-            .cast("long")
-            .alias("q"),
-        )
-
     raw_cnt = per_doc.groupBy("bucket").agg(F.sum("f").alias("c"))
     target_cnt = (
         flagged.filter(F.col("_t") == 1).groupBy("bucket").agg(F.sum("f").alias("c"))
     )
-    return DSIRModel(
-        target_q=q_table(target_cnt, target_total),
-        raw_q=q_table(raw_cnt, raw_total),
-        target_q0=int(math.floor(quantum * 1 / (target_total + int(n_buckets)))),
-        raw_q0=int(math.floor(quantum * 1 / (raw_total + int(n_buckets)))),
-        n_buckets=int(n_buckets),
-    )
+    target_q, target_q0 = _q_table(target_cnt, int(tot["target_n"] or 0), n_buckets, quantum)
+    raw_q, raw_q0 = _q_table(raw_cnt, int(tot["raw_n"] or 0), n_buckets, quantum)
+    return DSIRModel(target_q, raw_q, target_q0, raw_q0, int(n_buckets))
 
 
 def dsir_scores(

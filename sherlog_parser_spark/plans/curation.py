@@ -34,9 +34,12 @@ Every stage is an existing tested operator (operators/dedup.py,
 operators/components.py, functions/textstats.py, functions/pii.py);
 this module contributes the composition, the drop-ledger and the
 cleaned-sink group writer; the commit protocol (run fingerprint check,
-per-group Observation + manifest commit, resume) is
+per-group Observation + manifest commit, resume) and the thread that
+overlaps the fate count with the group writes are
 ``checkpoint.open_run``/``commit_groups``, shared with the parse
-pipeline.  Reference lifecycle analog: the data-prep half of
+pipeline.  ``run_curation_pipeline`` persists the DAG's shared frames
+through ``persist_registry`` and releases them in one ``finally``,
+whichever step fails.  Reference lifecycle analog: the data-prep half of
 LogProcessingPipeline.process_dataset (src/core/pipeline.py:52-130) —
 its clean → dedup → filter loop over batches becomes a declarative DAG
 over partitions.
@@ -66,7 +69,7 @@ import time
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark import InheritableThread, StorageLevel
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -134,7 +137,6 @@ def curation_dag(
     semdedup_opts: dict | None = None,
     classifier_filter: dict | None = None,
     dsir_filter: dict | None = None,
-    persist_intermediates: bool = True,
     persist_registry: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the curation DAG.  Returns ``(cleaned, ledger)``:
@@ -145,6 +147,14 @@ def curation_dag(
       'kept' | 'line_filtered' | 'paragraph_filtered' | 'exact_dup' |
       'near_dup' | 'semantic_dup' | 'quality:<reason>' | 'lm_filtered' |
       'classifier_filtered' | 'dsir_filtered' | 'contaminated'.
+
+    ``persist_registry`` (optional): a list the caller owns.  When
+    given, the frames that both ``cleaned`` and ``ledger`` consume (the
+    fate sets, the quality-scored survivors, the optional models'
+    tables) are persisted MEMORY_AND_DISK and appended to it, and the
+    caller unpersists them once its actions are done
+    (``run_curation_pipeline`` does, on every exit path).  Without it
+    none of these frames is persisted, and each action recomputes them.
 
     ``classifier_filter`` (optional): ``{"clf": QualityClassifier,
     "min_prob": p}`` — scores the quality survivors with the distilled
@@ -203,20 +213,16 @@ def curation_dag(
     intermediates (consumed by the join AND the context derivation) and
     go through the same ``_reuse`` persistence as the fate sets."""
     def _reuse(frame: DataFrame) -> DataFrame:
-        """Cache frames consumed by BOTH the cleaned branch and the fate
-        ledger — without this the ledger's fate counts re-run the whole
-        upstream DAG.  MEMORY_AND_DISK,
-        same spill discipline as run_pipeline's persist_parsed; the
-        persisted frames are id-sets / survivor rows, never wider than
-        the input.  Callers that finish all actions pass
-        ``persist_registry`` and unpersist afterwards (run_curation_
-        pipeline does) — otherwise the cached frames would accumulate
-        across runs in one session."""
-        if not persist_intermediates:
+        """Cache a frame consumed by BOTH the cleaned branch and the
+        fate ledger — without this the ledger's fate counts re-run the
+        whole upstream DAG — when the caller gave ``persist_registry``.
+        MEMORY_AND_DISK, same spill discipline as run_pipeline's
+        persist_parsed; the persisted frames are id-sets / survivor
+        rows, never wider than the input."""
+        if persist_registry is None:
             return frame
         out = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        if persist_registry is not None:
-            persist_registry.append(out)
+        persist_registry.append(out)
         return out
 
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
@@ -464,76 +470,66 @@ def run_curation_pipeline(
     a killed run resumes by skipping committed groups.  ``bench_docs``
     and every DAG option, DataFrames inside option dicts included,
     enter the run fingerprint (``pipeline._run_fingerprint``), so a run
-    with a different blocklist or embeddings table starts clean."""
+    with a different blocklist or embeddings table starts clean.  The
+    loser fates are counted as ``commit_groups``' side job.  The frames
+    the run persists for itself (the DAG's registered frames and the
+    bucketed survivors) are released on every exit path."""
     t_start = time.perf_counter()
     cleaned_dir = os.path.join(out_dir, "cleaned")
-    manifest_path = os.path.join(out_dir, "_manifest.jsonl")
     metrics_path = os.path.join(out_dir, "curation_metrics.json")
     run_fp = pipeline._run_fingerprint(
         docs,
         {"kind": "curation", "n_buckets": n_buckets, "commit_groups": commit_groups,
          "bench_docs": bench_docs, **dag_kwargs},
     )
-    manifest = checkpoint.open_run(manifest_path, run_fp, resume, [cleaned_dir, metrics_path])
+    manifest = checkpoint.open_run(out_dir, run_fp, resume, [cleaned_dir, metrics_path])
 
-    # Scan fan-out (readers.fan_out): a small local input arrives as ONE
-    # parquet split, so every narrow stage of the DAG (line rules,
-    # shingle explodes, quality exprs) would run on a single core.  The
-    # DAG is partition-invariant by construction — pinned by the
-    # multi-executor parity check (local-cluster[4,4] == local[16]
-    # fates + cleaned-sink fingerprint).  Applied AFTER the run
-    # fingerprint so resume identity is unchanged.
-    dag_persists: list = []
-    t_dag = time.perf_counter()
-    cleaned, ledger = curation_dag(
-        fan_out(docs), bench_docs=bench_docs, persist_registry=dag_persists, **dag_kwargs
-    )
-    t_write = time.perf_counter()
-    # the DAG above this point includes two shingle explodes;
-    # persisting the survivors turns per-group recomputation of the
-    # whole chain into one pass
-    bucketed = cleaned.withColumn(
-        "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    dag_persists.append(bucketed)
-
-    def _write_group(sub: DataFrame) -> None:
-        (
-            sub.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("parquet.enable.dictionary", "false")
-            .partitionBy("doc_bucket")
-            .parquet(cleaned_dir)
-        )
-
-    # The fate count overlaps the group writes; 'kept' is the committed
-    # row count.  An InheritableThread keeps the caller's job description
-    fate_counts: dict = {}
-    count_error: list[BaseException] = []
-
-    def _count_losers():
-        try:
-            fate_counts.update((r["fate"], r["n"]) for r in loser_fate_counts(ledger).collect())
-        except BaseException as e:  # surfaced after join
-            count_error.append(e)
-
-    counter = InheritableThread(target=_count_losers, name="fate-count")
-    counter.start()
+    persisted: list[DataFrame] = []
     try:
-        total_rows = checkpoint.commit_groups(
-            manifest, bucketed, "doc_bucket", commit_groups, ["doc_id", "text"], cleaned_dir,
-            _write_group,
+        # Scan fan-out (readers.fan_out): a small local input arrives as
+        # ONE parquet split, so every narrow stage of the DAG (line
+        # rules, shingle explodes, quality exprs) would run on a single
+        # core.  The DAG is partition-invariant by construction — pinned
+        # by the multi-executor parity check (local-cluster[4,4] ==
+        # local[16] fates + cleaned-sink fingerprint).  Applied AFTER
+        # the run fingerprint so resume identity is unchanged.
+        t_dag = time.perf_counter()
+        cleaned, ledger = curation_dag(
+            fan_out(docs), bench_docs=bench_docs, persist_registry=persisted, **dag_kwargs
         )
-    finally:
-        # a failing group write still waits for the count, so that its
-        # jobs end before the caller can stop the session
-        t_ledger = time.perf_counter()
-        counter.join()
+        t_write = time.perf_counter()
+        # the DAG above this point includes two shingle explodes;
+        # persisting the survivors turns per-group recomputation of the
+        # whole chain into one pass
+        bucketed = cleaned.withColumn(
+            "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        persisted.append(bucketed)
+
+        def _write_group(sub: DataFrame) -> None:
+            (
+                sub.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .option("parquet.enable.dictionary", "false")
+                .partitionBy("doc_bucket")
+                .parquet(cleaned_dir)
+            )
+
+        # the fate count overlaps the group writes; 'kept' is the
+        # committed row count
+        fate_counts: dict = {}
+
+        def _count_losers() -> None:
+            fate_counts.update((r["fate"], r["n"]) for r in loser_fate_counts(ledger).collect())
+
+        total_rows, ledger_s = checkpoint.commit_groups(
+            manifest, bucketed, "doc_bucket", commit_groups, ["doc_id", "text"], cleaned_dir,
+            _write_group, _count_losers,
+        )
         t_end = time.perf_counter()
-        for frame in dag_persists:
+    finally:
+        for frame in persisted:
             frame.unpersist()
-    if count_error:
-        raise count_error[0]
     if total_rows:
         fate_counts["kept"] = total_rows
     wall = time.perf_counter() - t_start
@@ -549,15 +545,15 @@ def run_curation_pipeline(
             # fate count after them (it runs during the writes)
             "phases": {
                 "dag_s": round(t_write - t_dag, 3),
-                "write_s": round(t_ledger - t_write, 3),
-                "ledger_s": round(t_end - t_ledger, 3),
+                "write_s": round(t_end - t_write - ledger_s, 3),
+                "ledger_s": round(ledger_s, 3),
             },
         },
         indent=2,
     ))
     return CurationResult(
         cleaned_dir=cleaned_dir,
-        manifest_path=manifest_path,
+        manifest_path=manifest.path,
         n_rows=total_rows,
         fate_counts=fate_counts,
         wall_sec=wall,

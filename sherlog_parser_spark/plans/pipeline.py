@@ -26,15 +26,19 @@ guide §8 "decide with small rows, move big rows once"):
                               at rollup cardinality, then
                               agg_template_freq + agg_tool_usage)
 
-Checkpointing: this module keeps only the DAG and the group writer
+Checkpointing: this module keeps only the DAG, the group writer
 (``route.write_routed`` with dynamic partition overwrite, so every group
-is idempotent).  ``checkpoint.open_run`` validates the manifest against
-``_run_fingerprint`` — which ``plans.curation`` shares — and
-``checkpoint.commit_groups`` writes the ``commit_groups`` disjoint
-conv-bucket groups, two in flight, observing rows + a bit_xor content
-fingerprint on each write job; a killed run resumes by skipping
-committed groups.  The aggregates thread overlaps the group writes; its
-error surfaces after them.
+is idempotent) and the aggregates writer.  ``checkpoint.open_run``
+validates the manifest against ``_run_fingerprint`` — which
+``plans.curation`` shares — and ``checkpoint.commit_groups`` writes the
+``commit_groups`` disjoint conv-bucket groups, two in flight, observing
+rows + a bit_xor content fingerprint on each write job; a killed run
+resumes by skipping committed groups.  The aggregates writer is
+``commit_groups``' side job: it overlaps the group writes on a thread
+``checkpoint`` owns, under the caller's job group, and its error
+surfaces after them.  One ``try/finally`` from the parse persist to the
+end of the run unpersists the cached frames and restores the cache
+codec, whichever step fails.
 
 Reference lifecycle being reproduced: ParserService.parse_logs
 (src/core/parser_service.py:66-202) and
@@ -49,10 +53,10 @@ import hashlib
 import json
 import os
 import re
-import threading
 import time
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from sherlog_parser_spark import checkpoint, fs
@@ -117,7 +121,6 @@ def run_pipeline(
     n_buckets: int = 8,
     commit_groups: int = 4,
     resume: bool = True,
-    write_aggregates: bool = True,
     aggregate_source: str = "enriched",
     persist_parsed: bool = True,
 ) -> PipelineResult:
@@ -128,101 +131,83 @@ def run_pipeline(
         )
     t_start = time.perf_counter()
     routed_dir = os.path.join(out_dir, "routed")
-    manifest_path = os.path.join(out_dir, "_manifest.jsonl")
     dict_path = os.path.join(out_dir, "_dictionary.json")
     freq_dir = os.path.join(out_dir, "agg_template_freq")
     tools_dir = os.path.join(out_dir, "agg_tool_usage")
     metrics_path = os.path.join(out_dir, "run_metrics.json")
     run_fp = _run_fingerprint(transcripts, {"n_buckets": n_buckets, "commit_groups": commit_groups})
     outputs = [routed_dir, dict_path, freq_dir, tools_dir, metrics_path]
-    manifest = checkpoint.open_run(manifest_path, run_fp, resume, outputs)
+    manifest = checkpoint.open_run(out_dir, run_fp, resume, outputs)
 
-    parsed = parse_stage(transcripts)
-    if persist_parsed:
-        # the dictionary build, the routed write, and the aggregates each
-        # need the masked/sig columns; persisting the parse stage turns
-        # three mask passes over the corpus into one (spills to disk when
-        # it outgrows memory — disable for recompute-cheaper-than-cache
-        # deployments)
-        from pyspark import StorageLevel
+    # uncompressed (r6): the parse cache lives for ONE run and is re-read
+    # ~3x — columnar compression of the text-heavy batches cost ~25% of
+    # the build phase (A/B at 1 core: 79-89s -> 59-66s) for no read-side
+    # gain at this reuse count.  The session conf is restored after the
+    # run, as every cached frame is released, on every exit path.
+    codec_key = "spark.sql.inMemoryColumnarStorage.compressed"
+    prev_cache_codec = spark.conf.get(codec_key, "true")
+    persisted: list[DataFrame] = []
+    try:
+        parsed = parse_stage(transcripts)
+        if persist_parsed:
+            # the dictionary build, the routed write, and the aggregates
+            # each need the masked/sig columns; persisting the parse
+            # stage turns three mask passes over the corpus into one
+            # (spills to disk when it outgrows memory — disable for
+            # recompute-cheaper-than-cache deployments)
+            spark.conf.set(codec_key, "false")
+            parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(parsed)
+        if manifest.entries and fs.exists(dict_path):
+            # resuming a validated run: reuse the persisted dictionary so
+            # already-committed groups and in-flight groups share template ids
+            tdict = dictionary_from_state(spark, json.loads(fs.read_text(dict_path)))
+        else:
+            tdict = build_template_dictionary(parsed)
+            fs.write_atomic(dict_path, json.dumps(dictionary_state(tdict)))
+        # r6 route-path restructure (guide §2.3/§8: shuffle keys + payload
+        # once, attach derived columns post-exchange): the exchange carries
+        # only the raw row + template_id + conv_bucket; template, event_type
+        # and parameters are attached after it from the broadcast ≤10^4-row
+        # template side frame — the one attach enrich_stage uses, keyed on
+        # template_id instead of sig.  The role/tool dim join of enrich_stage
+        # contributes no ROUTE_COLS column and its (role, tool) keys are
+        # unique by construction, so it is row-preserving and elided here.
+        pre = pre_shuffle_frame(parsed, tdict.df, n_buckets)
+        tpl_df = template_frame(spark, tdict.templates)
+        # evaluated here, before the group pool starts (see plain_frame)
+        side = template_side_frame(tpl_df)
 
-        # uncompressed (r6): this cache lives for ONE run and is re-read
-        # ~3x — columnar compression of the text-heavy batches cost ~25%
-        # of the build phase (A/B at 1 core: 79-89s -> 59-66s) for no
-        # read-side gain at this reuse count.  The session conf is
-        # restored after the run.
-        prev_cache_codec = spark.conf.get(
-            "spark.sql.inMemoryColumnarStorage.compressed", "true"
-        )
-        spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
-        parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    if manifest.entries and fs.exists(dict_path):
-        # resuming a validated run: reuse the persisted dictionary so
-        # already-committed groups and in-flight groups share template ids
-        tdict = dictionary_from_state(spark, json.loads(fs.read_text(dict_path)))
-    else:
-        tdict = build_template_dictionary(parsed)
-        fs.write_atomic(dict_path, json.dumps(dictionary_state(tdict)))
-    # r6 route-path restructure (guide §2.3/§8: shuffle keys + payload
-    # once, attach derived columns post-exchange): the exchange carries
-    # only the raw row + template_id + conv_bucket; template, event_type
-    # and parameters are attached after it from the broadcast ≤10^4-row
-    # template side frame — the one attach enrich_stage uses, keyed on
-    # template_id instead of sig.  The role/tool dim join of enrich_stage
-    # contributes no ROUTE_COLS column and its (role, tool) keys are
-    # unique by construction, so it is row-preserving and elided here.
-    pre = pre_shuffle_frame(parsed, tdict.df, n_buckets)
-    tpl_df = template_frame(spark, tdict.templates)
-    # evaluated here, before the group pool starts (see plain_frame)
-    side = template_side_frame(tpl_df)
+        def _write_group(sub: DataFrame) -> None:
+            out = attach_templates(route_exchange(sub), side, "template_id")
+            write_routed(
+                out.select(*route_cols(out), "conv_bucket"), routed_dir,
+                partition_overwrite="dynamic",
+            )
 
-    def _write_group(sub: DataFrame) -> None:
-        out = attach_templates(route_exchange(sub), side, "template_id")
-        write_routed(
-            out.select(*route_cols(out), "conv_bucket"), routed_dir, partition_overwrite="dynamic"
-        )
-
-    # Aggregates overlap the route write (r3 judge item #5): the rollup
-    # needs only tdict + the persisted parse cache, so its tasks fill the
-    # scheduler gaps the route loop leaves (driver-side file commit +
-    # manifest writes have no pending tasks; under FIFO a second job's
-    # tasks run in exactly those gaps).  The alternative the verdict
-    # floated — deriving the rollup from the route write's Observation —
-    # doesn't type-check: Observation carries scalar aggregates only,
-    # while the rollup is per-(template_id, tool, window) ROWS.
-    agg_error: list[BaseException] = []
-    agg_thread = None
-
-    def _write_aggregates():
-        try:
+        # Aggregates overlap the route write (r3 judge item #5): the
+        # rollup needs only tdict + the persisted parse cache, so its
+        # tasks fill the scheduler gaps the route loop leaves
+        # (driver-side file commit + manifest writes have no pending
+        # tasks; under FIFO a second job's tasks run in exactly those
+        # gaps).  The alternative the verdict floated — deriving the
+        # rollup from the route write's Observation — doesn't
+        # type-check: Observation carries scalar aggregates only, while
+        # the rollup is per-(template_id, tool, window) ROWS.
+        def _write_aggregates() -> None:
             rollup = sink_rollup_slim(pre, tpl_df).persist()
+            persisted.append(rollup)
             template_frequency_from_rollup(rollup).write.mode("overwrite").parquet(freq_dir)
             tool_usage_from_rollup(rollup).write.mode("overwrite").parquet(tools_dir)
-            rollup.unpersist()
-        except BaseException as e:  # surfaced after join
-            agg_error.append(e)
 
-    if write_aggregates:
-        agg_thread = threading.Thread(target=_write_aggregates, name="aggregates")
-        agg_thread.start()
-
-    try:
-        total_rows = checkpoint.commit_groups(
+        total_rows, _ = checkpoint.commit_groups(
             manifest, pre, "conv_bucket", commit_groups, ["conv_id", "turn_idx"], routed_dir,
-            _write_group,
+            _write_group, _write_aggregates,
         )
     finally:
-        # a failing group write must still wait for the aggregates
-        # thread — otherwise the caller's spark.stop() kills its
-        # in-flight jobs mid-write and the original error drowns in
-        # secondary py4j noise (r4 review)
-        if agg_thread is not None:
-            agg_thread.join()
-        if persist_parsed:
-            parsed.unpersist()
-            spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", prev_cache_codec)
-    if agg_error:
-        raise agg_error[0]
+        for frame in persisted:
+            frame.unpersist()
+        spark.conf.set(codec_key, prev_cache_codec)
 
     wall = time.perf_counter() - t_start
     fs.write_atomic(metrics_path, json.dumps(
@@ -238,7 +223,7 @@ def run_pipeline(
     ))
     return PipelineResult(
         routed_dir=routed_dir,
-        manifest_path=manifest_path,
+        manifest_path=manifest.path,
         dictionary=tdict,
         n_rows=total_rows,
         wall_sec=wall,

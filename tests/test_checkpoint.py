@@ -6,11 +6,13 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sherlog_parser_spark import checkpoint, telemetry
 from sherlog_parser_spark.checkpoint import CheckpointManifest
-from sherlog_parser_spark.plans import pipeline
+from sherlog_parser_spark.plans import curation, dictionary, pipeline
 from sherlog_parser_spark.plans.curation import run_curation_pipeline
 from sherlog_parser_spark.plans.pipeline import run_pipeline
 
@@ -40,7 +42,7 @@ class Job:
     def run(self, spark, frames, out, resume=True):
         if self.name == "pipeline":
             return run_pipeline(spark, frames["transcripts"], out, commit_groups=GROUPS,
-                                resume=resume, write_aggregates=False)
+                                resume=resume)
         return run_curation_pipeline(spark, frames["docs"], out, commit_groups=GROUPS,
                                      resume=resume, quality_kwargs=QUALITY)
 
@@ -129,8 +131,7 @@ def test_failed_aggregates_surface_after_group_writes(spark, transcripts, tmp_pa
     still commits, the error is raised after them, and a resume keeps
     the sink and writes the aggregates."""
     clean = str(tmp_path / "clean")
-    run_pipeline(spark, transcripts, clean, commit_groups=GROUPS, resume=False,
-                 write_aggregates=False)
+    run_pipeline(spark, transcripts, clean, commit_groups=GROUPS, resume=False)
     job = JOBS[0]
 
     def broken_rollup(*args, **kwargs):
@@ -151,6 +152,78 @@ def test_failed_aggregates_surface_after_group_writes(spark, transcripts, tmp_pa
     assert freq.agg(F.sum("frequency")).collect()[0][0] == res.n_rows
 
 
+@pytest.mark.parametrize("job", JOBS, ids=[job.name for job in JOBS])
+def test_every_job_of_a_run_is_in_the_callers_job_group(spark, transcripts, docs, job,
+                                                        tmp_path):
+    """A warm run under the caller's job group starts no job outside it:
+    the group writes, the side job and the DAG's own actions all carry
+    the group, so ``cancelJobGroup`` stops the whole run."""
+    frames = {"transcripts": transcripts, "docs": docs}
+    out = str(tmp_path / "out")
+    job.run(spark, frames, out, resume=False)
+    sc = spark.sparkContext
+    group = f"caller-{job.name}"
+    sc.setJobGroup(group, "a batch run under the caller's job group")
+    try:
+        with telemetry.driver_counts(sc) as counts:
+            job.run(spark, frames, out, resume=False)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == counts.jobs > 0, counts
+
+
+def _record_persists(monkeypatch, spark) -> list[DataFrame]:
+    """Every frame ``DataFrame.persist`` returns from now on."""
+    frame_cls = type(spark.range(1))
+    frames: list[DataFrame] = []
+    persist = frame_cls.persist
+
+    def recording(self, *args, **kwargs):
+        frames.append(persist(self, *args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(frame_cls, "persist", recording)
+    return frames
+
+
+def test_pipeline_failing_before_group_writes_releases_session(spark, transcripts, tmp_path,
+                                                               monkeypatch):
+    """The dictionary guard fires before any group write: the parse cache
+    is released and the cache codec conf restored all the same."""
+    key = "spark.sql.inMemoryColumnarStorage.compressed"
+    codec = spark.conf.get(key, "true")
+    persisted = _record_persists(monkeypatch, spark)
+    monkeypatch.setattr(dictionary, "MAX_DICT_ROWS", 0)
+    with pytest.raises(RuntimeError, match="distinct signatures"):
+        run_pipeline(spark, transcripts, str(tmp_path / "out"), resume=False)
+    assert spark.conf.get(key, "true") == codec
+    assert persisted and all(f.storageLevel == StorageLevel.NONE for f in persisted)
+
+
+def test_curation_failing_before_group_writes_releases_session(spark, docs, tmp_path,
+                                                               monkeypatch):
+    """Connected components fail inside the DAG build, after the exact
+    dedup winners are persisted: every frame the run registered for
+    release, the winners among them, is released."""
+    def broken_components(*args, **kwargs):
+        raise RuntimeError("injected components failure")
+
+    registries: list[list[DataFrame]] = []
+    dag = curation.curation_dag
+
+    def recording_dag(*args, persist_registry=None, **kwargs):
+        registries.append(persist_registry)
+        return dag(*args, persist_registry=persist_registry, **kwargs)
+
+    monkeypatch.setattr(curation, "connected_components", broken_components)
+    monkeypatch.setattr(curation, "curation_dag", recording_dag)
+    with pytest.raises(RuntimeError, match="injected components failure"):
+        run_curation_pipeline(spark, docs, str(tmp_path / "out"), resume=False,
+                              quality_kwargs=QUALITY)
+    [persisted] = registries
+    assert persisted and all(f.storageLevel == StorageLevel.NONE for f in persisted)
+
+
 EMPTY_GROUP_CASES = [(job, resume) for job in JOBS for resume in (False, True)]
 
 
@@ -167,8 +240,7 @@ def test_empty_commit_group_commits_zero_rows(spark, transcripts, docs, job, res
 
     def run():
         if job.name == "pipeline":
-            return run_pipeline(spark, transcripts, out, n_buckets=2, commit_groups=4,
-                                write_aggregates=False)
+            return run_pipeline(spark, transcripts, out, n_buckets=2, commit_groups=4)
         return run_curation_pipeline(spark, docs, out, n_buckets=2, commit_groups=4,
                                      quality_kwargs=QUALITY)
 
@@ -195,7 +267,7 @@ def test_manifest_commit_py4j_calls(spark, tmp_path):
     """One manifest commit resolves the FileSystem once: 8 Py4J calls
     (the Path, the Hadoop conf, the FileSystem, the temp Path, create,
     write, close, rename); resolving it twice took 20."""
-    m = checkpoint.open_run(str(tmp_path / "_manifest.jsonl"), "fp", False, [])
+    m = checkpoint.open_run(str(tmp_path), "fp", False, [])
     with telemetry.driver_counts(spark.sparkContext) as counts:
         m.commit("bucket_group=0", 1, "0", "sink", 0.1)
     assert counts.py4j_calls <= 8, counts
@@ -209,7 +281,7 @@ class _Fingerprinted(Exception):
 def _run_fp(monkeypatch, run, *args, **kwargs):
     """The run fingerprint a job passes to ``open_run``; the job stops
     there, before any Spark job."""
-    def stop(manifest_path, run_fp, resume, outputs):
+    def stop(out_dir, run_fp, resume, outputs):
         raise _Fingerprinted(run_fp)
 
     with monkeypatch.context() as m:

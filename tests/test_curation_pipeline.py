@@ -400,8 +400,7 @@ def test_quality_reason_rules(spark):
 
 
 def _ledger_counts(docs, bench):
-    _, ledger = curation_dag(docs, bench_docs=bench, quality_kwargs=QUALITY,
-                             persist_intermediates=False)
+    _, ledger = curation_dag(docs, bench_docs=bench, quality_kwargs=QUALITY)
     return {r["fate"]: r["count"] for r in ledger.groupBy("fate").count().collect()}
 
 
@@ -427,8 +426,7 @@ def test_fate_count_reads_no_survivor_rows(spark, corpus):
     count: its optimized plan projects no 'kept' fate, while the whole
     ledger's does."""
     docs, bench = corpus
-    _, ledger = curation_dag(docs, bench_docs=bench, quality_kwargs=QUALITY,
-                             persist_intermediates=False)
+    _, ledger = curation_dag(docs, bench_docs=bench, quality_kwargs=QUALITY)
 
     def optimized(df):
         return df._jdf.queryExecution().optimizedPlan().toString()

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark import checkpoint
+from sherlog_parser_spark import checkpoint, telemetry
 from sherlog_parser_spark.checkpoint import CheckpointManifest
 from sherlog_parser_spark.plans.pipeline import run_pipeline
 
@@ -35,12 +35,35 @@ def test_pipeline_end_to_end(spark, transcripts, tmp_path):
     assert metrics["manifest"]["units"] == 3
 
 
+# Budgets for a warm run over the test transcripts with four commit
+# groups, measured at local[4] with 8 shuffle partitions: 2,006 Py4J
+# calls (reference releases aside) and 27 Spark jobs, the same in each
+# of 5 reps.  One extra action per commit group (a count of the group)
+# adds 12 jobs, so the job slack is 3.  The 20 calls of Py4J slack (1%)
+# are fewer than a Column built per template or per row would add.
+RUN_PY4J_BUDGET = 2006 + 20
+RUN_JOBS_BUDGET = 27 + 3
+
+
+def test_pipeline_run_budget(spark, transcripts, tmp_path):
+    out = str(tmp_path / "budget")
+
+    def run():
+        run_pipeline(spark, transcripts, out, commit_groups=4, resume=False)
+
+    run()  # warm-up: resolves the JVM classes and Python caches a first run fills
+    with telemetry.driver_counts(spark.sparkContext) as counts:
+        run()
+    assert counts.py4j_calls <= RUN_PY4J_BUDGET, counts
+    assert counts.jobs <= RUN_JOBS_BUDGET, counts
+
+
 @pytest.mark.parametrize("uri", [False, True], ids=["path", "uri"])
 def test_pipeline_resume_skips_committed(spark, transcripts, tmp_path, uri):
     local = tmp_path / "run2"
     out = local.as_uri() if uri else str(local)
     # full run to get the golden sink fingerprint
-    run_pipeline(spark, transcripts, out, commit_groups=3, resume=False, write_aggregates=False)
+    run_pipeline(spark, transcripts, out, commit_groups=3, resume=False)
     golden = _routed_fingerprint(spark, os.path.join(out, "routed"))
     golden_manifest = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl"))
 
@@ -51,9 +74,7 @@ def test_pipeline_resume_skips_committed(spark, transcripts, tmp_path, uri):
     with open(mpath, "w") as f:
         f.write(lines[0] + "\n" + lines[1] + "\n")
 
-    res = run_pipeline(
-        spark, transcripts, out, commit_groups=3, resume=True, write_aggregates=False
-    )
+    res = run_pipeline(spark, transcripts, out, commit_groups=3, resume=True)
     assert _routed_fingerprint(spark, os.path.join(out, "routed")) == golden
     m2 = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl"))
     assert set(m2.entries) == set(golden_manifest.entries)
@@ -70,22 +91,18 @@ def test_pipeline_resume_refuses_foreign_manifest(spark, transcripts, tmp_path):
     output dir before this fix)."""
     out = str(tmp_path / "run_foreign")
     other = transcripts.limit(2000)
-    run_pipeline(spark, other, out, commit_groups=3, resume=False, write_aggregates=False)
+    run_pipeline(spark, other, out, commit_groups=3, resume=False)
     stale_rows = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl")).metrics()["rows"]
 
-    res = run_pipeline(
-        spark, transcripts, out, commit_groups=3, resume=True, write_aggregates=False
-    )
+    res = run_pipeline(spark, transcripts, out, commit_groups=3, resume=True)
     # full recompute on the real input — no stale rows leak into the total
     assert res.n_rows == transcripts.count() != stale_rows
     m = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl"))
     assert len(m.entries) == 3
     assert _routed_fingerprint(spark, os.path.join(out, "routed")) == _routed_fingerprint(
         spark,
-        run_pipeline(
-            spark, transcripts, str(tmp_path / "run_clean"), commit_groups=3,
-            resume=False, write_aggregates=False,
-        ).routed_dir,
+        run_pipeline(spark, transcripts, str(tmp_path / "run_clean"), commit_groups=3,
+                     resume=False).routed_dir,
     )
 
 
@@ -95,7 +112,7 @@ def test_pipeline_resume_reuses_persisted_dictionary(spark, transcripts, tmp_pat
     import json as _json
 
     out = str(tmp_path / "run_dict")
-    res1 = run_pipeline(spark, transcripts, out, commit_groups=2, resume=False, write_aggregates=False)
+    res1 = run_pipeline(spark, transcripts, out, commit_groups=2, resume=False)
     dict_path = os.path.join(out, "_dictionary.json")
     saved = _json.load(open(dict_path))
     assert saved["templates"] == res1.dictionary.templates
@@ -106,7 +123,7 @@ def test_pipeline_resume_reuses_persisted_dictionary(spark, transcripts, tmp_pat
     lines = open(mpath).read().strip().splitlines()
     with open(mpath, "w") as f:
         f.write(lines[0] + "\n" + lines[1] + "\n")
-    res2 = run_pipeline(spark, transcripts, out, commit_groups=2, resume=True, write_aggregates=False)
+    res2 = run_pipeline(spark, transcripts, out, commit_groups=2, resume=True)
     assert res2.dictionary.templates == res1.dictionary.templates
     assert res2.dictionary.pool.mapping() == res1.dictionary.pool.mapping()
 
@@ -134,7 +151,7 @@ def test_params_analytics_over_sink(spark, transcripts, tmp_path):
     from sherlog_parser_spark.plans.pipeline import run_pipeline
 
     out = str(tmp_path / "pa")
-    run_pipeline(spark, transcripts, out, commit_groups=1, resume=False, write_aggregates=False)
+    run_pipeline(spark, transcripts, out, commit_groups=1, resume=False)
     sink = spark.read.parquet(os.path.join(out, "routed"))
     assert "parameters" in sink.columns
     with_params = sink.filter(F.size("parameters") > 0)
@@ -169,7 +186,7 @@ def test_manifest_crash_before_rename_is_ignored(spark, transcripts, tmp_path):
     from sherlog_parser_spark.fs import temp_path
 
     out = str(tmp_path / "stray")
-    run_pipeline(spark, transcripts, out, commit_groups=3, resume=False, write_aggregates=False)
+    run_pipeline(spark, transcripts, out, commit_groups=3, resume=False)
     golden = _routed_fingerprint(spark, os.path.join(out, "routed"))
     mpath = os.path.join(out, "_manifest.jsonl")
     golden_manifest = CheckpointManifest.load(mpath)
@@ -182,7 +199,7 @@ def test_manifest_crash_before_rename_is_ignored(spark, transcripts, tmp_path):
     with open(temp_path(mpath), "w") as f:
         f.write("\n".join(lines) + "\n" + lines[-1][: len(lines[-1]) // 2])
 
-    run_pipeline(spark, transcripts, out, commit_groups=3, resume=True, write_aggregates=False)
+    run_pipeline(spark, transcripts, out, commit_groups=3, resume=True)
     assert _routed_fingerprint(spark, os.path.join(out, "routed")) == golden
     m2 = CheckpointManifest.load(mpath)
     assert set(m2.entries) == set(golden_manifest.entries)
@@ -223,8 +240,7 @@ def test_resume_false_replaces_previous_outputs(spark, transcripts, tmp_path, mo
 
     monkeypatch.setattr(checkpoint, "commit_groups", crash)
     with pytest.raises(RuntimeError, match="injected crash"):
-        run_pipeline(spark, transcripts.limit(100), out, commit_groups=2, resume=False,
-                     write_aggregates=False)
+        run_pipeline(spark, transcripts.limit(100), out, commit_groups=2, resume=False)
     assert [p for p in leftovers if os.path.exists(os.path.join(out, p))] == []
 
 
@@ -237,9 +253,9 @@ def test_resume_false_replaces_uri_run(spark, transcripts, tmp_path, monkeypatch
     monkeypatch.chdir(cwd)
     local = tmp_path / "out_uri"
     out = local.as_uri()
-    run_pipeline(spark, transcripts, out, commit_groups=2, resume=False, write_aggregates=False)
+    run_pipeline(spark, transcripts, out, commit_groups=2, resume=False)
     second = transcripts.filter(F.hash("conv_id") % 4 == 0)
-    res = run_pipeline(spark, second, out, commit_groups=2, resume=False, write_aggregates=False)
+    res = run_pipeline(spark, second, out, commit_groups=2, resume=False)
     assert 0 < res.n_rows < transcripts.count()
     assert spark.read.parquet(res.routed_dir).count() == res.n_rows == second.count()
     assert os.listdir(cwd) == []
@@ -289,7 +305,7 @@ def test_route_write_runs_full_width(spark, single_split, tmp_path, monkeypatch)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", tagged)
     out = str(tmp_path / "width")
-    run_pipeline(spark, single_split, out, commit_groups=2, resume=False, write_aggregates=False)
+    run_pipeline(spark, single_split, out, commit_groups=2, resume=False)
 
     st = sc.statusTracker()
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -316,9 +332,9 @@ def test_groups_in_flight_match_one_group(spark, single_split, tmp_path):
         return got
 
     one = str(tmp_path / "g1")
-    run_pipeline(spark, single_split, one, commit_groups=1, resume=False, write_aggregates=False)
+    run_pipeline(spark, single_split, one, commit_groups=1, resume=False)
     four = str(tmp_path / "g4")
-    run_pipeline(spark, single_split, four, commit_groups=4, resume=False, write_aggregates=False)
+    run_pipeline(spark, single_split, four, commit_groups=4, resume=False)
     assert per_dir(four) == per_dir(one)
     assert _manifest_rows_fp(four) == _manifest_rows_fp(one)
     assert len(CheckpointManifest.load(os.path.join(four, "_manifest.jsonl")).entries) == 4
