@@ -1,32 +1,34 @@
-"""The commit protocol of both batch jobs — a run-validated manifest
-and a sink written in hash-disjoint commit groups — and every thread a
-batch run starts.
+"""The commit protocol of both batch jobs and of the streaming route —
+a run-validated manifest and a sink written in units the manifest
+records — and every thread a batch run starts.
 
 Modeled on the reference's only resumable construct — the eval-pipeline
 JSON result cache (src/eval/eval_pipeline.py:99-107,139-145) and metrics
 sink (src/core/metrics.py:84-113) — generalized to partition groups.
 The paper's "file-per-task commit" replaces the reference's per-batch
 bulk insert, and this module owns it for ``plans.pipeline.run_pipeline``
-(the routed sink) and ``plans.curation.run_curation_pipeline`` (the
-cleaned sink):
+(the routed sink), ``plans.curation.run_curation_pipeline`` (the
+cleaned sink) and ``streaming.pipeline.start_stream_route`` (the
+streamed routed sink):
 
 * ``open_run`` loads ``<out_dir>/_manifest.jsonl`` and checks its run
   header (the caller's fingerprint of input plan + config).  A
   different run, or ``resume=False``, deletes the sink and side files
-  first, so a resume never mixes groups of two runs.
-* ``commit_groups`` writes every uncommitted group
-  ``pmod(group_col, n_groups) == g`` with the caller's ``write``
-  callable.  Rows and ``bit_xor(xxhash64(*fp_cols))`` are observed on
-  the write job itself (``Observation``: no extra pass), and the group
-  adds one manifest line
+  first, so a resume never mixes units of two runs.
+* ``commit_unit`` writes one unit (a commit group, a micro-batch) with
+  the caller's ``write`` callable.  Rows and
+  ``bit_xor(xxhash64(*fp_cols))`` are observed on the write job itself
+  (``Observation``: no extra pass), and the unit adds one manifest line
 
       {unit, rows, input_fingerprint, sink, wall_sec, committed_at}
 
-  when its write returns.  Two groups are in flight at once: the
-  driver-side file commit of one leaves executors idle, and under FIFO
-  the other group's tasks fill exactly those gaps.  The groups write
-  disjoint partition values, each under its own ``.spark-staging-*``
-  directory (dynamic partition overwrite), so they are safe together.
+  when its write returns.
+* ``commit_groups`` commits every uncommitted group ``pmod(group_col,
+  n_groups) == g``, two in flight: the driver-side file commit of one
+  leaves executors idle, and under FIFO the other group's tasks fill
+  exactly those gaps.  The groups write disjoint partition values, each
+  under its own ``.spark-staging-*`` directory (dynamic partition
+  overwrite), so they are safe together.
 
 Threads.  A run's side job (the pipeline's aggregates, curation's fate
 count) overlaps the group writes, and the caller passes it to
@@ -44,13 +46,15 @@ scheduler pool) and session tags, so ``cancelJobGroup`` and
 4. a group error is raised first; otherwise the side job's error is
    raised after the join.
 
-A killed run loses at most the groups in flight; a rerun skips committed
+A killed run loses at most the units in flight; a rerun skips committed
 units and ends with a bit-identical sink (tested, with faults injected
-into a group write and into the pipeline's aggregates).  Each commit
-replaces the whole manifest atomically (``fs.write_atomic``), so a crash
-never leaves a torn line.  All file I/O here goes through the out_dir's
-Hadoop FileSystem (``fs``): plain, ``file://`` and ``hdfs://`` out_dirs
-resume alike; object stores without atomic rename are not supported.
+into a group write, the pipeline's aggregates and the stream's commit
+points).  Each commit replaces the whole manifest atomically
+(``fs.write_atomic``, under the manifest's lock), so a crash never
+leaves a torn line.  All file I/O here goes through the out_dir's Hadoop
+FileSystem (``fs``): plain and ``file://`` out_dirs are tested,
+``hdfs://`` is not; object stores without atomic rename are not
+supported.
 """
 
 from __future__ import annotations
@@ -80,9 +84,14 @@ GROUPS_IN_FLIGHT = 2
 
 @dataclass
 class CheckpointManifest:
+    """The header and unit lines of one manifest file, rewritten whole on
+    each commit: a caller may drop ``entries`` before a commit to keep a
+    single high-water-mark line (the stream route does)."""
+
     path: str
     entries: dict[str, dict] = field(default_factory=dict)
     run_header: dict | None = None
+    _lock: threading.Lock = field(default_factory=threading.Lock, init=False, repr=False)
 
     @classmethod
     def load(cls, path: str) -> "CheckpointManifest":
@@ -124,12 +133,13 @@ class CheckpointManifest:
 
     def _write(self, entry: dict) -> None:
         """Record ``entry``; rewrite the header + every entry, in order."""
-        if entry["unit"] == RUN_HEADER_UNIT:
-            self.run_header = entry
-        else:
-            self.entries[entry["unit"]] = entry
-        lines = [e for e in (self.run_header, *self.entries.values()) if e]
-        fs.write_atomic(self.path, "".join(json.dumps(e) + "\n" for e in lines))
+        with self._lock:
+            if entry["unit"] == RUN_HEADER_UNIT:
+                self.run_header = entry
+            else:
+                self.entries[entry["unit"]] = entry
+            lines = [e for e in (self.run_header, *self.entries.values()) if e]
+            fs.write_atomic(self.path, "".join(json.dumps(e) + "\n" for e in lines))
 
     def metrics(self) -> dict:
         return {
@@ -164,8 +174,8 @@ def open_run(out_dir: str, run_fp: str, resume: bool, outputs: list[str]) -> Che
 
 
 def _observed(obs: Observation) -> tuple[int, int]:
-    """``(rows, fp)`` observed on a group's write.  The write job of an
-    empty group may run no task and then posts no metrics (an empty row,
+    """``(rows, fp)`` observed on a unit's write.  The write job of an
+    empty unit may run no task and then posts no metrics (an empty row,
     which ``Observation.get`` fails on).  Both that and a write of zero
     rows give 0 rows and fingerprint 0, the identity of XOR."""
     jrow = obs._jo.getRow()
@@ -173,6 +183,26 @@ def _observed(obs: Observation) -> tuple[int, int]:
         return 0, 0
     m = obs.get
     return int(m["rows"]), m["fp"] or 0
+
+
+def commit_unit(
+    manifest: CheckpointManifest,
+    unit: str,
+    frame: DataFrame,
+    fp_cols: list[str],
+    sink: str,
+    write: Callable[[DataFrame], None],
+) -> int:
+    """Write ``frame`` with ``write``, then commit ``unit`` with the rows
+    and fingerprint observed on the write.  Returns the rows."""
+    t0 = time.perf_counter()
+    obs = Observation()
+    write(frame.observe(
+        obs, F.count(F.lit(1)).alias("rows"), F.bit_xor(F.xxhash64(*fp_cols)).alias("fp")
+    ))
+    rows, fp = _observed(obs)
+    manifest.commit(unit, rows, str(fp), sink, time.perf_counter() - t0)
+    return rows
 
 
 def commit_groups(
@@ -192,21 +222,12 @@ def commit_groups(
     for ``alongside`` after the last group.  The first failing group
     write raises after the groups in flight finish and ``alongside``
     is joined; groups not yet started are cancelled."""
-    lock = threading.Lock()
-
     def one(g: int) -> int:
         unit = f"bucket_group={g}"
         if manifest.is_committed(unit):
             return int(manifest.entries[unit]["rows"])
-        t0 = time.perf_counter()
-        obs = Observation()
-        write(frame.filter(F.pmod(F.col(group_col), F.lit(n_groups)) == g).observe(
-            obs, F.count(F.lit(1)).alias("rows"), F.bit_xor(F.xxhash64(*fp_cols)).alias("fp")
-        ))
-        rows, fp = _observed(obs)
-        with lock:
-            manifest.commit(unit, rows, str(fp), sink, time.perf_counter() - t0)
-        return rows
+        group = frame.filter(F.pmod(F.col(group_col), F.lit(n_groups)) == g)
+        return commit_unit(manifest, unit, group, fp_cols, sink, write)
 
     side_error: list[BaseException] = []
 

@@ -1,10 +1,10 @@
 """Small files on the Hadoop FileSystem of their path (plain, ``file://``,
-``hdfs://``): the checkpoint manifest, the side files and the stream
-compactor's markers and renames.  ``write_atomic`` writes a hidden temp
-file and renames it into place, so readers see the old file or the new
-one, never a torn one.  That needs an atomic rename (local filesystems,
-HDFS); object stores without one (S3A) need an output committer and are
-not supported.
+``hdfs://``): the checkpoint manifest, the side files and the streaming
+route's publish of a staged micro-batch.  ``write_atomic`` writes a
+hidden temp file and renames it into place, so readers see the old file
+or the new one, never a torn one.  That needs an atomic rename (local
+filesystems, HDFS); object stores without one (S3A) need an output
+committer and are not supported.
 """
 
 from __future__ import annotations
@@ -15,11 +15,11 @@ from py4j.java_gateway import JavaClass
 from pyspark import SparkContext
 
 
-def _path(sc: SparkContext, path: str):
-    """A Hadoop ``Path``.  The class is named directly: looking it up
-    through ``sc._jvm.org.apache...`` costs one Py4J round trip per
-    package level."""
-    return JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
+def _path(sc: SparkContext, *parts):
+    """A Hadoop ``Path(str)`` or ``Path(parent, child)``.  The class is
+    named directly: looking it up through ``sc._jvm.org.apache...`` costs
+    one Py4J round trip per package level."""
+    return JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(*parts)
 
 
 def handle(path: str):
@@ -76,3 +76,33 @@ def rename_replacing(fs, src, dst) -> None:
         fs.delete(dst, False)
         if not fs.rename(src, dst):
             raise IOError(f"rename {src} -> {dst} failed; {src} left in place")
+
+
+def publish(src: str, dst: str) -> None:
+    """Move every file under ``src`` but ``_*``/``.*`` ones to the same
+    relative path under ``dst``, then delete ``src``.  A directory whose
+    target does not exist yet moves in one rename, with all it holds.
+    Resumable: a moved file is gone from ``src``, so a rerun moves only
+    the rest, and a file still in ``src`` is the authoritative copy,
+    which replaces any file at its target.  A missing ``src`` is a
+    no-op."""
+    sc = SparkContext._active_spark_context
+    fs, root = handle(src)
+    if not fs.exists(root):
+        return
+
+    def move(src_dir, dst_dir) -> None:
+        for st in fs.listStatus(src_dir):
+            p = st.getPath()
+            name = p.getName()
+            if name.startswith(("_", ".")):
+                continue
+            target = _path(sc, dst_dir, name)
+            if st.isDirectory() and fs.exists(target):
+                move(p, target)
+            else:
+                rename_replacing(fs, p, target)
+
+    fs.mkdirs(_path(sc, dst))
+    move(root, _path(sc, dst))
+    fs.delete(root, True)

@@ -10,7 +10,8 @@ generalized per north_rule: enriched turns land under
 an Iceberg table — SURVEY §7.3.6).  ``write_routed`` is the one writer
 of that layout and its encoding: ``run_pipeline`` calls it per commit
 group (``checkpoint.commit_groups``), and the streaming route calls it
-per micro-batch and per compacted batch.
+per micro-batch, into a staging directory it then publishes into the
+same layout (``streaming.pipeline.start_stream_route``).
 
 Width: every route exchange goes through ``route_exchange``, an
 explicit ``repartition(n_parts, template_id, tool, conv_bucket)`` with

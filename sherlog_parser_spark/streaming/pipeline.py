@@ -8,12 +8,9 @@ over ``readStream``, with
 * event-time tumbling windows + watermark for the A2/A12 counts
   (deliberate deviation documented in SURVEY §2.10: the reference
   includes late data by batch recompute; a watermark drops it),
-* ``foreachBatch`` fan-out for routing — idempotent under micro-batch
-  REPLAY: the batch_id is a leading partition column and each batch is
-  written by ``route.write_routed`` (the batch sink's layout and
-  encoding) over its own ``batch_id=N`` directory, so a batch replayed
-  after a crash (sink written, offsets not committed) rewrites exactly
-  that directory instead of appending duplicates,
+* ``foreachBatch`` fan-out for routing into the batch route layout,
+  exactly-once under micro-batch REPLAY through the batch jobs' commit
+  protocol (``start_stream_route``),
 * the frozen template dictionary broadcast per query (built once from a
   bounded history batch — matching the "freeze then stream" deployment
   shape).
@@ -21,10 +18,13 @@ over ``readStream``, with
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark import fs
+from sherlog_parser_spark import checkpoint, fs
 from sherlog_parser_spark.plans.enrich import enrich_stage
 from sherlog_parser_spark.plans.parse import parse_stage
 from sherlog_parser_spark.plans.route import conv_bucket_expr, route_cols, write_routed
@@ -77,112 +77,53 @@ def start_stream_route(
     n_buckets: int = 4,
     trigger_available_now: bool = True,
 ):
-    """foreachBatch fan-out routing; returns the StreamingQuery."""
+    """foreachBatch fan-out routing into the batch route layout of
+    ``out_dir``; returns the StreamingQuery.  Each micro-batch commits
+    through ``checkpoint`` as a batch job's group does:
+
+    1. STAGE: ``write_routed`` into ``<out_dir>/_staging`` (static
+       overwrite: a half-staged batch is simply restaged);
+    2. COMMIT: unit ``batch_id=N`` replaces the previous batch's line in
+       the manifest.  Spark replays at most the last micro-batch whose
+       offsets it did not commit, so one high-water mark is enough;
+    3. PUBLISH: ``fs.publish`` renames the staged files into the layout
+       (their names carry the write job's UUID, so batches never collide).
+
+    A replayed batch that the manifest holds only publishes what is left
+    in staging.  The run fingerprint is the query id Spark keeps in
+    ``<checkpoint_dir>/metadata``, so a reset checkpoint is a new run and
+    ``checkpoint.open_run`` clears the sink before its first batch, while
+    a restart from the same checkpoint keeps it whatever its parameters."""
     enriched = streaming_enrich(stream, template_dict)
     routed = enriched.select(*route_cols(enriched)).withColumn(
         "conv_bucket", conv_bucket_expr("conv_id", n_buckets)
     )
+    staging = os.path.join(out_dir, "_staging")
+    manifest: checkpoint.CheckpointManifest | None = None
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # exactly-once under replay: batch content is deterministic from
-        # the checkpointed offsets, so overwriting this batch_id's own
-        # directory is idempotent — a crash between sink write and offset
-        # commit no longer duplicates rows (r1 ADVICE)
-        write_routed(batch_df, f"{out_dir}/batch_id={batch_id}", partition_overwrite="static")
+        nonlocal manifest
+        # opened by the first batch: start() can run one before it returns,
+        # and the query id is in the checkpoint by then.  The query id
+        # alone is the run: a restart from the same checkpoint never
+        # replays its committed batches, so no other parameter may clear
+        # the sink
+        if manifest is None:
+            query_id = json.loads(fs.read_text(os.path.join(checkpoint_dir, "metadata")))["id"]
+            manifest = checkpoint.open_run(out_dir, query_id, True, [out_dir])
+        unit = f"batch_id={batch_id}"
+        if not manifest.is_committed(unit):
+            manifest.entries.clear()  # this batch's line replaces the last
+            checkpoint.commit_unit(
+                manifest, unit, batch_df, ["conv_id", "turn_idx"], out_dir,
+                lambda df: write_routed(df, staging, partition_overwrite="static"),
+            )
+        fs.publish(staging, out_dir)
 
     writer = routed.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint_dir)
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def compact_stream_output(
-    spark,
-    stream_out_dir: str,
-    compacted_dir: str,
-    up_to_batch_id: int,
-) -> list[int]:
-    """Fold finished ``batch_id=N`` partitions of the streaming route sink
-    into the BATCH route layout (template_id/tool/conv_bucket — no
-    batch_id column).
-
-    Why: batch_id as the leading partition column makes replay idempotent
-    (each micro-batch overwrites exactly its own directory), but a
-    long-running stream then grows one top-level directory per
-    micro-batch forever — listing/metadata cost grows unboundedly, and
-    readers of the streaming sink see an extra batch_id column the batch
-    sink doesn't have.  Periodic compaction bounds both: old batches
-    migrate into the batch layout, the live tail keeps replay safety.
-
-    ``up_to_batch_id`` MUST be below the last committed batch (a batch
-    that could still be replayed after a crash must keep its own
-    directory, or the replay would duplicate rows the compactor already
-    moved).  Pass e.g. ``max(committed) - 1`` from the checkpoint.
-
-    Idempotent per batch via stage -> marker -> publish (r3 advice: a
-    bare ``mode("append")`` before the marker duplicated the batch when
-    the process died between the append commit and the marker create):
-
-    1. STAGE: rewrite the batch into a deterministic per-batch staging
-       dir with ``mode("overwrite")`` — a crashed half-stage is simply
-       overwritten on rerun;
-    2. MARK: create ``<compacted_dir>/_compacted/batch_id=N`` only after
-       the staging write committed;
-    3. PUBLISH: rename each staged data file into the final partition
-       layout (file names carry the writing job's UUID, so renames never
-       collide), then delete staging and the source batch dir.
-
-    Every crash point replays cleanly: before the marker -> restage
-    (overwrite); after the marker -> skip the write, move whatever is
-    still in staging (already-moved files are gone from it), finish the
-    deletes.  Markers, renames and deletes go through ``fs``, as the
-    batch commit's do; a staged file that still exists is the
-    authoritative copy, so it replaces any file at its target (a partial
-    copy, a name collision).  Returns the batch ids compacted this call.
-    """
-    hfs, out_path = fs.handle(stream_out_dir)
-    if not hfs.exists(out_path):
-        return []
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    dest_root = Path(compacted_dir)
-
-    def _publish(src_dir, rel=""):
-        """Move staged data files into compacted_dir, preserving the
-        partition-directory structure; resumable (moved files vanish
-        from staging, so a rerun only moves the remainder)."""
-        for st in hfs.listStatus(src_dir):
-            nm = st.getPath().getName()
-            if nm.startswith("_") or nm.startswith("."):
-                continue  # _SUCCESS / hidden — never published
-            if st.isDirectory():
-                _publish(st.getPath(), f"{rel}{nm}/")
-            else:
-                tgt_dir = Path(dest_root, rel.rstrip("/")) if rel else dest_root
-                hfs.mkdirs(tgt_dir)
-                fs.rename_replacing(hfs, st.getPath(), Path(tgt_dir, nm))
-
-    done: list[int] = []
-    for status in hfs.listStatus(out_path):
-        name = status.getPath().getName()
-        if not name.startswith("batch_id="):
-            continue
-        bid = int(name.split("=", 1)[1])
-        if bid > up_to_batch_id:
-            continue
-        marker = f"{compacted_dir}/_compacted/{name}"
-        staging = f"{compacted_dir}/_staging_{name}"
-        if not fs.exists(marker):
-            write_routed(
-                spark.read.parquet(str(status.getPath())), staging,
-                partition_overwrite="static",
-            )
-            fs.write_atomic(marker, "")
-        if fs.exists(staging):
-            _publish(Path(staging))
-            fs.delete(staging)
-        hfs.delete(status.getPath(), True)
-        done.append(bid)
-    return sorted(done)
 
 
 def streaming_count_anomaly_flags(
@@ -242,10 +183,10 @@ def streaming_curation(
       the anomaly count baseline).
 
     Near-dedup (connected components) and substring cuts are
-    corpus-global by nature and stay batch: run them in the periodic
-    compaction pass, exactly how production curation pipelines split
-    online/offline stages.  Returns the cleaned stream (doc_id, ts,
-    text); pair with ``writeStream``/``foreachBatch``."""
+    corpus-global by nature and stay batch: run the batch curation job
+    (``plans.curation``) over what the stream kept, as production
+    curation pipelines split online/offline stages.  Returns the cleaned
+    stream (doc_id, ts, text); pair with ``writeStream``/``foreachBatch``."""
     from sherlog_parser_spark.functions.pii import redact_pii_expr
     from sherlog_parser_spark.plans.curation import with_quality_reason
 

@@ -4,11 +4,15 @@ batch results exactly (counts + routed rows)."""
 from __future__ import annotations
 
 import glob
+import os
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from sherlog_parser_spark import fs
+from sherlog_parser_spark.checkpoint import CheckpointManifest
 from sherlog_parser_spark.plans.aggregate import tool_usage_windowed
 from sherlog_parser_spark.plans.dictionary import build_template_dictionary
 from sherlog_parser_spark.plans.enrich import enrich_stage
@@ -28,6 +32,35 @@ def stream_setup(spark, transcripts, tmp_path_factory):
     parsed = parse_stage(spark.read.parquet(src))
     tdict = build_template_dictionary(parsed)
     return src, tdict, str(root)
+
+
+ROUTE_KEY = ["conv_id", "turn_idx", "template_id", "tool"]
+
+
+def _multiset(df) -> Counter:
+    """Row counts per ``ROUTE_KEY``: a set would hide a duplicated row."""
+    return Counter(tuple(r) for r in df.select(*ROUTE_KEY).collect())
+
+
+def _batch_multiset(spark, src, tdict) -> Counter:
+    return _multiset(enrich_stage(parse_stage(spark.read.parquet(src)), tdict.df,
+                                  with_params=False))
+
+
+def _run_route(spark, src, tdict, out, ckpt, files_per_trigger=2, n_buckets=4):
+    q = start_stream_route(read_transcript_stream(spark, src, files_per_trigger), tdict.df,
+                           out, ckpt, n_buckets)
+    q.awaitTermination(180)
+    q.stop()
+
+
+def _assert_sink_is_batch(spark, src, tdict, out):
+    """The streamed sink holds every batch row exactly once, in the batch
+    layout, with no staging left and one batch line in the manifest."""
+    assert _multiset(spark.read.parquet(out)) == _batch_multiset(spark, src, tdict)
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    with open(os.path.join(out, "_manifest.jsonl")) as f:
+        assert len(f.read().splitlines()) == 2  # run header + high-water mark
 
 
 def test_streaming_counts_match_batch(spark, stream_setup):
@@ -65,177 +98,92 @@ def test_streaming_route_matches_batch(spark, stream_setup):
     out = f"{root}/routed_stream"
     q = start_stream_route(stream, tdict.df, out, f"{root}/ckpt_route")
     q.awaitTermination(180)
-    sink = spark.read.parquet(out)
-    batch = enrich_stage(parse_stage(spark.read.parquet(src)), tdict.df, with_params=False)
-    got = {
-        (r["conv_id"], r["turn_idx"], r["template_id"], r["tool"])
-        for r in sink.select("conv_id", "turn_idx", "template_id", "tool").collect()
-    }
-    expected = {
-        (r["conv_id"], r["turn_idx"], r["template_id"], r["tool"])
-        for r in batch.select("conv_id", "turn_idx", "template_id", "tool").collect()
-    }
-    assert got == expected
+    assert "batch_id" not in spark.read.parquet(out).columns  # the batch route layout
+    _assert_sink_is_batch(spark, src, tdict, out)
     # the batch sink's per-column encoding: dictionary pages for the
     # low-cardinality columns, none for the text payload.  parquet falls
     # back to plain encoding where a dictionary does not pay (a few-row
     # file), so role is asked of some file, text of every file.
     chunks = []
-    for part in glob.glob(f"{out}/batch_id=*/template_id=*/tool=*/conv_bucket=*/part-*.parquet"):
+    for part in glob.glob(f"{out}/template_id=*/tool=*/conv_bucket=*/part-*.parquet"):
         meta = pq.ParquetFile(part).metadata
         for g in range(meta.num_row_groups):
             rg = meta.row_group(g)
             chunks.append({rg.column(i).path_in_schema: rg.column(i) for i in range(rg.num_columns)})
+    assert chunks
     assert any(c["role"].has_dictionary_page for c in chunks)
     assert not any(c["text"].has_dictionary_page for c in chunks)
 
 
-def test_compact_stream_output_folds_batches_into_batch_layout(spark, stream_setup):
-    """r3 ADVICE: batch_id-leading partitions grow one top-level dir per
-    micro-batch forever.  Compaction must fold finished batches into the
-    batch route layout (no batch_id column), keep the live tail, lose no
-    rows, and be idempotent on rerun."""
-    from sherlog_parser_spark.streaming.pipeline import compact_stream_output
+def _fail_commit(monkeypatch):
+    """Micro-batch 1 is staged, then its manifest commit fails."""
+    commit = CheckpointManifest.commit
 
-    src, tdict, root = stream_setup
-    stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    out = f"{root}/routed_compact"
-    q = start_stream_route(stream, tdict.df, out, f"{root}/ckpt_compact")
-    q.awaitTermination(180)
+    def failing(self, unit, *args, **kwargs):
+        if unit == "batch_id=1":
+            raise RuntimeError("injected commit failure")
+        return commit(self, unit, *args, **kwargs)
 
-    batch_ids = sorted(
-        int(r["batch_id"]) for r in spark.read.parquet(out).select("batch_id").distinct().collect()
-    )
-    assert len(batch_ids) >= 2, "fixture must produce multiple micro-batches"
-    keep_tail = batch_ids[-1]
-    compacted_dir = f"{root}/routed_compacted"
-
-    done = compact_stream_output(spark, out, compacted_dir, up_to_batch_id=keep_tail - 1)
-    assert done == batch_ids[:-1]
-    # rerun: nothing left to do (markers + deleted dirs)
-    assert compact_stream_output(spark, out, compacted_dir, up_to_batch_id=keep_tail - 1) == []
-
-    compacted = spark.read.parquet(compacted_dir)
-    assert "batch_id" not in compacted.columns  # batch route layout
-    tail = spark.read.parquet(out)
-    assert sorted(int(r["batch_id"]) for r in tail.select("batch_id").distinct().collect()) == [keep_tail]
-
-    key = ["conv_id", "turn_idx", "template_id", "tool"]
-    got = {tuple(r) for r in compacted.select(*key).collect()} | {
-        tuple(r) for r in tail.select(*key).collect()
-    }
-    batch = enrich_stage(parse_stage(spark.read.parquet(src)), tdict.df, with_params=False)
-    expected = {tuple(r) for r in batch.select(*key).collect()}
-    assert got == expected
+    monkeypatch.setattr(CheckpointManifest, "commit", failing)
 
 
-def test_compact_stream_output_crash_replay_no_duplicates(spark, stream_setup):
-    """r4 ADVICE (medium): the r3 compactor appended BEFORE creating the
-    marker, so a crash between the append commit and the marker create
-    duplicated the batch on rerun.  Simulate both crash points of the
-    stage->mark->publish rewrite and assert MULTISET equality (a set
-    compare would hide exactly the duplication being tested)."""
-    from sherlog_parser_spark.streaming.pipeline import compact_stream_output
+def _fail_publish(monkeypatch):
+    """Micro-batch 0 commits, publishes one directory, then its publish
+    fails (into an empty sink, a staged directory moves in one rename)."""
+    rename = fs.rename_replacing
+    moved = []
 
-    src, tdict, root = stream_setup
-    stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    out = f"{root}/routed_crash"
-    q = start_stream_route(stream, tdict.df, out, f"{root}/ckpt_crash")
-    q.awaitTermination(180)
+    def failing(hfs, src, dst):
+        if "/_staging/" in src.toString():
+            if moved:
+                raise RuntimeError("injected publish failure")
+            moved.append(dst)
+        return rename(hfs, src, dst)
 
-    batch_ids = sorted(
-        int(r["batch_id"]) for r in spark.read.parquet(out).select("batch_id").distinct().collect()
-    )
-    assert len(batch_ids) >= 3, "fixture must produce >= 3 micro-batches"
-    b_a, b_b = batch_ids[0], batch_ids[1]
-    compacted_dir = f"{root}/routed_crash_compacted"
-
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path
-    fs = hp(out).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _stage(bid):
-        (
-            spark.read.parquet(f"{out}/batch_id={bid}")
-            .write.mode("overwrite")
-            .partitionBy("template_id", "tool", "conv_bucket")
-            .parquet(f"{compacted_dir}/_staging_batch_id={bid}")
-        )
-
-    # crash point 1: batch b_a fully staged, marker NOT yet created
-    _stage(b_a)
-    # crash point 2: batch b_b staged AND marked, publish never started
-    _stage(b_b)
-    fs.mkdirs(hp(compacted_dir, "_compacted"))
-    fs.create(hp(f"{compacted_dir}/_compacted/batch_id={b_b}"), True).close()
-
-    done = compact_stream_output(spark, out, compacted_dir, up_to_batch_id=batch_ids[-1] - 1)
-    assert done == batch_ids[:-1]
-    assert compact_stream_output(spark, out, compacted_dir, up_to_batch_id=batch_ids[-1] - 1) == []
-
-    key = ["conv_id", "turn_idx", "template_id", "tool"]
-
-    def _multiset(df):
-        return {
-            tuple(r)[:-1]: r["n"]
-            for r in df.groupBy(*key).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-
-    got = _multiset(spark.read.parquet(compacted_dir))
-    tail = _multiset(spark.read.parquet(out))
-    batch = enrich_stage(parse_stage(spark.read.parquet(src)), tdict.df, with_params=False)
-    expected = _multiset(batch)
-    merged = dict(got)
-    for k, v in tail.items():
-        merged[k] = merged.get(k, 0) + v
-    assert merged == expected
-    # no staging leftovers
-    names = [s.getPath().getName() for s in fs.listStatus(hp(compacted_dir))]
-    assert not any(n.startswith("_staging_") for n in names), names
+    monkeypatch.setattr(fs, "rename_replacing", failing)
 
 
-def test_compact_publish_replaces_mismatched_target(spark, tmp_path):
-    """r5 advice: when a rename fails because the target name already
-    exists, the benign skip must be LENGTH-VERIFIED — a partial/foreign
-    file at the target is replaced by the staged one, never trusted
-    (which would silently discard the batch's rows)."""
-    import os
+@pytest.mark.parametrize("inject", [_fail_commit, _fail_publish],
+                         ids=["staged-uncommitted", "committed-mid-publish"])
+def test_streaming_route_crash_point_replays_exactly(spark, stream_setup, tmp_path,
+                                                      monkeypatch, inject):
+    """A micro-batch fails at a commit point; the query restarted from the
+    same checkpoint replays it: an uncommitted batch is restaged, a
+    committed one only publishes what is left in staging."""
+    src, tdict, _ = stream_setup
+    out, ckpt = str(tmp_path / "routed"), str(tmp_path / "ckpt")
+    with monkeypatch.context() as m:
+        inject(m)
+        with pytest.raises(Exception, match="injected"):
+            _run_route(spark, src, tdict, out, ckpt)
+    assert os.path.isdir(os.path.join(out, "_staging"))  # the crash left work behind
+    _run_route(spark, src, tdict, out, ckpt)
+    _assert_sink_is_batch(spark, src, tdict, out)
 
-    from sherlog_parser_spark.streaming.pipeline import compact_stream_output
 
-    root = str(tmp_path)
-    out = f"{root}/routed"
-    compacted = f"{root}/compacted"
+def test_publish_replaces_mismatched_target(spark, tmp_path):
+    """A foreign file at a staged file's target path (a partial copy, a
+    name collision) is replaced by the staged file, never trusted, which
+    would silently drop the staged rows."""
+    from sherlog_parser_spark.plans.route import write_routed
+
+    out = str(tmp_path / "routed")
+    staging = f"{out}/_staging"
     rows = [("c1", 1, 7, "bash", 3), ("c2", 2, 7, "bash", 3), ("c3", 3, 8, "grep", 5)]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, template_id int, tool string, conv_bucket int"
     )
-    df.write.partitionBy("template_id", "tool", "conv_bucket").parquet(
-        f"{out}/batch_id=0"
-    )
-    # stage + mark (publish "crashed" before moving anything)
-    staging = f"{compacted}/_staging_batch_id=0"
-    spark.read.parquet(f"{out}/batch_id=0").write.partitionBy(
-        "template_id", "tool", "conv_bucket"
-    ).parquet(staging)
-    os.makedirs(f"{compacted}/_compacted", exist_ok=True)
-    open(f"{compacted}/_compacted/batch_id=0", "w").close()
-    # plant a foreign file at one staged part-file's target path
-    planted = 0
-    for dirpath, _dirs, files in os.walk(staging):
-        for f in files:
-            if f.startswith("part-") and not planted:
-                rel = os.path.relpath(dirpath, staging)
-                tgt_dir = os.path.join(compacted, rel)
-                os.makedirs(tgt_dir, exist_ok=True)
-                with open(os.path.join(tgt_dir, f), "w") as fh:
-                    fh.write("junk")  # wrong length, not parquet
-                planted += 1
-    assert planted == 1
-    assert compact_stream_output(spark, out, compacted, up_to_batch_id=0) == [0]
+    write_routed(df, staging, partition_overwrite="static")
+    [part] = glob.glob(f"{staging}/template_id=8/tool=grep/conv_bucket=5/part-*.parquet")
+    target = os.path.join(out, os.path.relpath(part, staging))
+    os.makedirs(os.path.dirname(target))
+    with open(target, "w") as fh:
+        fh.write("junk")  # wrong length, not parquet
+    fs.publish(staging, out)
+    assert not os.path.exists(staging)
     got = sorted(
         tuple(r)
-        for r in spark.read.parquet(compacted)
+        for r in spark.read.parquet(out)
         .select("conv_id", "turn_idx", "template_id", "tool", "conv_bucket")
         .collect()
     )
@@ -283,8 +231,10 @@ def test_stateful_sessionization(spark, stream_setup):
 
 def test_streaming_route_restart_resumes(spark, stream_setup, tmp_path):
     """Stop the routing query after the first micro-batch, restart from
-    the same checkpoint: no duplicates, final sink == batch (exactly-once
-    via checkpoint + idempotent-enough append within foreachBatch)."""
+    the same checkpoint with another ``n_buckets``: the same run, so the
+    sink keeps the committed batches' rows (Spark never replays them) and
+    ends up == batch with no duplicates (Spark's offset log + the sink's
+    manifest commit per batch)."""
     src, tdict, root = stream_setup
     out = str(tmp_path / "routed_restart")
     ckpt = str(tmp_path / "ckpt_restart")
@@ -301,16 +251,8 @@ def test_streaming_route_restart_resumes(spark, stream_setup, tmp_path):
     q.stop()
     q.awaitTermination(60)
 
-    stream2 = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    q2 = start_stream_route(stream2, tdict.df, out, ckpt, trigger_available_now=True)
-    q2.awaitTermination(180)
-
-    sink = spark.read.parquet(out)
-    batch = spark.read.parquet(src)
-    assert sink.count() == batch.count()  # no dupes, no loss
-    got = {(r["conv_id"], r["turn_idx"]) for r in sink.select("conv_id", "turn_idx").collect()}
-    expected = {(r["conv_id"], r["turn_idx"]) for r in batch.select("conv_id", "turn_idx").collect()}
-    assert got == expected
+    _run_route(spark, src, tdict, out, ckpt, n_buckets=8)
+    _assert_sink_is_batch(spark, src, tdict, out)
 
 
 def test_streaming_route_crash_replay_no_duplicates(spark, stream_setup, tmp_path):
@@ -318,21 +260,15 @@ def test_streaming_route_crash_replay_no_duplicates(spark, stream_setup, tmp_pat
     SUCCEEDED but whose offset commit was lost must not duplicate rows on
     restart.  Simulated by deleting the last commit marker from the
     checkpoint, forcing Structured Streaming to replay that micro-batch."""
-    import os
-
     src, tdict, root = stream_setup
     out = str(tmp_path / "routed_replay")
     ckpt = str(tmp_path / "ckpt_replay")
-
-    stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    q = start_stream_route(stream, tdict.df, out, ckpt, trigger_available_now=True)
-    q.awaitTermination(180)
-    q.stop()
+    _run_route(spark, src, tdict, out, ckpt)
 
     commits = sorted(
         f for f in os.listdir(os.path.join(ckpt, "commits")) if not f.startswith(".")
     )
-    assert len(commits) >= 2  # 6 files / 2 per trigger -> >= 3 batches
+    assert len(commits) >= 3  # 6 files / 2 per trigger
     # lose the last commit marker (and its hadoop checksum shadow — in a
     # real crash neither file would exist)
     os.remove(os.path.join(ckpt, "commits", commits[-1]))
@@ -340,17 +276,27 @@ def test_streaming_route_crash_replay_no_duplicates(spark, stream_setup, tmp_pat
     if os.path.exists(crc):
         os.remove(crc)
 
-    stream2 = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    q2 = start_stream_route(stream2, tdict.df, out, ckpt, trigger_available_now=True)
-    q2.awaitTermination(180)
-    q2.stop()
+    _run_route(spark, src, tdict, out, ckpt)
+    _assert_sink_is_batch(spark, src, tdict, out)
 
-    sink = spark.read.parquet(out)
-    batch = spark.read.parquet(src)
-    assert sink.count() == batch.count()  # replayed batch overwrote, not appended
-    got = {(r["conv_id"], r["turn_idx"]) for r in sink.select("conv_id", "turn_idx").collect()}
-    expected = {(r["conv_id"], r["turn_idx"]) for r in batch.select("conv_id", "turn_idx").collect()}
-    assert got == expected
+
+def test_streaming_route_reset_checkpoint_clears_sink(spark, stream_setup, tmp_path):
+    """A stream restarted under a live sink with a fresh checkpoint is a
+    new run: the sink ends up holding exactly the new run's rows, none of
+    the old run's."""
+    import shutil
+
+    src, tdict, root = stream_setup
+    out, ckpt = str(tmp_path / "routed"), str(tmp_path / "ckpt")
+    _run_route(spark, src, tdict, out, ckpt)
+    shutil.rmtree(ckpt)
+
+    small = str(tmp_path / "src_small")
+    spark.read.parquet(src).filter(F.col("conv_id") < "conv-00000040").repartition(2).write.parquet(
+        small
+    )
+    _run_route(spark, small, tdict, out, ckpt)
+    _assert_sink_is_batch(spark, small, tdict, out)
 
 
 def test_streaming_curation_matches_batch_subset(spark, tmp_path):
