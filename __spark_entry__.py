@@ -17,6 +17,7 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import sys
@@ -43,6 +44,7 @@ from sherlog_parser_spark.operators import dedup as DD
 from sherlog_parser_spark.operators import lm as LM
 from sherlog_parser_spark.operators import numeric as NUM
 from sherlog_parser_spark.operators import similarity as SIM
+from sherlog_parser_spark.session import CacheScope
 from sherlog_parser_spark.sources.readers import fan_out
 
 # fan_out is applied ONLY to queries whose results are partition- and
@@ -52,6 +54,11 @@ from sherlog_parser_spark.sources.readers import fan_out
 # their left-associative sum order stays file order, matching the
 # DuckDB oracle.
 VAR_ALT = "|".join(VAR_TYPES)
+
+# The one owner of the frames the queries cache: each queries() entry
+# releases it before it builds its frame, so at most one query's caches
+# are held at a time; a caller done with the last query releases it.
+QUERY_CACHE = CacheScope()
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -444,7 +451,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 
 def q_minhash_candidates(spark, sf_dir):
     docs = fan_out(_read(spark, sf_dir, "documents"))
-    return DD.minhash_dup_candidates(docs, "text", "doc_id", n=3, k=8, bands=4)
+    return DD.minhash_dup_candidates(docs, "text", "doc_id", n=3, k=8, bands=4, cache=QUERY_CACHE)
 
 
 def q_simhash(spark, sf_dir):
@@ -510,13 +517,11 @@ def q_semdedup_keep(spark, sf_dir):
     }
     centroids = [list(map(float, crows[i])) for i in range(1, 9)]
     emb = fan_out(emb)
-    # persist=True (r6): `base` (assignment + cent_q + norms, all
-    # interpreted 64-dim folds) is consumed by the skew guard, both pair
-    # sides and two output joins — persisting runs those folds once per
-    # row instead of five times.  The cached frame is query-local (tiny:
-    # one row per vector) and computed inside the timed region; Spark's
-    # ContextCleaner reclaims it when the frame goes out of scope.
-    return semdedup(emb, centroids, threshold=0.25, persist=True)
+    # cached (r6): `base` (assignment + cent_q + norms, all interpreted
+    # 64-dim folds) is consumed by the skew guard, both pair sides and
+    # two output joins — caching runs those folds once per row instead
+    # of five times (tiny: one row per vector)
+    return semdedup(emb, centroids, threshold=0.25, cache=QUERY_CACHE)
 
 
 def q_json_containment(spark, sf_dir):
@@ -545,7 +550,7 @@ def q_dedup_keep_docs(spark, sf_dir):
     )
 
     docs = _read(spark, sf_dir, "documents")
-    pairs = DD.minhash_dup_candidates(docs, "text", "doc_id", n=3, k=8, bands=4)
+    pairs = DD.minhash_dup_candidates(docs, "text", "doc_id", n=3, k=8, bands=4, cache=QUERY_CACHE)
 
     def keep(algo, comps):
         # both distributed loops by name: connected_components would
@@ -738,9 +743,8 @@ def q_dsir_weights(spark, sf_dir):
     # r6: ONE tokenize+hash+explode pass feeds both model fits and the
     # scoring join (was 3+ corpus-wide explode passes).  Count-exact
     # identical to train_dsir(docs, filter) + dsir_scores(docs, model);
-    # the persisted per-doc table is query-local (computed inside the
-    # timed region, never reused across runs).
-    per_doc = per_doc_bucket_counts(docs).persist()
+    # the per-doc table feeds both and is cached.
+    per_doc = QUERY_CACHE.keep(per_doc_bucket_counts(docs))
     model = train_dsir_shared(per_doc, docs.filter(F.col("lang") == "en").select("doc_id"))
     ids = docs.select(F.col("doc_id").alias("__id")).distinct()
     # no output orderBy (r6): the driver comparison is order-insensitive
@@ -844,7 +848,7 @@ def q_substring_dedup_apply(spark, sf_dir):
     over arrays bound as attributes; the per-doc span aggregate is
     bounded by tokens-per-doc, never corpus size."""
     docs = fan_out(_read(spark, sf_dir, "documents"))
-    return DD.substring_dedup_cut(docs, n=4, min_docs=2).orderBy("doc_id")
+    return DD.substring_dedup_cut(docs, n=4, min_docs=2, cache=QUERY_CACHE).orderBy("doc_id")
 
 
 def q_grok_parse(spark, sf_dir):
@@ -965,7 +969,7 @@ def q_shard_assignment(spark, sf_dir):
         "doc_id", TS.ws_token_count_expr("text").alias("n_tokens")
     )
     return (
-        assign_shards(docs, "n_tokens", "doc_id", shard_tokens=2000)
+        assign_shards(docs, "n_tokens", "doc_id", shard_tokens=2000, cache=QUERY_CACHE)
         .select("doc_id", "n_tokens", "shard_id")
         .orderBy("doc_id")
     )
@@ -1014,7 +1018,7 @@ def q_sequence_packing(spark, sf_dir):
         "doc_id", TS.ws_token_count_expr("text").alias("n_tokens")
     )
     return (
-        pack_sequences(docs, "n_tokens", "doc_id", seq_len=64)
+        pack_sequences(docs, "n_tokens", "doc_id", seq_len=64, cache=QUERY_CACHE)
         .select(
             "doc_id", "n_tokens", "seq_id", "doc_offset", "seq_offset", "piece_len"
         )
@@ -1035,9 +1039,8 @@ def q_curation_ledger(spark, sf_dir):
     train = docs.filter(F.col("doc_id") % 50 != 0)
     from sherlog_parser_spark.plans.curation import curation_dag
 
-    # no persist_registry: this query runs once per oracle session, and
-    # without a registry curation_dag persists nothing
-    cleaned, ledger = curation_dag(train, bench_docs=bench)
+    # the query caches what run_curation_pipeline caches
+    cleaned, ledger = curation_dag(train, bench_docs=bench, cache=QUERY_CACHE)
     out = ledger.join(
         cleaned.select("doc_id", F.md5("text").alias("cleaned_md5")), "doc_id", "left"
     )
@@ -1972,8 +1975,18 @@ def _oracle_sqls() -> dict[str, str]:
     }
 
 
+def _releasing(q: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
+    """``q`` that first releases the previous query's caches."""
+    @functools.wraps(q)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        QUERY_CACHE.release()
+        return q(spark, sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
+    return {name: _releasing(q) for name, q in {
         "template_freq": q_template_freq,
         "event_type_counts": q_event_type_counts,
         "normalized_templates": q_normalized_templates,
@@ -2033,7 +2046,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate": q_decontaminate,
         "timeseries_count_anomalies": q_timeseries_count_anomalies,
         "anomaly_incidents": q_anomaly_incidents,
-    }
+    }.items()}
 
 
 # Queries with no oracle_sql entry, and why: the driver records a weaker

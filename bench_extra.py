@@ -86,7 +86,7 @@ def run_curation(reps: int = 3) -> None:
 
     from sherlog_parser_spark import telemetry
     from sherlog_parser_spark.plans import curation
-    from sherlog_parser_spark.session import get_spark
+    from sherlog_parser_spark.session import CacheScope, get_spark
 
     spark = get_spark("bench-extra", master=f"local[{CPUS}]",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
@@ -107,11 +107,8 @@ def run_curation(reps: int = 3) -> None:
 
         job()  # pilot: cold codegen and JIT
         for _ in range(reps):
-            persisted: list = []
-            with telemetry.driver_counts(sc) as dag:
-                curation.curation_dag(kept, bench_docs=bench, persist_registry=persisted)
-            for frame in persisted:
-                frame.unpersist()
+            with CacheScope() as cache, telemetry.driver_counts(sc) as dag:
+                curation.curation_dag(kept, bench_docs=bench, cache=cache)
             t0 = time.perf_counter()
             with telemetry.driver_counts(sc) as whole:
                 phases = job()

@@ -137,7 +137,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from sherlog_parser_spark.plans.curation import run_curation_pipeline
-    from sherlog_parser_spark.session import get_spark
+    from sherlog_parser_spark.session import CacheScope, get_spark
 
     def _load_clf(spark, path, min_prob):
         from sherlog_parser_spark.operators.classifier import load_classifier
@@ -205,85 +205,86 @@ def main() -> int:
         )
         packing: dict = {}
         if args.shard_tokens > 0 or args.seq_len > 0:
-            from pyspark.sql import functions as F
+            # the sharding operators cache their range-partitioned input
+            # here until the sinks below are written
+            with CacheScope() as cache:
+                from pyspark.sql import functions as F
 
-            from sherlog_parser_spark.functions.textstats import ws_token_count_expr
-            from sherlog_parser_spark.operators.mixture import mixture_sample
-            from sherlog_parser_spark.operators.sharding import (
-                assign_shards,
-                pack_sequences,
-            )
-
-            survivors = (
-                spark.read.parquet(res.cleaned_dir)
-                .withColumn("n_tokens", ws_token_count_expr(args.text_col))
-                .filter(F.col("n_tokens") > 0)
-            )
-            if args.mixture_target > 0:
-                # the cleaned sink keeps only (id, text[, bucket]) — the
-                # domain column lives on the INPUT table; recover it with
-                # an equi-join on the id (AQE broadcasts if it fits)
-                dom = docs.select(args.id_col, args.mixture_domain_col)
-                survivors = mixture_sample(
-                    survivors.join(dom, args.id_col),
-                    args.mixture_domain_col,
-                    total_target=args.mixture_target,
-                    alpha=0.5,
-                )
-                packing["n_mixed"] = survivors.count()
-            if args.shard_tokens > 0:
-                sharded = assign_shards(
-                    survivors, "n_tokens", args.id_col, shard_tokens=args.shard_tokens
-                )
-                # repartition BY shard_id first: the task owning a shard
-                # writes its whole directory — one budget-sized file per
-                # shard, no cross-task interleaving
-                (
-                    sharded.repartition(F.col("shard_id"))
-                    .write.mode("overwrite")
-                    .partitionBy("shard_id")
-                    .parquet(f"{args.out}/shards")
-                )
-                sharded.release()
-                packing["n_shards"] = (
-                    spark.read.parquet(f"{args.out}/shards")
-                    .select("shard_id").distinct().count()
-                )
-            if args.seq_len > 0:
-                packed = pack_sequences(
-                    survivors, "n_tokens", args.id_col, seq_len=args.seq_len
-                )
-                (
-                    packed.repartitionByRange(F.col("seq_id"))
-                    .write.mode("overwrite")
-                    .parquet(f"{args.out}/sequences")
-                )
-                packed.release()
-                packing["n_sequences"] = (
-                    spark.read.parquet(f"{args.out}/sequences")
-                    .select("seq_id").distinct().count()
-                )
-            if args.seq_len > 0 and args.bpe_merges > 0:
-                from sherlog_parser_spark.operators.bpe import bpe_encode, train_bpe
+                from sherlog_parser_spark.functions.textstats import ws_token_count_expr
+                from sherlog_parser_spark.operators.mixture import mixture_sample
                 from sherlog_parser_spark.operators.sharding import (
-                    pack_array_sequences,
+                    assign_shards,
+                    pack_sequences,
                 )
 
-                model = train_bpe(survivors, args.text_col, n_merges=args.bpe_merges)
-                enc = bpe_encode(survivors, model.merges, args.text_col, args.id_col)
-                tok_seqs = pack_array_sequences(
-                    enc, "bpe_tokens", args.id_col, seq_len=args.seq_len
+                survivors = (
+                    spark.read.parquet(res.cleaned_dir)
+                    .withColumn("n_tokens", ws_token_count_expr(args.text_col))
+                    .filter(F.col("n_tokens") > 0)
                 )
-                (
-                    tok_seqs.repartitionByRange(F.col("seq_id"))
-                    .write.mode("overwrite")
-                    .parquet(f"{args.out}/packed_tokens")
-                )
-                tok_seqs.release()
-                packing["n_packed_token_seqs"] = (
-                    spark.read.parquet(f"{args.out}/packed_tokens").count()
-                )
-                packing["bpe_merges_learned"] = len(model.merges)
+                if args.mixture_target > 0:
+                    # the cleaned sink keeps only (id, text[, bucket]) — the
+                    # domain column lives on the INPUT table; recover it with
+                    # an equi-join on the id (AQE broadcasts if it fits)
+                    dom = docs.select(args.id_col, args.mixture_domain_col)
+                    survivors = mixture_sample(
+                        survivors.join(dom, args.id_col),
+                        args.mixture_domain_col,
+                        total_target=args.mixture_target,
+                        alpha=0.5,
+                    )
+                    packing["n_mixed"] = survivors.count()
+                if args.shard_tokens > 0:
+                    sharded = assign_shards(
+                        survivors, "n_tokens", args.id_col, shard_tokens=args.shard_tokens,
+                        cache=cache,
+                    )
+                    # repartition BY shard_id first: the task owning a shard
+                    # writes its whole directory — one budget-sized file per
+                    # shard, no cross-task interleaving
+                    (
+                        sharded.repartition(F.col("shard_id"))
+                        .write.mode("overwrite")
+                        .partitionBy("shard_id")
+                        .parquet(f"{args.out}/shards")
+                    )
+                    packing["n_shards"] = (
+                        spark.read.parquet(f"{args.out}/shards")
+                        .select("shard_id").distinct().count()
+                    )
+                if args.seq_len > 0:
+                    packed = pack_sequences(
+                        survivors, "n_tokens", args.id_col, seq_len=args.seq_len, cache=cache
+                    )
+                    (
+                        packed.repartitionByRange(F.col("seq_id"))
+                        .write.mode("overwrite")
+                        .parquet(f"{args.out}/sequences")
+                    )
+                    packing["n_sequences"] = (
+                        spark.read.parquet(f"{args.out}/sequences")
+                        .select("seq_id").distinct().count()
+                    )
+                if args.seq_len > 0 and args.bpe_merges > 0:
+                    from sherlog_parser_spark.operators.bpe import bpe_encode, train_bpe
+                    from sherlog_parser_spark.operators.sharding import (
+                        pack_array_sequences,
+                    )
+
+                    model = train_bpe(survivors, args.text_col, n_merges=args.bpe_merges)
+                    enc = bpe_encode(survivors, model.merges, args.text_col, args.id_col)
+                    tok_seqs = pack_array_sequences(
+                        enc, "bpe_tokens", args.id_col, seq_len=args.seq_len, cache=cache
+                    )
+                    (
+                        tok_seqs.repartitionByRange(F.col("seq_id"))
+                        .write.mode("overwrite")
+                        .parquet(f"{args.out}/packed_tokens")
+                    )
+                    packing["n_packed_token_seqs"] = (
+                        spark.read.parquet(f"{args.out}/packed_tokens").count()
+                    )
+                    packing["bpe_merges_learned"] = len(model.merges)
         print(
             json.dumps(
                 {

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from sherlog_parser_spark.functions.masking import tokens_expr
 from sherlog_parser_spark.functions.textstats import word_shingles_expr
+from sherlog_parser_spark.session import CacheScope
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -99,14 +100,11 @@ def ngram_jaccard_pairs(
             .select("shingle")
         ).observe(removed_obs, F.count(F.lit(1)).alias("n_hot_shingles_removed"))
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    # r6: the (capped) shingle table feeds the per-doc sizes AND the
-    # candidate generator, and `sizes` itself is consumed by two joins —
-    # without persistence the docs-scan + shingle explode re-ran up to
-    # 4x per query.  Both frames are query-local (computed inside the
-    # timed region; sizes is one row per doc, sh one row per distinct
-    # (doc, shingle)); ContextCleaner reclaims them with the frames.
-    sh = sh.persist()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh")).persist()
+    # the (capped) shingle table feeds the per-doc sizes AND the
+    # candidate generator, and `sizes` feeds two joins.  Nothing is
+    # cached: the final plan reuses the shared exchanges
+    # (ReusedExchange), which measured faster than caching both frames.
+    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     if max_df is not None:
         # r6: with a finite df-cap every surviving shingle has <= max_df
         # holders, so candidate pairs can come from ONE shuffle —
@@ -166,6 +164,7 @@ def repeated_ngram_span_positions(
     n: int = 4,
     min_docs: int = 2,
     shingles: Column | None = None,
+    cache: CacheScope | None = None,
 ) -> DataFrame:
     """(id, pos) token positions of word n-grams that occur in
     >= ``min_docs`` distinct documents — the detection half of
@@ -178,17 +177,15 @@ def repeated_ngram_span_positions(
     data-sized; AQE broadcasts when it genuinely fits.  md5 for oracle
     replay (xxhash64 at scale — module docstring).  ``shingles`` is
     ``word_shingles_expr(text_col, n)`` when the caller has built it
-    already."""
+    already.  The shingle table feeds the repeated-set aggregate AND
+    the join back; with a ``cache`` it is kept there, which saves a
+    second docs-scan + shingle explode + md5 pass."""
     if shingles is None:
         shingles = word_shingles_expr(text_col, n)
-    sh = (
-        df.select(F.col(id_col).alias("id"), F.posexplode(shingles).alias("pos", "_s"))
-        .select("id", "pos", F.md5("_s").alias("_h"))
-        # r6: consumed by the repeated-set aggregate AND the join back —
-        # persisting saves a second docs-scan + shingle explode + md5
-        # pass; query-local, reclaimed by ContextCleaner
-        .persist()
-    )
+    sh = df.select(
+        F.col(id_col).alias("id"), F.posexplode(shingles).alias("pos", "_s")
+    ).select("id", "pos", F.md5("_s").alias("_h"))
+    sh = cache.keep(sh) if cache else sh
     rep = (
         sh.groupBy("_h")
         .agg(F.count_distinct("id").alias("_nd"))
@@ -205,6 +202,7 @@ def substring_dedup_cut(
     id_col: str = "doc_id",
     n: int = 4,
     min_docs: int = 2,
+    cache: CacheScope | None = None,
 ) -> DataFrame:
     """Substring-dedup CUT: remove cross-document repeated n-gram spans
     from each document's text (Lee et al. 2022 semantics — the stage
@@ -217,7 +215,7 @@ def substring_dedup_cut(
 
     ``spans`` is any (id_col/"id", pos) frame (e.g. a previous
     detection pass); when None the spans are derived here with
-    ``min_docs``.
+    ``min_docs``, caching their shingle table in ``cache`` if given.
 
     Plan shape: spans aggregate to ONE small array per affected doc
     (bounded by tokens-per-doc, never corpus size), LEFT-joined back so
@@ -229,7 +227,7 @@ def substring_dedup_cut(
     Returns (id, cleaned_text, n_cut_tokens, n_cut_chars, n_spans) where
     n_spans counts the MERGED maximal runs actually cut."""
     if spans is None:
-        spans = repeated_ngram_span_positions(df, text_col, id_col, n, min_docs)
+        spans = repeated_ngram_span_positions(df, text_col, id_col, n, min_docs, cache=cache)
     pos_col = "pos"
     sid = "id" if "id" in spans.columns else id_col
     per_doc = spans.groupBy(F.col(sid).alias("id")).agg(
@@ -339,11 +337,14 @@ def minhash_dup_candidates(
     n: int = 3,
     k: int = 8,
     bands: int = 4,
+    cache: CacheScope | None = None,
 ) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) colliding in any band."""
-    # r6: both sides of the self-join are the SAME band-bucket table —
-    # persisting it halves the shingle+minhash computation; query-local
-    bb = minhash_band_buckets(df, text_col, id_col, n, k, bands).persist()
+    """Distinct candidate pairs (id_a < id_b) colliding in any band.
+    Both sides of the self-join are the SAME band-bucket table; with a
+    ``cache`` it is kept there (without one the plan reuses the
+    exchange instead)."""
+    bb = minhash_band_buckets(df, text_col, id_col, n, k, bands)
+    bb = cache.keep(bb) if cache else bb
     a, b = bb.alias("a"), bb.alias("b")
     return (
         a.join(

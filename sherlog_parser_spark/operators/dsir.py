@@ -131,8 +131,9 @@ def per_doc_bucket_counts(
     """(``__id``, bucket, f) per-document bucket multiplicities — the
     ONE tokenize+hash+explode pass everything else in the shared
     train+score shape rolls up from (r6, guide §1.2: remove redundant
-    passes).  Callers persist this frame and hand it to
-    :func:`train_dsir_shared` / :func:`dsir_scores_from_per_doc`."""
+    passes).  Callers that hand it to both :func:`train_dsir_shared` and
+    :func:`dsir_scores_from_per_doc` keep it in a ``session.CacheScope``
+    they own."""
     return (
         docs.select(
             F.col(id_col).alias("__id"),
@@ -156,7 +157,7 @@ def train_dsir_shared(
     equal to :func:`train_dsir` on (docs, docs-subset) corpora — the
     q tables, defaults and totals are derived from identical integers —
     while replacing two more corpus-wide explode passes with rollups of
-    the (usually persisted) per-doc table."""
+    the (usually cached) per-doc table."""
     tid = target_ids.select(
         F.col(target_ids.columns[0]).alias("__id"), F.lit(1).alias("_t")
     )

@@ -219,14 +219,14 @@ def lm_quality_scores(
     counts (``w_raw`` enumerates every token exactly once), the bigram
     model, and the per-doc scoring — the separate train-unigram,
     train-pair and score-pair corpus passes of the
-    ``train_bigram_lm`` + ``lm_likelihood`` composition collapse onto a
-    persisted raw-pair table.  Count-exact identical output (the same
+    ``train_bigram_lm`` + ``lm_likelihood`` composition collapse onto
+    one raw-pair table.  It is not cached: recomputing it measured
+    faster than a cache fill.  Count-exact identical output (the same
     integers flow into the same quantized formula); pinned by the
-    Python-mirror differential tests.  The persisted frame is
-    query-local — computed inside the timed region, never reused across
-    runs.  Production callers training once and scoring many frames
-    should persist ``lm.bigrams``/``lm.contexts`` themselves."""
-    raw = _raw_pairs(docs, text_col, id_col).persist()
+    Python-mirror differential tests.  Callers training once and
+    scoring many frames cache ``lm.bigrams``/``lm.contexts`` in their
+    ``session.CacheScope``, as ``plans.curation`` does."""
+    raw = _raw_pairs(docs, text_col, id_col)
     unig = raw.groupBy(F.col("w_raw").alias("token")).agg(F.count("*").alias("c"))
     vocab_list = [
         r["token"]

@@ -50,6 +50,7 @@ from sherlog_parser_spark.operators.similarity import (
     ivf_assign,
     norm_expr,
 )
+from sherlog_parser_spark.session import CacheScope
 
 
 def _numpy_cluster_pairs(base: DataFrame, threshold: float) -> DataFrame:
@@ -101,7 +102,7 @@ def semdedup(
     vec_col: str = "embedding",
     max_cluster_rows: int = 100_000,
     quantum: float = 1e6,
-    persist: bool = True,
+    cache: CacheScope | None = None,
     assigned: DataFrame | None = None,
     pair_impl: str = "expr",
 ) -> DataFrame:
@@ -117,6 +118,12 @@ def semdedup(
     oracle path, ``ivf_index`` KMeans centers at scale).  Raises when
     any cluster exceeds ``max_cluster_rows`` — resize ``n_lists``
     rather than letting one hot cluster go quadratic.
+
+    ``cache`` (optional): the caller's scope.  The assigned frame
+    (assignment + cent_q + norms) feeds the skew guard, both pair sides
+    and two output joins; kept in the scope, those folds run once per
+    row.  Without it nothing is cached (curation's shape, where
+    recompute is cheaper than the cache).
 
     ``assigned`` (optional): a frame already carrying ``list_id``
     (e.g. ``ivf_index``'s KMeans ``model.transform`` output — the
@@ -173,22 +180,14 @@ def semdedup(
         .cast("long")
         .alias("cent_q"),
     )
-    if persist:
-        # consumed by the skew guard, the pair join (twice), the members
-        # join and the output join — with persist the assignment +
-        # cent_q narrow map runs ONCE (the guard materializes the
-        # cache); callers pass persist=False for shapes with no
-        # unpersist point where recompute is cheaper than caching
-        base = base.persist()
+    base = cache.keep(base) if cache else base
     # loud skew guard: n_lists rows to the driver, never data-sized
-    # (r6: counted from `base` AFTER the persist hook so the guard pass
+    # (r6: counted from `base` AFTER the cache so the guard pass
     # doubles as the cache-population pass instead of an extra
     # assignment scan)
     sizes = base.groupBy("list_id").count().collect()
     hot = [(r["list_id"], r["count"]) for r in sizes if r["count"] > max_cluster_rows]
     if hot:
-        if persist:
-            base.unpersist()
         lid, n = max(hot, key=lambda t: t[1])
         raise ValueError(
             f"semdedup: cluster {lid} holds {n} vectors "
@@ -197,63 +196,54 @@ def semdedup(
             f"centers (n_lists ~ corpus_size / target_cluster_rows) or "
             f"raise the bound explicitly"
         )
-    try:
-        if pair_impl == "numpy":
-            pairs = _numpy_cluster_pairs(base, float(threshold))
-        else:
-            a = base.select(
-                "list_id",
-                F.col("__id").alias("id_a"),
-                F.col("__v").alias("va"),
-                F.col("__n").alias("na"),
-            )
-            b = base.select(
-                "list_id",
-                F.col("__id").alias("id_b"),
-                F.col("__v").alias("vb"),
-                F.col("__n").alias("nb"),
-            )
-            pairs = (
-                a.join(b, "list_id")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .filter(
-                    # same zero-norm clamp as cent_q: identity for any
-                    # nonzero-norm pair, cosine 0 for zero vectors (the
-                    # numpy path's convention) instead of ANSI
-                    # DIVIDE_BY_ZERO
-                    dot_expr(F.col("va"), F.col("vb"))
-                    / F.greatest(
-                        F.col("na") * F.col("nb"), F.lit(2.2250738585072014e-308)
-                    )
-                    >= F.lit(float(threshold))
+    if pair_impl == "numpy":
+        pairs = _numpy_cluster_pairs(base, float(threshold))
+    else:
+        a = base.select(
+            "list_id",
+            F.col("__id").alias("id_a"),
+            F.col("__v").alias("va"),
+            F.col("__n").alias("na"),
+        )
+        b = base.select(
+            "list_id",
+            F.col("__id").alias("id_b"),
+            F.col("__v").alias("vb"),
+            F.col("__n").alias("nb"),
+        )
+        pairs = (
+            a.join(b, "list_id")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .filter(
+                # same zero-norm clamp as cent_q: identity for any
+                # nonzero-norm pair, cosine 0 for zero vectors (the
+                # numpy path's convention) instead of ANSI
+                # DIVIDE_BY_ZERO
+                dot_expr(F.col("va"), F.col("vb"))
+                / F.greatest(
+                    F.col("na") * F.col("nb"), F.lit(2.2250738585072014e-308)
                 )
-                .select("id_a", "id_b")
+                >= F.lit(float(threshold))
             )
-        comps = connected_components(pairs, "id_a", "id_b")
+            .select("id_a", "id_b")
+        )
+    comps = connected_components(pairs, "id_a", "id_b")
 
-        w = Window.partitionBy("component").orderBy("cent_q", "__id")
-        members = (
-            base.join(comps.withColumnRenamed("id", "__id"), "__id")
-            .withColumn("__rk", F.row_number().over(w))
-            .select("__id", (F.col("__rk") == 1).alias("kept"))
+    w = Window.partitionBy("component").orderBy("cent_q", "__id")
+    members = (
+        base.join(comps.withColumnRenamed("id", "__id"), "__id")
+        .withColumn("__rk", F.row_number().over(w))
+        .select("__id", (F.col("__rk") == 1).alias("kept"))
+    )
+    return (
+        base.join(members, "__id", "left")
+        .select(
+            F.col("__id").alias(id_col),
+            "list_id",
+            F.coalesce(F.col("kept"), F.lit(True)).alias("kept"),
         )
-        out = (
-            base.join(members, "__id", "left")
-            .select(
-                F.col("__id").alias(id_col),
-                "list_id",
-                F.coalesce(F.col("kept"), F.lit(True)).alias("kept"),
-            )
-            # no output orderBy (r6): every consumer — the oracle
-            # comparison, the curation fate filter, the tests — is
-            # order-insensitive, and the global sort cost a sampling
-            # pass + range shuffle per run
-        )
-        # materialization happens in the caller's action; hand them the
-        # release hook instead of unpersisting under a lazy frame
-        out.release = base.unpersist if persist else (lambda: None)
-        return out
-    except Exception:
-        if persist:
-            base.unpersist()
-        raise
+        # no output orderBy (r6): every consumer — the oracle
+        # comparison, the curation fate filter, the tests — is
+        # order-insensitive, and the global sort cost a sampling
+        # pass + range shuffle per run
+    )

@@ -26,10 +26,11 @@ localCheckpoint truncates lineage onto executor-local block storage, so
 one lost executor makes the checkpointed partitions unrecoverable and
 fails the whole job — the wrong trade at 100 TB, where it would also
 materialize a second complete copy of the corpus.  Instead the
-range-partitioned intermediate stays persisted (MEMORY_AND_DISK, with
-lineage, so recomputation is merely slow, never fatal) and the caller
-releases it via the ``.release()`` hook attached to the returned frame
-once the result is consumed/written.  Range-partition SAMPLING is not
+range-partitioned intermediate is cached (MEMORY_AND_DISK, with
+lineage, so recomputation is merely slow, never fatal) in the
+``session.CacheScope`` every operator here requires, and the caller
+releases the scope once the result is consumed/written.  The cache is
+there for correctness: range-partition SAMPLING is not
 recompute-stable (live-measured in r4: one-shard drift without the
 persist), so if a partition IS recomputed with different boundaries the
 per-partition totals recorded by the driver no longer bound the
@@ -41,10 +42,11 @@ partition over its recorded total).
 
 from __future__ import annotations
 
-from typing import Callable
-
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from sherlog_parser_spark.session import CacheScope
 
 _DRIFT_MSG = (
     "sharding: range partitioning drifted between the totals job and the "
@@ -57,33 +59,24 @@ def _global_cumsum(
     df: DataFrame,
     token_col: str,
     order_col: str,
+    cache: CacheScope,
     n_range_partitions: int | None = None,
-) -> tuple[DataFrame, Callable[[], None], int]:
+) -> DataFrame:
     """Adds ``_cum_before`` (long: sum of ``token_col`` over all rows
     strictly before this one in global ``order_col`` order) without a
-    single-partition exchange.
-
-    Returns ``(frame, release, total_tokens)``; call ``release()`` after
-    the result is consumed to drop the persisted range-partitioned
-    intermediate.  See the module docstring for the drift guard and the
-    no-localCheckpoint rationale.
+    single-partition exchange.  The range-partitioned intermediate is
+    kept in ``cache``; see the module docstring for the drift guard and
+    the no-localCheckpoint rationale.
     """
-    from pyspark.storagelevel import StorageLevel
-
     nparts = n_range_partitions or df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions"
     )
     part = df.repartitionByRange(int(nparts), F.col(order_col)).withColumn(
         "_pid", F.spark_partition_id()
     )
-    # persist between the totals job and the assignment job: range
-    # partition boundaries come from SAMPLING and can differ between
-    # recomputations — offsets computed against one partitioning must
-    # not be applied to another (same discipline as
-    # operators/split._ranked_with_total; verified live in r4:
-    # unpersisted, repartition(2) vs repartition(17) inputs drifted by
-    # one shard)
-    part.persist(StorageLevel.MEMORY_AND_DISK)
+    # cached between the totals job and the assignment job, whose offsets
+    # must apply to the same sampled boundaries (module docstring)
+    cache.keep(part, StorageLevel.MEMORY_AND_DISK)
     totals = {
         r["_pid"]: int(r["_t"])
         for r in part.groupBy("_pid")
@@ -120,7 +113,7 @@ def _global_cumsum(
         )
         .drop("_pid", "_cum_in_part", "_offset", "_ptotal")
     )
-    return out, part.unpersist, acc
+    return out
 
 
 def assign_shards(
@@ -129,28 +122,25 @@ def assign_shards(
     order_col: str = "doc_id",
     shard_tokens: int = 100_000,
     n_range_partitions: int | None = None,
+    *,
+    cache: CacheScope,
 ) -> DataFrame:
     """Adds ``shard_id`` (0-based, non-decreasing in ``order_col``):
     shard_id = cum_tokens_before_this_doc DIV shard_tokens over the
     global order — docs pack greedily into ~``shard_tokens`` shards and
     never split.
 
-    The returned frame carries a ``.release()`` attribute dropping the
-    persisted intermediate; call it after the shards are written (the
-    natural next action is materializing to the shard sink, which is
-    the real durability point — see module docstring for why the output
-    is not checkpointed).
+    Release ``cache`` after the shards are written (the natural next
+    action is materializing to the shard sink, which is the real
+    durability point — see module docstring for why the output is not
+    checkpointed).
     """
     if shard_tokens <= 0:
         raise ValueError("shard_tokens must be positive")
-    cum, release, _total = _global_cumsum(
-        df, token_col, order_col, n_range_partitions
-    )
-    out = cum.withColumn(
+    cum = _global_cumsum(df, token_col, order_col, cache, n_range_partitions)
+    return cum.withColumn(
         "shard_id", F.expr(f"_cum_before div {int(shard_tokens)}")
     ).drop("_cum_before")
-    out.release = release
-    return out
 
 
 def pack_sequences(
@@ -159,6 +149,8 @@ def pack_sequences(
     order_col: str = "doc_id",
     seq_len: int = 2048,
     n_range_partitions: int | None = None,
+    *,
+    cache: CacheScope,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing: lay every document's tokens
     end-to-end in global ``order_col`` order and chunk the stream into
@@ -178,14 +170,12 @@ def pack_sequences(
     sequences floor(o / L) .. floor((o + n - 1) / L); the per-doc
     explode is bounded by n/L + 1 rows, never corpus size.  Zero-token
     docs are dropped (they occupy no stream positions).  Same two-phase
-    global-cumsum machinery (and the same persisted-intermediate
-    ``.release()`` contract) as :func:`assign_shards`.
+    global-cumsum machinery (and the same required ``cache``) as
+    :func:`assign_shards`.
     """
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")
-    cum, release, _total = _global_cumsum(
-        df, token_col, order_col, n_range_partitions
-    )
+    cum = _global_cumsum(df, token_col, order_col, cache, n_range_partitions)
     L = F.lit(int(seq_len)).cast("long")
     n = F.col(token_col).cast("long")
     o = F.col("_cum_before")
@@ -194,7 +184,7 @@ def pack_sequences(
         f"(_cum_before + cast({token_col} as long) - 1) div {int(seq_len)}"
     )
     seqs = F.sequence(first, last)
-    out = (
+    return (
         cum.filter(n > 0)
         .withColumn("seq_id", F.explode(seqs))
         .withColumn("_seq_start", F.col("seq_id").cast("long") * L)
@@ -207,8 +197,6 @@ def pack_sequences(
         )
         .drop("_cum_before", "_seq_start")
     )
-    out.release = release
-    return out
 
 
 def pack_array_sequences(
@@ -217,6 +205,8 @@ def pack_array_sequences(
     order_col: str = "doc_id",
     seq_len: int = 2048,
     n_range_partitions: int | None = None,
+    *,
+    cache: CacheScope,
 ) -> DataFrame:
     """Materialize the PACKED SEQUENCES themselves: lay the per-row
     arrays (token ids from any tokenizer — e.g. ``bpe_encode``'s
@@ -238,12 +228,11 @@ def pack_array_sequences(
     (seq_offset, piece) structs — offsets are unique within a
     sequence, so the sort is total and deterministic.
 
-    Returns the frame with the inherited ``.release()`` hook (drop the
-    persisted range-partitioned intermediate after the sink is
-    written)."""
+    Release ``cache`` (it holds the range-partitioned intermediate)
+    after the sink is written."""
     size_col = "__n_arr"
     base = df.withColumn(size_col, F.size(F.col(arr_col)))
-    pieces = pack_sequences(base, size_col, order_col, seq_len, n_range_partitions)
+    pieces = pack_sequences(base, size_col, order_col, seq_len, n_range_partitions, cache=cache)
     sl = pieces.select(
         "seq_id",
         F.col(order_col),
@@ -256,7 +245,7 @@ def pack_array_sequences(
             ).alias("p"),
         ).alias("_piece"),
     )
-    out = (
+    return (
         sl.groupBy("seq_id")
         .agg(
             F.flatten(
@@ -268,5 +257,3 @@ def pack_array_sequences(
         )
         .withColumn("n_tokens", F.size("tokens"))
     )
-    out.release = pieces.release
-    return out

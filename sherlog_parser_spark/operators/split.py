@@ -18,7 +18,7 @@ on DataFrames):
 3. cumulative offsets are broadcast back and added to a PER-PARTITION
    ``row_number`` window (parallel across partitions — no hot task).
 
-The range-partitioned frame is persisted between the count job and the
+The range-partitioned frame is cached between the count job and the
 ranking job so both see identical partition boundaries (range partition
 sampling is seeded-deterministic, but persistence makes it airtight; at
 100 TB use StorageLevel.DISK_ONLY or a checkpoint).  The total row count
@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from sherlog_parser_spark.session import CacheScope
+
 
 def _ranked_with_total(
     df: DataFrame, order_cols: list[str], rank_col: str
@@ -39,34 +41,35 @@ def _ranked_with_total(
     ``order_cols`` must be a unique composite key; no single-partition
     exchange."""
     part = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    part = part.withColumn("_pid", F.spark_partition_id())
-    part.persist(StorageLevel.MEMORY_AND_DISK)
-    counts = sorted(
-        (r["_pid"], r["_n"])
-        for r in part.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, n in counts:
-        offsets.append((pid, acc))
-        acc += n
-    off_df = df.sparkSession.createDataFrame(
-        offsets or [(0, 0)], "`_pid` INT, `_off` BIGINT"
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    ranked = (
-        part.join(F.broadcast(off_df), "_pid")
-        .withColumn(rank_col, F.row_number().over(w) + F.col("_off"))
-        .drop("_pid", "_off")
-    )
-    # Materialize the ranked result, then release the intermediate cache:
-    # without this, repeated ordered_split calls in one session
-    # accumulate persisted partitions until the session dies.
-    # localCheckpoint blocks ARE the materialized result (cleaned by the
-    # ContextCleaner once the frame is unreferenced), and cutting lineage
-    # here also freezes the partition boundaries the offsets were
-    # computed against.
-    ranked = ranked.localCheckpoint(eager=True)
-    part.unpersist()
+    # the local scope releases the cache once the ranked result is
+    # materialized: without it, repeated ordered_split calls in one
+    # session accumulate cached partitions until the session dies
+    with CacheScope() as cache:
+        part = cache.keep(
+            part.withColumn("_pid", F.spark_partition_id()), StorageLevel.MEMORY_AND_DISK
+        )
+        counts = sorted(
+            (r["_pid"], r["_n"])
+            for r in part.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
+        )
+        offsets, acc = [], 0
+        for pid, n in counts:
+            offsets.append((pid, acc))
+            acc += n
+        off_df = df.sparkSession.createDataFrame(
+            offsets or [(0, 0)], "`_pid` INT, `_off` BIGINT"
+        )
+        w = Window.partitionBy("_pid").orderBy(*order_cols)
+        ranked = (
+            part.join(F.broadcast(off_df), "_pid")
+            .withColumn(rank_col, F.row_number().over(w) + F.col("_off"))
+            .drop("_pid", "_off")
+        )
+        # localCheckpoint blocks ARE the materialized result (cleaned by
+        # the ContextCleaner once the frame is unreferenced), and cutting
+        # lineage here also freezes the partition boundaries the offsets
+        # were computed against.
+        ranked = ranked.localCheckpoint(eager=True)
     return ranked, acc
 
 

@@ -37,9 +37,10 @@ cleaned-sink group writer; the commit protocol (run fingerprint check,
 per-group Observation + manifest commit, resume) and the thread that
 overlaps the fate count with the group writes are
 ``checkpoint.open_run``/``commit_groups``, shared with the parse
-pipeline.  ``run_curation_pipeline`` persists the DAG's shared frames
-through ``persist_registry`` and releases them in one ``finally``,
-whichever step fails.  Reference lifecycle analog: the data-prep half of
+pipeline.  ``run_curation_pipeline`` caches the DAG's shared frames in
+one ``session.CacheScope`` and releases it on exit, whichever step
+fails (the near-dup frames outlive it: ``release_near_dup``).
+Reference lifecycle analog: the data-prep half of
 LogProcessingPipeline.process_dataset (src/core/pipeline.py:52-130) —
 its clean → dedup → filter loop over batches becomes a declarative DAG
 over partitions.
@@ -83,7 +84,23 @@ from sherlog_parser_spark.operators.dedup import (
     substring_dedup_cut,
 )
 from sherlog_parser_spark.plans import pipeline
+from sherlog_parser_spark.session import CacheScope
 from sherlog_parser_spark.sources.readers import fan_out
+
+
+# The near-dup stage's MinHash band buckets and span shingles outlive the
+# DAG build that cached them, keyed by the exact-dedup survivors they
+# derive from: a repeated or resumed run over the same input reads them
+# from the CacheManager instead of rebuilding them (6-7 of a run's 37-38
+# jobs on the test corpus).  The next build over other survivors releases
+# them first, so at most one input's pair is held.
+_near_dup: dict = {"key": None, "cache": CacheScope()}
+
+
+def release_near_dup() -> None:
+    """Unpersist the kept near-dup frames."""
+    _near_dup["cache"].release()
+    _near_dup["key"] = None
 
 
 def with_quality_reason(
@@ -137,7 +154,7 @@ def curation_dag(
     semdedup_opts: dict | None = None,
     classifier_filter: dict | None = None,
     dsir_filter: dict | None = None,
-    persist_registry: list | None = None,
+    cache: CacheScope | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the curation DAG.  Returns ``(cleaned, ledger)``:
 
@@ -148,13 +165,15 @@ def curation_dag(
       'near_dup' | 'semantic_dup' | 'quality:<reason>' | 'lm_filtered' |
       'classifier_filtered' | 'dsir_filtered' | 'contaminated'.
 
-    ``persist_registry`` (optional): a list the caller owns.  When
-    given, the frames that both ``cleaned`` and ``ledger`` consume (the
-    fate sets, the quality-scored survivors, the optional models'
-    tables) are persisted MEMORY_AND_DISK and appended to it, and the
-    caller unpersists them once its actions are done
-    (``run_curation_pipeline`` does, on every exit path).  Without it
-    none of these frames is persisted, and each action recomputes them.
+    ``cache`` (optional): a scope the caller owns and releases once its
+    actions are done (``run_curation_pipeline`` does, on every exit
+    path).  When given, the frames that both ``cleaned`` and ``ledger``
+    consume (the fate sets, the quality-scored survivors, the optional
+    models' tables) are kept in it MEMORY_AND_DISK — id-sets and
+    survivor rows, never wider than the input — and the MinHash band
+    buckets and the span shingles go to the module's near-dup scope,
+    which outlives the call (``release_near_dup``).  Without it nothing
+    is cached, and each action recomputes these frames.
 
     ``classifier_filter`` (optional): ``{"clf": QualityClassifier,
     "min_prob": p}`` — scores the quality survivors with the distilled
@@ -211,19 +230,11 @@ def curation_dag(
     score ``floor(lm_score_q / n_tokens)`` falls below N (fate
     'lm_filtered').  The model's bigram/context tables are shared
     intermediates (consumed by the join AND the context derivation) and
-    go through the same ``_reuse`` persistence as the fate sets."""
-    def _reuse(frame: DataFrame) -> DataFrame:
-        """Cache a frame consumed by BOTH the cleaned branch and the
-        fate ledger — without this the ledger's fate counts re-run the
-        whole upstream DAG — when the caller gave ``persist_registry``.
-        MEMORY_AND_DISK, same spill discipline as run_pipeline's
-        persist_parsed; the persisted frames are id-sets / survivor
-        rows, never wider than the input."""
-        if persist_registry is None:
-            return frame
-        out = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        persist_registry.append(out)
-        return out
+    are cached like the fate sets."""
+    def keep(frame: DataFrame) -> DataFrame:
+        # without a cache the ledger's fate counts re-run the whole
+        # upstream DAG of each shared frame
+        return cache.keep(frame, StorageLevel.MEMORY_AND_DISK) if cache else frame
 
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     if nfc:
@@ -234,7 +245,7 @@ def curation_dag(
     if line_filter_opts is not None:
         from sherlog_parser_spark.functions.linefilter import line_filter
 
-        lf = _reuse(line_filter(base, "text", "doc_id", **line_filter_opts))
+        lf = keep(line_filter(base, "text", "doc_id", **line_filter_opts))
         line_losers = lf.filter(~F.col("doc_kept")).select("doc_id")
         base = lf.filter(F.col("doc_kept")).select(
             "doc_id", F.col("kept_text").alias("text")
@@ -247,7 +258,7 @@ def curation_dag(
     if paragraph_dedup_opts is not None:
         from sherlog_parser_spark.operators.dedup import paragraph_dedup
 
-        pdres = _reuse(paragraph_dedup(base, "text", "doc_id", **paragraph_dedup_opts))
+        pdres = keep(paragraph_dedup(base, "text", "doc_id", **paragraph_dedup_opts))
         para_losers = pdres.filter(~F.col("doc_kept")).select("doc_id")
         base = pdres.filter(F.col("doc_kept")).select(
             "doc_id", F.col("kept_text").alias("text")
@@ -256,19 +267,29 @@ def curation_dag(
         para_losers = None
 
     # exact dedup: min-id winner per md5(text)
-    winners = _reuse(
+    winners = keep(
         base.select(F.md5("text").alias("_h"), "doc_id")
         .groupBy("_h")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
     s1 = base.join(winners, "doc_id", "left_semi")
+    # the near-dup operators cache into the module's scope unless it
+    # holds this input's frames already
+    near_dup = None
+    if cache:
+        key = s1.semanticHash()
+        if key != _near_dup["key"]:
+            release_near_dup()
+            near_dup, _near_dup["key"] = _near_dup["cache"], key
 
     # MinHash near-dedup: banded candidates → components → min-id rep.
     # A candidate graph within components.CC_DRIVER_MAX_PAIRS is labelled
     # on the driver and comes back as a local relation (a checkpoint
-    # above it), so near_losers needs no _reuse persistence
-    pairs = minhash_dup_candidates(s1, "text", "doc_id", n=3, k=minhash_k, bands=minhash_bands)
+    # above it), so near_losers needs no cache
+    pairs = minhash_dup_candidates(
+        s1, "text", "doc_id", n=3, k=minhash_k, bands=minhash_bands, cache=near_dup
+    )
     comps = connected_components(pairs)
     near_losers = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias("doc_id")
@@ -300,9 +321,8 @@ def curation_dag(
             id_col="doc_id",
             vec_col=vec_col,
             max_cluster_rows=int(semdedup_opts.get("max_cluster_rows", 100_000)),
-            persist=False,
         )
-        sem_losers = _reuse(sem.filter(~F.col("kept")).select("doc_id"))
+        sem_losers = keep(sem.filter(~F.col("kept")).select("doc_id"))
         s2 = s2.join(sem_losers, "doc_id", "left_anti")
     else:
         sem_losers = None
@@ -311,12 +331,14 @@ def curation_dag(
     # n-gram shingles of "text" are built once: span detection and both
     # sides of the decontamination join explode the same expression
     shingles = TS.word_shingles_expr("text", ngram)
-    spans = repeated_ngram_span_positions(s2, n=ngram, min_docs=span_min_docs, shingles=shingles)
+    spans = repeated_ngram_span_positions(
+        s2, n=ngram, min_docs=span_min_docs, shingles=shingles, cache=near_dup
+    )
     cut = substring_dedup_cut(s2, spans, n=ngram)
     s3 = cut.select("doc_id", F.col("cleaned_text").alias("text"))
 
     # quality filter on the CUT text (a fully-cut doc fails too_short)
-    s3q = _reuse(
+    s3q = keep(
         with_quality_reason(s3, "text", min_tokens=min_tokens, **(quality_kwargs or {}))
     )
     quality_losers = s3q.filter(F.col("_reason") != "keep").select("doc_id", "_reason")
@@ -330,12 +352,12 @@ def curation_dag(
 
         min_avg = int(lm_filter["min_avg_score_q"])
         lm = train_bigram_lm(s4, "text", "doc_id", int(lm_filter.get("vocab_size", 256)))
-        lm = lm._replace(bigrams=_reuse(lm.bigrams), contexts=_reuse(lm.contexts))
+        lm = lm._replace(bigrams=keep(lm.bigrams), contexts=keep(lm.contexts))
         avg_q = F.floor(
             F.col("lm_score_q").cast("double")
             / F.greatest(TS.ws_token_count_expr("text"), F.lit(1))
         ).cast("long")
-        lm_losers = _reuse(
+        lm_losers = keep(
             lm_likelihood(s4, lm, "text", "doc_id")
             .join(s4, "doc_id")
             .filter(avg_q < min_avg)
@@ -353,7 +375,7 @@ def curation_dag(
         from sherlog_parser_spark.operators.classifier import classifier_scores
 
         min_prob = float(classifier_filter["min_prob"])
-        clf_losers = _reuse(
+        clf_losers = keep(
             classifier_scores(s4, classifier_filter["clf"], "text", "doc_id")
             .filter(F.col("quality_prob") < min_prob)
             .select("doc_id")
@@ -376,12 +398,12 @@ def curation_dag(
             "text",
             n_buckets=int(dsir_filter.get("n_buckets", 4096)),
         )
-        model = model._replace(target_q=_reuse(model.target_q), raw_q=_reuse(model.raw_q))
+        model = model._replace(target_q=keep(model.target_q), raw_q=keep(model.raw_q))
         avg_q = F.floor(
             F.col("dsir_score_q").cast("double")
             / F.greatest(F.col("n_grams"), F.lit(1))
         ).cast("long")
-        dsir_losers = _reuse(
+        dsir_losers = keep(
             dsir_scores(s4, model, "text", "doc_id")
             .filter(avg_q < min_avg)
             .select("doc_id")
@@ -404,7 +426,7 @@ def curation_dag(
         doc_sh = s5.select("doc_id", F.explode(shingles).alias("_s")).select(
             "doc_id", F.md5("_s").alias("_h")
         )
-        contaminated = _reuse(
+        contaminated = keep(
             doc_sh.join(F.broadcast(bench_sh), "_h").select("doc_id").distinct()
         )
         s6 = s5.join(contaminated, "doc_id", "left_anti")
@@ -471,9 +493,10 @@ def run_curation_pipeline(
     and every DAG option, DataFrames inside option dicts included,
     enter the run fingerprint (``pipeline._run_fingerprint``), so a run
     with a different blocklist or embeddings table starts clean.  The
-    loser fates are counted as ``commit_groups``' side job.  The frames
-    the run persists for itself (the DAG's registered frames and the
-    bucketed survivors) are released on every exit path."""
+    loser fates are counted as ``commit_groups``' side job.  The run's
+    cache scope (the DAG's shared frames and the bucketed survivors) is
+    released on every exit path, after ``commit_groups`` has joined the
+    fate count."""
     t_start = time.perf_counter()
     cleaned_dir = os.path.join(out_dir, "cleaned")
     metrics_path = os.path.join(out_dir, "curation_metrics.json")
@@ -484,8 +507,7 @@ def run_curation_pipeline(
     )
     manifest = checkpoint.open_run(out_dir, run_fp, resume, [cleaned_dir, metrics_path])
 
-    persisted: list[DataFrame] = []
-    try:
+    with CacheScope() as cache:
         # Scan fan-out (readers.fan_out): a small local input arrives as
         # ONE parquet split, so every narrow stage of the DAG (line
         # rules, shingle explodes, quality exprs) would run on a single
@@ -495,16 +517,16 @@ def run_curation_pipeline(
         # the run fingerprint so resume identity is unchanged.
         t_dag = time.perf_counter()
         cleaned, ledger = curation_dag(
-            fan_out(docs), bench_docs=bench_docs, persist_registry=persisted, **dag_kwargs
+            fan_out(docs), bench_docs=bench_docs, cache=cache, **dag_kwargs
         )
         t_write = time.perf_counter()
         # the DAG above this point includes two shingle explodes;
         # persisting the survivors turns per-group recomputation of the
         # whole chain into one pass
-        bucketed = cleaned.withColumn(
-            "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(bucketed)
+        bucketed = cache.keep(
+            cleaned.withColumn("doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))),
+            StorageLevel.MEMORY_AND_DISK,
+        )
 
         def _write_group(sub: DataFrame) -> None:
             (
@@ -527,9 +549,6 @@ def run_curation_pipeline(
             _write_group, _count_losers,
         )
         t_end = time.perf_counter()
-    finally:
-        for frame in persisted:
-            frame.unpersist()
     if total_rows:
         fate_counts["kept"] = total_rows
     wall = time.perf_counter() - t_start

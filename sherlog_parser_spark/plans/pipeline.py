@@ -36,9 +36,9 @@ rows + a bit_xor content fingerprint on each write job; a killed run
 resumes by skipping committed groups.  The aggregates writer is
 ``commit_groups``' side job: it overlaps the group writes on a thread
 ``checkpoint`` owns, under the caller's job group, and its error
-surfaces after them.  One ``try/finally`` from the parse persist to the
-end of the run unpersists the cached frames and restores the cache
-codec, whichever step fails.
+surfaces after them.  The run's ``session.CacheScope`` owns the parse
+cache and the aggregates rollup; one ``try/finally`` releases it and
+restores the cache codec, whichever step fails.
 
 Reference lifecycle being reproduced: ParserService.parse_logs
 (src/core/parser_service.py:66-202) and
@@ -80,6 +80,7 @@ from sherlog_parser_spark.plans.route import (
     route_exchange,
     write_routed,
 )
+from sherlog_parser_spark.session import CacheScope
 
 
 def _plan(frame: DataFrame) -> str:
@@ -146,7 +147,7 @@ def run_pipeline(
     # run, as every cached frame is released, on every exit path.
     codec_key = "spark.sql.inMemoryColumnarStorage.compressed"
     prev_cache_codec = spark.conf.get(codec_key, "true")
-    persisted: list[DataFrame] = []
+    cache = CacheScope()
     try:
         parsed = parse_stage(transcripts)
         if persist_parsed:
@@ -156,8 +157,7 @@ def run_pipeline(
             # (spills to disk when it outgrows memory — disable for
             # recompute-cheaper-than-cache deployments)
             spark.conf.set(codec_key, "false")
-            parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(parsed)
+            parsed = cache.keep(parsed, StorageLevel.MEMORY_AND_DISK)
         if manifest.entries and fs.exists(dict_path):
             # resuming a validated run: reuse the persisted dictionary so
             # already-committed groups and in-flight groups share template ids
@@ -195,8 +195,7 @@ def run_pipeline(
         # type-check: Observation carries scalar aggregates only, while
         # the rollup is per-(template_id, tool, window) ROWS.
         def _write_aggregates() -> None:
-            rollup = sink_rollup_slim(pre, tpl_df).persist()
-            persisted.append(rollup)
+            rollup = cache.keep(sink_rollup_slim(pre, tpl_df))
             template_frequency_from_rollup(rollup).write.mode("overwrite").parquet(freq_dir)
             tool_usage_from_rollup(rollup).write.mode("overwrite").parquet(tools_dir)
 
@@ -205,8 +204,8 @@ def run_pipeline(
             _write_group, _write_aggregates,
         )
     finally:
-        for frame in persisted:
-            frame.unpersist()
+        # commit_groups has joined the aggregates thread by now
+        cache.release()
         spark.conf.set(codec_key, prev_cache_codec)
 
     wall = time.perf_counter() - t_start

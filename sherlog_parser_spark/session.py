@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and the scope that
+owns every frame the package caches.
 
 Settings chosen for the 100 TB design point (SURVEY.md §4.2) and safe on
 local[N]: AQE on (runtime coalescing + skew-join splitting), Arrow
@@ -9,7 +10,32 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+
+class CacheScope:
+    """Owns the frames it caches: ``keep`` persists a frame and records
+    it, ``release`` unpersists them all, and a ``with`` block releases on
+    exit.  Spark's CacheManager holds a cached frame until it is
+    unpersisted; ContextCleaner does not reclaim it."""
+
+    def __init__(self) -> None:
+        self._frames: list[DataFrame] = []
+
+    def keep(self, df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER) -> DataFrame:
+        self._frames.append(df.persist(level))
+        return df
+
+    def release(self) -> None:
+        while self._frames:
+            self._frames.pop().unpersist()
+
+    def __enter__(self) -> CacheScope:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
 
 
 def get_spark(

@@ -2,7 +2,7 @@ from __future__ import annotations
 
 import pytest
 
-from sherlog_parser_spark.session import get_spark
+from sherlog_parser_spark.session import CacheScope, get_spark
 
 
 @pytest.fixture(scope="session")
@@ -10,6 +10,13 @@ def spark():
     s = get_spark("sherlog-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def cache():
+    """A cache scope the test's operators cache into, released after it."""
+    with CacheScope() as scope:
+        yield scope
 
 
 @pytest.fixture(scope="session")

@@ -3,11 +3,11 @@ faults, for both batch jobs, and the run fingerprint that guards resume."""
 
 from __future__ import annotations
 
+import gc
 import os
+import time
 
 import pytest
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sherlog_parser_spark import checkpoint, telemetry
@@ -15,6 +15,7 @@ from sherlog_parser_spark.checkpoint import CheckpointManifest
 from sherlog_parser_spark.plans import curation, dictionary, pipeline
 from sherlog_parser_spark.plans.curation import run_curation_pipeline
 from sherlog_parser_spark.plans.pipeline import run_pipeline
+from sherlog_parser_spark.session import CacheScope
 
 GROUPS = 3
 QUALITY = {"max_top_2gram_char_x1e4": 6000}
@@ -172,56 +173,146 @@ def test_every_job_of_a_run_is_in_the_callers_job_group(spark, transcripts, docs
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == counts.jobs > 0, counts
 
 
-def _record_persists(monkeypatch, spark) -> list[DataFrame]:
-    """Every frame ``DataFrame.persist`` returns from now on."""
-    frame_cls = type(spark.range(1))
-    frames: list[DataFrame] = []
-    persist = frame_cls.persist
+def _persistent_rdds(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
-    def recording(self, *args, **kwargs):
-        frames.append(persist(self, *args, **kwargs))
-        return frames[-1]
 
-    monkeypatch.setattr(frame_cls, "persist", recording)
-    return frames
+def _assert_nothing_cached(spark):
+    """No plan in the CacheManager (a persisted frame not yet filled
+    included) and no persisted RDD.  A localCheckpoint's RDD (the
+    distributed components loops) is persisted too, until ContextCleaner
+    drops it after a GC: those get up to 30 s to go."""
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    for _ in range(60):
+        if not _persistent_rdds(spark):
+            return
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+    assert not _persistent_rdds(spark)
+
+
+@pytest.fixture
+def empty_cache(spark, transcripts):
+    """Nothing cached before the test; the session's cached transcripts
+    are cached again after it."""
+    spark.catalog.clearCache()
+    curation.release_near_dup()
+    _assert_nothing_cached(spark)
+    yield
+    curation.release_near_dup()
+    transcripts.cache()
 
 
 def test_pipeline_failing_before_group_writes_releases_session(spark, transcripts, tmp_path,
-                                                               monkeypatch):
+                                                               monkeypatch, empty_cache):
     """The dictionary guard fires before any group write: the parse cache
     is released and the cache codec conf restored all the same."""
     key = "spark.sql.inMemoryColumnarStorage.compressed"
     codec = spark.conf.get(key, "true")
-    persisted = _record_persists(monkeypatch, spark)
     monkeypatch.setattr(dictionary, "MAX_DICT_ROWS", 0)
     with pytest.raises(RuntimeError, match="distinct signatures"):
         run_pipeline(spark, transcripts, str(tmp_path / "out"), resume=False)
     assert spark.conf.get(key, "true") == codec
-    assert persisted and all(f.storageLevel == StorageLevel.NONE for f in persisted)
+    _assert_nothing_cached(spark)
 
 
 def test_curation_failing_before_group_writes_releases_session(spark, docs, tmp_path,
-                                                               monkeypatch):
+                                                               monkeypatch, empty_cache):
     """Connected components fail inside the DAG build, after the exact
-    dedup winners are persisted: every frame the run registered for
-    release, the winners among them, is released."""
+    dedup winners are cached: the run's scope releases them.  The
+    near-dup scope keeps its band buckets for a resume."""
     def broken_components(*args, **kwargs):
         raise RuntimeError("injected components failure")
 
-    registries: list[list[DataFrame]] = []
-    dag = curation.curation_dag
-
-    def recording_dag(*args, persist_registry=None, **kwargs):
-        registries.append(persist_registry)
-        return dag(*args, persist_registry=persist_registry, **kwargs)
-
     monkeypatch.setattr(curation, "connected_components", broken_components)
-    monkeypatch.setattr(curation, "curation_dag", recording_dag)
     with pytest.raises(RuntimeError, match="injected components failure"):
         run_curation_pipeline(spark, docs, str(tmp_path / "out"), resume=False,
                               quality_kwargs=QUALITY)
-    [persisted] = registries
-    assert persisted and all(f.storageLevel == StorageLevel.NONE for f in persisted)
+    curation.release_near_dup()
+    _assert_nothing_cached(spark)
+
+
+def test_near_dup_frames_outlive_a_run_for_the_same_survivors_only(spark, docs, tmp_path,
+                                                                    empty_cache):
+    """After a run only the near-dup band buckets and span shingles stay
+    cached.  A run over the same documents reuses them; a run over other
+    documents releases them and keeps its own."""
+    def run(frame, name):
+        run_curation_pipeline(spark, frame, str(tmp_path / name), resume=False,
+                              quality_kwargs=QUALITY)
+        return _persistent_rdds(spark)
+
+    held = run(docs, "a")
+    assert len(held) == 2
+    assert run(docs, "b") == held
+    other = run(docs.filter(F.col("doc_id") != 3), "c")
+    assert len(other) == 2 and not other & held
+    curation.release_near_dup()
+    _assert_nothing_cached(spark)
+
+
+# every queries() entry that caches through QUERY_CACHE
+CACHING_QUERIES = [
+    "minhash_candidates", "semdedup_keep", "dedup_keep_docs", "dsir_weights",
+    "substring_dedup_apply", "shard_assignment", "sequence_packing", "curation_ledger",
+]
+
+
+def _query(name):
+    def run(spark, frames, out):
+        import __spark_entry__ as entry
+
+        entry.queries()[name](spark, "/root/testdata/sf0.01").collect()
+        assert not spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
+        entry.QUERY_CACHE.release()
+        curation.release_near_dup()
+    return run
+
+
+def _query_after_caching_query(spark, frames, out):
+    """The next entry releases the caches of the one before it."""
+    import __spark_entry__ as entry
+
+    entry.queries()["dsir_weights"](spark, "/root/testdata/sf0.01").collect()
+    entry.queries()["template_freq"](spark, "/root/testdata/sf0.01").collect()
+
+
+def _semdedup_guard(spark, frames, out):
+    """The skew guard raises after ``base`` is cached."""
+    from sherlog_parser_spark.operators.semdedup import semdedup
+
+    emb = spark.createDataFrame([(i, [1.0, float(i)]) for i in range(20)],
+                                "vec_id INT, embedding ARRAY<DOUBLE>")
+    with pytest.raises(ValueError, match="max_cluster_rows"), CacheScope() as cache:
+        semdedup(emb, [[1.0, 0.0]], threshold=0.9, max_cluster_rows=5, cache=cache)
+
+
+def _batch_run(job):
+    def run(spark, frames, out):
+        job.run(spark, frames, out, resume=False)
+        curation.release_near_dup()
+    return run
+
+
+OWNER_CASES = {
+    **{job.name: _batch_run(job) for job in JOBS},
+    **{f"query-{name}": _query(name) for name in CACHING_QUERIES},
+    "query-after-caching-query": _query_after_caching_query,
+    "semdedup-guard": _semdedup_guard,
+}
+
+
+@pytest.mark.parametrize("case", list(OWNER_CASES))
+def test_nothing_cached_after_owner_releases(spark, transcripts, docs, case, tmp_path,
+                                             empty_cache):
+    """Every cached frame has an owner that releases it: a batch run's
+    scope (its failure paths are the two tests above), ``QUERY_CACHE``
+    once released or once the next entry starts, and a ``with`` block
+    left by an error.  The curation DAG's near-dup frames are released
+    with ``release_near_dup``."""
+    OWNER_CASES[case](spark, {"transcripts": transcripts, "docs": docs}, str(tmp_path / "out"))
+    _assert_nothing_cached(spark)
 
 
 EMPTY_GROUP_CASES = [(job, resume) for job in JOBS for resume in (False, True)]

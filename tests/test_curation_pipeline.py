@@ -18,6 +18,7 @@ from sherlog_parser_spark.plans.curation import (
     run_curation_pipeline,
     with_quality_reason,
 )
+from sherlog_parser_spark.session import CacheScope
 
 def _filler(doc_id: int, n: int = 14) -> str:
     """Per-doc-UNIQUE filler tokens: shared filler would itself become a
@@ -461,10 +462,8 @@ def test_curation_dag_build_budget(spark, corpus):
     docs, bench = corpus
 
     def build():
-        persisted: list = []
-        curation_dag(docs, bench_docs=bench, quality_kwargs=QUALITY, persist_registry=persisted)
-        for frame in persisted:
-            frame.unpersist()
+        with CacheScope() as cache:
+            curation_dag(docs, bench_docs=bench, quality_kwargs=QUALITY, cache=cache)
 
     counts = _warm_counts(spark, build)
     assert counts.py4j_calls <= DAG_PY4J_BUDGET, counts

@@ -24,14 +24,13 @@ def _mirror_chunks(rows, ranks, seq_len):
     return [stream[i : i + seq_len] for i in range(0, len(stream), seq_len)]
 
 
-def test_packed_sequences_match_mirror(spark):
+def test_packed_sequences_match_mirror(spark, cache):
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
     model = train_bpe(docs, n_merges=12)
     ranks = {tuple(p): i for i, p in enumerate(model.merges)}
     enc = bpe_encode(docs, model.merges)
-    packed = pack_array_sequences(enc, "bpe_tokens", "doc_id", seq_len=16)
+    packed = pack_array_sequences(enc, "bpe_tokens", "doc_id", seq_len=16, cache=cache)
     got = {r["seq_id"]: r for r in packed.collect()}
-    packed.release()
     want = _mirror_chunks(CORPUS, ranks, 16)
     assert sorted(got) == list(range(len(want)))
     for sid, chunk in enumerate(want):
@@ -44,23 +43,22 @@ def test_packed_sequences_match_mirror(spark):
     assert sum(r["n_tokens"] for r in got.values()) == sum(len(c) for c in want)
 
 
-def test_packed_sequences_partition_invariance(spark):
+def test_packed_sequences_partition_invariance(spark, cache):
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
     model = train_bpe(docs, n_merges=8)
     enc = bpe_encode(docs, model.merges)
-    a = pack_array_sequences(enc.repartition(1), "bpe_tokens", seq_len=32, n_range_partitions=3)
-    b = pack_array_sequences(enc.repartition(11), "bpe_tokens", seq_len=32, n_range_partitions=7)
+    a = pack_array_sequences(enc.repartition(1), "bpe_tokens", seq_len=32, n_range_partitions=3,
+                             cache=cache)
+    b = pack_array_sequences(enc.repartition(11), "bpe_tokens", seq_len=32, n_range_partitions=7,
+                             cache=cache)
     ra = sorted((r["seq_id"], tuple(r["tokens"])) for r in a.collect())
     rb = sorted((r["seq_id"], tuple(r["tokens"])) for r in b.collect())
-    a.release()
-    b.release()
     assert ra == rb
 
 
-def test_empty_arrays_are_skipped(spark):
+def test_empty_arrays_are_skipped(spark, cache):
     rows = [(0, ["a", "b"]), (1, []), (2, ["c"])]
     df = spark.createDataFrame(rows, "doc_id long, toks array<string>")
-    packed = pack_array_sequences(df, "toks", seq_len=2)
+    packed = pack_array_sequences(df, "toks", seq_len=2, cache=cache)
     got = sorted((r["seq_id"], list(r["tokens"])) for r in packed.collect())
-    packed.release()
     assert got == [(0, ["a", "b"]), (1, ["c"])]

@@ -12,10 +12,9 @@ from sherlog_parser_spark.operators.sharding import assign_shards, pack_sequence
 from sherlog_parser_spark.plans.curation import curation_dag
 
 
-def test_curation_to_packing_chain(spark):
+def test_curation_to_packing_chain(spark, cache):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    registry: list = []
-    cleaned, ledger = curation_dag(docs, persist_registry=registry)
+    cleaned, ledger = curation_dag(docs, cache=cache)
 
     survivors = cleaned.select(
         "doc_id",
@@ -30,7 +29,7 @@ def test_curation_to_packing_chain(spark):
     assert 0 < n_mixed < survivors.count()
 
     # shard packing: budget respected (docs never split)
-    sharded = assign_shards(mixed, "n_tokens", "doc_id", shard_tokens=1000)
+    sharded = assign_shards(mixed, "n_tokens", "doc_id", shard_tokens=1000, cache=cache)
     per_shard = {
         r["shard_id"]: r["t"]
         for r in sharded.groupBy("shard_id")
@@ -40,13 +39,11 @@ def test_curation_to_packing_chain(spark):
     mx = mixed.agg(F.max("n_tokens")).collect()[0][0]
     assert all(v < 1000 + mx for v in per_shard.values())
     assert sorted(per_shard) == list(range(len(per_shard)))  # contiguous ids
-    sharded.release()
 
     # sequence packing: every sampled doc's tokens fully accounted for,
     # every sequence but the last exactly full
-    packed = pack_sequences(mixed, "n_tokens", "doc_id", seq_len=128)
+    packed = pack_sequences(mixed, "n_tokens", "doc_id", seq_len=128, cache=cache)
     rows = packed.collect()
-    packed.release()
     per_doc: dict = {}
     per_seq: dict = {}
     for r in rows:
@@ -59,13 +56,11 @@ def test_curation_to_packing_chain(spark):
     assert 0 < per_seq[last] <= 128
 
     # deterministic under repartitioning: same chain, different layout
-    packed2 = pack_sequences(mixed.repartition(7), "n_tokens", "doc_id", seq_len=128)
+    packed2 = pack_sequences(
+        mixed.repartition(7), "n_tokens", "doc_id", seq_len=128, cache=cache
+    )
     rows2 = {(r["doc_id"], r["seq_id"], r["doc_offset"], r["seq_offset"], r["piece_len"]) for r in packed2.collect()}
-    packed2.release()
     assert rows2 == {
         (r["doc_id"], r["seq_id"], r["doc_offset"], r["seq_offset"], r["piece_len"])
         for r in rows
     }
-
-    for frame in registry:
-        frame.unpersist()

@@ -228,7 +228,7 @@ def test_new_doc_queries_plan_quality(spark):
         assert "CartesianProduct" not in plan, name
 
 
-def test_packing_and_interleave_plan_shape(spark):
+def test_packing_and_interleave_plan_shape(spark, cache):
     """r5 write-side operators: the global-order kernels must never plan
     a one-task exchange (the naive global window's SinglePartition), the
     driver-offset frames must broadcast, and no join may degrade to
@@ -241,21 +241,17 @@ def test_packing_and_interleave_plan_shape(spark):
         F.size(F.split(F.trim("text"), r"\s+")).alias("n_tokens"),
         "source",
     )
-    frames = []
-    sh = assign_shards(docs, "n_tokens", "doc_id", shard_tokens=2000)
-    frames.append(("assign_shards", sh, sh.release))
-    pk = pack_sequences(docs, "n_tokens", "doc_id", seq_len=64)
-    frames.append(("pack_sequences", pk, pk.release))
-    mx = mixture_sample(docs, "source", total_target=100)
-    frames.append(("mixture_sample", mx, None))
-    for name, df, release in frames:
+    frames = [
+        ("assign_shards", assign_shards(docs, "n_tokens", "doc_id", shard_tokens=2000, cache=cache)),
+        ("pack_sequences", pack_sequences(docs, "n_tokens", "doc_id", seq_len=64, cache=cache)),
+        ("mixture_sample", mixture_sample(docs, "source", total_target=100)),
+    ]
+    for name, df in frames:
         plan = _plan(df)
         assert "SinglePartition" not in plan, name
         assert "CartesianProduct" not in plan, name
         assert "SortMergeJoin" not in plan, name
         assert "BroadcastHashJoin" in plan, name  # driver offsets/decisions
-        if release:
-            release()
 
 
 def test_r5_selection_ops_plan_shape(spark):
@@ -272,7 +268,7 @@ def test_r5_selection_ops_plan_shape(spark):
         "vec_id INT, embedding ARRAY<DOUBLE>",
     )
     cents = [[float(d % 13) for d in range(8)], [float((3 + d) % 13) for d in range(8)]]
-    sem = semdedup(emb, cents, threshold=0.99, persist=False)
+    sem = semdedup(emb, cents, threshold=0.99)
     plan = _plan(sem)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -80,13 +80,12 @@ def _mirror(rows, centroids, threshold):
     return asg, kept
 
 
-def test_semdedup_matches_mirror(spark):
+def test_semdedup_matches_mirror(spark, cache):
     emb = _fixture(spark)
     rows = [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in emb.collect()]
     centroids = [v for i, v in rows if i in (3, 17, 42, 77)]
-    out = semdedup(emb, centroids, threshold=0.9)
+    out = semdedup(emb, centroids, threshold=0.9, cache=cache)
     got = {r["vec_id"]: (r["list_id"], r["kept"]) for r in out.collect()}
-    out.release()
     asg, kept = _mirror(rows, centroids, 0.9)
     assert {i: v[0] for i, v in got.items()} == asg
     assert {i: v[1] for i, v in got.items()} == kept
@@ -98,8 +97,8 @@ def test_semdedup_partition_invariance(spark):
     emb = _fixture(spark)
     rows = [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in emb.collect()]
     centroids = [v for i, v in rows if i in (3, 17, 42, 77)]
-    a = semdedup(emb.repartition(1), centroids, threshold=0.9, persist=False)
-    b = semdedup(emb.repartition(13), centroids, threshold=0.9, persist=False)
+    a = semdedup(emb.repartition(1), centroids, threshold=0.9)
+    b = semdedup(emb.repartition(13), centroids, threshold=0.9)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -112,8 +111,8 @@ def test_semdedup_preassigned_path_parity(spark):
     rows = [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in emb.collect()]
     centroids = [v for i, v in rows if i in (3, 17, 42, 77)]
     pre = ivf_assign(emb, centroids)
-    a = semdedup(emb, centroids, threshold=0.9, persist=False)
-    b = semdedup(emb, centroids, threshold=0.9, persist=False, assigned=pre)
+    a = semdedup(emb, centroids, threshold=0.9)
+    b = semdedup(emb, centroids, threshold=0.9, assigned=pre)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -124,8 +123,8 @@ def test_semdedup_numpy_pairs_parity(spark):
     emb = _fixture(spark)
     rows = [(r["vec_id"], [float(x) for x in r["embedding"]]) for r in emb.collect()]
     centroids = [v for i, v in rows if i in (3, 17, 42, 77)]
-    a = semdedup(emb, centroids, threshold=0.9, persist=False)
-    b = semdedup(emb, centroids, threshold=0.9, persist=False, pair_impl="numpy")
+    a = semdedup(emb, centroids, threshold=0.9)
+    b = semdedup(emb, centroids, threshold=0.9, pair_impl="numpy")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 

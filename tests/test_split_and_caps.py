@@ -183,7 +183,7 @@ def test_simhash_banding_lossless_within_bands_minus_one(spark):
     assert exact  # fixture genuinely contains near-dup simhashes
 
 
-def test_assign_shards_deterministic_and_bounded(spark):
+def test_assign_shards_deterministic_and_bounded(spark, cache):
     """r4 shard packing: assignments are partition-invariant (the global
     cumsum doesn't depend on range boundaries), shard_id is
     non-decreasing in the order column, and every shard's token total
@@ -197,7 +197,7 @@ def test_assign_shards_deterministic_and_bounded(spark):
     rng = random.Random(3)
     rows = [(i, rng.randint(1, 400)) for i in range(3000)]
     df = spark.createDataFrame(rows, "doc_id long, n_tokens int")
-    sa = assign_shards(df.repartition(2), shard_tokens=5000)
+    sa = assign_shards(df.repartition(2), shard_tokens=5000, cache=cache)
     # r5 fault-tolerance contract: the output must NOT be checkpointed
     # (localCheckpoint truncates lineage -> unrecoverable on executor
     # loss at scale).  A checkpointed output would collapse the whole
@@ -206,10 +206,8 @@ def test_assign_shards_deterministic_and_bounded(spark):
     plan = sa._jdf.queryExecution().optimizedPlan().toString()
     assert "Window" in plan and "Join" in plan
     a = {r["doc_id"]: r["shard_id"] for r in sa.collect()}
-    sa.release()
-    sb = assign_shards(df.repartition(17), shard_tokens=5000)
+    sb = assign_shards(df.repartition(17), shard_tokens=5000, cache=cache)
     b = {r["doc_id"]: r["shard_id"] for r in sb.collect()}
-    sb.release()
     assert a == b
     # non-decreasing in doc_id order, starting at 0
     ordered = [a[i] for i in range(3000)]
@@ -225,7 +223,7 @@ def test_assign_shards_deterministic_and_bounded(spark):
     assert len(per_shard) > 10  # actually packed into many shards
 
 
-def test_pack_sequences_differential_and_invariance(spark):
+def test_pack_sequences_differential_and_invariance(spark, cache):
     """r5 sequence packing vs a sequential Python mirror: the
     (doc, seq) boundary map must equal laying tokens end-to-end and
     chunking at seq_len, and be partition-invariant."""
@@ -253,14 +251,13 @@ def test_pack_sequences_differential_and_invariance(spark):
     df = spark.createDataFrame(rows, "doc_id long, n_tokens int")
     got_frames = []
     for parts in (3, 13):
-        p = pack_sequences(df.repartition(parts), seq_len=L)
+        p = pack_sequences(df.repartition(parts), seq_len=L, cache=cache)
         got = {
             (r["doc_id"], r["seq_id"]): (
                 r["doc_offset"], r["seq_offset"], r["piece_len"],
             )
             for r in p.collect()
         }
-        p.release()
         got_frames.append(got)
     assert got_frames[0] == expected
     assert got_frames[1] == expected
